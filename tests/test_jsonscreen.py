@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from yaschva_spark.engine import validate_json_table
 from yaschva_spark.interp import validate as interp_validate
-from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_pass_screen
+from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens, select_levels
 
 PROPS_SCHEMA = {"k": {"$number": {"min": 0, "max": 50}}}
 
@@ -24,6 +24,23 @@ TRICKY = [
     '{"k": 4.9e-324}', '{"k": 0.1}',
     "__undefined__",
 ]
+
+
+def _screened(df, schema, col="js"):
+    """The screen columns as production evaluates them: the staged levels
+    selected in order (engine.validate_json_table), then the outputs."""
+    levels, screens = compile_screens(schema, F.col(col))
+    return select_levels(df, levels), screens
+
+
+#: nodes carrying several type tags: the reference dispatch order picks
+#: $number over $string, $array over $enum and $map over $string
+MULTI_TAG_SCHEMAS = [
+    {"x": {"$number": {"min": 0}, "$string": {}}},
+    {"x": {"$array": "string", "$enum": ["a"]}},
+    {"x": {"$map": "string", "$string": {}}},
+]
+MULTI_TAG_ROWS = ['{"x": "abc"}', '{"x": "a"}']
 
 
 def _interp_result(schema, raw):
@@ -68,14 +85,17 @@ NESTED_TRICKY = [
     {"k": {"$and": [{"a": "number"}, {"b": ["?", "boolean"]}]}},
     {"$types": {"$pt": {"a": "number"}}, "k": ["?", "$pt"]},
     {"k": {"a": {"deep": ["?", "number"]}}},
+    *MULTI_TAG_SCHEMAS,
 ])
 def test_screen_soundness(spark, schema):
     rows = [(i, t) for i, t in enumerate(TRICKY + NESTED_TRICKY)]
     rows += [(100 + i, json.dumps({"k": v})) for i, v in enumerate(
         [1, 2**53 - 1, 2**53 + 1, -(2**60), 0.5, "a", "b", "x", None, [1], {"z": 1}])]
     rows += [(200, '{"s": "xab", "k": "a"}'), (201, '{"s": "ab", "k": "a"}')]
+    rows += [(300 + i, t) for i, t in enumerate(MULTI_TAG_ROWS)]
     df = spark.createDataFrame(rows, "id long, js string")
-    screened = df.select("id", "js", compile_pass_screen(schema, F.col("js")).alias("p")).collect()
+    staged, screens = _screened(df, schema)
+    screened = staged.select("id", "js", screens["pass"].alias("p")).collect()
     for r in screened:
         if r["p"]:
             assert _interp_result(schema, r["js"])["result"] == "pass", r["js"]
@@ -90,9 +110,10 @@ def test_screen_soundness(spark, schema):
     {"k": {"$array": ["?", "number"]}},
     {"k": {"$map": "number", "minLength": 1}},
     {"$types": {"$pt": {"a": "number"}}, "k": ["?", "$pt"]},
+    *MULTI_TAG_SCHEMAS,
 ])
 def test_hybrid_output_identical(spark, schema):
-    rows = [(i, t) for i, t in enumerate(TRICKY + NESTED_TRICKY)]
+    rows = [(i, t) for i, t in enumerate(TRICKY + NESTED_TRICKY + MULTI_TAG_ROWS)]
     df = spark.createDataFrame(rows, "id long, js string")
     cols = ["id", "yv_valid", "yv_violations", "yv_output"]
     a = sorted(map(repr, validate_json_table(df, schema, "js", screen=True).select(cols).collect()))
@@ -107,9 +128,8 @@ def test_hybrid_on_events_table(spark):
     b = sorted(map(repr, validate_json_table(events, PROPS_SCHEMA, "props", screen=False).select(cols).collect()))
     assert a == b
     # sanity: the screen actually proves the majority JVM-side
-    from yaschva_spark.jsonscreen import compile_pass_screen as cps
-
-    frac = events.select(F.coalesce(cps(PROPS_SCHEMA, F.col("props")), F.lit(False)).alias("p")) \
+    staged, screens = _screened(events, PROPS_SCHEMA, "props")
+    frac = staged.select(screens["pass"].alias("p")) \
         .agg(F.avg(F.col("p").cast("double"))).collect()[0][0]
     assert frac > 0.5, frac
 
@@ -133,7 +153,7 @@ def test_not_applicable_shapes():
         {"abc\r": ["?", "string"]},
     ]:
         with pytest.raises(ScreenNotApplicable):
-            compile_pass_screen(schema, F.lit('{"k": 1}'))
+            compile_screens(schema, F.lit('{"k": 1}'))
 
 
 def test_kitchen_sink_schema_screens(spark):
@@ -147,8 +167,8 @@ def test_kitchen_sink_schema_screens(spark):
          (3, json.dumps({**KITCHEN_SINK_GOOD, "extra": 1}))],
         "id long, js string",
     )
-    rows = {r["id"]: r["p"] for r in df.select(
-        "id", compile_pass_screen(KITCHEN_SINK_SCHEMA, F.col("js")).alias("p")).collect()}
+    staged, screens = _screened(df, KITCHEN_SINK_SCHEMA)
+    rows = {r["id"]: r["p"] for r in staged.select("id", screens["pass"].alias("p")).collect()}
     assert rows[1] is True          # proven without touching Python
     assert not rows[2] and not rows[3]
     # and the split plan's JVM-built output equals the interpreter's
@@ -287,10 +307,10 @@ def test_screen_soundness_fuzz(spark, seed):
         rows.append((i, json.dumps(doc)))
     df = spark.createDataFrame(rows, "id long, js string")
     try:
-        screen = compile_pass_screen(schema, F.col("js"))
+        staged, screens = _screened(df, schema)
     except ScreenNotApplicable:
         return
-    for r in df.select("id", "js", screen.alias("p")).collect():
+    for r in staged.select("id", "js", screens["pass"].alias("p")).collect():
         if r["p"]:
             res = _interp_result(schema, r["js"])
             assert res["result"] == "pass", (seed, r["js"], schema)
@@ -377,8 +397,6 @@ def test_fail_screen_byte_exact_and_emission_boundary(spark):
     the interpreter's EXACT (path, rule, error, value) violations and
     yv_output; undecidable/unrenderable rows still fall to the interpreter.
     Both the byte-exactness and the emission boundary itself are pinned."""
-    from yaschva_spark.jsonscreen import compile_screens
-
     df = spark.createDataFrame([(i, t) for i, t, _ in FAIL_ROWS], "id long, js string")
     cols = ["id", "yv_valid", "yv_violations", "yv_output"]
     a = {r["id"]: repr(r) for r in
@@ -386,8 +404,8 @@ def test_fail_screen_byte_exact_and_emission_boundary(spark):
     b = {r["id"]: repr(r) for r in
          validate_json_table(df, FAIL_SCREEN_SCHEMA, "js", screen=False).select(cols).collect()}
     assert a == b
-    scr = compile_screens(FAIL_SCREEN_SCHEMA, F.col("js"))
-    emitted = {r["id"]: r["e"] for r in df.select("id", scr["emit"].alias("e")).collect()}
+    staged, scr = _screened(df, FAIL_SCREEN_SCHEMA)
+    emitted = {r["id"]: r["e"] for r in staged.select("id", scr["emit"].alias("e")).collect()}
     for i, _, expect in FAIL_ROWS:
         assert emitted[i] == expect, (i, emitted[i])
 
@@ -396,12 +414,11 @@ def test_fail_screen_violation_rows_exact(spark):
     """Spot-pin the JVM-emitted violation rows against the interpreter's
     literal values (path / rule / exact error string incl. the enum
     trailing space / offending-value JSON in data-key order)."""
-    from yaschva_spark.jsonscreen import compile_screens
-
     raw = '{"lang": "zz", "n": 99, "name": "a", "flag": 0, "cnt": "x"}'
     df = spark.createDataFrame([(21, raw)], "id long, js string")
     # this row must be decided by the fail screen, not the interpreter
-    assert df.select(compile_screens(FAIL_SCREEN_SCHEMA, F.col("js"))["emit"]).collect()[0][0]
+    staged, scr = _screened(df, FAIL_SCREEN_SCHEMA)
+    assert staged.select(scr["emit"]).collect()[0][0]
     out = validate_json_table(df, FAIL_SCREEN_SCHEMA, "js", screen=True).collect()[0]
     assert out["yv_valid"] is False
     got = [(v["path"], v["rule"], v["error"], v["value"]) for v in out["yv_violations"]]
@@ -421,11 +438,10 @@ def test_fail_screen_union_rows_exact(spark):
     """Union total failure, JVM-emitted: one union_mismatch row plus each
     branch's error at the SAME path (violations_from_output's branch list),
     and yv_output nesting every branch's error object in order."""
-    from yaschva_spark.jsonscreen import compile_screens
-
     schema = {"v": ["?", "null", "integer"]}
     df = spark.createDataFrame([(1, '{"v": "oops"}')], "id long, js string")
-    assert df.select(compile_screens(schema, F.col("js"))["emit"]).collect()[0][0]
+    staged, scr = _screened(df, schema)
+    assert staged.select(scr["emit"]).collect()[0][0]
     out = validate_json_table(df, schema, "js", screen=True).collect()[0]
     assert out["yv_valid"] is False
     got = [(v["path"], v["rule"], v["error"], v["value"]) for v in out["yv_violations"]]
@@ -440,9 +456,8 @@ def test_fail_screen_union_rows_exact(spark):
     # a union containing a bounded $number branch (compile-time non-exact)
     # must NOT fail-compile: ~cond does not imply interpreter-fail there
     bounded = {"v": ["?", {"$number": {"min": 0, "max": 5}}]}
-    emit = compile_screens(bounded, F.col("js"))["emit"]
-    row = spark.createDataFrame([(1, '{"v": "oops"}')], "id long, js string") \
-        .select(emit).collect()[0][0]
+    staged, scr = _screened(df, bounded)
+    row = staged.select(scr["emit"]).collect()[0][0]
     assert row is False or row == False  # noqa: E712 — fail not emittable
 
 
@@ -451,8 +466,6 @@ def test_fail_screen_array_rows_exact(spark):
     count) and per-element leaf failures with [i] paths; unrenderable
     element values, nested-array elements (flat() splicing), and
     NOT_ARRAY all stay interpreter-bound."""
-    from yaschva_spark.jsonscreen import compile_screens
-
     schema = {"xs": {"$array": "integer", "minLength": 1, "maxLength": 3}}
     rows = [
         (0, '{"xs": [1, 2]}', True),       # pass
@@ -465,8 +478,8 @@ def test_fail_screen_array_rows_exact(spark):
         (7, '{"xs": [null, true]}', True), # null + bool elements render exactly
     ]
     df = spark.createDataFrame([(i, t) for i, t, _ in rows], "id long, js string")
-    scr = compile_screens(schema, F.col("js"))
-    emitted = {r["id"]: r["e"] for r in df.select("id", scr["emit"].alias("e")).collect()}
+    staged, scr = _screened(df, schema)
+    emitted = {r["id"]: r["e"] for r in staged.select("id", scr["emit"].alias("e")).collect()}
     for i, _, expect in rows:
         assert emitted[i] == expect, (i, emitted[i])
     cols = ["id", "yv_valid", "yv_violations", "yv_output"]
@@ -491,8 +504,6 @@ def test_fail_screen_map_rows_exact(spark):
     """$map value-failure emission: per-key rows at $.path.<key> in
     data-key order; structural failures (size bounds, key regex, non-
     object) report the whole map as the value and stay interpreter-bound."""
-    from yaschva_spark.jsonscreen import compile_screens
-
     schema = {"m": {"$map": "integer", "minLength": 1, "regex": "^[a-z]+$"}}
     rows = [
         (0, '{"m": {"a": 1, "b": 2}}', True),         # pass
@@ -504,8 +515,8 @@ def test_fail_screen_map_rows_exact(spark):
         (6, '{"m": {"b": null, "a": true}}', True),   # both values fail, data order
     ]
     df = spark.createDataFrame([(i, t) for i, t, _ in rows], "id long, js string")
-    scr = compile_screens(schema, F.col("js"))
-    emitted = {r["id"]: r["e"] for r in df.select("id", scr["emit"].alias("e")).collect()}
+    staged, scr = _screened(df, schema)
+    emitted = {r["id"]: r["e"] for r in staged.select("id", scr["emit"].alias("e")).collect()}
     for i, _, expect in rows:
         assert emitted[i] == expect, (i, emitted[i])
     cols = ["id", "yv_valid", "yv_violations", "yv_output"]

@@ -204,7 +204,7 @@ def test_staged_screen_keeps_projection_boundaries(spark):
     column re-inlines into all its consumers and the fail side re-explodes
     to its measured ~4x cost — catch it here, not in a bench mystery."""
     import __spark_entry__ as e
-    from yaschva_spark.jsonscreen import compile_screens
+    from yaschva_spark.jsonscreen import compile_screens, select_levels
 
     spark.catalog.clearCache()  # plan-shape test: no InMemoryTableScan swap
     docs = spark.read.parquet(f"{SF}/documents.parquet")
@@ -214,13 +214,9 @@ def test_staged_screen_keeps_projection_boundaries(spark):
         F.lit('}, "ids": ['), F.col("doc_id").cast("string"), F.lit("]}"),
     )
     src = docs.select("doc_id", js.alias("js"))
-    levels, sc = compile_screens(e.NESTED_JSON_SCHEMA, F.col("js"), staged=True)
+    levels, sc = compile_screens(e.NESTED_JSON_SCHEMA, F.col("js"))
     assert sum(1 for lvl in levels if lvl) >= 3  # parse, extractions, leaf derivations
-    staged = src
-    for lvl in levels:
-        if lvl:
-            staged = staged.select("*", *[c.alias(n) for n, c in lvl.items()])
-    out = staged.select(
+    out = select_levels(src, levels).select(
         "doc_id", sc["pass"].alias("p"), sc["emit"].alias("m"),
         F.when(sc["pass"], sc["pass_out"]).otherwise(sc["fail_out"]).alias("o"),
         sc["viols"].alias("v"),

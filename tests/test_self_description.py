@@ -8,8 +8,6 @@ itself — as data against it.
 
 from __future__ import annotations
 
-import json
-
 import pytest
 
 from yaschva_spark.generate import generate
@@ -68,10 +66,11 @@ def _meta_validate(schema_as_data) -> bool:
     return iv(META_SCHEMA, schema_as_data)["result"] == "pass"
 
 
-def test_meta_validates_reference_example():
-    with open("/root/reference/examples/example1.json") as f:
-        example = json.load(f)
-    assert _meta_validate(example)
+def test_meta_validates_kitchen_sink_schema():
+    # the in-repo schema written to cover the reference's example features
+    from tests.cases_validate import KITCHEN_SINK_SCHEMA
+
+    assert _meta_validate(KITCHEN_SINK_SCHEMA)
 
 
 def test_meta_validates_engine_schemas():

@@ -25,12 +25,14 @@ from typing import Any, Iterator
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yaschva_spark.cache import persist_tracked
 from yaschva_spark.interp import (
     UNDEFINED_TOKEN,
     validate as interp_validate,
     output_to_jsonable,
     violations_from_output,
 )
+from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens, select_levels
 from yaschva_spark.schema import check_schema
 from yaschva_spark.typed import (
     VIOLATION_DDL,
@@ -86,7 +88,6 @@ def validate_table(
     Raises :class:`SchemaError` for malformed schemas (the reference throws)
     and :class:`TypedCompileError` when the schema needs the dynamic path.
     """
-    check_schema(schema)
     violations = compile_schema(
         schema, df.schema, ignore_columns=tuple(ignore_columns), max_unroll=max_unroll
     )
@@ -137,13 +138,11 @@ _SCREEN_CACHE: dict = {}
 
 
 def _compiled_screens(app_id: str, schema_blob: str, json_col: str):
-    from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens
-
     key = (app_id, schema_blob, json_col)
     hit = _SCREEN_CACHE.get(key)
     if hit is None:
         try:
-            hit = compile_screens(json.loads(schema_blob), F.col(json_col), staged=True)
+            hit = compile_screens(json.loads(schema_blob), F.col(json_col))
         except ScreenNotApplicable as ex:
             hit = ex
         _SCREEN_CACHE[key] = hit
@@ -159,7 +158,6 @@ def validate_json_table(
     *,
     keep_cols: list[str] | None = None,
     screen: bool = True,
-    screen_materialize: str = "persist",
     observe: str | None = None,
 ) -> DataFrame:
     """Dynamic path: validate a JSON-text column with exact reference
@@ -198,13 +196,10 @@ def validate_json_table(
     The split's one hazard is double evaluation: both branches read the
     screened projection, and recomputing it means a second scan plus a
     second ``try_parse_json`` (measured ~2x at sf0.1 — worse than the tax
-    it removes). ``screen_materialize="persist"`` (default) therefore
-    pins the small ``(keep, json, screen, passout)`` projection through
-    :func:`yaschva_spark.cache.persist_tracked` — both branches read it
-    once; callers release it via ``cache.unpersist_intermediates()`` (the
-    bench/test convention). ``"recompute"`` opts out for topologies where
-    re-reading the source twice beats spilling the projection (e.g.
-    storage-rich clusters validating narrow projections of wide tables).
+    it removes). The small ``(keep, json, screen, passout)`` projection is
+    therefore pinned through :func:`yaschva_spark.cache.persist_tracked` —
+    both branches read it once; callers release it via
+    ``cache.unpersist_intermediates()`` (the bench/test convention).
 
     Parallelism guard: validation is CPU-bound (variant screen and/or
     interpreter), so the stage needs at least one task per core. At
@@ -239,18 +234,14 @@ def validate_json_table(
         _SCREEN_OBS.pop(observe, None)  # a stale observation must not answer
     keep = keep_cols if keep_cols is not None else [c for c in df.columns]
     schema_blob = json.dumps(schema)  # ship the schema to executors as text
-    if screen_materialize not in ("persist", "recompute"):
-        raise ValueError(f"screen_materialize: {screen_materialize!r}")
 
     screens = None
     screen_levels: list = []
     if screen:
-        from yaschva_spark.jsonscreen import ScreenNotApplicable
-
         try:
             # staged: shared subexpressions (parsed variant, per-field
             # sub-variants, leaf error/value columns) become projection
-            # columns evaluated ONCE per row — the unstaged tree re-walks
+            # columns evaluated ONCE per row — an unstaged tree re-walks
             # them inside every consumer (measured ~4x on the fail side)
             screen_levels, screens = _compiled_screens(
                 df.sparkSession.sparkContext.applicationId, schema_blob, json_col
@@ -310,11 +301,7 @@ def validate_json_table(
         return src.mapInPandas(run_batches, schema=out_ddl)
 
     jvmfail = ~screens["pass"] & screens["emit"]
-    staged = src
-    for lvl in screen_levels:
-        if lvl:
-            staged = staged.select("*", *[c.alias(n) for n, c in lvl.items()])
-    scr = staged.select(
+    scr = select_levels(src, screen_levels).select(
         *need,
         screens["pass"].alias("__yv_screen"),
         screens["emit"].alias("__yv_emit"),
@@ -345,10 +332,7 @@ def validate_json_table(
             ),
         )
         _SCREEN_OBS[observe] = obs
-    if screen_materialize == "persist":
-        from yaschva_spark.cache import persist_tracked
-
-        scr = persist_tracked(scr)
+    scr = persist_tracked(scr)
     # ONE emitted branch covers proven-pass AND proven-fail (the r5 fail
     # screen): pure projection, no Arrow crossing; only the residue — rows
     # neither screen can decide or render exactly — runs the interpreter.

@@ -8,6 +8,13 @@ would return ``pass``, plus the matching ``yv_output`` text expression so
 proven rows never cross the Arrow boundary at all
 (engine.validate_json_table splits the plan on the screen).
 
+The screen does no schema dispatch of its own: it emits from
+:func:`yaschva_spark.schema.lower`'s plan, which already applied the
+reference's dispatch order, ``$types`` scoping, ``$type``/``$and``
+resolution and the ``|| 0`` / ``|| MAX`` defaults. This module only maps
+each of the plan's five node kinds to VARIANT Columns, and each leaf check
+to a VARIANT predicate plus its representability guard (``_CHECKS``).
+
 Why VARIANT: ``try_parse_json`` + ``try_variant_get``/``is_variant_null``
 distinguish a *missing* key (SQL NULL variant) from a JSON ``null`` (a
 present variant with ``is_variant_null`` true) — precisely the
@@ -50,18 +57,19 @@ interpreter's byte for byte. Consequences baked in:
   original JSON *text* for data-order keys (VARIANT sorts object keys)
   and only literal paths can address text — nested objects get it via
   ``get_json_object`` at compile-time paths, dynamic positions can't;
-* recursive ``$types`` raise :class:`ScreenNotApplicable` (depth guard);
+* recursive ``$types`` (a plan node met again below itself) raise
+  :class:`ScreenNotApplicable`;
 * a schema shape outside all of the above raises
   :class:`ScreenNotApplicable` — the caller falls back to full
   interpretation, never to wrong answers.
 
-Supported fragment: simple types, ``?``, ``null``, ``any``, ``$enum``,
-``$string`` (UTF-16 length + dialect-safe regex), ``$number`` (min/max),
-``$type`` meta-unwrap, inlined ``$types`` custom types (non-recursive),
-``$and`` merges, nested objects at literal paths, ``$array`` /``$map``
-with leaf-output element/value schemas, and ordered union prefixes
-thereof. Reference semantics: validate.ts:50-205 (leaves),
-validate.ts:106-193 (arrays/maps/objects), validate.ts:91-104 (unions).
+Supported fragment: every leaf check except the ``$and`` error leaf
+(``$string`` regexes only when dialect-safe), nested objects at literal
+paths, ``$array``/``$map`` with leaf-output element/value schemas, and
+ordered union prefixes thereof — with ``$type``, non-recursive ``$types``
+and ``$and`` already resolved by the lowering. Reference semantics:
+validate.ts:50-205 (leaves), validate.ts:106-193 (arrays/maps/objects),
+validate.ts:91-104 (unions).
 
 **Fail screen (r5).** The r4 measurement showed the pass screen proving
 100% of the VALID rows on the nested bench corpus — the remaining ~49%
@@ -94,20 +102,13 @@ import re as _re
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from yaschva_spark import errors as E
 from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
-from yaschva_spark.schema import (
-    SIMPLE_TYPES,
-    SchemaError,
-    combine_and,
-    extract_types,
-    js_falsy,
-    unescape_key,
-)
-
-MAX_SAFE = 2**53 - 1
+from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
+from yaschva_spark.typed import js_strlen  # UTF-16 code units
 
 #: Keys the screen will address via JSONPath and emit into output text
 #: verbatim. Conservative on purpose (see module docstring).
@@ -173,6 +174,35 @@ def _empty_viols() -> Column:
     return F.array().cast(_VIOL_DDL)
 
 
+def _row(path: Column, rule: Column, err: Column, val: Column) -> Column:
+    """One violation row."""
+    return F.struct(path.alias("path"), rule.alias("rule"), err.alias("error"), val.alias("value"))
+
+
+def _err_text(err: Column, val: Column) -> Column:
+    """The interpreter's ``{"error": ..., "value": ...}`` output text."""
+    return F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val, F.lit("}"))
+
+
+def _elem_decided(r: "_Screen") -> Column:
+    """An exact element/value screen decided this element: it passes, or it
+    fails with a renderable (error, value)."""
+    return F.coalesce(r.cond, F.lit(False)) | F.coalesce(r.leaf_fail[3], F.lit(False))
+
+
+def _elem_viols(r: "_Screen", path: Column) -> Column:
+    err, rule, val, bad = r.leaf_fail
+    return F.when(
+        F.coalesce(bad, F.lit(False)) & ~F.coalesce(r.cond, F.lit(False)),
+        F.array(_row(path, rule, err, val)),
+    ).otherwise(_empty_viols())
+
+
+def _elem_out(r: "_Screen") -> Column:
+    err, _rule, val, _bad = r.leaf_fail
+    return F.when(F.coalesce(r.cond, F.lit(False)), F.lit("null")).otherwise(_err_text(err, val))
+
+
 class _Stager:
     """Staged compilation (r5 perf): registers shared subexpressions —
     the parsed root variant, per-field sub-variants/texts, and each leaf's
@@ -230,11 +260,11 @@ def _finite(v: Column) -> Column:
     return v.isNotNull() & ~F.isnan(v) & (v != inf) & (v != -inf)
 
 
-def _exact_as_double(tv: Column, v: Column) -> Column:
-    """True when double(v) compares identically to the interpreter's exact
-    value: always for DOUBLE (both sides are the same double), else only
-    within the 2^53 integer-exact window."""
-    return (_vtype(tv) == "DOUBLE") | (F.abs(v) <= F.lit(float(MAX_SAFE)))
+def _exact_as_double(tv: Column) -> Column:
+    """True when the value as a double compares identically to the
+    interpreter's exact value: always for DOUBLE (both sides are the same
+    double), else only within the 2^53 integer-exact window."""
+    return (_vtype(tv) == "DOUBLE") | (F.abs(_dval(tv)) <= F.lit(float(E.MAX_SAFE_INTEGER)))
 
 
 def _render_value(tv: Column) -> tuple[Column, Column]:
@@ -269,47 +299,121 @@ def _render_value(tv: Column) -> tuple[Column, Column]:
     return txt, ~F.coalesce(renderable, F.lit(False))
 
 
-def _leaf(
-    cond: Column,
-    *,
-    exact: bool,
-    fail_chain: list[tuple[Column, str]] | None = None,
-    und: Column | None = None,
-    tv: Column | None = None,
-    path: str | None = None,
-    stage: "_Stager | None" = None,
-    level: int = 0,
-) -> _Screen:
-    """Leaf screen. When the caller supplies the fail side — ``fail_chain``,
-    the interpreter's first-error dispatch as ordered (condition, error
-    string) pairs (no condition true ⇔ pass), plus an optional ``und``
-    (rows where the pass/fail decision or error choice is not exactly
-    computable JVM-side) — and the leaf sits at a literal ``path``, compile
-    femit/viols/fout so provably-FAILING rows skip the interpreter too.
-    Soundness: a femit row whose chain fires is emitted as FAIL with
-    exactly the interpreter's (path, rule, error, value); the engine routes
-    cond rows to the pass branch first, so the two never both claim a row.
-    Error strings outside the concat-safe alphabet (e.g. an $enum whose
-    values need JSON escaping) disable the fail side, never corrupt it.
+def _string_cond(tv: Column) -> Column:
+    return _present(tv) & (_vtype(tv) == "STRING")
+
+
+def _str(tv: Column) -> Column:
+    return F.try_variant_get(tv, "$", "string")
+
+
+def _negated(ok: Column) -> tuple[Column, Column]:
+    return ok, ~ok
+
+
+def _java_safe(pattern: str) -> str:
+    if typed_unsafe(pattern):
+        raise ScreenNotApplicable("ECMA-only regex")
+    return to_java_pattern(pattern)
+
+
+def _len_bounds(n: Column, node: Array | Map) -> Column:
+    return (n >= F.lit(node.min_len)) & (n <= F.lit(node.max_len))
+
+
+#: leaf check -> ((tv, arg) -> (ok, fail), representability guard). ``ok``
+#: ANDs into the pass condition; ``fail`` fires the check's error in the
+#: first-error chain. A guard is ANDed into the pass condition once, right
+#: after the type check, and rows it rejects are undecided (interpreter):
+#: a BIGINT/DECIMAL beyond 2^53 rounds when cast to double, while the
+#: interpreter compares exact Python ints.
+_CHECKS = {
+    "undefined": (lambda tv, a: (tv.isNull(), tv.isNotNull()), None),
+    "null": (lambda tv, a: _negated(tv.isNotNull() & F.is_variant_null(tv)), None),
+    "string": (lambda tv, a: _negated(_string_cond(tv)), None),
+    "boolean": (lambda tv, a: _negated(_present(tv) & (_vtype(tv) == "BOOLEAN")), None),
+    "number": (
+        lambda tv, a: _negated(_present(tv) & _is_number_type(tv) & _finite(_dval(tv))), None
+    ),
+    # every failure mode is the same error (interp._v_integer), and the
+    # 2^53 window compares exactly through double for any i64
+    "integer": (
+        lambda tv, a: _negated(
+            _present(tv) & _is_number_type(tv) & _finite(_dval(tv))
+            & (F.floor(_dval(tv)) == _dval(tv))
+            & (F.abs(_dval(tv)) <= F.lit(float(E.MAX_SAFE_INTEGER)))
+        ),
+        None,
+    ),
+    "enum": (lambda tv, a: _negated(_str(tv).isin(list(a))), None),
+    "min_length": (
+        lambda tv, a: (js_strlen(_str(tv)) >= F.lit(a), js_strlen(_str(tv)) < F.lit(a)), None
+    ),
+    "max_length": (
+        lambda tv, a: (js_strlen(_str(tv)) <= F.lit(a), js_strlen(_str(tv)) > F.lit(a)), None
+    ),
+    "regex": (lambda tv, a: _negated(_str(tv).rlike(_java_safe(a))), None),
+    "min": (
+        lambda tv, a: (_dval(tv) >= F.lit(float(a)), _dval(tv) < F.lit(float(a))), _exact_as_double
+    ),
+    "max": (
+        lambda tv, a: (_dval(tv) <= F.lit(float(a)), _dval(tv) > F.lit(float(a))), _exact_as_double
+    ),
+}
+
+
+def _screen_leaf(node: Leaf, tv: Column, path: str | None,
+                 stage: _Stager | None, level: int) -> _Screen:
+    """The leaf's first-error chain (validate.ts:50-205) over the variant:
+    the pass condition is the AND of every check's ``ok``, exact unless a
+    guard leaves rows undecided (``und``: the pass/fail decision or error
+    choice is not exactly computable JVM-side).
+
+    Fail side: the chain's ``fail`` conditions, in order, pick the error
+    (none true ⇔ pass). At a literal ``path`` femit/viols/fout are compiled
+    so provably-FAILING rows skip the interpreter too; elsewhere only the
+    parts ``(err, rule, val_txt, bad)`` are kept, for a composing parent
+    (union at its own path, array at [i]). Soundness: a femit row whose
+    chain fires is emitted as FAIL with exactly the interpreter's (path,
+    rule, error, value); the engine routes cond rows to the pass branch
+    first, so the two never both claim a row. Error strings outside the
+    concat-safe alphabet (e.g. an $enum whose values need JSON escaping)
+    disable the fail side, never corrupt it.
 
     With ``stage``, cond/err/rule/value/bad register as level+1 columns —
     every downstream consumer (femit, viols, fout, the parent's dispatch
     maps) then reads materialized columns instead of re-walking the
     variant (see :class:`_Stager`)."""
-    fail_ok = bool(fail_chain) and tv is not None and all(
-        _ERR_SAFE.match(e) for _, e in (fail_chain or [])
-    )
+    if not node.checks:  # any
+        return _Screen(F.lit(True), F.lit("null"), True, True, lvl=level + 1)
+    if node.checks[0][0] == "and":
+        # the reference data-FAILS every value here (validate.ts:244-247's
+        # combine throw path) — unprovable, not wrong
+        raise ScreenNotApplicable("$and members not all objects")
+    (check, arg, error), rest = node.checks[0], node.checks[1:]
+    cond, fail = _CHECKS[check][0](tv, arg)
+    chain = [(fail, error)]
+    und = None
+    guard = next((_CHECKS[c][1] for c, _, _ in rest if _CHECKS[c][1]), None)
+    if guard is not None:
+        # outside the guard neither the comparison nor the error choice is
+        # trustworthy, so such rows are undecided
+        und = cond & ~guard(tv)
+        cond = cond & guard(tv)
+    for check, arg, error in rest:
+        ok, fail = _CHECKS[check][0](tv, arg)
+        cond = cond & ok
+        chain.append((fail, error))
+
     if stage is not None:
         cond = stage.add(level + 1, F.coalesce(cond, F.lit(False)))
-    s = _Screen(cond, F.lit("null"), exact, True, lvl=level + 1)
-    if not fail_ok:
+    s = _Screen(cond, F.lit("null"), und is None, True, lvl=level + 1)
+    if not all(_ERR_SAFE.match(e) for _, e in chain):
         return s
-    from yaschva_spark.errors import rule_id_for
-
     err = rule = None
-    for c, e in fail_chain:
+    for c, e in chain:
         err = F.when(c, F.lit(e)) if err is None else err.when(c, F.lit(e))
-        r = F.lit(rule_id_for(e))
+        r = F.lit(E.rule_id_for(e))
         rule = F.when(c, r) if rule is None else rule.when(c, r)
     val_txt, val_und = _render_value(tv)
     bad = err.isNotNull() & ~val_und
@@ -323,56 +427,48 @@ def _leaf(
         bad = stage.add(level + 1, bad)
     s.leaf_fail = (err, rule, val_txt, bad)
     if path is None:
-        # no literal path: no standalone viols/fout — the parts above are
-        # for a composing parent (union at its own path, array at [i])
         return s
     s.femit = F.coalesce(cond, F.lit(False)) | bad
-    s.viols = F.when(
-        bad,
-        F.array(
-            F.struct(
-                F.lit(path).alias("path"),
-                rule.alias("rule"),
-                err.alias("error"),
-                val_txt.alias("value"),
-            )
-        ),
-    ).otherwise(_empty_viols())
-    s.fout = F.when(
-        F.coalesce(cond, F.lit(False)), F.lit("null")
-    ).otherwise(F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val_txt, F.lit("}")))
+    s.viols = F.when(bad, F.array(_row(F.lit(path), rule, err, val_txt))).otherwise(_empty_viols())
+    s.fout = F.when(F.coalesce(cond, F.lit(False)), F.lit("null")).otherwise(_err_text(err, val_txt))
     return s
-
-
-def _string_cond(tv: Column) -> Column:
-    return _present(tv) & (_vtype(tv) == "STRING")
-
-
-def _len_bounds(n: Column, node: dict) -> Column:
-    """minLength/maxLength with the reference's ``|| 0`` / ``|| MAX``
-    falsy defaults (validate.ts:109-110,171-172)."""
-    max_len = node.get("maxLength")
-    min_len = node.get("minLength")
-    max_len = MAX_SAFE if js_falsy(max_len) else max_len
-    min_len = 0 if js_falsy(min_len) else min_len
-    return (n >= F.lit(min_len)) & (n <= F.lit(max_len))
 
 
 def _screen(
     node: Any,
     tv: Column,
     txt: Column | None,
-    custom: dict[str, Any],
     stack: frozenset,
     depth: int,
     path: str | None = None,
     stage: _Stager | None = None,
     level: int = 0,
 ) -> _Screen:
-    """Compile schema ``node`` and normalize the fail-side defaults: a node
-    that didn't compile a fail side can still emit its PASS outcome
-    (femit=cond, empty viols, fout=out)."""
-    s = _screen_raw(node, tv, txt, custom, stack, depth, path, stage, level)
+    """Compile plan ``node`` over value variant ``tv`` (SQL NULL = missing /
+    JS undefined) and normalize the fail-side defaults: a node that didn't
+    compile a fail side can still emit its PASS outcome (femit=cond, empty
+    viols, fout=out). ``txt`` is the node's original JSON text when it sits
+    at a literal path from the root (needed for data-order keys), else
+    None. ``path`` is the node's literal JSONPath when known (the fail
+    screen's violation rows need it), else None (fail side off). ``stack``
+    holds the composite nodes being compiled: meeting one again is a
+    recursive custom type."""
+    if depth > _MAX_DEPTH:
+        raise ScreenNotApplicable("schema nesting beyond screen depth budget")
+    if isinstance(node, Leaf):
+        s = _screen_leaf(node, tv, path, stage, level)
+    else:
+        if id(node) in stack:
+            raise ScreenNotApplicable("recursive custom type")
+        stack = stack | {id(node)}
+        if isinstance(node, Union):
+            s = _screen_union(node, tv, txt, stack, depth, path, stage, level)
+        elif isinstance(node, Array):
+            s = _screen_array(node, tv, stack, depth, path, stage, level)
+        elif isinstance(node, Map):
+            s = _screen_map(node, tv, txt, stack, depth, path, stage, level)
+        else:
+            s = _screen_object(node, tv, txt, stack, depth, path, stage, level)
     if s.femit is None:
         s.femit = F.coalesce(s.cond, F.lit(False))
     if s.viols is None:
@@ -382,173 +478,9 @@ def _screen(
     return s
 
 
-def _screen_raw(
-    node: Any,
-    tv: Column,
-    txt: Column | None,
-    custom: dict[str, Any],
-    stack: frozenset,
-    depth: int,
-    path: str | None,
-    stage: _Stager | None,
-    level: int,
-) -> _Screen:
-    """Compile schema ``node`` over value variant ``tv`` (SQL NULL =
-    missing / JS undefined). ``txt`` is the node's original JSON text when
-    it sits at a literal path from the root (needed for data-order keys),
-    else None. ``path`` is the node's literal JSONPath when known (the
-    fail screen's violation rows need it), else None (fail side off)."""
-    if depth > _MAX_DEPTH:
-        raise ScreenNotApplicable("schema nesting beyond screen depth budget")
-
-    node, extracted = extract_types(node)
-    if extracted is not None:
-        custom = extracted
-
-    if isinstance(node, str):
-        resolved = custom.get(node)
-        # mirror interp: a truthy custom entry shadows even builtin names
-        if not js_falsy(resolved) and resolved is not None:
-            if node in stack:
-                raise ScreenNotApplicable(f"recursive custom type {node!r}")
-            return _screen(resolved, tv, txt, custom, stack | {node}, depth + 1, path, stage, level)
-        from yaschva_spark import errors as E
-
-        if node == "any":
-            return _leaf(F.lit(True), exact=True, level=level)
-        if node == "?":
-            return _leaf(
-                tv.isNull(), exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(tv.isNotNull(), E.NOT_UNDEFINED)],
-            )
-        if node == "null":
-            cond = tv.isNotNull() & F.is_variant_null(tv)
-            return _leaf(
-                cond, exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(~cond, E.NOT_NULL)],
-            )
-        if node == "string":
-            return _leaf(
-                _string_cond(tv), exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(~_string_cond(tv), E.NOT_STRING)],
-            )
-        if node == "boolean":
-            cond = _present(tv) & (_vtype(tv) == "BOOLEAN")
-            return _leaf(
-                cond, exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(~cond, E.NOT_BOOLEAN)],
-            )
-        if node == "number":
-            cond = _present(tv) & _is_number_type(tv) & _finite(_dval(tv))
-            return _leaf(
-                cond, exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(~cond, E.NOT_NUMBER)],
-            )
-        if node == "integer":
-            v = _dval(tv)
-            cond = (
-                _present(tv)
-                & _is_number_type(tv)
-                & _finite(v)
-                & (F.floor(v) == v)
-                & (F.abs(v) <= F.lit(float(MAX_SAFE)))
-            )
-            # every failure mode is the same error (interp._v_integer), and
-            # the 2^53 window compares exactly through double for any i64
-            return _leaf(
-                cond, exact=True, tv=tv, path=path, stage=stage, level=level,
-                fail_chain=[(~cond, E.NOT_INTEGER)],
-            )
-        raise ScreenNotApplicable(f"custom type {node!r}")
-
-    if isinstance(node, list):
-        return _screen_union(node, tv, txt, custom, stack, depth, path, stage, level)
-
-    if isinstance(node, dict):
-        from yaschva_spark import errors as E
-
-        if "$type" in node:
-            return _screen(node["$type"], tv, txt, custom, stack, depth + 1, path, stage, level)
-        if "$enum" in node:
-            enums = node["$enum"]
-            cond = _string_cond(tv)
-            chain = [(~_string_cond(tv), E.NOT_STRING)]
-            if enums:  # reference: `enums && enums.length && ...` skips []
-                s = F.try_variant_get(tv, "$", "string")
-                cond = cond & s.isin(list(enums))
-                chain.append((~s.isin(list(enums)), E.enum_mismatch(list(enums))))
-            return _leaf(cond, exact=True, tv=tv, path=path, fail_chain=chain,
-                         stage=stage, level=level)
-        if "$string" in node:
-            spec = node["$string"]
-            s = F.try_variant_get(tv, "$", "string")
-            cond = _string_cond(tv)
-            chain = [(~_string_cond(tv), E.NOT_STRING)]
-            from yaschva_spark.typed import js_strlen  # UTF-16 code units
-
-            if not js_falsy(spec.get("minLength")):
-                cond = cond & (js_strlen(s) >= F.lit(spec["minLength"]))
-                chain.append((js_strlen(s) < F.lit(spec["minLength"]), E.STR_TOO_SHORT))
-            if not js_falsy(spec.get("maxLength")):
-                cond = cond & (js_strlen(s) <= F.lit(spec["maxLength"]))
-                chain.append((js_strlen(s) > F.lit(spec["maxLength"]), E.STR_TOO_LONG))
-            pattern = spec.get("regex")
-            if not js_falsy(pattern):
-                if typed_unsafe(pattern):
-                    raise ScreenNotApplicable("ECMA-only regex")
-                cond = cond & s.rlike(to_java_pattern(pattern))
-                chain.append((~s.rlike(to_java_pattern(pattern)), E.REGEX_MISMATCH))
-            return _leaf(cond, exact=True, tv=tv, path=path, fail_chain=chain,
-                         stage=stage, level=level)
-        if "$number" in node:
-            spec = node["$number"]
-            v = _dval(tv)
-            numeric = _present(tv) & _is_number_type(tv) & _finite(v)
-            cond = numeric
-            chain = [(~numeric, E.NOT_NUMBER)]
-            und = None
-            lo, hi = spec.get("min"), spec.get("max")
-            if lo is not None or hi is not None:
-                cond = cond & _exact_as_double(tv, v)
-                # outside the integer-exact window neither the bound
-                # comparison nor the below/above choice is trustworthy
-                und = numeric & ~_exact_as_double(tv, v)
-            if lo is not None:
-                cond = cond & (v >= F.lit(float(lo)))
-                chain.append((v < F.lit(float(lo)), E.NUM_BELOW_MIN))
-            if hi is not None:
-                cond = cond & (v <= F.lit(float(hi)))
-                chain.append((v > F.lit(float(hi)), E.NUM_ABOVE_MAX))
-            # the representability guard makes bounded checks one-way only
-            return _leaf(
-                cond, exact=lo is None and hi is None,
-                tv=tv, path=path, fail_chain=chain, und=und,
-                stage=stage, level=level,
-            )
-        if "$array" in node:
-            return _screen_array(node, tv, custom, stack, depth, path, stage, level)
-        if "$map" in node:
-            return _screen_map(node, tv, txt, custom, stack, depth, path, stage, level)
-        if "$and" in node:
-            try:
-                merged = combine_and(node, custom)
-            except SchemaError:
-                # the reference data-FAILS every value here (validate.ts:
-                # 244-247's combine throw path) — unprovable, not wrong
-                raise ScreenNotApplicable("$and members not all objects")
-            return _screen(merged, tv, txt, custom, stack, depth + 1, path, stage, level)
-        if not any(k.startswith("$") for k in node):
-            return _screen_object(node, tv, txt, custom, stack, depth, path, stage, level)
-        raise ScreenNotApplicable(f"unscreenable node keys {sorted(node)!r}")
-
-    raise ScreenNotApplicable(f"unscreenable node {type(node).__name__}")
-
-
 def _screen_union(
-    node: list, tv: Column, txt: Column | None,
-    custom: dict[str, Any], stack: frozenset, depth: int,
-    path: str | None = None,
-    stage: _Stager | None = None, level: int = 0,
+    node: Union, tv: Column, txt: Column | None, stack: frozenset, depth: int,
+    path: str | None, stage: _Stager | None, level: int,
 ) -> _Screen:
     """Ordered union prefix (module docstring): the when-chain replicates
     first-passing-branch output only while every earlier branch is exact.
@@ -563,21 +495,19 @@ def _screen_union(
     Unions containing any non-exact branch (e.g. bounded $number, whose
     inexactness is row-dependent) or non-leaf branch keep the default
     (pass-only emission)."""
-    if not node:
-        raise ScreenNotApplicable("empty union (schema error path)")
     chain: list[_Screen] = []
-    for branch in node:
+    for branch in node.branches:
         try:
             # branches get the union's own path: their standalone viols are
             # ignored (the union composes its own rows below), and branch
             # errors DO report at the union's path (validate.ts:95-103)
-            r = _screen(branch, tv, txt, custom, stack, depth + 1, path, stage, level)
+            r = _screen(branch, tv, txt, stack, depth + 1, path, stage, level)
         except ScreenNotApplicable:
             break
         chain.append(r)
         if not r.exact:
             break
-    covered_all = len(chain) == len(node)
+    covered_all = len(chain) == len(node.branches)
     if not chain:
         raise ScreenNotApplicable("no screenable union prefix")
     cond = chain[0].cond
@@ -596,43 +526,25 @@ def _screen_union(
         null_out=all(r.null_out for r in chain),
     )
     if exact and path is not None and all(r.leaf_fail for r in chain):
-        from yaschva_spark.errors import UNION_MISMATCH, rule_id_for
-
         val = chain[0].leaf_fail[2]  # same tv -> identical rendering
         ufail = None
         for r in chain:
             b = r.leaf_fail[3]
             ufail = b if ufail is None else ufail & b
         ufail = ~F.coalesce(cond, F.lit(False)) & F.coalesce(ufail, F.lit(False))
-        rows = [
-            F.struct(
-                F.lit(path).alias("path"),
-                F.lit(rule_id_for(UNION_MISMATCH)).alias("rule"),
-                F.lit(UNION_MISMATCH).alias("error"),
-                val.alias("value"),
-            )
-        ]
+        err = F.lit(E.UNION_MISMATCH)
+        rows = [_row(F.lit(path), F.lit(E.rule_id_for(E.UNION_MISMATCH)), err, val)]
         branch_objs = []
         for r in chain:
             err_i, rule_i, _v, _b = r.leaf_fail
-            rows.append(
-                F.struct(
-                    F.lit(path).alias("path"),
-                    rule_i.alias("rule"),
-                    err_i.alias("error"),
-                    val.alias("value"),
-                )
-            )
-            branch_objs.append(
-                F.concat(F.lit('{"error":"'), err_i, F.lit('","value":'), val, F.lit("}"))
-            )
+            rows.append(_row(F.lit(path), rule_i, err_i, val))
+            branch_objs.append(_err_text(err_i, val))
         s.femit = F.coalesce(cond, F.lit(False)) | ufail
         s.viols = F.when(ufail, F.array(*rows)).otherwise(_empty_viols())
         body = F.concat_ws(",", *branch_objs) if branch_objs else F.lit("")
         s.fout = F.when(F.coalesce(cond, F.lit(False)), out).otherwise(
             F.concat(
-                F.lit('{"error":"'), F.lit(UNION_MISMATCH),
-                F.lit('","value":'), val,
+                F.lit('{"error":"'), err, F.lit('","value":'), val,
                 F.lit(',"output":['), body, F.lit("]}"),
             )
         )
@@ -640,8 +552,8 @@ def _screen_union(
 
 
 def _screen_array(
-    node: dict, tv: Column, custom: dict[str, Any], stack: frozenset, depth: int,
-    path: str | None = None, stage: _Stager | None = None, level: int = 0,
+    node: Array, tv: Column, stack: frozenset, depth: int,
+    path: str | None, stage: _Stager | None, level: int,
 ) -> _Screen:
     """validateArray (validate.ts:106-126): length bounds, then every
     element. Elements are never JS-undefined; a JSON null element arrives
@@ -666,7 +578,7 @@ def _screen_array(
     def elem_cond(e: Column) -> Column:
         # lambda scope: element subtrees reference the lambda variable and
         # must NOT be staged as projection columns
-        r = _screen(node["$array"], e, None, custom, stack, depth + 1)
+        r = _screen(node.elem, e, None, stack, depth + 1)
         holder["r"] = r
         return r.cond
 
@@ -688,28 +600,16 @@ def _screen_array(
     s = _Screen(cond, out, exact=holder["r"].exact, null_out=False)
     if path is None or holder["r"].leaf_fail is None or not holder["r"].exact:
         return s
-    from yaschva_spark import errors as E
-
-    max_len = node.get("maxLength")
-    min_len = node.get("minLength")
-    len_err = E.arr_length(
-        0 if js_falsy(min_len) else min_len,
-        E.MAX_SAFE_INTEGER if js_falsy(max_len) else max_len,
-    )
+    len_err = E.arr_length(node.min_len, node.max_len)
     if not _ERR_SAFE.match(len_err):
         return s
 
     def elem_fail(e: Column) -> _Screen:
-        return _screen(node["$array"], e, None, custom, stack, depth + 1)
+        return _screen(node.elem, e, None, stack, depth + 1)
 
     # every element's outcome decided AND renderable (exact elements:
     # cond ⇔ pass, bad ⇒ fail with exact (error, value))
-    def decided(e: Column) -> Column:
-        r = elem_fail(e)
-        _err, _rule, _val, bad = r.leaf_fail
-        return F.coalesce(r.cond, F.lit(False)) | F.coalesce(bad, F.lit(False))
-
-    all_decided = F.forall(arr, decided)
+    all_decided = F.forall(arr, lambda e: _elem_decided(elem_fail(e)))
     len_fail = F.coalesce(struct_base & ~len_ok, F.lit(False))
     size_txt = F.size(arr).cast("string")
     cond_f = F.coalesce(cond, F.lit(False))
@@ -718,63 +618,29 @@ def _screen_array(
     )
 
     def viol_rows(e: Column, i: Column) -> Column:
-        r = elem_fail(e)
-        err, rule, val, bad = r.leaf_fail
-        return F.when(
-            F.coalesce(bad, F.lit(False)) & ~F.coalesce(r.cond, F.lit(False)),
-            F.array(
-                F.struct(
-                    F.concat(F.lit(f"{path}["), i.cast("string"), F.lit("]")).alias("path"),
-                    rule.alias("rule"),
-                    err.alias("error"),
-                    val.alias("value"),
-                )
-            ),
-        ).otherwise(_empty_viols())
+        path_i = F.concat(F.lit(f"{path}["), i.cast("string"), F.lit("]"))
+        return _elem_viols(elem_fail(e), path_i)
 
     s.viols = (
         F.when(cond_f, _empty_viols())
         .when(
             len_fail,
-            F.array(
-                F.struct(
-                    F.lit(path).alias("path"),
-                    F.lit(E.rule_id_for(len_err)).alias("rule"),
-                    F.lit(len_err).alias("error"),
-                    size_txt.alias("value"),
-                )
-            ),
+            F.array(_row(F.lit(path), F.lit(E.rule_id_for(len_err)), F.lit(len_err), size_txt)),
         )
         .otherwise(F.flatten(F.transform(arr, viol_rows)))
     )
-
-    def elem_out(e: Column) -> Column:
-        r = elem_fail(e)
-        err, _rule, val, _bad = r.leaf_fail
-        return F.when(F.coalesce(r.cond, F.lit(False)), F.lit("null")).otherwise(
-            F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val, F.lit("}"))
-        )
-
+    elem_outs = F.transform(arr, lambda e: _elem_out(elem_fail(e)))
     s.fout = (
         F.when(cond_f, out)
-        .when(
-            len_fail,
-            F.concat(
-                F.lit('{"error":"'), F.lit(len_err),
-                F.lit('","value":'), size_txt, F.lit("}"),
-            ),
-        )
-        .otherwise(
-            F.concat(F.lit("["), F.array_join(F.transform(arr, elem_out), ","), F.lit("]"))
-        )
+        .when(len_fail, _err_text(F.lit(len_err), size_txt))
+        .otherwise(F.concat(F.lit("["), F.array_join(elem_outs, ","), F.lit("]")))
     )
     return s
 
 
 def _screen_map(
-    node: dict, tv: Column, txt: Column | None,
-    custom: dict[str, Any], stack: frozenset, depth: int,
-    path: str | None = None, stage: _Stager | None = None, level: int = 0,
+    node: Map, tv: Column, txt: Column | None, stack: frozenset, depth: int,
+    path: str | None, stage: _Stager | None, level: int,
 ) -> _Screen:
     """validateMap (validate.ts:161-193): member-count bounds, optional key
     regex, every value. NOT exact: the reference also accepts JS arrays
@@ -795,7 +661,7 @@ def _screen_map(
     holder: dict[str, _Screen] = {}
 
     def val_cond(v: Column) -> Column:
-        r = _screen(node["$map"], v, None, custom, stack, depth + 1)
+        r = _screen(node.value, v, None, stack, depth + 1)
         holder["r"] = r
         return r.cond
 
@@ -811,11 +677,8 @@ def _screen_map(
         # keys must render into output text verbatim (json.dumps identity)
         & F.forall(keys, lambda k: k.rlike(_MAP_KEY_SAFE_RLIKE))
     )
-    pattern = node.get("regex")
-    if not js_falsy(pattern):
-        if typed_unsafe(pattern):
-            raise ScreenNotApplicable("ECMA-only map key regex")
-        jp = to_java_pattern(pattern)
+    if node.regex is not None:
+        jp = _java_safe(node.regex)
         struct_ok = struct_ok & F.forall(keys, lambda k: k.rlike(jp))
     cond = struct_ok & vals_ok
     data_keys = F.array_distinct(F.json_object_keys(txt))
@@ -828,44 +691,24 @@ def _screen_map(
     if path is None or holder["r"].leaf_fail is None or not holder["r"].exact:
         return s
 
-    def val_screen(k: Column) -> _Screen:
-        return _screen(node["$map"], F.element_at(mp, k), None, custom, stack, depth + 1)
-
-    def decided(v: Column) -> Column:
-        r = _screen(node["$map"], v, None, custom, stack, depth + 1)
-        _e, _r, _v, bad = r.leaf_fail
-        return F.coalesce(r.cond, F.lit(False)) | F.coalesce(bad, F.lit(False))
+    def val_screen(v: Column) -> _Screen:
+        return _screen(node.value, v, None, stack, depth + 1)
 
     cond_f = F.coalesce(cond, F.lit(False))
     s.femit = cond_f | F.coalesce(
-        struct_ok & F.forall(F.map_values(mp), decided), F.lit(False)
+        struct_ok & F.forall(F.map_values(mp), lambda v: _elem_decided(val_screen(v))),
+        F.lit(False),
     )
 
     def viol_rows(k: Column) -> Column:
-        r = val_screen(k)
-        err, rule, val, bad = r.leaf_fail
-        return F.when(
-            F.coalesce(bad, F.lit(False)) & ~F.coalesce(r.cond, F.lit(False)),
-            F.array(
-                F.struct(
-                    F.concat(F.lit(f"{path}."), k).alias("path"),
-                    rule.alias("rule"),
-                    err.alias("error"),
-                    val.alias("value"),
-                )
-            ),
-        ).otherwise(_empty_viols())
+        return _elem_viols(val_screen(F.element_at(mp, k)), F.concat(F.lit(f"{path}."), k))
 
     s.viols = F.when(cond_f, _empty_viols()).otherwise(
         F.flatten(F.transform(data_keys, viol_rows))
     )
 
     def key_out(k: Column) -> Column:
-        r = val_screen(k)
-        err, _rule, val, _bad = r.leaf_fail
-        v_out = F.when(F.coalesce(r.cond, F.lit(False)), F.lit("null")).otherwise(
-            F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val, F.lit("}"))
-        )
+        v_out = _elem_out(val_screen(F.element_at(mp, k)))
         return F.concat(F.lit('"'), k, F.lit('":'), v_out)
 
     s.fout = F.when(cond_f, out).otherwise(
@@ -877,10 +720,8 @@ def _screen_map(
 
 
 def _screen_object(
-    node: dict, tv: Column, txt: Column | None,
-    custom: dict[str, Any], stack: frozenset, depth: int,
-    path: str | None = None,
-    stage: _Stager | None = None, level: int = 0,
+    node: Object, tv: Column, txt: Column | None, stack: frozenset, depth: int,
+    path: str | None, stage: _Stager | None, level: int,
 ) -> _Screen:
     """validateObject (validate.ts:128-159): closed world. NOT exact (the
     reference also accepts JS arrays). Output is data keys in DATA order
@@ -905,8 +746,7 @@ def _screen_object(
     out_pairs: list[Column] = []
     fout_pairs: list[Column] = []
     viol_pairs: list[Column] = []
-    for schema_key, sub in node.items():
-        data_key = unescape_key(schema_key)
+    for data_key, sub in node.fields:
         if not _SAFE_KEY.match(data_key):
             raise ScreenNotApplicable(f"key {data_key!r} not screen-safe")
         field_keys.append(data_key)
@@ -921,7 +761,7 @@ def _screen_object(
             txt_k = stage.add(level + 1, txt_k)
             sub_level = level + 1
         sub_path = f"{path}.{data_key}" if path is not None else None
-        r = _screen(sub, tv_k, txt_k, custom, stack, depth + 1, sub_path, stage, sub_level)
+        r = _screen(sub, tv_k, txt_k, stack, depth + 1, sub_path, stage, sub_level)
         subs.append(r)
         out_pairs.extend([F.lit(data_key), r.out])
         fout_pairs.extend([F.lit(data_key), r.fout])
@@ -983,31 +823,14 @@ def _screen_object(
     return _Screen(cond, out, exact=False, null_out=False)
 
 
-def _compile(schema: Any, raw: Column, stage: _Stager | None = None) -> _Screen:
-    pv = F.try_parse_json(raw)
-    if stage is not None:
-        pv = stage.add(0, pv)
-    return _screen(schema, pv, raw, {}, frozenset(), 0, "$", stage, 0)
+def compile_screens(schema: Any, raw: Column):
+    """One compilation, both screens, staged. Returns ``(levels, outputs)``:
+    ``levels`` is an ordered list of ``{column_name: Column}`` dicts of
+    shared subexpressions (see :class:`_Stager`) that the caller must
+    select in order (:func:`select_levels`) before evaluating ``outputs``,
+    whose expressions reference those columns by name:
 
-
-def compile_pass_screen(schema: Any, raw: Column) -> Column:
-    """Boolean Column: provably ``pass`` for the JSON text column ``raw``.
-    Raises :class:`ScreenNotApplicable` outside the fragment."""
-    return F.coalesce(_compile(schema, raw).cond, F.lit(False))
-
-
-def pass_output_col(schema: Any, raw: Column) -> Column:
-    """The interpreter's ``yv_output`` JSON for a row PROVEN passing by
-    :func:`compile_pass_screen`, built JVM-side — null at every leaf, and
-    in the interpreter's key order (DATA order first, then missing
-    declared keys in schema order; interp._v_object)."""
-    return _compile(schema, raw).out
-
-
-def compile_screens(schema: Any, raw: Column, staged: bool = False):
-    """One compilation, both screens (r5). Returns
-
-    * ``"pass"`` — provably-pass boolean (== :func:`compile_pass_screen`);
+    * ``"pass"`` — provably-pass boolean;
     * ``"pass_out"`` — yv_output for proven-pass rows;
     * ``"emit"`` — outcome (pass OR fail) exactly JVM-representable;
     * ``"viols"`` — the interpreter's violation rows, valid when ``emit``;
@@ -1016,32 +839,28 @@ def compile_screens(schema: Any, raw: Column, staged: bool = False):
     Rows with ``emit & ~pass`` are provably FAILING with byte-exact
     violations/output — they skip Arrow entirely. Rows with ``~emit`` run
     interpreted. Raises :class:`ScreenNotApplicable` outside the fragment
-    (same fragment as the pass screen; the fail side degrades per-node,
-    never widens the fragment).
-
-    ``staged=True`` returns ``(levels, outputs)`` instead: ``levels`` is
-    an ordered list of ``{column_name: Column}`` dicts of shared
-    subexpressions (see :class:`_Stager`); the caller must select each
-    level in order (``df.select("*", *aliases)``) before evaluating
-    ``outputs``, whose expressions reference those columns by name.
-    Measured at sf0.1 this cuts the three-way split's screen cost ~4x —
-    the unstaged tree re-evaluates every leaf's variant ops inside femit,
-    viols, fout, and both dispatch maps."""
-    if staged:
-        stage = _Stager()
-        s = _compile(schema, raw, stage)
-        return stage.levels, {
-            "pass": F.coalesce(s.cond, F.lit(False)),
-            "pass_out": s.out,
-            "emit": F.coalesce(s.femit, F.lit(False)),
-            "viols": s.viols,
-            "fail_out": s.fout,
-        }
-    s = _compile(schema, raw)
-    return {
+    (the fail side degrades per-node, never widens the fragment), including
+    for schemas that do not lower."""
+    try:
+        plan = lower(schema)
+    except SchemaError as ex:
+        raise ScreenNotApplicable(str(ex)) from ex
+    stage = _Stager()
+    pv = stage.add(0, F.try_parse_json(raw))
+    s = _screen(plan, pv, raw, frozenset(), 0, "$", stage, 0)
+    return stage.levels, {
         "pass": F.coalesce(s.cond, F.lit(False)),
         "pass_out": s.out,
         "emit": F.coalesce(s.femit, F.lit(False)),
         "viols": s.viols,
         "fail_out": s.fout,
     }
+
+
+def select_levels(df: DataFrame, levels: list[dict[str, Column]]) -> DataFrame:
+    """Evaluate :func:`compile_screens`' staged levels as chained
+    projections, each level once per row."""
+    for lvl in levels:
+        if lvl:
+            df = df.select("*", *[c.alias(n) for n, c in lvl.items()])
+    return df

@@ -100,7 +100,6 @@ def run_validation_job(
     *,
     schema: dict | None = None,
     n_buckets: int = 64,
-    salt_buckets: int = 16,
     write_violations: bool = True,
 ) -> JobResult:
     """Validate + check + sink + manifest, resumable per bucket.
@@ -162,9 +161,7 @@ def run_validation_job(
     # broadcast rejoin that re-counts by the real keys (collision-proof,
     # one extra scan) — that cost belongs on the reporting query, not on
     # every pipeline run. Spark's partial agg already collapses hot keys
-    # map-side, so no salting is needed for counting (salt_buckets remains
-    # available via checks.duplicate_keys for aggs without map-side
-    # combine).
+    # map-side, so no salting is needed for counting.
     dup_summary_df = checks.duplicate_key_fingerprints(
         validated.select("repo", "path", "commit"), ["repo", "path", "commit"]
     ).agg(

@@ -1,4 +1,5 @@
-"""The schema language: guards, $types env, $and merge, load_json.
+"""The schema language: guards, $types env, $and merge, load_json, and
+:func:`lower`, the one resolution every compiled back end emits from.
 
 Schemas are plain JSON-like Python values (str | list | dict), exactly the
 shape of the reference's schema documents. Node classification is structural
@@ -15,12 +16,10 @@ fail validation.
 from __future__ import annotations
 
 import json
+from dataclasses import dataclass, field
 from typing import Any
 
-from yaschva_spark.errors import AND_SCHEMA_ERR  # noqa: F401  (re-export convenience)
-
-SIMPLE_TYPES = ("string", "boolean", "number", "integer", "null", "?", "any")
-
+from yaschva_spark import errors as E
 
 class SchemaError(Exception):
     """Raised for malformed schemas — the analog of the reference's throws."""
@@ -142,7 +141,7 @@ def combine_and(node: dict, custom_types: dict[str, Any]) -> dict:
     """
     resolved = [resolve_meta(m, custom_types) for m in node["$and"]]
     if any(r is None or not is_obj(r) for r in resolved):
-        raise SchemaError(AND_SCHEMA_ERR)
+        raise SchemaError(E.AND_SCHEMA_ERR)
     merged: dict[str, Any] = {}
     for r in resolved:
         merged.update(r)
@@ -189,46 +188,174 @@ def node_kind(node: Any) -> str:
     raise SchemaError(f"Unknown validator:{js_stringify(node)}")
 
 
-def check_schema(node: Any, custom_types: dict[str, Any] | None = None,
-                 _seen: frozenset | None = None) -> None:
-    """Compile-time schema walk: raise for every case the reference throws on
-    at validation time (unknown simple type validate.ts:203, unknown $-node
-    validate.ts:256, empty union validate.ts:93, undefined schema
-    validate.ts:211). Recursive custom types are allowed (cycles are cut)."""
-    node, extracted = extract_types(node)
-    env = extracted if extracted is not None else (custom_types or {})
-    seen = _seen or frozenset()
+# --- lowering: one resolved check plan per schema ---------------------------
+# A schema lowers to a graph of five node kinds. Every back end that compiles
+# schemas (typed.py, jsonscreen.py) emits from this plan, so the reference's
+# dispatch order, ``$types`` scoping and first-error chains live only here;
+# interp.py keeps its own dispatch as the independent executable spec.
+# ``hops`` counts the custom names followed to reach a node; the typed back
+# ends charge one unit of their recursion budgets per name.
 
-    kind = node_kind(node)
-    if kind == "simple":
-        if node in env:
-            if node in seen:
-                return
-            check_schema(env[node], env, seen | {node})
-        elif node not in SIMPLE_TYPES:
-            raise SchemaError(f"Unknown validator:{js_stringify(node)}")
-    elif kind == "union":
-        if not node:
-            raise SchemaError("Array of types can not be empty")
-        for branch in node:
-            check_schema(branch, env, seen)
-    elif kind == "array":
-        check_schema(node["$array"], env, seen)
-    elif kind == "enum":
-        pass
-    elif kind == "object":
-        for v in node.values():
-            check_schema(v, env, seen)
-    elif kind == "map":
-        check_schema(node["$map"], env, seen)
-    elif kind == "meta":
-        check_schema(node["$type"], env, seen)
-    elif kind == "and":
-        # $and members that don't resolve to objects are a *data* failure in
-        # the reference (validate.ts:246-253), not a throw — don't raise here.
-        try:
-            merged = combine_and(node, env)
-        except SchemaError:
-            return
-        check_schema(merged, env, seen)
-    # "number" / "string": constraint dicts, nothing nested to check
+
+@dataclass(eq=False)
+class Leaf:
+    """Scalar validator: ``checks`` is the ordered first-error chain of
+    ``(check, arg, error)`` entries (the first failing check's error wins,
+    none failing passes; no checks is ``any``). The first entry is the type
+    check: ``undefined``, ``null``, ``string``, ``number``, ``integer``,
+    ``boolean``, or ``and`` (an ``$and`` whose members are not all objects,
+    which fails every value, validate.ts:246-253). Constraint checks
+    (``enum``, ``min_length``, ``max_length``, ``regex``, ``min``, ``max``)
+    follow it."""
+
+    checks: tuple = ()
+    hops: int = 0
+
+
+@dataclass(eq=False)
+class Union:
+    branches: list = field(default_factory=list)
+    hops: int = 0
+
+
+@dataclass(eq=False)
+class Array:
+    elem: Any = None
+    min_len: Any = 0
+    max_len: Any = E.MAX_SAFE_INTEGER
+    hops: int = 0
+
+
+@dataclass(eq=False)
+class Map:
+    value: Any = None
+    min_len: Any = 0
+    max_len: Any = E.MAX_SAFE_INTEGER
+    #: key regex, None when absent or JS-falsy
+    regex: Any = None
+    hops: int = 0
+
+
+@dataclass(eq=False)
+class Object:
+    #: ``(data_key, node)`` in schema order, ``\$`` keys unescaped
+    fields: list = field(default_factory=list)
+    hops: int = 0
+
+
+_SIMPLE_CHECKS = {
+    "any": (),
+    "?": (("undefined", None, E.NOT_UNDEFINED),),
+    "null": (("null", None, E.NOT_NULL),),
+    "string": (("string", None, E.NOT_STRING),),
+    "number": (("number", None, E.NOT_NUMBER),),
+    "integer": (("integer", None, E.NOT_INTEGER),),
+    "boolean": (("boolean", None, E.NOT_BOOLEAN),),
+}
+
+
+def _bounds(node: dict) -> tuple[Any, Any]:
+    """minLength/maxLength with the reference's ``|| 0`` / ``|| MAX``
+    defaults (validate.ts:109-110,171-172)."""
+    lo, hi = node.get("minLength"), node.get("maxLength")
+    return (0 if js_falsy(lo) else lo), (E.MAX_SAFE_INTEGER if js_falsy(hi) else hi)
+
+
+def _string_checks(spec: dict) -> tuple:
+    # JS falsy constraint values skip their check (validate.ts:78-82)
+    checks = [("string", None, E.NOT_STRING)]
+    for key, check, err in (("minLength", "min_length", E.STR_TOO_SHORT),
+                            ("maxLength", "max_length", E.STR_TOO_LONG),
+                            ("regex", "regex", E.REGEX_MISMATCH)):
+        if not js_falsy(spec.get(key)):
+            checks.append((check, spec[key], err))
+    return tuple(checks)
+
+
+def _enum_checks(enums: Any) -> tuple:
+    checks = [("string", None, E.NOT_STRING)]
+    if enums:  # `enums && enums.length && ...` skips an empty list
+        shown = [e if isinstance(e, str) else js_stringify(e) for e in enums]
+        checks.append(("enum", enums, E.enum_mismatch(shown)))
+    return tuple(checks)
+
+
+def _number_checks(spec: dict) -> tuple:
+    checks = [("number", None, E.NOT_NUMBER)]
+    for key, check, err in (("min", "min", E.NUM_BELOW_MIN), ("max", "max", E.NUM_ABOVE_MAX)):
+        if spec.get(key) is not None:
+            checks.append((check, spec[key], err))
+    return tuple(checks)
+
+
+class _Lowering:
+    def __init__(self) -> None:
+        #: (id of the $types env, name) -> the node that name lowered to
+        self.named: dict[tuple[int, str], Any] = {}
+
+    def bind(self, plan: Any, names: tuple) -> Any:
+        """Register ``plan`` for the custom names that resolved to it, before
+        its children lower, so a recursive name finds the shared node."""
+        plan.hops = len(names)
+        for key in names:
+            self.named[key] = plan
+        return plan
+
+    def node(self, node: Any, env: Any, names: tuple = ()) -> Any:
+        node, extracted = extract_types(node)
+        if extracted is not None:
+            env = extracted  # replaces the env for this subtree (validate.ts:216)
+        kind = node_kind(node)
+        if kind == "simple":
+            if not js_falsy(env.get(node)):  # a custom name shadows builtins
+                key = (id(env), node)
+                if key in self.named:
+                    return self.named[key]
+                if key in names:
+                    raise SchemaError(f"Type resolves only to itself:{js_stringify(node)}")
+                return self.node(env[node], env, names + (key,))
+            if node not in _SIMPLE_CHECKS:
+                raise SchemaError(f"Unknown validator:{js_stringify(node)}")
+            return self.bind(Leaf(_SIMPLE_CHECKS[node]), names)
+        if kind == "union":
+            if not node:
+                raise SchemaError("Array of types can not be empty")
+            plan = self.bind(Union(), names)
+            plan.branches = [self.node(b, env) for b in node]
+        elif kind == "array":
+            plan = self.bind(Array(None, *_bounds(node)), names)
+            plan.elem = self.node(node["$array"], env)
+        elif kind == "map":
+            regex = node.get("regex")
+            plan = self.bind(Map(None, *_bounds(node), None if js_falsy(regex) else regex), names)
+            plan.value = self.node(node["$map"], env)
+        elif kind == "object":
+            plan = self.bind(Object(), names)
+            plan.fields = [(unescape_key(k), self.node(v, env)) for k, v in node.items()]
+        elif kind == "meta":
+            return self.node(node["$type"], env, names)
+        elif kind == "and":
+            try:
+                merged = combine_and(node, env)
+            except SchemaError:
+                return self.bind(Leaf((("and", None, E.AND_SCHEMA_ERR),)), names)
+            return self.node(merged, env, names)
+        else:
+            checks = {"enum": _enum_checks, "string": _string_checks, "number": _number_checks}
+            return self.bind(Leaf(checks[kind](node["$" + kind])), names)
+        return plan
+
+
+def lower(schema: Any) -> Leaf | Union | Array | Map | Object:
+    """Resolve ``schema`` once into its check plan (see :class:`Leaf`).
+    Raises :class:`SchemaError` wherever the reference throws at validation
+    time (unknown simple type validate.ts:203, unknown $-node
+    validate.ts:256, empty union validate.ts:93, undefined schema
+    validate.ts:211), with its messages. A recursive custom name lowers to
+    one shared node, so the plan may be cyclic."""
+    return _Lowering().node(schema, {})
+
+
+def check_schema(schema: Any) -> None:
+    """Compile-time schema check: raise what :func:`lower` raises."""
+    lower(schema)

@@ -9,6 +9,9 @@ equivalent). ``schema_to_spark_type`` is the analog of the reference's
 Spark ``StructType`` with the same erasures (size/regex constraints live in
 expressions, not types).
 
+Both emit from :func:`yaschva_spark.schema.lower`'s plan, which holds the
+reference's dispatch order and first-error chains; this module maps each
+leaf check to a dtype-directed Column predicate (``_CHECKS``).
 Semantics follow the reference validator node-for-node (citations inline).
 One documented deviation (SURVEY.md §7.4): a plain Spark column cannot
 distinguish JS ``undefined`` from ``null`` — the typed path treats SQL NULL
@@ -36,24 +39,7 @@ from pyspark.sql import types as T
 
 from yaschva_spark import errors as E
 from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
-from yaschva_spark.schema import (
-    SchemaError,
-    combine_and,
-    extract_types,
-    is_and_node,
-    is_array_node,
-    is_enum_node,
-    is_map_node,
-    is_meta_node,
-    is_number_node,
-    is_obj,
-    is_simple,
-    is_string_node,
-    is_union,
-    js_falsy,
-    js_stringify,
-    unescape_key,
-)
+from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
 
 VIOLATION_DDL = "array<struct<path:string,rule:string,error:string,value:string>>"
 
@@ -129,8 +115,66 @@ def _concat(arrays: list[Column]) -> Column:
     return F.concat(*arrays)
 
 
+def _require_java_safe(pattern: str) -> str:
+    """Dialect guard (SURVEY §7.4): ``rlike`` evaluates patterns under
+    Java regex semantics, but the reference compiles them as ECMAScript
+    ``new RegExp(p, 'u')`` (the reference's validate.ts:81).
+    Most divergent constructs are TRANSLATED to exact-ECMA Java
+    spellings by regexdialect.to_java_pattern ($-anchor, dot/NEL,
+    class operators, ``\\u{...}``, ``\\s``, ``[]``/``[^]``); the
+    untranslatable residue (long/script Unicode properties, in-class
+    ``\\S``/``\\W``) must not silently compile — raising
+    TypedCompileError makes validate_auto route the schema to the
+    reference-faithful interpreter path instead. Returns the Java
+    spelling (rlike is an unanchored search, same as ECMAScript .test)."""
+    reasons = typed_unsafe(pattern)
+    if reasons:
+        raise TypedCompileError(
+            f"regex {pattern!r} uses ECMA-only constructs "
+            f"({'; '.join(reasons)}); dynamic path required"
+        )
+    return to_java_pattern(pattern)
+
+
+def _not_number(expr: Column, dtype, _arg) -> Column:
+    if isinstance(dtype, _FRACTIONAL_TYPES):
+        return expr.isNull() | F.isnan(expr)
+    return expr.isNull()
+
+
+def _not_integer(expr: Column, dtype, _arg) -> Column:
+    cond = expr.isNull()
+    if isinstance(dtype, _FRACTIONAL_TYPES):
+        cond = cond | F.isnan(expr) | (expr != F.floor(expr))
+    elif isinstance(dtype, T.DecimalType) and dtype.scale > 0:
+        # a decimal with nonzero scale can hold 1.50: integrality must
+        # be checked (no NaN branch — decimals cannot be NaN)
+        cond = cond | (expr != F.floor(expr))
+    # JS safe-integer bound applies to longs/decimals too (SURVEY §7.4)
+    if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
+        cond = cond | (F.abs(expr) > F.lit(E.MAX_SAFE_INTEGER))
+    return cond
+
+
+#: leaf check -> (column types it accepts, failure predicate). A type check
+#: on any other type (or a statically undefined value) fails outright;
+#: constraint checks follow a type check, so accept whatever it accepted.
+_CHECKS = {
+    "string": (T.StringType, lambda e, dt, a: e.isNull()),
+    "boolean": (T.BooleanType, lambda e, dt, a: e.isNull()),
+    "number": (_NUMERIC_TYPES, _not_number),
+    "integer": (_NUMERIC_TYPES, _not_integer),
+    "enum": (None, lambda e, dt, a: ~e.isin(*a)),
+    "min_length": (None, lambda e, dt, a: js_strlen(e) < F.lit(a)),
+    "max_length": (None, lambda e, dt, a: js_strlen(e) > F.lit(a)),
+    "regex": (None, lambda e, dt, a: ~e.rlike(_require_java_safe(a))),
+    "min": (None, lambda e, dt, a: e < F.lit(a)),
+    "max": (None, lambda e, dt, a: e > F.lit(a)),
+}
+
+
 class _Compiler:
-    """Recursive schema -> Column compiler, dtype-directed.
+    """Plan -> Column emitter, dtype-directed.
 
     ``expr is None`` means the value is statically *undefined* (a field the
     data's type does not carry) — composite validators then emit their
@@ -138,272 +182,108 @@ class _Compiler:
     validating ``undefined`` (validate.ts:130-132,163-165).
     """
 
-    def __init__(self, custom_types: dict[str, Any], max_unroll: int = 32):
-        self.env = custom_types
+    def __init__(self, max_unroll: int = 32):
         self.max_unroll = max_unroll
 
-    # -- helpers -------------------------------------------------------------
-    def _value_or_undef(self, expr: Column | None) -> Column:
-        return F.lit(_UNDEF_JSON) if expr is None else _json_value(expr)
+    def _const(self, path: Column, error: str, expr: Column | None) -> Column:
+        value = F.lit(_UNDEF_JSON) if expr is None else _json_value(expr)
+        return _viol(path, E.rule_id_for(error), error, value)
 
-    def _const(self, path: Column, rule: str, error: str, expr: Column | None) -> Column:
-        return _viol(path, rule, error, self._value_or_undef(expr))
-
-    # -- dispatch (reference order, validate.ts:223-256) -----------------------
-    def compile(self, node: Any, expr: Column | None, dtype: T.DataType | None,
+    def compile(self, node, expr: Column | None, dtype: T.DataType | None,
                 path: Column, depth: int = 0) -> Column:
         if depth > self.max_unroll:
             raise TypedCompileError(
                 f"custom-type recursion exceeds unroll budget ({self.max_unroll})"
             )
-        node, extracted = extract_types(node)
-        if extracted is not None:
-            # env replacement is scoped to this subtree (validate.ts:215-219);
-            # expressions are built eagerly so save/restore is sound
-            saved = self.env
-            self.env = extracted
-            try:
-                return self._dispatch(node, expr, dtype, path, depth)
-            finally:
-                self.env = saved
-        return self._dispatch(node, expr, dtype, path, depth)
-
-    def _dispatch(self, node: Any, expr: Column | None, dtype: T.DataType | None,
-                  path: Column, depth: int) -> Column:
-        if is_simple(node):
-            custom = self.env.get(node)
-            if custom is not None and not js_falsy(custom):
-                return self.compile(custom, expr, dtype, path, depth + 1)
-            return self._simple(node, expr, dtype, path)
-        if is_union(node):
+        if isinstance(node, Leaf):
+            return self._leaf(node, expr, dtype, path)
+        if isinstance(node, Union):
             return self._union(node, expr, dtype, path, depth)
-        if is_array_node(node):
+        if isinstance(node, Array):
             return self._array(node, expr, dtype, path, depth)
-        if is_enum_node(node):
-            return self._enum(node, expr, dtype, path)
-        if is_obj(node):
-            return self._object(node, expr, dtype, path, depth)
-        if is_map_node(node):
+        if isinstance(node, Map):
             return self._map(node, expr, dtype, path, depth)
-        if is_number_node(node):
-            return self._number_node(node, expr, dtype, path)
-        if is_meta_node(node):
-            return self.compile(node["$type"], expr, dtype, path, depth)
-        if is_string_node(node):
-            return self._string_node(node, expr, dtype, path)
-        if is_and_node(node):
-            try:
-                merged = combine_and(node, self.env)
-            except SchemaError:
-                # data-level failure for every row (validate.ts:246-253)
-                return self._const(path, "and_schema_err", E.AND_SCHEMA_ERR, None)
-            return self._object(merged, expr, dtype, path, depth)
-        raise SchemaError(f"Unknown validator:{js_stringify(node)}")
+        return self._object(node, expr, dtype, path, depth)
 
-    # -- simple types (validate.ts:50-89,194-205) ------------------------------
-    def _simple(self, stype: str, expr: Column | None, dtype, path: Column) -> Column:
-        if stype == "any":
+    def _leaf(self, node: Leaf, expr, dtype, path: Column) -> Column:
+        """First-error chain (validate.ts:50-89,194-205) as one CASE WHEN."""
+        if not node.checks:  # any
             return _empty()
-        if stype == "?":
+        (check, arg, error), rest = node.checks[0], node.checks[1:]
+        if check == "and":  # data-level failure for every row
+            return self._const(path, error, None)
+        bad = self._const(path, error, expr)
+        if check in ("undefined", "null"):
+            # SQL NULL is both undefined and null (module docstring)
             if expr is None:
-                return _empty()
-            return F.when(expr.isNull(), _empty()).otherwise(
-                self._const(path, "not_undefined", E.NOT_UNDEFINED, expr)
-            )
-        if stype == "null":
-            if expr is None:
-                return self._const(path, "not_null", E.NOT_NULL, None)
-            return F.when(expr.isNull(), _empty()).otherwise(
-                self._const(path, "not_null", E.NOT_NULL, expr)
-            )
-        if stype == "string":
-            return self._string_checks(expr, dtype, path, {})
-        if stype == "number":
-            return self._number_checks(expr, dtype, path, None, None)
-        if stype == "integer":
-            return self._integer(expr, dtype, path)
-        if stype == "boolean":
-            if expr is None or not isinstance(dtype, T.BooleanType):
-                return self._const(path, "not_boolean", E.NOT_BOOLEAN, expr)
-            return F.when(expr.isNull(), self._const(path, "not_boolean", E.NOT_BOOLEAN, expr)) \
-                .otherwise(_empty())
-        raise SchemaError(f"Unknown validator:{js_stringify(stype)}")
-
-    def _integer(self, expr: Column | None, dtype, path: Column) -> Column:
-        bad = self._const(path, "not_integer", E.NOT_INTEGER, expr)
-        if expr is None or not isinstance(dtype, _NUMERIC_TYPES):
+                return _empty() if check == "undefined" else bad
+            return F.when(expr.isNull(), _empty()).otherwise(bad)
+        accepts, fails = _CHECKS[check]
+        if expr is None or not isinstance(dtype, accepts):
             return bad
-        cond = expr.isNull()
-        if isinstance(dtype, _FRACTIONAL_TYPES):
-            cond = cond | F.isnan(expr) | (expr != F.floor(expr))
-        elif isinstance(dtype, T.DecimalType) and dtype.scale > 0:
-            # a decimal with nonzero scale can hold 1.50: integrality must
-            # be checked (no NaN branch — decimals cannot be NaN)
-            cond = cond | (expr != F.floor(expr))
-        # JS safe-integer bound applies to longs/decimals too (SURVEY §7.4)
-        if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
-            cond = cond | (F.abs(expr) > F.lit(E.MAX_SAFE_INTEGER))
-        return F.when(cond, bad).otherwise(_empty())
-
-    def _number_checks(self, expr, dtype, path, vmin, vmax) -> Column:
-        bad = self._const(path, "not_number", E.NOT_NUMBER, expr)
-        if expr is None or not isinstance(dtype, _NUMERIC_TYPES):
-            return bad
-        not_num = expr.isNull()
-        if isinstance(dtype, _FRACTIONAL_TYPES):
-            not_num = not_num | F.isnan(expr)
-        chain = F.when(not_num, bad)
-        if vmin is not None:
-            chain = chain.when(
-                expr < F.lit(vmin), self._const(path, "num_below_min", E.NUM_BELOW_MIN, expr)
-            )
-        if vmax is not None:
-            chain = chain.when(
-                expr > F.lit(vmax), self._const(path, "num_above_max", E.NUM_ABOVE_MAX, expr)
-            )
-        return chain.otherwise(_empty())
-
-    def _number_node(self, node, expr, dtype, path) -> Column:
-        spec = node["$number"]
-        return self._number_checks(expr, dtype, path, spec.get("min"), spec.get("max"))
-
-    def _require_java_safe(self, pattern: str) -> None:
-        """Dialect guard (SURVEY §7.4): ``rlike`` evaluates patterns under
-        Java regex semantics, but the reference compiles them as ECMAScript
-        ``new RegExp(p, 'u')`` (/root/reference/src/validate.ts:81).
-        Most divergent constructs are TRANSLATED to exact-ECMA Java
-        spellings by regexdialect.to_java_pattern ($-anchor, dot/NEL,
-        class operators, ``\\u{...}``, ``\\s``, ``[]``/``[^]``); the
-        untranslatable residue (long/script Unicode properties, in-class
-        ``\\S``/``\\W``) must not silently compile — raising
-        TypedCompileError makes validate_auto route the schema to the
-        reference-faithful interpreter path instead."""
-        reasons = typed_unsafe(pattern)
-        if reasons:
-            raise TypedCompileError(
-                f"regex {pattern!r} uses ECMA-only constructs "
-                f"({'; '.join(reasons)}); dynamic path required"
-            )
-
-    def _string_checks(self, expr, dtype, path, spec: dict) -> Column:
-        bad = self._const(path, "not_string", E.NOT_STRING, expr)
-        if expr is None or not isinstance(dtype, T.StringType):
-            return bad
-        chain = F.when(expr.isNull(), bad)
-        min_len = spec.get("minLength")
-        max_len = spec.get("maxLength")
-        pattern = spec.get("regex")
-        # JS falsy constraint values skip the check (validate.ts:78-82)
-        if not js_falsy(min_len):
-            chain = chain.when(
-                js_strlen(expr) < F.lit(min_len),
-                self._const(path, "str_too_short", E.STR_TOO_SHORT, expr),
-            )
-        if not js_falsy(max_len):
-            chain = chain.when(
-                js_strlen(expr) > F.lit(max_len),
-                self._const(path, "str_too_long", E.STR_TOO_LONG, expr),
-            )
-        if not js_falsy(pattern):
-            self._require_java_safe(pattern)
-            # rlike is an unanchored search, same as ECMAScript .test;
-            # to_java_pattern pins $-anchor / dot / class-operator semantics
-            # to ECMA (regexdialect module docstring)
-            chain = chain.when(
-                ~expr.rlike(to_java_pattern(pattern)),
-                self._const(path, "regex_mismatch", E.REGEX_MISMATCH, expr),
-            )
-        return chain.otherwise(_empty())
-
-    def _string_node(self, node, expr, dtype, path) -> Column:
-        return self._string_checks(expr, dtype, path, node["$string"])
-
-    def _enum(self, node, expr, dtype, path) -> Column:
-        enums = node["$enum"]
-        bad_str = self._const(path, "not_string", E.NOT_STRING, expr)
-        if expr is None or not isinstance(dtype, T.StringType):
-            return bad_str
-        chain = F.when(expr.isNull(), bad_str)
-        if enums:
-            chain = chain.when(
-                ~expr.isin(*enums),
-                self._const(path, "enum_mismatch", E.enum_mismatch(enums), expr),
-            )
+        chain = F.when(fails(expr, dtype, arg), bad)
+        for check, arg, error in rest:
+            chain = chain.when(_CHECKS[check][1](expr, dtype, arg), self._const(path, error, expr))
         return chain.otherwise(_empty())
 
     # -- composite types --------------------------------------------------------
-    def _union(self, branches: list, expr, dtype, path, depth) -> Column:
+    def _union(self, node: Union, expr, dtype, path, depth) -> Column:
         """validateOneOf (validate.ts:91-104): first-pass-wins is an OR of
         branch pass-bits; on total failure the union error plus every
         branch's violations, in branch order."""
-        if not branches:
-            raise SchemaError("Array of types can not be empty")
-        compiled = [self.compile(b, expr, dtype, path, depth) for b in branches]
+        compiled = [self.compile(b, expr, dtype, path, depth + b.hops) for b in node.branches]
         any_pass = None
         for arr in compiled:
             bit = F.size(arr) == 0
             any_pass = bit if any_pass is None else (any_pass | bit)
-        union_err = self._const(path, "union_mismatch", E.UNION_MISMATCH, expr)
+        union_err = self._const(path, E.UNION_MISMATCH, expr)
         return F.when(any_pass, _empty()).otherwise(_concat([union_err] + compiled))
 
-    def _array(self, node, expr, dtype, path, depth) -> Column:
-        if expr is None or not isinstance(dtype, T.ArrayType):
-            return self._const(path, "not_array", E.NOT_ARRAY, expr)
-        min_len = node.get("minLength")
-        max_len = node.get("maxLength")
-        min_len = 0 if js_falsy(min_len) else min_len  # `|| 0` (validate.ts:110)
-        max_len = E.MAX_SAFE_INTEGER if js_falsy(max_len) else max_len  # `|| MAX`
-        elem_schema = node["$array"]
-        elem_type = dtype.elementType
+    def _sized(self, node: Array | Map, expr, path, error: str) -> Column:
+        """NULL fails with ``error``; a size outside the bounds fails with the
+        size itself as the offending value (validate.ts:111-115,173-177)."""
+        chain = F.when(expr.isNull(), self._const(path, error, expr))
+        lo, hi = node.min_len, node.max_len
+        if lo > 0 or hi < E.MAX_SAFE_INTEGER:
+            size_err = E.arr_length(lo, hi) if isinstance(node, Array) else E.map_size(lo, hi)
+            chain = chain.when(
+                ~F.size(expr).between(lo, hi),
+                _viol(path, E.rule_id_for(size_err), size_err, F.size(expr).cast("string")),
+            )
+        return chain
 
+    def _array(self, node: Array, expr, dtype, path, depth) -> Column:
+        if expr is None or not isinstance(dtype, T.ArrayType):
+            return self._const(path, E.NOT_ARRAY, expr)
         elem_viols = F.flatten(
             F.transform(
                 expr,
                 lambda x, i: self.compile(
-                    elem_schema,
+                    node.elem,
                     x,
-                    elem_type,
+                    dtype.elementType,
                     F.concat(path, F.lit("["), i.cast("string"), F.lit("]")),
-                    depth + 1,
+                    depth + 1 + node.elem.hops,
                 ),
             )
         )
-        chain = F.when(expr.isNull(), self._const(path, "not_array", E.NOT_ARRAY, expr))
-        if min_len > 0 or max_len < E.MAX_SAFE_INTEGER:
-            # length check precedes element recursion; offending value is the
-            # length itself (validate.ts:111-115)
-            chain = chain.when(
-                ~F.size(expr).between(min_len, max_len),
-                _viol(
-                    path,
-                    "arr_length",
-                    E.arr_length(min_len, max_len),
-                    F.size(expr).cast("string"),
-                ),
-            )
-        return chain.otherwise(elem_viols)
+        # the length check precedes element recursion
+        return self._sized(node, expr, path, E.NOT_ARRAY).otherwise(elem_viols)
 
-    def _map(self, node, expr, dtype, path, depth) -> Column:
+    def _map(self, node: Map, expr, dtype, path, depth) -> Column:
         if expr is None or not isinstance(dtype, T.MapType):
-            return self._const(path, "not_object", E.NOT_OBJECT, expr)
+            return self._const(path, E.NOT_OBJECT, expr)
         if not isinstance(dtype.keyType, T.StringType):
             raise TypedCompileError("$map requires map<string, _> column")
-        min_len = node.get("minLength")
-        max_len = node.get("maxLength")
-        min_len = 0 if js_falsy(min_len) else min_len
-        max_len = E.MAX_SAFE_INTEGER if js_falsy(max_len) else max_len
-        value_schema = node["$map"]
-        value_type = dtype.valueType
-        pattern = node.get("regex")
-        if not js_falsy(pattern):
-            self._require_java_safe(pattern)
+        pattern = None if node.regex is None else _require_java_safe(node.regex)
 
         def entry_viols(e: Column) -> Column:
             key, val = e["key"], e["value"]
             val_viols = self.compile(
-                value_schema, val, value_type, F.concat(path, F.lit("."), key), depth + 1
+                node.value, val, dtype.valueType, F.concat(path, F.lit("."), key),
+                depth + 1 + node.value.hops,
             )
-            if js_falsy(pattern):
+            if pattern is None:
                 return val_viols
             # failing keys report the whole map and skip value validation
             # (validate.ts:179-185)
@@ -413,26 +293,20 @@ class _Compiler:
                 E.REGEX_MISMATCH,
                 F.to_json(expr),
             )
-            return F.when(~key.rlike(to_java_pattern(pattern)), key_viol).otherwise(val_viols)
+            return F.when(~key.rlike(pattern), key_viol).otherwise(val_viols)
 
         entries = F.flatten(F.transform(F.map_entries(expr), entry_viols))
-        chain = F.when(expr.isNull(), self._const(path, "not_object", E.NOT_OBJECT, expr))
-        if min_len > 0 or max_len < E.MAX_SAFE_INTEGER:
-            chain = chain.when(
-                ~F.size(expr).between(min_len, max_len),
-                _viol(path, "map_size", E.map_size(min_len, max_len), F.size(expr).cast("string")),
-            )
-        return chain.otherwise(entries)
+        return self._sized(node, expr, path, E.NOT_OBJECT).otherwise(entries)
 
-    def _object(self, node: dict, expr, dtype, path, depth) -> Column:
+    def _object(self, node: Object, expr, dtype, path, depth) -> Column:
         if expr is None or not isinstance(dtype, T.StructType):
-            return self._const(path, "not_object", E.NOT_OBJECT, expr)
+            return self._const(path, E.NOT_OBJECT, expr)
         children = self._object_children(node, expr, dtype, path, depth)
         return F.when(
-            expr.isNull(), self._const(path, "not_object", E.NOT_OBJECT, expr)
+            expr.isNull(), self._const(path, E.NOT_OBJECT, expr)
         ).otherwise(_concat(children) if children else _empty())
 
-    def _object_children(self, node: dict, expr, dtype: T.StructType, path, depth,
+    def _object_children(self, node: Object, expr, dtype: T.StructType, path, depth,
                          ignore: tuple[str, ...] = ()) -> list[Column]:
         """Closed-world record checks (validateObject, validate.ts:128-159):
         declared fields validate (missing ones against undefined); struct
@@ -441,17 +315,17 @@ class _Compiler:
         children: list[Column] = []
         field_types = {f.name: f.dataType for f in dtype.fields}
         declared = set()
-        for schema_key, sub in node.items():
-            data_key = unescape_key(schema_key)
+        for data_key, sub in node.fields:
             declared.add(data_key)
             sub_path = F.concat(path, F.lit("." + data_key))
+            sub_depth = depth + 1 + sub.hops
             if data_key in field_types:
                 child_expr = expr[data_key] if expr is not None else _root_col(data_key)
                 children.append(
-                    self.compile(sub, child_expr, field_types[data_key], sub_path, depth + 1)
+                    self.compile(sub, child_expr, field_types[data_key], sub_path, sub_depth)
                 )
             else:
-                children.append(self.compile(sub, None, None, sub_path, depth + 1))
+                children.append(self.compile(sub, None, None, sub_path, sub_depth))
         for name in field_types:
             if name not in declared and name not in ignore:
                 child_expr = expr[name] if expr is not None else _root_col(name)
@@ -466,6 +340,18 @@ class _Compiler:
         return children
 
 
+def _root_object(schema: Any) -> Object:
+    root = lower(schema)
+    if not isinstance(root, Object):
+        if isinstance(root, Leaf) and root.checks[:1] == (("and", None, E.AND_SCHEMA_ERR),):
+            raise SchemaError(E.AND_SCHEMA_ERR)
+        raise TypedCompileError(
+            "root schema must resolve to a plain object for table validation; "
+            "use compile_column for column-level schemas"
+        )
+    return root
+
+
 def compile_schema(
     schema: Any,
     df_schema: T.StructType,
@@ -478,46 +364,20 @@ def compile_schema(
     (always present, so the root never raises "not an Object").
 
     ``ignore_columns`` exempts engine/bookkeeping columns from the
-    closed-world extra-key rule.
+    closed-world extra-key rule. Raises :class:`SchemaError` for malformed
+    schemas (the reference throws).
     """
-    root, custom = extract_types(schema)
-    env = custom or {}
-    root = _resolve_root(root, env)
-    if not is_obj(root):
-        raise TypedCompileError(
-            "root schema must resolve to a plain object for table validation; "
-            "use compile_column for column-level schemas"
-        )
-    compiler = _Compiler(env, max_unroll=max_unroll)
-    children = compiler._object_children(
-        root, None, df_schema, F.lit("$"), 0, ignore=tuple(ignore_columns)
+    children = _Compiler(max_unroll)._object_children(
+        _root_object(schema), None, df_schema, F.lit("$"), 0, ignore=tuple(ignore_columns)
     )
     return _concat(children) if children else _empty()
-
-
-def _resolve_root(root: Any, env: dict) -> Any:
-    """Unwrap root-level $type / custom-name / $and down to an object."""
-    seen = 0
-    while seen < 64:
-        seen += 1
-        if is_simple(root) and root in env:
-            root = env[root]
-        elif is_meta_node(root):
-            root = root["$type"]
-        elif is_and_node(root):
-            root = combine_and(root, env)
-        else:
-            return root
-    raise TypedCompileError("root schema resolution did not terminate")
 
 
 def compile_column(
     schema: Any, column: Column, dtype: T.DataType, *, path: str = "$", max_unroll: int = 32
 ) -> Column:
     """Compile any schema node against a single typed column."""
-    root, custom = extract_types(schema)
-    compiler = _Compiler(custom or {}, max_unroll=max_unroll)
-    return compiler.compile(root, column, dtype, F.lit(path))
+    return _Compiler(max_unroll).compile(lower(schema), column, dtype, F.lit(path))
 
 
 # --- schema -> Spark type (validationToType analog, type.ts:33-92) -----------
@@ -530,68 +390,53 @@ def schema_to_spark_type(schema: Any, max_depth: int = 16) -> T.StructType:
     Schemas needing a dynamic representation (multi-type unions, ``any``)
     raise :class:`TypedCompileError`.
     """
-    root, custom = extract_types(schema)
-    env = custom or {}
-    root = _resolve_root(root, env)
-    if not is_obj(root):
-        raise TypedCompileError("root schema must resolve to an object")
-    return _struct_for(root, env, 0, max_depth)
+    return _struct_for(_root_object(schema), 0, max_depth)
 
 
-def _struct_for(node: dict, env: dict, depth: int, max_depth: int) -> T.StructType:
+#: leaf type check -> (Spark type, nullable); constraints are erased
+_LEAF_TYPES = {
+    "string": (T.StringType(), False),
+    "number": (T.DoubleType(), False),
+    "integer": (T.LongType(), False),
+    "boolean": (T.BooleanType(), False),
+    "undefined": (T.NullType(), True),
+    "null": (T.NullType(), True),
+}
+
+
+#: union branches that only make the union nullable
+_OPTIONAL = (lower("?").checks, lower("null").checks)
+
+
+def _struct_for(node: Object, depth: int, max_depth: int) -> T.StructType:
     fields = []
-    for schema_key, sub in node.items():
-        name = unescape_key(schema_key)
-        dt, nullable = _type_for(sub, env, depth + 1, max_depth)
+    for name, sub in node.fields:
+        dt, nullable = _type_for(sub, depth + 1 + sub.hops, max_depth)
         fields.append(T.StructField(name, dt, nullable))
     return T.StructType(fields)
 
 
-def _type_for(node: Any, env: dict, depth: int, max_depth: int) -> tuple[T.DataType, bool]:
+def _type_for(node, depth: int, max_depth: int) -> tuple[T.DataType, bool]:
     if depth > max_depth:
         raise TypedCompileError("recursive custom type exceeds typed-path depth")
-    if is_simple(node):
-        if node in env:
-            return _type_for(env[node], env, depth + 1, max_depth)
-        mapping: dict[str, T.DataType] = {
-            "string": T.StringType(),
-            "number": T.DoubleType(),
-            "integer": T.LongType(),
-            "boolean": T.BooleanType(),
-        }
-        if node in mapping:
-            return mapping[node], False
-        if node in ("null", "?"):
-            return T.NullType(), True
-        if node == "any":
+    if isinstance(node, Leaf):
+        if not node.checks:
             raise TypedCompileError("'any' requires the dynamic representation")
-        raise SchemaError(f"Unknown validator:{js_stringify(node)}")
-    if is_union(node):
-        if not node:
-            raise SchemaError("Array of types can not be empty")
-        concrete = [b for b in node if b not in ("?", "null")]
-        nullable = len(concrete) < len(node)
+        check, _arg, error = node.checks[0]
+        if check == "and":
+            raise SchemaError(error)
+        return _LEAF_TYPES[check]
+    if isinstance(node, Union):
+        concrete = [b for b in node.branches
+                    if not (isinstance(b, Leaf) and b.checks[:1] in _OPTIONAL)]
         if len(concrete) == 1:
-            dt, _ = _type_for(concrete[0], env, depth, max_depth)
-            return dt, nullable
+            dt, _ = _type_for(concrete[0], depth + concrete[0].hops, max_depth)
+            return dt, len(concrete) < len(node.branches)
         raise TypedCompileError("multi-type unions require the dynamic representation")
-    if is_array_node(node):
-        dt, elem_nullable = _type_for(node["$array"], env, depth + 1, max_depth)
+    if isinstance(node, Array):
+        dt, elem_nullable = _type_for(node.elem, depth + 1 + node.elem.hops, max_depth)
         return T.ArrayType(dt, containsNull=elem_nullable), False
-    if is_enum_node(node):
-        return T.StringType(), False
-    if is_obj(node):
-        return _struct_for(node, env, depth, max_depth), False
-    if is_map_node(node):
-        dt, val_nullable = _type_for(node["$map"], env, depth + 1, max_depth)
+    if isinstance(node, Map):
+        dt, val_nullable = _type_for(node.value, depth + 1 + node.value.hops, max_depth)
         return T.MapType(T.StringType(), dt, valueContainsNull=val_nullable), False
-    if is_number_node(node):
-        return T.DoubleType(), False
-    if is_meta_node(node):
-        return _type_for(node["$type"], env, depth, max_depth)
-    if is_string_node(node):
-        return T.StringType(), False
-    if is_and_node(node):
-        merged = combine_and(node, env)
-        return _struct_for(merged, env, depth, max_depth), False
-    raise SchemaError(f"Unknown validator:{js_stringify(node)}")
+    return _struct_for(node, depth, max_depth), False
