@@ -140,3 +140,25 @@ def test_compiled_screen_memoization(spark):
     assert isinstance(_SCREEN_CACHE[("app-1", bad, "js")], ScreenNotApplicable)
     with _pytest.raises(ScreenNotApplicable):
         _compiled_screens("app-1", bad, "js")
+
+
+def test_screen_cache_keeps_only_current_application(spark):
+    """A compile under a new application id drops the earlier
+    application's entries: they only hold dead JVM references."""
+    import json as _json
+
+    from yaschva_spark.engine import _SCREEN_CACHE, _compiled_screens
+
+    for app in ("app-old", "app-new"):
+        for schema in ({"k": "integer"}, {"k": "string"}):
+            _compiled_screens(app, _json.dumps(schema), "js")
+    assert _SCREEN_CACHE
+    assert {k[0] for k in _SCREEN_CACHE} == {"app-new"}
+
+
+def test_reserved_column_prefix_rejected(spark):
+    """Input columns named __yv_* would collide with the plan's staged
+    screen columns; they are rejected up front, by name."""
+    df = spark.createDataFrame([(1, '{"k": 1}')], "__yv_s0_0 long, js string")
+    with pytest.raises(ValueError, match="__yv_s0_0"):
+        validate_json_table(df, {"k": "integer"}, "js")

@@ -533,3 +533,29 @@ def test_fail_screen_map_rows_exact(spark):
         ("$.m.b", "not_integer", "Value is not an integer ", "null"),
         ("$.m.a", "not_integer", "Value is not an integer ", "true"),
     ]
+
+
+#: (schema, [(json, expect_emit)]) — the emission boundary at composite
+#: nodes: array and map fail sides need an exact, fail-compiled leaf
+#: element/value, and a union fail side needs every branch to be one
+EMISSION_BOUNDARY = [
+    ({"xs": {"$array": ["?", "integer"]}},
+     [('{"xs":[1]}', True), ('{"xs":["a"]}', False), ('{"xs":[null]}', False)]),
+    ({"m": {"$map": ["null", "integer"]}}, [('{"m":{"a":"x"}}', False)]),
+    ({"v": ["integer", {"$array": "integer"}]}, [('{"v":"x"}', False)]),
+    ({"v": ["integer", "string"]}, [('{"v":true}', True)]),
+]
+
+
+@pytest.mark.parametrize("schema,rows", EMISSION_BOUNDARY)
+def test_fail_screen_composite_emission_boundary(spark, schema, rows):
+    df = spark.createDataFrame([(i, t) for i, (t, _) in enumerate(rows)], "id long, js string")
+    staged, scr = _screened(df, schema)
+    emitted = {r["id"]: r["e"] for r in staged.select("id", scr["emit"].alias("e")).collect()}
+    assert [emitted[i] for i in range(len(rows))] == [e for _, e in rows]
+    cols = ["id", "yv_valid", "yv_violations", "yv_output"]
+    a = {r["id"]: repr(r) for r in
+         validate_json_table(df, schema, "js", screen=True).select(cols).collect()}
+    b = {r["id"]: repr(r) for r in
+         validate_json_table(df, schema, "js", screen=False).select(cols).collect()}
+    assert a == b

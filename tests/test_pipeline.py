@@ -120,3 +120,26 @@ def test_violations_sink_partition_pruning(spark, code, tmp_path):
     assert viol.count() > 0
     # pruned read sees exactly the one bucket
     assert viol.select("bucket").distinct().collect()[0][0] == 3
+
+
+def test_pending_buckets_missing_or_empty_manifest(spark, tmp_path):
+    """No manifest yet, or a directory without part files: every bucket
+    is pending."""
+    from yaschva_spark.pipeline import pending_buckets
+
+    assert pending_buckets(spark, str(tmp_path / "none"), 4) == [0, 1, 2, 3]
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    (empty / "_SUCCESS").write_bytes(b"")
+    assert pending_buckets(spark, str(empty), 4) == [0, 1, 2, 3]
+
+
+def test_corrupt_manifest_raises(spark, code, tmp_path):
+    """An unreadable manifest must not read as "nothing done": that would
+    reprocess every bucket and append its violations a second time."""
+    manifest = tmp_path / "out" / "manifest"
+    manifest.mkdir(parents=True)
+    (manifest / "part-00000-corrupt.snappy.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception):
+        run_validation_job(spark, code, repos_dim(spark), str(tmp_path / "out"), n_buckets=4)
+    assert not (tmp_path / "out" / "violations").exists()

@@ -218,7 +218,7 @@ def test_staged_screen_keeps_projection_boundaries(spark):
     assert sum(1 for lvl in levels if lvl) >= 3  # parse, extractions, leaf derivations
     out = select_levels(src, levels).select(
         "doc_id", sc["pass"].alias("p"), sc["emit"].alias("m"),
-        F.when(sc["pass"], sc["pass_out"]).otherwise(sc["fail_out"]).alias("o"),
+        sc["out"].alias("o"),
         sc["viols"].alias("v"),
     ).filter("p or m")
     plan = _physical(out)

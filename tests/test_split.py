@@ -132,6 +132,17 @@ def test_cap_per_stratum_validates(spark):
         cap_per_stratum(docs, "doc_id", "source", 3, chunks="bogus")
 
 
+def test_cap_per_stratum_rejects_bool_chunks(spark):
+    """bool is an int subclass: chunks=True must raise, not run as 1."""
+    import pytest
+
+    from yaschva_spark.ops.split import cap_per_stratum
+
+    docs = spark.createDataFrame([(1, "a")], "doc_id long, source string")
+    with pytest.raises(ValueError):
+        cap_per_stratum(docs, "doc_id", "source", 3, chunks=True)
+
+
 def test_cap_per_stratum_auto_chunks_skewed(spark):
     """A 90%-one-stratum corpus must pick C>1 automatically (against a
     small per-task budget) and still produce exactly the chunks=1 keep

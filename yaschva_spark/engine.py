@@ -65,7 +65,7 @@ def screen_coverage(name: str) -> dict[str, Any] | None:
     return {
         "n_rows": n,
         "n_proven": proven,
-        # rows the r5 fail screen emitted JVM-side (provably failing,
+        # rows the fail screen emitted JVM-side (provably failing,
         # byte-exact violations) — these skip Arrow too
         "n_proven_fail": proven_fail,
         "proven_fraction": round(proven / n, 6) if n else None,
@@ -133,7 +133,8 @@ def explode_violations(validated: DataFrame, id_cols: list[str]) -> DataFrame:
 #: schema-json, column). Building the Column tree costs hundreds of py4j
 #: round trips (~0.9 s measured for the nested schema) and is a pure
 #: function of the key; the applicationId guards against stale JVM refs
-#: after a session restart. Negative results (unscreenable) cache too.
+#: after a session restart, and an insert drops every other application's
+#: entries. Negative results (unscreenable) cache too.
 _SCREEN_CACHE: dict = {}
 
 
@@ -145,6 +146,9 @@ def _compiled_screens(app_id: str, schema_blob: str, json_col: str):
             hit = compile_screens(json.loads(schema_blob), F.col(json_col))
         except ScreenNotApplicable as ex:
             hit = ex
+        # an earlier application's entries only hold dead JVM references
+        for stale in [k for k in _SCREEN_CACHE if k[0] != app_id]:
+            del _SCREEN_CACHE[stale]
         _SCREEN_CACHE[key] = hit
     if isinstance(hit, Exception):
         raise hit
@@ -166,21 +170,30 @@ def validate_json_table(
     The literal ``"__undefined__"`` as the whole cell (or SQL NULL) encodes
     a JS-undefined root (FIXTURES.md §1). Appends ``yv_valid``,
     ``yv_violations`` and ``yv_output`` (the mirrored output tree as JSON).
+    Input columns named ``__yv_*`` are reserved for the plan's own columns
+    and raise :class:`ValueError`.
 
-    ``screen=True`` (default) is the hybrid execution from VERDICT r1 #6:
-    a Catalyst VARIANT expression (:mod:`yaschva_spark.jsonscreen`) proves
-    ``pass`` JVM-side for the statically-expressible schema fragment, and
-    the plan SPLITS on it — proven rows take a pure-JVM projection
-    (constant pass/empty-violations columns plus the JVM-built output
-    tree) that never crosses the Arrow boundary, and only the unproven
-    tail runs the interpreter inside ``mapInPandas``. Python cost AND
-    serialization cost are both linear in the tail, not the table — the
-    r2 single-stage form screened out interpreter CPU but still shipped
-    every row JVM->Arrow->Python->Arrow->JVM (VERDICT r2 #1). The screen
-    is sound-by-construction (never claims pass wrongly;
-    differential-tested against the pure interpreter), so output is
-    bit-identical with ``screen=False``. Schemas outside the fragment
-    silently run fully interpreted.
+    ``screen=True`` (default) is the hybrid execution: the VARIANT screens
+    of :func:`yaschva_spark.jsonscreen.compile_screens` decide, per row,
+    ``pass`` (provably passes) and ``emit`` (the outcome, pass or fail, is
+    exactly JVM-representable, with the interpreter's ``viols`` and
+    ``out`` byte for byte), and the plan SPLITS on ``emit`` into two
+    branches:
+
+    * emitted rows take a pure-JVM projection — ``yv_valid`` is ``pass``,
+      ``yv_output`` is ``out``, and ``yv_violations`` is empty on pass rows
+      and ``viols`` otherwise, so passing rows never evaluate the fail-side
+      violation expression — and never cross the Arrow boundary;
+    * the residue (``~emit``) runs the interpreter inside ``mapInPandas``.
+
+    Python and serialization cost are therefore linear in the residue, not
+    the table; on the nested bench corpus the residue is empty. The screens
+    are sound by construction (differential-tested against the pure
+    interpreter), so output is bit-identical with ``screen=False``. Schemas
+    outside the screenable fragment silently run fully interpreted. The
+    screens compile staged (shared subexpressions as chained projection
+    columns, see jsonscreen._Stager) and are memoized per schema in
+    ``_SCREEN_CACHE``.
 
     **Choose the plan by measurement** (sf0.1 events, 100k rows, 1 core):
     the VARIANT screen evaluates ~2 interpreted JVM ops per schema check
@@ -189,17 +202,16 @@ def validate_json_table(
     NOT cheaper per row for narrow rows and small schemas, so there
     ``screen=False`` (pure interpreter, linear scale-out) is the fastest
     plan. The split pays off when the *saved transfer* dominates: wide
-    ``keep_cols`` (proven rows never serialize their payload) and/or a
-    tiny violating tail with a large schema. Both plans are exact; pick
-    per corpus.
+    ``keep_cols`` (emitted rows never serialize their payload) and/or a
+    large schema. Both plans are exact; pick per corpus.
 
     The split's one hazard is double evaluation: both branches read the
     screened projection, and recomputing it means a second scan plus a
     second ``try_parse_json`` (measured ~2x at sf0.1 — worse than the tax
-    it removes). The small ``(keep, json, screen, passout)`` projection is
-    therefore pinned through :func:`yaschva_spark.cache.persist_tracked` —
-    both branches read it once; callers release it via
-    ``cache.unpersist_intermediates()`` (the bench/test convention).
+    it removes). The screened projection is therefore pinned through
+    :func:`yaschva_spark.cache.persist_tracked` — both branches read it
+    once; callers release it via ``cache.unpersist_intermediates()`` (the
+    bench/test convention).
 
     Parallelism guard: validation is CPU-bound (variant screen and/or
     interpreter), so the stage needs at least one task per core. At
@@ -209,20 +221,6 @@ def validate_json_table(
     ``defaultParallelism`` are repartitioned up front (the shuffled
     projection is just ``keep + json``; no-op at scale).
 
-    Since r5 the routing is three-way but the PLAN has two branches:
-    proven-pass AND provably-failing rows (the fail screen renders their
-    exact violations/output JVM-side — jsonscreen.compile_screens) take
-    one pure-JVM projection, and only the residue — rows neither screen
-    can decide or render exactly — runs the interpreter. On the nested
-    bench corpus the residue is 0%: every row is decided without crossing
-    Arrow. The screen compiles STAGED (shared subexpressions as chained
-    projection columns, memoized per schema in _SCREEN_CACHE): measured at
-    sf0.1, unstaged fail-side expressions re-walked the variant inside
-    every consumer (~2.2 s/run), staging + memoization + the two-branch
-    plan brought it to ~0.95 s, of which the per-row work is ~0.1 s — the
-    remainder is fixed driver/planning cost that amortizes to nothing at
-    table scale.
-
     ``observe="name"`` attaches a CollectMetrics node to the screened
     projection (zero extra passes) counting rows, proven-pass rows, and
     JVM-emitted fail rows; read it after the first action via
@@ -230,19 +228,19 @@ def validate_json_table(
     unscreenable.
     """
     check_schema(schema)
+    keep = keep_cols if keep_cols is not None else [c for c in df.columns]
+    need = list(dict.fromkeys([*keep, json_col]))
+    reserved = [c for c in need if c.startswith("__yv_")]
+    if reserved:
+        raise ValueError(f"input column {reserved[0]!r} uses the reserved __yv_ prefix")
     if observe is not None:
         _SCREEN_OBS.pop(observe, None)  # a stale observation must not answer
-    keep = keep_cols if keep_cols is not None else [c for c in df.columns]
     schema_blob = json.dumps(schema)  # ship the schema to executors as text
 
     screens = None
     screen_levels: list = []
     if screen:
         try:
-            # staged: shared subexpressions (parsed variant, per-field
-            # sub-variants, leaf error/value columns) become projection
-            # columns evaluated ONCE per row — an unstaged tree re-walks
-            # them inside every consumer (measured ~4x on the fail side)
             screen_levels, screens = _compiled_screens(
                 df.sparkSession.sparkContext.applicationId, schema_blob, json_col
             )
@@ -291,7 +289,6 @@ def validate_json_table(
             out["yv_output"] = outputs
             yield out
 
-    need = list(dict.fromkeys([*keep, json_col]))
     src = df.select(*need)
     par = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < par:
@@ -300,19 +297,15 @@ def validate_json_table(
     if screens is None:
         return src.mapInPandas(run_batches, schema=out_ddl)
 
-    jvmfail = ~screens["pass"] & screens["emit"]
     scr = select_levels(src, screen_levels).select(
         *need,
         screens["pass"].alias("__yv_screen"),
         screens["emit"].alias("__yv_emit"),
-        jvmfail.alias("__yv_jvmfail"),
-        # built only for the rows that use them (NULL otherwise) so no
-        # branch pays another branch's string construction or storage
-        F.when(screens["pass"], screens["pass_out"])
-        .when(jvmfail, screens["fail_out"])
-        .alias("__yv_out"),
-        F.when(jvmfail, screens["viols"])
-        .when(screens["pass"], F.array().cast(VIOLATION_DDL))
+        # NULL on the rows the interpreter takes, and the fail-side
+        # violation rows are built only for emitted FAILING rows
+        F.when(screens["emit"], screens["out"]).alias("__yv_out"),
+        F.when(screens["pass"], F.array().cast(VIOLATION_DDL))
+        .when(screens["emit"], screens["viols"])
         .alias("__yv_viols"),
     )
     if observe is not None:
@@ -324,18 +317,15 @@ def validate_json_table(
         scr = scr.observe(
             obs,
             F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.coalesce(F.col("__yv_screen"), F.lit(False)).cast("long")).alias(
-                "n_proven"
-            ),
-            F.sum(F.coalesce(F.col("__yv_jvmfail"), F.lit(False)).cast("long")).alias(
+            F.sum(F.col("__yv_screen").cast("long")).alias("n_proven"),
+            F.sum((F.col("__yv_emit") & ~F.col("__yv_screen")).cast("long")).alias(
                 "n_proven_fail"
             ),
         )
         _SCREEN_OBS[observe] = obs
     scr = persist_tracked(scr)
-    # ONE emitted branch covers proven-pass AND proven-fail (the r5 fail
-    # screen): pure projection, no Arrow crossing; only the residue — rows
-    # neither screen can decide or render exactly — runs the interpreter.
+    # ONE emitted branch covers proven-pass AND proven-fail rows: pure
+    # projection, no Arrow crossing; only the residue runs the interpreter.
     # Two branches, not three: each branch is another scan of the persisted
     # projection and another subtree for the planner.
     emitted = scr.filter(F.col("__yv_emit")).select(

@@ -1,12 +1,12 @@
-"""JVM-side "provably passes" screen for the dynamic JSON path.
+"""JVM-side screens for the dynamic JSON path.
 
 The dynamic path's exactness requirements (undefined vs null, unions,
 closed-world objects) force interpreter evaluation — but not for every
-ROW. This module compiles a yaschva schema fragment into ONE Catalyst
-boolean over Spark's VARIANT type that is true only when the interpreter
-would return ``pass``, plus the matching ``yv_output`` text expression so
-proven rows never cross the Arrow boundary at all
-(engine.validate_json_table splits the plan on the screen).
+ROW. This module compiles a yaschva schema fragment into Catalyst
+expressions over Spark's VARIANT type that decide a row's outcome — pass
+or fail, with the interpreter's exact violations and ``yv_output`` text —
+whenever that is possible JVM-side, so decided rows never cross the Arrow
+boundary (engine.validate_json_table splits the plan on them).
 
 The screen does no schema dispatch of its own: it emits from
 :func:`yaschva_spark.schema.lower`'s plan, which already applied the
@@ -22,10 +22,17 @@ undefined/null split that `from_json` erases and that forced the
 interpreter in round 1. ``schema_of_variant`` gives the JSON type tag
 (BIGINT/DOUBLE/DECIMAL/STRING/BOOLEAN/VOID/OBJECT<...>/ARRAY<...>).
 
-Soundness contract: the screen may return false for a passing row (that
-row just pays the interpreter), but must NEVER return true for a failing
-one — and when it returns true, the emitted output text must equal the
-interpreter's byte for byte. Consequences baked in:
+One contract per node. Every plan node compiles to four parts:
+
+* ``cond`` — a sound pass: true only for rows the interpreter passes;
+* ``femit`` — the node's outcome, pass or fail, is exactly representable
+  JVM-side (``cond`` implies it);
+* ``out`` and ``viols`` — the interpreter's ``yv_output`` text and
+  violation rows, byte for byte, whenever ``femit`` holds.
+
+Either may be false for a row the interpreter decides (that row just pays
+the interpreter); neither may ever claim a row wrongly. Consequences baked
+in:
 
 * numeric bound checks add a representability guard — a BIGINT/DECIMAL
   beyond 2^53 rounds when cast to double, and the interpreter compares
@@ -63,37 +70,39 @@ interpreter's byte for byte. Consequences baked in:
   :class:`ScreenNotApplicable` — the caller falls back to full
   interpretation, never to wrong answers.
 
+The fail side. Violation paths are Columns, as in typed.py (``$``, then
+``.key``, ``[i]`` and ``.k`` segments), so every node can build it
+wherever it sits:
+
+* a leaf's first-error chain picks the error and rule as compile-time
+  constants, and the offending value renders JVM-side when its
+  ``json.dumps`` text is exactly reconstructible (missing →
+  ``"__undefined__"``, null, booleans, i64 integers, printable-ASCII
+  strings without ``"``/``\\``);
+* an object whose structure holds (a real JSON object with a closed
+  keyset) is decided by its fields: their violations in the
+  interpreter's output order (data keys first, then missing declared
+  keys);
+* a fully-covered union of exact, fail-compiled leaves fails with
+  UNION_MISMATCH plus every branch's error at the union's path;
+* an array or ``$map`` whose element/value is an exact, fail-compiled
+  leaf emits length failures (the offending value is the element count)
+  and per-element ``[i]`` / per-value ``.k`` failures.
+
+Everything else stays with the interpreter, per row: object/map
+structural failures (the offending value is the whole composite),
+NOT_ARRAY, DOUBLE/DECIMAL or escape-needing offending values,
+nested-array elements (flat() splicing), bound comparisons outside the
+2^53 window.
+
 Supported fragment: every leaf check except the ``$and`` error leaf
 (``$string`` regexes only when dialect-safe), nested objects at literal
 paths, ``$array``/``$map`` with leaf-output element/value schemas, and
 ordered union prefixes thereof — with ``$type``, non-recursive ``$types``
 and ``$and`` already resolved by the lowering. Reference semantics:
 validate.ts:50-205 (leaves), validate.ts:106-193 (arrays/maps/objects),
-validate.ts:91-104 (unions).
-
-**Fail screen (r5).** The r4 measurement showed the pass screen proving
-100% of the VALID rows on the nested bench corpus — the remaining ~49%
-crossing Arrow were all genuinely-violating rows, which the interpreter
-evaluated only to produce error strings the schema already determines.
-``compile_screens`` therefore also compiles the FAIL side: leaves carry
-the interpreter's first-error dispatch as a when-chain of compile-time
-constants (error string + rule id), the offending value renders JVM-side
-when its ``json.dumps`` text is exactly reconstructible (missing →
-``"__undefined__"``, null, booleans, i64 integers, printable-ASCII
-strings without ``"``/``\\``); objects concatenate field violations in
-the interpreter's output order; UNIONS of fully-covered exact leaves emit
-UNION_MISMATCH plus every branch's error at the same path; ARRAYS emit
-length failures (offending value = element count) and per-element leaf
-failures with ``[i]`` paths; $MAPS emit per-key value failures at
-``$.path.<key>`` in data-key order. Rows the fail side cannot decide or
-render exactly — object/map structural failures (non-object value, extra
-key, size bounds, key regex — the offending value is the whole
-composite), NOT_ARRAY, DOUBLE/DECIMAL or escape-needing offending
-values, nested-array elements (flat() splicing), bound comparisons
-outside the 2^53 window — keep falling to the interpreter, per row.
-Soundness contract extends symmetrically: an emitted FAIL row's
-violations and output must equal the interpreter's byte for byte
-(differential + emission-boundary tests in tests/test_jsonscreen.py).
+validate.ts:91-104 (unions). Differential and emission-boundary tests:
+tests/test_jsonscreen.py.
 """
 
 from __future__ import annotations
@@ -108,7 +117,7 @@ from pyspark.sql import functions as F
 from yaschva_spark import errors as E
 from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
 from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
-from yaschva_spark.typed import js_strlen  # UTF-16 code units
+from yaschva_spark.typed import VIOLATION_DDL, js_strlen  # js_strlen: UTF-16 units
 
 #: Keys the screen will address via JSONPath and emit into output text
 #: verbatim. Conservative on purpose (see module docstring).
@@ -134,35 +143,22 @@ class ScreenNotApplicable(Exception):
 class _Screen:
     #: sound provable-pass condition (NULL counts as false downstream)
     cond: Column
-    #: the interpreter's ``yv_output`` JSON text — valid only when ``cond``
+    #: the interpreter's ``yv_output`` JSON text, valid whenever ``femit``
     out: Column
     #: cond ⇔ interpreter-pass over the parseable-JSON domain (not merely ⇒)
     exact: bool
     #: ``out`` is the literal text ``null`` for every passing value
     null_out: bool
-    #: FAIL-SCREEN (r5): row-level "this node's outcome — pass OR fail — is
-    #: exactly JVM-representable". On femit rows ``viols`` equals the
-    #: interpreter's violation rows byte for byte and ``fout`` equals its
-    #: ``yv_output`` byte for byte, so provably-FAILING rows skip Arrow
-    #: too. None = not fail-compiled (normalized to femit=cond,
-    #: viols=empty, fout=out: only the pass outcome is representable).
+    #: the outcome, pass or fail, is exactly JVM-representable; None until
+    #: :func:`_screen` defaults it to ``cond`` (only the pass outcome is)
     femit: Column | None = None
-    #: ``yv_output`` text valid whenever ``femit`` (== ``out`` when cond)
-    fout: Column | None = None
-    #: violation rows, empty when cond; valid whenever ``femit``
+    #: the interpreter's violation rows (empty on pass), valid whenever
+    #: ``femit``; None until :func:`_screen` defaults it to empty
     viols: Column | None = None
-    #: staged compilation only: the highest _Stager level any of this
-    #: node's columns references (a parent staging its assembly must go
-    #: one above)
-    lvl: int = 0
-    #: leaf fail parts ``(err, rule, val_txt, bad)`` — set only by
-    #: fail-compiled leaves so a UNION can compose its total-failure
-    #: output (every branch's error at the same path) from them
-    leaf_fail: tuple | None = None
+    #: fail-compiled leaves only: the offending value's JSON text. Unions,
+    #: arrays and maps compose a fail side only over such leaves
+    val: Column | None = None
 
-
-#: violation rows schema (matches typed.VIOLATION_DDL)
-_VIOL_DDL = "array<struct<path:string,rule:string,error:string,value:string>>"
 
 #: error strings that may be concat-spliced into JSON output text verbatim:
 #: printable ASCII without `"` or `\` — exactly the strings whose
@@ -171,7 +167,7 @@ _ERR_SAFE = _re.compile(r"\A[ !#-\[\]-~]+\Z")
 
 
 def _empty_viols() -> Column:
-    return F.array().cast(_VIOL_DDL)
+    return F.array().cast(VIOLATION_DDL)
 
 
 def _row(path: Column, rule: Column, err: Column, val: Column) -> Column:
@@ -184,25 +180,6 @@ def _err_text(err: Column, val: Column) -> Column:
     return F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val, F.lit("}"))
 
 
-def _elem_decided(r: "_Screen") -> Column:
-    """An exact element/value screen decided this element: it passes, or it
-    fails with a renderable (error, value)."""
-    return F.coalesce(r.cond, F.lit(False)) | F.coalesce(r.leaf_fail[3], F.lit(False))
-
-
-def _elem_viols(r: "_Screen", path: Column) -> Column:
-    err, rule, val, bad = r.leaf_fail
-    return F.when(
-        F.coalesce(bad, F.lit(False)) & ~F.coalesce(r.cond, F.lit(False)),
-        F.array(_row(path, rule, err, val)),
-    ).otherwise(_empty_viols())
-
-
-def _elem_out(r: "_Screen") -> Column:
-    err, _rule, val, _bad = r.leaf_fail
-    return F.when(F.coalesce(r.cond, F.lit(False)), F.lit("null")).otherwise(_err_text(err, val))
-
-
 class _Stager:
     """Staged compilation (r5 perf): registers shared subexpressions —
     the parsed root variant, per-field sub-variants/texts, and each leaf's
@@ -211,7 +188,7 @@ class _Stager:
     projections instead of re-evaluating them inside every consumer.
 
     Why it matters: a leaf's error chain, rule chain, value renderer,
-    femit, viols and fout all reference the same ``try_variant_get`` /
+    femit, viols and out all reference the same ``try_variant_get`` /
     ``schema_of_variant`` subtrees, and every reference re-walks (and for
     the root, re-PARSES) the variant. Measured at sf0.1 on the nested
     corpus, the un-staged fail side cost ~56 us/row for the viols
@@ -362,7 +339,7 @@ _CHECKS = {
 }
 
 
-def _screen_leaf(node: Leaf, tv: Column, path: str | None,
+def _screen_leaf(node: Leaf, tv: Column, path: Column,
                  stage: _Stager | None, level: int) -> _Screen:
     """The leaf's first-error chain (validate.ts:50-205) over the variant:
     the pass condition is the AND of every check's ``ok``, exact unless a
@@ -370,22 +347,17 @@ def _screen_leaf(node: Leaf, tv: Column, path: str | None,
     choice is not exactly computable JVM-side).
 
     Fail side: the chain's ``fail`` conditions, in order, pick the error
-    (none true ⇔ pass). At a literal ``path`` femit/viols/fout are compiled
-    so provably-FAILING rows skip the interpreter too; elsewhere only the
-    parts ``(err, rule, val_txt, bad)`` are kept, for a composing parent
-    (union at its own path, array at [i]). Soundness: a femit row whose
-    chain fires is emitted as FAIL with exactly the interpreter's (path,
-    rule, error, value); the engine routes cond rows to the pass branch
-    first, so the two never both claim a row. Error strings outside the
-    concat-safe alphabet (e.g. an $enum whose values need JSON escaping)
-    disable the fail side, never corrupt it.
+    (none true ⇔ pass); a row emits when it passes or when an error fires
+    on an exactly renderable value, with one violation row at ``path``.
+    Error strings outside the concat-safe alphabet (e.g. an $enum whose
+    values need JSON escaping) disable the fail side, never corrupt it.
 
     With ``stage``, cond/err/rule/value/bad register as level+1 columns —
-    every downstream consumer (femit, viols, fout, the parent's dispatch
-    maps) then reads materialized columns instead of re-walking the
+    every downstream consumer (femit, viols, out, the parent's dispatch
+    map) then reads materialized columns instead of re-walking the
     variant (see :class:`_Stager`)."""
     if not node.checks:  # any
-        return _Screen(F.lit(True), F.lit("null"), True, True, lvl=level + 1)
+        return _Screen(F.lit(True), F.lit("null"), True, True)
     if node.checks[0][0] == "and":
         # the reference data-FAILS every value here (validate.ts:244-247's
         # combine throw path) — unprovable, not wrong
@@ -405,33 +377,32 @@ def _screen_leaf(node: Leaf, tv: Column, path: str | None,
         cond = cond & ok
         chain.append((fail, error))
 
+    cond = F.coalesce(cond, F.lit(False))
     if stage is not None:
-        cond = stage.add(level + 1, F.coalesce(cond, F.lit(False)))
-    s = _Screen(cond, F.lit("null"), und is None, True, lvl=level + 1)
+        cond = stage.add(level + 1, cond)
     if not all(_ERR_SAFE.match(e) for _, e in chain):
-        return s
+        return _Screen(cond, F.lit("null"), und is None, True)
     err = rule = None
     for c, e in chain:
         err = F.when(c, F.lit(e)) if err is None else err.when(c, F.lit(e))
         r = F.lit(E.rule_id_for(e))
         rule = F.when(c, r) if rule is None else rule.when(c, r)
-    val_txt, val_und = _render_value(tv)
+    val, val_und = _render_value(tv)
     bad = err.isNotNull() & ~val_und
     if und is not None:
         bad = bad & ~F.coalesce(und, F.lit(False))
     bad = F.coalesce(bad, F.lit(False))
     if stage is not None:
-        err = stage.add(level + 1, err)
-        rule = stage.add(level + 1, rule)
-        val_txt = stage.add(level + 1, val_txt)
-        bad = stage.add(level + 1, bad)
-    s.leaf_fail = (err, rule, val_txt, bad)
-    if path is None:
-        return s
-    s.femit = F.coalesce(cond, F.lit(False)) | bad
-    s.viols = F.when(bad, F.array(_row(F.lit(path), rule, err, val_txt))).otherwise(_empty_viols())
-    s.fout = F.when(F.coalesce(cond, F.lit(False)), F.lit("null")).otherwise(_err_text(err, val_txt))
-    return s
+        err, rule, val, bad = (stage.add(level + 1, c) for c in (err, rule, val, bad))
+    return _Screen(
+        cond,
+        F.when(cond, F.lit("null")).otherwise(_err_text(err, val)),
+        und is None,
+        True,
+        femit=cond | bad,
+        viols=F.when(bad, F.array(_row(path, rule, err, val))).otherwise(_empty_viols()),
+        val=val,
+    )
 
 
 def _screen(
@@ -440,19 +411,17 @@ def _screen(
     txt: Column | None,
     stack: frozenset,
     depth: int,
-    path: str | None = None,
+    path: Column,
     stage: _Stager | None = None,
     level: int = 0,
 ) -> _Screen:
     """Compile plan ``node`` over value variant ``tv`` (SQL NULL = missing /
-    JS undefined) and normalize the fail-side defaults: a node that didn't
-    compile a fail side can still emit its PASS outcome (femit=cond, empty
-    viols, fout=out). ``txt`` is the node's original JSON text when it sits
-    at a literal path from the root (needed for data-order keys), else
-    None. ``path`` is the node's literal JSONPath when known (the fail
-    screen's violation rows need it), else None (fail side off). ``stack``
+    JS undefined); a node without a fail side emits only its pass outcome
+    (femit=cond, empty viols). ``txt`` is the node's original JSON text
+    when it sits at a literal path from the root (needed for data-order
+    keys), else None. ``path`` is the node's violation path. ``stack``
     holds the composite nodes being compiled: meeting one again is a
-    recursive custom type."""
+    recursive custom type. ``stage`` is None inside array/map lambdas."""
     if depth > _MAX_DEPTH:
         raise ScreenNotApplicable("schema nesting beyond screen depth budget")
     if isinstance(node, Leaf):
@@ -464,129 +433,116 @@ def _screen(
         if isinstance(node, Union):
             s = _screen_union(node, tv, txt, stack, depth, path, stage, level)
         elif isinstance(node, Array):
-            s = _screen_array(node, tv, stack, depth, path, stage, level)
+            s = _screen_array(node, tv, stack, depth, path)
         elif isinstance(node, Map):
-            s = _screen_map(node, tv, txt, stack, depth, path, stage, level)
+            s = _screen_map(node, tv, txt, stack, depth, path)
         else:
             s = _screen_object(node, tv, txt, stack, depth, path, stage, level)
     if s.femit is None:
         s.femit = F.coalesce(s.cond, F.lit(False))
     if s.viols is None:
         s.viols = _empty_viols()
-    if s.fout is None:
-        s.fout = s.out
     return s
 
 
 def _screen_union(
     node: Union, tv: Column, txt: Column | None, stack: frozenset, depth: int,
-    path: str | None, stage: _Stager | None, level: int,
+    path: Column, stage: _Stager | None, level: int,
 ) -> _Screen:
     """Ordered union prefix (module docstring): the when-chain replicates
     first-passing-branch output only while every earlier branch is exact.
 
-    Fail side (r5): for a FULLY-covered union of compile-time-EXACT,
-    fail-compiled leaves, total failure is decidable — ``~cond`` means
-    every branch failed (exactness), and the interpreter's output is
-    ``{"error": UNION_MISMATCH, "value": v, "output": [each branch's
-    error object, in order]}`` (interp._v_one_of / validate.ts:91-104)
-    with violation rows: one union_mismatch row, then each branch's error
-    row at the SAME path (violations_from_output's _branches list).
-    Unions containing any non-exact branch (e.g. bounded $number, whose
-    inexactness is row-dependent) or non-leaf branch keep the default
-    (pass-only emission)."""
+    Fail side: for a FULLY-covered union of exact, fail-compiled leaves,
+    total failure is decidable — ``~cond`` means every branch failed
+    (exactness), and the interpreter's output is ``{"error":
+    UNION_MISMATCH, "value": v, "output": [each branch's error object, in
+    order]}`` (interp._v_one_of / validate.ts:91-104) with violation rows:
+    one union_mismatch row, then each branch's error row at the SAME path
+    (violations_from_output's _branches list). Unions containing any
+    non-exact branch (e.g. bounded $number, whose inexactness is
+    row-dependent) or non-leaf branch emit only their pass outcome."""
     chain: list[_Screen] = []
     for branch in node.branches:
         try:
-            # branches get the union's own path: their standalone viols are
-            # ignored (the union composes its own rows below), and branch
-            # errors DO report at the union's path (validate.ts:95-103)
+            # branch errors report at the union's own path (validate.ts:95-103)
             r = _screen(branch, tv, txt, stack, depth + 1, path, stage, level)
         except ScreenNotApplicable:
             break
         chain.append(r)
         if not r.exact:
             break
-    covered_all = len(chain) == len(node.branches)
     if not chain:
         raise ScreenNotApplicable("no screenable union prefix")
     cond = chain[0].cond
-    for r in chain[1:]:
-        cond = cond | r.cond
     out = F.when(chain[0].cond, chain[0].out)
     for r in chain[1:]:
+        cond = cond | r.cond
         out = out.when(r.cond, r.out)
-    exact = covered_all and all(r.exact for r in chain)
-    # assembly stays unstaged: branch conds/outs are already staged leaf
-    # columns, so the when-chain is cheap per reference
-    s = _Screen(
-        cond,
-        out,
-        exact=exact,
-        null_out=all(r.null_out for r in chain),
+    exact = len(chain) == len(node.branches) and all(r.exact for r in chain)
+    null_out = all(r.null_out for r in chain)
+    if not exact or any(r.val is None for r in chain):
+        return _Screen(cond, out, exact, null_out)
+    # every branch is a leaf whose conds are non-NULL: on ~cond rows each
+    # branch's femit is its "fails renderably", its out its error object
+    # and its viols its one error row; val renders the same tv for all
+    ufail = ~cond
+    for r in chain:
+        ufail = ufail & r.femit
+    err = F.lit(E.UNION_MISMATCH)
+    val = chain[0].val
+    mismatch = F.array(_row(path, F.lit(E.rule_id_for(E.UNION_MISMATCH)), err, val))
+    fail_out = F.concat(
+        F.lit('{"error":"'), err, F.lit('","value":'), val,
+        F.lit(',"output":['), F.concat_ws(",", *[r.out for r in chain]), F.lit("]}"),
     )
-    if exact and path is not None and all(r.leaf_fail for r in chain):
-        val = chain[0].leaf_fail[2]  # same tv -> identical rendering
-        ufail = None
-        for r in chain:
-            b = r.leaf_fail[3]
-            ufail = b if ufail is None else ufail & b
-        ufail = ~F.coalesce(cond, F.lit(False)) & F.coalesce(ufail, F.lit(False))
-        err = F.lit(E.UNION_MISMATCH)
-        rows = [_row(F.lit(path), F.lit(E.rule_id_for(E.UNION_MISMATCH)), err, val)]
-        branch_objs = []
-        for r in chain:
-            err_i, rule_i, _v, _b = r.leaf_fail
-            rows.append(_row(F.lit(path), rule_i, err_i, val))
-            branch_objs.append(_err_text(err_i, val))
-        s.femit = F.coalesce(cond, F.lit(False)) | ufail
-        s.viols = F.when(ufail, F.array(*rows)).otherwise(_empty_viols())
-        body = F.concat_ws(",", *branch_objs) if branch_objs else F.lit("")
-        s.fout = F.when(F.coalesce(cond, F.lit(False)), out).otherwise(
-            F.concat(
-                F.lit('{"error":"'), err, F.lit('","value":'), val,
-                F.lit(',"output":['), body, F.lit("]}"),
-            )
-        )
-    return s
+    return _Screen(
+        cond, F.when(cond, out).otherwise(fail_out), exact, null_out,
+        femit=cond | ufail,
+        viols=F.when(ufail, F.concat(mismatch, *[r.viols for r in chain])).otherwise(_empty_viols()),
+    )
 
 
-def _screen_array(
-    node: Array, tv: Column, stack: frozenset, depth: int,
-    path: str | None, stage: _Stager | None, level: int,
-) -> _Screen:
+def _forall(xs: Column, screen_of, what: str) -> tuple[Column, _Screen]:
+    """``forall`` over the elements' pass conditions, and the element
+    screen its lambda built. Elements need literally-``null`` pass output
+    (module docstring)."""
+    got: list[_Screen] = []
+
+    def cond(x: Column) -> Column:
+        got.append(screen_of(x))
+        return got[0].cond
+
+    all_ok = F.forall(xs, cond)
+    if not got[0].null_out:
+        raise ScreenNotApplicable(f"{what} output is not null (needs per-element text)")
+    return all_ok, got[0]
+
+
+def _screen_array(node: Array, tv: Column, stack: frozenset, depth: int, path: Column) -> _Screen:
     """validateArray (validate.ts:106-126): length bounds, then every
     element. Elements are never JS-undefined; a JSON null element arrives
     as a variant-null (probed), so leaf screens stay sound. Output is the
     flat() of element outputs — with null-output elements (enforced),
     that is exactly ``[null,...]``.
 
-    Fail side (r5): two exactly-renderable failure shapes emit JVM-side —
-    a LENGTH failure (the offending value is the element count, an exact
-    integer; error string is the compile-time arr_length constant), and
-    per-ELEMENT leaf failures when the element screen is compile-time
-    exact and every failing element's (error, value) is renderable:
-    violation rows gain ``[i]`` path segments in element order, and the
-    output is the element-wise pass/fail rendering (flat() is identity
-    because nested-array elements are never emitted — their offending
-    value is unrenderable, so those rows go to the interpreter, which
-    also sidesteps flat()'s index-shifting splice). NOT_ARRAY failures
-    report the whole payload as the value — interpreter."""
+    Fail side, for an exact, fail-compiled leaf element: a LENGTH failure
+    (the offending value is the element count, an exact integer; the
+    error string is the compile-time arr_length constant), or per-element
+    failures with ``[i]`` paths when every element is decided. flat() is
+    the identity on emitted rows because nested-array elements are never
+    emitted — their offending value is unrenderable, so those rows go to
+    the interpreter, which also sidesteps flat()'s index-shifting splice.
+    NOT_ARRAY failures report the whole payload as the value —
+    interpreter."""
     arr = F.try_variant_get(tv, "$", "array<variant>")
-    holder: dict[str, _Screen] = {}
 
-    def elem_cond(e: Column) -> Column:
+    def elem(e: Column, i: Column | None = None) -> _Screen:
         # lambda scope: element subtrees reference the lambda variable and
         # must NOT be staged as projection columns
-        r = _screen(node.elem, e, None, stack, depth + 1)
-        holder["r"] = r
-        return r.cond
+        p = path if i is None else F.concat(path, F.lit("["), i.cast("string"), F.lit("]"))
+        return _screen(node.elem, e, None, stack, depth + 1, p)
 
-    all_ok = F.forall(arr, elem_cond)
-    if not holder["r"].null_out:
-        raise ScreenNotApplicable(
-            "array element output is not null (needs per-element text)"
-        )
+    all_ok, r = _forall(arr, elem, "array element")
     struct_base = tv.isNotNull() & _vtype(tv).startswith("ARRAY")
     len_ok = _len_bounds(F.size(arr), node)
     cond = struct_base & len_ok & all_ok
@@ -597,79 +553,52 @@ def _screen_array(
     )
     # element screens are elementwise ⇔, and only real JSON arrays have
     # ARRAY type — matching the reference's isArray gate exactly
-    s = _Screen(cond, out, exact=holder["r"].exact, null_out=False)
-    if path is None or holder["r"].leaf_fail is None or not holder["r"].exact:
-        return s
     len_err = E.arr_length(node.min_len, node.max_len)
-    if not _ERR_SAFE.match(len_err):
-        return s
-
-    def elem_fail(e: Column) -> _Screen:
-        return _screen(node.elem, e, None, stack, depth + 1)
-
-    # every element's outcome decided AND renderable (exact elements:
-    # cond ⇔ pass, bad ⇒ fail with exact (error, value))
-    all_decided = F.forall(arr, lambda e: _elem_decided(elem_fail(e)))
+    if r.val is None or not r.exact or not _ERR_SAFE.match(len_err):
+        return _Screen(cond, out, exact=r.exact, null_out=False)
+    cond_f = F.coalesce(cond, F.lit(False))
     len_fail = F.coalesce(struct_base & ~len_ok, F.lit(False))
     size_txt = F.size(arr).cast("string")
-    cond_f = F.coalesce(cond, F.lit(False))
-    s.femit = cond_f | len_fail | F.coalesce(
-        struct_base & len_ok & all_decided, F.lit(False)
-    )
-
-    def viol_rows(e: Column, i: Column) -> Column:
-        path_i = F.concat(F.lit(f"{path}["), i.cast("string"), F.lit("]"))
-        return _elem_viols(elem_fail(e), path_i)
-
-    s.viols = (
-        F.when(cond_f, _empty_viols())
-        .when(
-            len_fail,
-            F.array(_row(F.lit(path), F.lit(E.rule_id_for(len_err)), F.lit(len_err), size_txt)),
-        )
-        .otherwise(F.flatten(F.transform(arr, viol_rows)))
-    )
-    elem_outs = F.transform(arr, lambda e: _elem_out(elem_fail(e)))
-    s.fout = (
+    all_decided = F.forall(arr, lambda e: elem(e).femit)
+    elem_outs = F.transform(arr, lambda e: elem(e).out)
+    return _Screen(
+        cond,
         F.when(cond_f, out)
         .when(len_fail, _err_text(F.lit(len_err), size_txt))
-        .otherwise(F.concat(F.lit("["), F.array_join(elem_outs, ","), F.lit("]")))
+        .otherwise(F.concat(F.lit("["), F.array_join(elem_outs, ","), F.lit("]"))),
+        exact=r.exact,
+        null_out=False,
+        femit=cond_f | len_fail | F.coalesce(struct_base & len_ok & all_decided, F.lit(False)),
+        viols=F.when(cond_f, _empty_viols())
+        .when(len_fail, F.array(_row(path, F.lit(E.rule_id_for(len_err)), F.lit(len_err), size_txt)))
+        .otherwise(F.flatten(F.transform(arr, lambda e, i: elem(e, i).viols))),
     )
-    return s
 
 
 def _screen_map(
-    node: Map, tv: Column, txt: Column | None, stack: frozenset, depth: int,
-    path: str | None, stage: _Stager | None, level: int,
+    node: Map, tv: Column, txt: Column | None, stack: frozenset, depth: int, path: Column,
 ) -> _Screen:
     """validateMap (validate.ts:161-193): member-count bounds, optional key
     regex, every value. NOT exact: the reference also accepts JS arrays
     (indices as keys); those rows screen false. Output needs data-order
     keys, hence the text column.
 
-    Fail side (r5): when the STRUCTURAL checks hold (true JSON object,
-    size bounds, render-safe keys, key regex) the map's outcome is its
-    VALUES' — per-key value failures emit with ``$.path.<key>`` violation
-    rows in data-key order, exactly like object fields, provided the value
-    screen is compile-time exact and each failing value renders exactly.
-    Structural failures report the whole map as the offending value —
-    interpreter."""
+    Fail side, for an exact, fail-compiled leaf value: when the STRUCTURAL
+    checks hold (true JSON object, size bounds, render-safe keys, key
+    regex) the map's outcome is its VALUES' — per-key value failures emit
+    with ``.<key>`` violation paths in data-key order, exactly like object
+    fields. Structural failures report the whole map as the offending
+    value — interpreter."""
     if txt is None:
         raise ScreenNotApplicable("$map not at a literal path (needs text)")
     mp = F.try_variant_get(tv, "$", "map<string,variant>")
     keys = F.map_keys(mp)  # sorted by the cast — fine for order-free checks
-    holder: dict[str, _Screen] = {}
 
-    def val_cond(v: Column) -> Column:
-        r = _screen(node.value, v, None, stack, depth + 1)
-        holder["r"] = r
-        return r.cond
+    def value(v: Column, k: Column | None = None) -> _Screen:
+        p = path if k is None else F.concat(path, F.lit("."), k)
+        return _screen(node.value, v, None, stack, depth + 1, p)
 
-    vals_ok = F.forall(F.map_values(mp), val_cond)
-    if not holder["r"].null_out:
-        raise ScreenNotApplicable(
-            "map value output is not null (needs per-value text)"
-        )
+    vals_ok, r = _forall(F.map_values(mp), value, "map value")
     struct_ok = (
         tv.isNotNull()
         & _vtype(tv).startswith("OBJECT")
@@ -682,46 +611,31 @@ def _screen_map(
         struct_ok = struct_ok & F.forall(keys, lambda k: k.rlike(jp))
     cond = struct_ok & vals_ok
     data_keys = F.array_distinct(F.json_object_keys(txt))
-    body = F.array_join(
-        F.transform(data_keys, lambda k: F.concat(F.lit('"'), k, F.lit('":null'))),
-        ",",
-    )
-    out = F.concat(F.lit("{"), body, F.lit("}"))
-    s = _Screen(cond, out, exact=False, null_out=False)
-    if path is None or holder["r"].leaf_fail is None or not holder["r"].exact:
-        return s
 
-    def val_screen(v: Column) -> _Screen:
-        return _screen(node.value, v, None, stack, depth + 1)
+    def body(value_out) -> Column:
+        pairs = F.transform(data_keys, lambda k: F.concat(F.lit('"'), k, F.lit('":'), value_out(k)))
+        return F.concat(F.lit("{"), F.array_join(pairs, ","), F.lit("}"))
 
+    out = body(lambda k: F.lit("null"))
+    if r.val is None or not r.exact:
+        return _Screen(cond, out, exact=False, null_out=False)
     cond_f = F.coalesce(cond, F.lit(False))
-    s.femit = cond_f | F.coalesce(
-        struct_ok & F.forall(F.map_values(mp), lambda v: _elem_decided(val_screen(v))),
-        F.lit(False),
+    all_decided = F.forall(F.map_values(mp), lambda v: value(v).femit)
+    return _Screen(
+        cond,
+        F.when(cond_f, out).otherwise(body(lambda k: value(F.element_at(mp, k)).out)),
+        exact=False,
+        null_out=False,
+        femit=cond_f | F.coalesce(struct_ok & all_decided, F.lit(False)),
+        viols=F.when(cond_f, _empty_viols()).otherwise(
+            F.flatten(F.transform(data_keys, lambda k: value(F.element_at(mp, k), k).viols))
+        ),
     )
-
-    def viol_rows(k: Column) -> Column:
-        return _elem_viols(val_screen(F.element_at(mp, k)), F.concat(F.lit(f"{path}."), k))
-
-    s.viols = F.when(cond_f, _empty_viols()).otherwise(
-        F.flatten(F.transform(data_keys, viol_rows))
-    )
-
-    def key_out(k: Column) -> Column:
-        v_out = _elem_out(val_screen(F.element_at(mp, k)))
-        return F.concat(F.lit('"'), k, F.lit('":'), v_out)
-
-    s.fout = F.when(cond_f, out).otherwise(
-        F.concat(
-            F.lit("{"), F.array_join(F.transform(data_keys, key_out), ","), F.lit("}")
-        )
-    )
-    return s
 
 
 def _screen_object(
     node: Object, tv: Column, txt: Column | None, stack: frozenset, depth: int,
-    path: str | None, stage: _Stager | None, level: int,
+    path: Column, stage: _Stager, level: int,
 ) -> _Screen:
     """validateObject (validate.ts:128-159): closed world. NOT exact (the
     reference also accepts JS arrays). Output is data keys in DATA order
@@ -731,115 +645,93 @@ def _screen_object(
 
     Fail side: when the STRUCTURAL checks hold (real JSON object, closed
     keyset) the object's outcome is decided entirely by its fields, so the
-    object is fail-emittable exactly when every field is — viols are the
-    fields' viols concatenated in the interpreter's output order (data keys
-    first, then missing declared keys; interp._v_object builds its output
-    dict in that order and violations_from_output flattens it in dict
-    order), and fout dispatches each field's fail-aware output. Structural
-    failures (non-object value, extra keys) go to the interpreter: their
-    offending value is the whole object, which the JVM cannot re-render
-    canonically."""
+    object emits exactly when every field does — viols are the fields'
+    viols concatenated in the interpreter's output order (data keys first,
+    then missing declared keys; interp._v_object builds its output dict in
+    that order and violations_from_output flattens it in dict order).
+    Structural failures (non-object value, extra keys) go to the
+    interpreter: their offending value is the whole object, which the JVM
+    cannot re-render canonically.
+
+    An object always sits at a literal path, so ``stage`` is never None
+    here: the sub-variants, sub-texts and key arrays are staged once."""
     if txt is None:
         raise ScreenNotApplicable("object not at a literal path (needs text)")
     field_keys: list[str] = []
     subs: list[_Screen] = []
     out_pairs: list[Column] = []
-    fout_pairs: list[Column] = []
     viol_pairs: list[Column] = []
     for data_key, sub in node.fields:
         if not _SAFE_KEY.match(data_key):
             raise ScreenNotApplicable(f"key {data_key!r} not screen-safe")
         field_keys.append(data_key)
-        tv_k = F.try_variant_get(tv, f"$.{data_key}", "variant")
-        txt_k = F.get_json_object(txt, f"$.{data_key}")
-        sub_level = level
-        if stage is not None:
-            # materialize the sub-variant/sub-text ONCE: every leaf op of
-            # every chain below otherwise re-extracts it from the parent
-            # (and for the root, re-parses the JSON text)
-            tv_k = stage.add(level + 1, tv_k)
-            txt_k = stage.add(level + 1, txt_k)
-            sub_level = level + 1
-        sub_path = f"{path}.{data_key}" if path is not None else None
-        r = _screen(sub, tv_k, txt_k, stack, depth + 1, sub_path, stage, sub_level)
+        # materialize the sub-variant/sub-text ONCE: every leaf op of every
+        # chain below otherwise re-extracts it from the parent (and for the
+        # root, re-parses the JSON text)
+        tv_k = stage.add(level + 1, F.try_variant_get(tv, f"$.{data_key}", "variant"))
+        txt_k = stage.add(level + 1, F.get_json_object(txt, f"$.{data_key}"))
+        sub_path = F.concat(path, F.lit(f".{data_key}"))
+        r = _screen(sub, tv_k, txt_k, stack, depth + 1, sub_path, stage, level + 1)
         subs.append(r)
         out_pairs.extend([F.lit(data_key), r.out])
-        fout_pairs.extend([F.lit(data_key), r.fout])
         viol_pairs.extend([F.lit(data_key), r.viols])
 
-    data_keys = F.array_distinct(F.json_object_keys(txt))
-    if stage is not None:
-        # references txt (level <= this node's level): stage with the
-        # field extractions
-        data_keys = stage.add(level + 1, data_keys)
+    # references txt (level <= this node's level): stage with the field
+    # extractions
+    data_keys = stage.add(level + 1, F.array_distinct(F.json_object_keys(txt)))
     if field_keys:
         declared = F.array(*[F.lit(k) for k in field_keys])
     else:
         declared = F.array().cast("array<string>")
     keyset_ok = F.size(F.array_except(data_keys, declared)) == 0
-    struct_ok = tv.isNotNull() & _vtype(tv).startswith("OBJECT") & keyset_ok
-    if stage is not None:
-        struct_ok = stage.add(level + 2, F.coalesce(struct_ok, F.lit(False)))
-    cond = struct_ok
+    struct_ok = stage.add(
+        level + 2,
+        F.coalesce(tv.isNotNull() & _vtype(tv).startswith("OBJECT") & keyset_ok, F.lit(False)),
+    )
+    cond = femit = struct_ok
     for r in subs:
         cond = cond & r.cond
-
-    if field_keys:
-        all_keys = F.concat(data_keys, F.array_except(declared, data_keys))
-        if stage is not None:
-            all_keys = stage.add(level + 2, all_keys)
-
-        def _dispatch(pairs: list[Column]) -> Column:
-            m = F.create_map(*pairs)
-            body = F.array_join(
-                F.transform(
-                    all_keys,
-                    lambda k: F.concat(
-                        F.lit('"'), k, F.lit('":'), F.element_at(m, k)
-                    ),
-                ),
-                ",",
-            )
-            return F.concat(F.lit("{"), body, F.lit("}"))
-
-        out = _dispatch(out_pairs)
-        fout = _dispatch(fout_pairs)
-        vmap = F.create_map(*viol_pairs)
-        viols = F.flatten(
-            F.transform(
-                all_keys, lambda k: F.coalesce(F.element_at(vmap, k), _empty_viols())
-            )
-        )
-        femit = struct_ok if stage is not None else F.coalesce(struct_ok, F.lit(False))
-        for r in subs:
-            femit = femit & F.coalesce(r.femit, F.lit(False))
-        # assembly stays unstaged: it is concat/dispatch over already-staged
-        # leaf and key columns, cheap per reference
-        return _Screen(
-            cond, out, exact=False, null_out=False,
-            femit=femit, fout=fout, viols=viols,
-        )
-    out = F.lit("{}")
-    return _Screen(cond, out, exact=False, null_out=False)
+        femit = femit & r.femit
+    if not field_keys:
+        return _Screen(cond, F.lit("{}"), exact=False, null_out=False)
+    all_keys = stage.add(level + 2, F.concat(data_keys, F.array_except(declared, data_keys)))
+    # assembly stays unstaged: it is concat/dispatch over already-staged
+    # leaf and key columns, cheap per reference
+    out_map = F.create_map(*out_pairs)
+    body = F.array_join(
+        F.transform(all_keys, lambda k: F.concat(F.lit('"'), k, F.lit('":'), F.element_at(out_map, k))),
+        ",",
+    )
+    vmap = F.create_map(*viol_pairs)
+    return _Screen(
+        cond,
+        F.concat(F.lit("{"), body, F.lit("}")),
+        exact=False,
+        null_out=False,
+        femit=femit,
+        viols=F.flatten(
+            F.transform(all_keys, lambda k: F.coalesce(F.element_at(vmap, k), _empty_viols()))
+        ),
+    )
 
 
 def compile_screens(schema: Any, raw: Column):
-    """One compilation, both screens, staged. Returns ``(levels, outputs)``:
-    ``levels`` is an ordered list of ``{column_name: Column}`` dicts of
-    shared subexpressions (see :class:`_Stager`) that the caller must
-    select in order (:func:`select_levels`) before evaluating ``outputs``,
-    whose expressions reference those columns by name:
+    """One compilation, staged. Returns ``(levels, outputs)``: ``levels``
+    is an ordered list of ``{column_name: Column}`` dicts of shared
+    subexpressions (see :class:`_Stager`) that the caller must select in
+    order (:func:`select_levels`) before evaluating ``outputs``, whose
+    expressions reference those columns by name:
 
     * ``"pass"`` — provably-pass boolean;
-    * ``"pass_out"`` — yv_output for proven-pass rows;
-    * ``"emit"`` — outcome (pass OR fail) exactly JVM-representable;
+    * ``"emit"`` — the outcome, pass or fail, is exactly JVM-representable
+      (true on every ``pass`` row);
     * ``"viols"`` — the interpreter's violation rows, valid when ``emit``;
-    * ``"fail_out"`` — yv_output valid when ``emit`` (== pass_out on pass).
+    * ``"out"`` — the interpreter's yv_output, valid when ``emit``.
 
     Rows with ``emit & ~pass`` are provably FAILING with byte-exact
-    violations/output — they skip Arrow entirely. Rows with ``~emit`` run
+    violations/output — they skip Arrow too. Rows with ``~emit`` run
     interpreted. Raises :class:`ScreenNotApplicable` outside the fragment
-    (the fail side degrades per-node, never widens the fragment), including
+    (the fail side degrades per node, never widens the fragment), including
     for schemas that do not lower."""
     try:
         plan = lower(schema)
@@ -847,13 +739,12 @@ def compile_screens(schema: Any, raw: Column):
         raise ScreenNotApplicable(str(ex)) from ex
     stage = _Stager()
     pv = stage.add(0, F.try_parse_json(raw))
-    s = _screen(plan, pv, raw, frozenset(), 0, "$", stage, 0)
+    s = _screen(plan, pv, raw, frozenset(), 0, F.lit("$"), stage, 0)
     return stage.levels, {
         "pass": F.coalesce(s.cond, F.lit(False)),
-        "pass_out": s.out,
         "emit": F.coalesce(s.femit, F.lit(False)),
         "viols": s.viols,
-        "fail_out": s.fout,
+        "out": s.out,
     }
 
 

@@ -52,16 +52,19 @@ def add_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
 
 
 def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> list[int]:
-    """Buckets not yet recorded in the manifest (checkpoint resume)."""
-    all_buckets = set(range(n_buckets))
-    try:
-        done = {
-            r[0]
-            for r in spark.read.parquet(manifest_path).select("bucket").distinct().collect()
-        }
-    except Exception:
-        done = set()
-    return sorted(all_buckets - done)
+    """Buckets not yet recorded in the manifest (checkpoint resume). A
+    missing manifest, or a directory without part files (which
+    ``_hadoop_publish``'s mkdirs can leave behind), means no bucket is
+    done; any other read error propagates — treating an unreadable
+    manifest as empty would reprocess every bucket and duplicate its
+    violations."""
+    fs, jpath, _ = _hadoop_fs(spark, manifest_path)
+    if not fs.exists(jpath) or not any(
+        st.getPath().getName().startswith("part-") for st in fs.listStatus(jpath)
+    ):
+        return list(range(n_buckets))
+    done = {r[0] for r in spark.read.parquet(manifest_path).select("bucket").distinct().collect()}
+    return sorted(set(range(n_buckets)) - done)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
