@@ -123,7 +123,7 @@ def _q_lineitem_dup_keys_fp(spark, sf_dir):
 
 def _q_uniqueness_summary(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return checks.uniqueness_summary(li, ["l_orderkey", "l_linenumber"], salt_buckets=8)
+    return checks.uniqueness_summary(li, ["l_orderkey", "l_linenumber"])
 
 
 def _q_ri_orphan_count(spark, sf_dir):
@@ -282,16 +282,6 @@ def _q_dedup_clusters(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    return dedup.dup_clusters(pairs)
-
-
-def _q_dedup_clusters_star(spark, sf_dir):
-    # O(log n)-round star-contraction variant — same (id, cluster=min id)
-    # contract, same recursive-closure oracle as dedup_clusters
-    from yaschva_spark.ops import dedup
-
-    docs = _t(spark, sf_dir, "documents")
-    pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
     return dedup.dup_clusters_star(pairs)
 
 
@@ -316,7 +306,7 @@ def _q_dedup_keep(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
-    kept = dedup.apply_dedup(docs, dedup.dup_clusters(pairs), "doc_id")
+    kept = dedup.apply_dedup(docs, dedup.dup_clusters_star(pairs), "doc_id")
     return kept.select("doc_id", "lang")
 
 
@@ -943,13 +933,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "duplicated_spans": _q_duplicated_spans,  # span-level substring dedup
         "strip_spans": _q_strip_spans,            # its apply-side (boilerplate removal)
         "dedup_clusters": _q_dedup_clusters,
-        "dedup_clusters_star": _q_dedup_clusters_star,
         "dedup_keep": _q_dedup_keep,
         "eval_contamination": _q_contamination,
         "cosine_topk": _q_cosine_topk,
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "embedding_near_dup": _q_embedding_near_dup,
+        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,  # planner delegates to GEMM
         "embedding_near_dup_lsh_banded": _q_embedding_near_dup_lsh_banded,
         "semdedup_pairs": _q_semdedup_pairs,
         "split_counts": _q_split_counts,
@@ -979,15 +969,15 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       doc_column_stats
     * lineitem_dup_keys — plain hash-agg duplicates; the scale path is
       certified by lineitem_dup_keys_fp (identical output, fingerprint keys)
-    * embedding_near_dup_lsh / _tiled — two of the five near-dup plan
-      regimes; exact GEMM, banded LSH, and SemDeDup stay driver-certified
+    * embedding_near_dup_tiled — one of the five near-dup plan regimes;
+      exact GEMM, the LSH planner (both its GEMM delegation and its banded
+      plan), and SemDeDup stay driver-certified
     * lang_id_heuristic — pure-Catalyst projection; text_profile and
       gopher_rules certify the same expression family
     """
     return {
         "doc_col_stats": _q_doc_col_stats,
         "lineitem_dup_keys": _q_lineitem_dup_keys,
-        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,
         "embedding_near_dup_tiled": _q_embedding_near_dup_tiled,
         "lang_id_heuristic": _q_lang_id,
     }
@@ -1813,11 +1803,8 @@ def oracle_sql() -> dict[str, str]:
         "ngram_jaccard_pairs": _JACCARD_SQL,
         "minhash_near_dup": _JACCARD_SQL,
         # connected components as a recursive transitive closure over the
-        # same Jaccard pairs; cluster = min reachable id (incl. self).
-        # Both engine variants (min-label propagation and large/small-star
-        # contraction) must produce this identical closure.
+        # same Jaccard pairs; cluster = min reachable id (incl. self)
         "dedup_clusters": _CLUSTERS_SQL,
-        "dedup_clusters_star": _CLUSTERS_SQL,
         "dedup_keep": f"""
             SELECT doc_id, lang FROM documents
             WHERE doc_id NOT IN (SELECT id FROM ({_CLUSTERS_SQL}) WHERE cluster != id)

@@ -36,6 +36,33 @@ def _ensure_code_table(spark, n_rows: int, seed: int = 42) -> str:
     return path
 
 
+def headline(timings: dict, sf: str, pipeline_sec: float, runs: list, result, load_1m: float) -> dict:
+    """The compact stdout payload. The driver captures only the last ~2000
+    chars of stdout, so this must stay under that window (asserted in
+    tests with worst-case values); per-rep detail goes to the file."""
+    return {
+        "metric": "validation_pipeline_sec",
+        "value": round(pipeline_sec, 4),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "total_sec": round(sum(timings.values()), 4),
+        "bench_rows": result.n_rows,
+        "rows_per_sec": round(result.n_rows / pipeline_sec, 1),
+        "n_violations": result.n_violations,
+        "n_dup_keys": result.n_dup_keys,
+        "n_orphans": result.n_orphans,
+        # ambient-load context: this host shows external multi-minute
+        # slow windows (BENCH/BASELINE.md); readers should weigh
+        # wall numbers against the load state they were taken in
+        "load_avg_1m": round(load_1m, 2),
+        "pipeline_median_sec": round(sorted(runs)[len(runs) // 2], 4),
+        # r2-comparable raw statistic (the old headline)
+        "pipeline_min_sec": round(min(runs), 4),
+        "detail_file": "BENCH/last_run_detail.json",
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     bench_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "2000000"))
@@ -159,7 +186,6 @@ def main() -> None:
     pipeline_sec = normalized[len(normalized) // 2]
     timings["validation_pipeline"] = round(pipeline_sec, 4)
 
-    total = round(sum(timings.values()), 4)
     # Full-detail artifact (per-rep triples, probe walls, raw medians):
     # written to a FILE because the driver captures only the last ~2000
     # chars of stdout — r4's all-in-one line outgrew that window and
@@ -189,32 +215,8 @@ def main() -> None:
     with open(detail_path, "w") as f:
         json.dump(detail, f, indent=1)
 
-    print(
-        json.dumps(
-            {
-                "metric": "validation_pipeline_sec",
-                "value": round(pipeline_sec, 4),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
-                "total_sec": total,
-                "bench_rows": result.n_rows,
-                "rows_per_sec": round(result.n_rows / pipeline_sec, 1),
-                "n_violations": result.n_violations,
-                "n_dup_keys": result.n_dup_keys,
-                "n_orphans": result.n_orphans,
-                # ambient-load context: this host shows external multi-minute
-                # slow windows (BENCH/BASELINE.md); readers should weigh
-                # wall numbers against the load state they were taken in
-                "load_avg_1m": round(os.getloadavg()[0], 2),
-                "pipeline_median_sec": round(sorted(runs)[len(runs) // 2], 4),
-                # r2-comparable raw statistic (the old headline)
-                "pipeline_min_sec": round(min(runs), 4),
-                "detail_file": "BENCH/last_run_detail.json",
-            },
-            separators=(",", ":"),
-        )
-    )
+    line = headline(timings, sf, pipeline_sec, runs, result, os.getloadavg()[0])
+    print(json.dumps(line, separators=(",", ":")))
     sys.stdout.flush()
 
 

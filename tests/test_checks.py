@@ -1,6 +1,6 @@
 """Direct unit tests for table-level checks not fully covered by the
-DuckDB oracle gate: KS drift (applyInPandas, no SQL oracle), the salted
-uniqueness path, and column_stats' HLL sanity."""
+DuckDB oracle gate: KS drift (applyInPandas, no SQL oracle), the plain vs
+fingerprint uniqueness paths, and column_stats' HLL sanity."""
 
 from __future__ import annotations
 
@@ -47,17 +47,15 @@ def test_drift_ks_empty_group_values(spark):
     assert got["a"] is not None
 
 
-def test_salted_duplicate_keys_matches_plain(spark):
+def test_duplicate_keys_plain_matches_fingerprint(spark):
     df = spark.createDataFrame(
         [(i % 7, "k") for i in range(100)] + [(99, "x")], "a long, b string"
     )
     plain = {(r["a"], r["b"]): r["dup_count"]
              for r in checks.duplicate_keys(df, ["a", "b"]).collect()}
-    salted = {(r["a"], r["b"]): r["dup_count"]
-              for r in checks.duplicate_keys(df, ["a", "b"], salt_buckets=5).collect()}
     fp = {(r["a"], r["b"]): r["dup_count"]
           for r in checks.duplicate_keys_via_fingerprint(df, ["a", "b"]).collect()}
-    assert plain == salted == fp
+    assert plain == fp
     assert all(v == 100 // 7 + (1 if k[0] < 100 % 7 else 0) for k, v in plain.items())
 
 

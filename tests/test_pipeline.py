@@ -57,7 +57,7 @@ def test_skew_hot_repo(code):
 
 
 def test_duplicates_and_orphans(spark, code):
-    dups = checks.duplicate_keys(code, ["repo", "path", "commit"], salt_buckets=4)
+    dups = checks.duplicate_keys(code, ["repo", "path", "commit"])
     assert dups.count() > 0
     orphans = checks.ri_orphans(code, "repo", repos_dim(spark), "repo")
     n_orph = orphans.count()

@@ -8,8 +8,9 @@ These generalize the reference's per-value rules to whole columns at
   automatically), no per-column jobs.
 * **No sorts where a hash agg suffices** (uniqueness is groupBy, not a
   window over a global sort).
-* **Explicit skew handling** — uniqueness supports a salt pre-aggregation
-  stage for hot keys (north rule requires explicit salting, not AQE alone).
+* **Skew in uniqueness is absorbed map-side** — counts combine per task
+  before the shuffle, so a hot key reaches its reducer as one partial
+  count per task, never as raw rows.
 * **Broadcast the small side** of referential-integrity anti-joins; callers
   flip to sort-merge for large dims.
 * Drift statistics are plain arithmetic over grouped counts (chi-square) or
@@ -134,40 +135,23 @@ def range_check(df: DataFrame, column: str, lo: float | None, hi: float | None) 
     )
 
 
-# --- uniqueness (salted two-stage hash agg) --------------------------------------
-def duplicate_keys(
-    df: DataFrame, keys: Sequence[str], salt_buckets: int = 0
-) -> DataFrame:
+# --- uniqueness (hash agg) ------------------------------------------------------
+def duplicate_keys(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Keys occurring more than once: ``(keys..., dup_count)``.
 
-    Pure hash aggregation (no window/sort). Default ``salt_buckets=0``:
-    for *counting*, Spark's automatic partial aggregation already collapses
-    hot keys map-side (each task emits one partial count per key), so no
-    reducer hotspot exists even for a key holding 20% of all rows — and
-    explicit salting measured ~10x slower on near-unique keys (it doubles
-    the shuffle and defeats map-side combine).
-
-    ``salt_buckets > 0`` switches to the explicit two-stage
-    ``groupBy(keys, salt)`` -> ``groupBy(keys)`` plan. Use it when the
-    aggregation has no map-side combine (exact count-distinct payloads,
-    collect_list-style state) or when the grouped output feeds a skewed
-    join — the cases where the north rule's explicit skew handling is real.
+    Pure hash aggregation (no window/sort). Spark's automatic partial
+    aggregation already collapses hot keys map-side (each task emits one
+    partial count per key), so no reducer hotspot exists even for a key
+    holding 20% of all rows — explicit salting measured ~10x slower on
+    near-unique keys (it doubles the shuffle and defeats map-side combine).
     """
-    key_cols = [F.col(k) for k in keys]
-    if salt_buckets > 0:
-        salt = (F.rand(seed=7) * salt_buckets).cast("int").alias("__salt")
-        partial = df.select(*key_cols, salt).groupBy(*keys, "__salt").agg(
-            F.count(F.lit(1)).alias("__partial")
-        )
-        counted = partial.groupBy(*keys).agg(F.sum("__partial").alias("dup_count"))
-    else:
-        counted = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
+    counted = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("dup_count"))
     return counted.filter(F.col("dup_count") > 1)
 
 
-def uniqueness_summary(df: DataFrame, keys: Sequence[str], salt_buckets: int = 0) -> DataFrame:
+def uniqueness_summary(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     """(n_keys, n_dup_keys, n_dup_rows) — the manifest-level uniqueness metric."""
-    counted = duplicate_keys(df, keys, salt_buckets)
+    counted = duplicate_keys(df, keys)
     return counted.agg(
         F.count(F.lit(1)).alias("n_dup_keys"),
         F.coalesce(F.sum("dup_count"), F.lit(0)).alias("n_dup_rows"),

@@ -15,7 +15,7 @@ Injected violations at known, deterministic rates (FIXTURES.md §3):
 * ~0.1%  null content             -> not_string on $.content
 * ~0.2%  repo absent from dim     -> referential-integrity orphans
 * ~0.05% duplicated (repo,path,commit) triples -> uniqueness violations
-* one hot repo holds ~20% of rows (skew / salting exercise)
+* one hot repo holds ~20% of rows (skew exercise)
 * one drift bucket (lang + content-length distribution shifted)
 """
 

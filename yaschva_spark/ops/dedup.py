@@ -5,6 +5,10 @@
   an inverted shingle index (explode -> self-join on shingle -> count common)
   — no O(n^2) cross join; the join only materializes pairs that share at
   least one shingle.
+* :func:`banded_pairs` — the ONE banded candidate self-join: (id, band,
+  bucket) rows in, distinct (i, j) id pairs out. Every LSH operator
+  (MinHash, SimHash, and the embedding planner's banded branch in
+  ops.similarity) builds its candidates with it.
 * :func:`minhash_lsh_pairs` — the 100 TB path: MinHash signatures (one
   JVM-side xxhash64 per shingle + seeded affine mixes minimized in a numpy
   batch kernel), banded LSH bucketing over (id, band, bucket) only — the
@@ -14,8 +18,12 @@
   chosen for the threshold). The shingle/signature table persists for the
   operator's duration (it feeds bucketing and both verify sides).
 * :func:`simhash` / :func:`simhash_pairs` — 64-bit SimHash (token hashes
-  JVM-side, bit-voting in a numpy batch kernel), banded by 16-bit chunks,
-  Hamming-verified.
+  JVM-side, bit-voting in a numpy batch kernel), banded into
+  ``max_hamming + 1`` chunks, Hamming-verified.
+* :func:`dup_clusters_star` — the ONE connected-components operator:
+  ``(id, cluster = min id)`` over any pair operator's output, by
+  large-star/small-star contraction in O(log n) rounds;
+  :func:`apply_dedup` keeps each cluster's canonical row.
 * :func:`duplicated_spans` — SPAN-level substring dedup (Lee et al. 2021):
   maximal token ranges of corpus-duplicated n-gram windows, via a df-count
   aggregate (never a pair join) + per-document island merge.
@@ -27,7 +35,7 @@ All operators take (df, id_col, text_col) and tokenize identically
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -544,6 +552,27 @@ def minhash_signatures(
     return hashed.select("id", "shingle_set", sig_udf(F.col("hv")).alias("sig"))
 
 
+def banded_pairs(buckets: DataFrame) -> DataFrame:
+    """The banded candidate self-join shared by every LSH operator: rows
+    ``(id, band, bucket)`` in, distinct ``(i, j)`` with ``i < j`` out, one
+    per pair of ids that share a bucket in at least one band. Only ids ride
+    the join (CLAUDE.md LSH rule); callers rejoin payloads per candidate.
+    A payload that must survive the join without a rejoin goes in as
+    ``id = struct(id, payload)``: structs order and deduplicate by their
+    first field, so with unique ids the pairs are the same."""
+    a, b = buckets.alias("a"), buckets.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (F.col("a.id") < F.col("b.id")),
+        )
+        .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
+        .dropDuplicates(["i", "j"])
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -589,87 +618,7 @@ def minhash_lsh_pairs(
         ).alias("bb"),
     ).select("id", "bb.band", "bb.bucket")
 
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
-        .dropDuplicates(["i", "j"])
-    )
-    sets = sigs.select("id", "shingle_set")
-    cand = (
-        cand.join(sets.withColumnRenamed("id", "i").withColumnRenamed("shingle_set", "set_i"), "i")
-        .join(sets.withColumnRenamed("id", "j").withColumnRenamed("shingle_set", "set_j"), "j")
-    )
-    inter = F.size(F.array_intersect("set_i", "set_j"))
-    union = F.size("set_i") + F.size("set_j") - inter
-    return cand.select(
-        "i", "j", (inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= threshold)
-
-
-def dup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
-    """Connected components over near-dup pairs: ``(id, cluster)`` with
-    ``cluster`` = the minimum id in the component — the canonical document
-    every member deduplicates to. Emits only ids that appear in ``pairs``
-    (singletons are their own canonicals by definition).
-
-    Min-label propagation: each iteration joins the (persisted) bidirected
-    edge list against current labels and takes the per-node min — one
-    shuffle join + one hash agg per round, state is one (id, label) row
-    per node, never adjacency lists. Convergence needs O(component
-    diameter) rounds; duplicate families are near-cliques (diameter 1-3),
-    so 2-4 rounds close real dedup workloads, with ``max_iters`` as the
-    pathological-chain bound (a 10^12-row run that needs long-chain
-    resolution should switch to the large-star/small-star variant, which
-    is O(log n) rounds — same join/agg primitives). Each round
-    ``localCheckpoint``s the label table to cut lineage, so plans stay
-    constant-size across iterations.
-
-    Input column convention: ``(i, j)`` pairs as produced by every pair
-    operator in this module and ops.similarity.
-    """
-    edges = pairs.select(F.col("i").alias("a"), F.col("j").alias("b"))
-    edges = persist_tracked(
-        edges.union(edges.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    )
-    # init: label(v) = min(v, min neighbor) — one agg over the edge list
-    labels = edges.groupBy("a").agg(F.least(F.col("a"), F.min("b")).alias("label"))
-    labels = labels.localCheckpoint()
-    for _ in range(max_iters):
-        via_nbr = (
-            edges.join(labels.withColumnRenamed("a", "b"), "b")
-            .select("a", "label")
-        )
-        new_labels = (
-            via_nbr.union(labels)
-            .groupBy("a")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("label", "old"), "a")
-            .filter(F.col("label") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # silently returning here would emit one component split across
-        # several cluster ids (far ends of a long chain never saw the min)
-        raise RuntimeError(
-            f"dup_clusters: min-label propagation still changing after "
-            f"{max_iters} iterations (component diameter exceeds the bound); "
-            "raise max_iters, or switch long-chain workloads to a "
-            "large-star/small-star variant (O(log n) rounds)"
-        )
-    return labels.select(F.col("a").alias("id"), F.col("label").alias("cluster"))
+    return _verify_pairs(banded_pairs(buckets), sigs).filter(F.col("jaccard") >= threshold)
 
 
 def ngram_contamination(
@@ -743,14 +692,13 @@ def apply_dedup(
     """Materialize a dedup decision: keep exactly the canonical row
     (``cluster == id``) of every duplicate group, plus all singletons.
 
-    ``clusters`` is the output of :func:`dup_clusters` /
-    :func:`dup_clusters_star` — it contains ONLY ids that appeared in a
-    near-dup pair, a vanishing fraction of the corpus, so the drop-list
-    broadcasts and the apply is a map-side anti-probe over one scan: no
-    shuffle of the corpus, ever. For a corpus that is MOSTLY duplicates
-    the drop-list outgrows the broadcast bound — pass
-    ``broadcast=False`` and AQE picks the join strategy from the actual
-    size; the semantics don't change."""
+    ``clusters`` is the output of :func:`dup_clusters_star` — it contains
+    ONLY ids that appeared in a near-dup pair, a vanishing fraction of the
+    corpus, so the drop-list broadcasts and the apply is a map-side
+    anti-probe over one scan: no shuffle of the corpus, ever. For a corpus
+    that is MOSTLY duplicates the drop-list outgrows the broadcast bound —
+    pass ``broadcast=False`` and AQE picks the join strategy from the
+    actual size; the semantics don't change."""
     drop = clusters.filter(F.col("cluster") != F.col("id")).select(
         F.col("id").alias(id_col)
     )
@@ -760,94 +708,76 @@ def apply_dedup(
 
 
 def dup_clusters_star(pairs: DataFrame, max_iters: int = 50) -> DataFrame:
-    """Connected components in O(log n) rounds: alternating large-star /
-    small-star contraction (Kiveris et al. 2014, "Connected Components in
-    MapReduce and Beyond"). Same contract as :func:`dup_clusters` —
-    ``(id, cluster)``, cluster = min id of the component — but round count
-    is logarithmic in component SIZE, not linear in DIAMETER, so the
-    pathological long chains that exhaust min-label propagation close in a
-    handful of rounds (a 10^6-node path needs ~20 rounds, not 10^6).
+    """Connected components over near-dup pairs: ``(id, cluster)`` with
+    ``cluster`` = the minimum id in the component — the canonical document
+    every member deduplicates to. Emits only ids that appear in ``pairs``
+    (singletons are their own canonicals by definition). Input column
+    convention: ``(i, j)`` pairs as produced by every pair operator in this
+    module and ops.similarity.
 
-    Each round is two (groupBy + join) passes over the edge list:
+    Alternating large-star / small-star contraction (Kiveris et al. 2014,
+    "Connected Components in MapReduce and Beyond"): the round count is
+    logarithmic in component SIZE, not linear in DIAMETER, so long chains
+    close in a handful of rounds (a 200-node path in 9, a 10^6-node path in
+    ~20) where min-label propagation needs one round per hop. Each round:
 
     * large-star: every node attaches its strictly-larger neighbors to
-      the minimum of its closed neighborhood;
-    * small-star: edges are pointed large->small, then every node
-      attaches its smaller-or-equal neighbors (and itself) to that
-      minimum.
+      the minimum of its closed neighborhood (edges now point large->small);
+    * small-star: every node attaches its smaller neighbors (and itself)
+      to the minimum of them.
 
-    State is ALWAYS just an edge list (monotonically non-growing after
-    round one; no adjacency lists, no label table), both halves are plain
-    hash joins/aggs, and each round ``localCheckpoint``s to keep plans
-    constant-size — the same scale discipline as the min-label loop.
-    Convergence = the edge set reaches the fixed point where every
-    component is a star rooted at its min (checked with ONE blocking
-    probe per round: a left join against the previous edge set that
-    yields size + new-edge count together)."""
+    Neighborhood minima are window mins (``min(v) OVER (PARTITION BY u)``)
+    rather than a groupBy joined back. State is ALWAYS just an edge list
+    (monotonically non-growing after round one; no adjacency lists, no
+    label table), and each round ``localCheckpoint``s it to keep plans
+    constant-size. A node with a huge neighborhood puts all of it in one
+    window task, but only as (u, v) longs, which the window buffer spills
+    to disk past its in-memory bound. Convergence = the edge set
+    reaches the fixed point where every component is a star rooted at its
+    min. The edges that changed are counted by an Observation on the
+    round's checkpoint, so a round is ONE Spark action: no blocking probe
+    after it."""
     e = (
         pairs.select(F.col("i").cast("long").alias("u"), F.col("j").cast("long").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint()
     )
-    members = e.select(F.col("u").alias("id")).union(e.select("v")).distinct()
-    n_e = e.count()
+    by_u = Window.partitionBy("u")
     for _ in range(max_iters):
-        # large-star over the undirected neighborhood
         und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = und.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
         large = (
-            und.join(mins, "u")
+            und.select("u", "v", F.least("u", F.min("v").over(by_u)).alias("m"))
             .where(F.col("v") > F.col("u"))
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
         )
-        # small-star over large->small directed edges
-        can = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        mins2 = can.groupBy("u").agg(F.least(F.col("u"), F.min("v")).alias("m"))
-        small = (
-            can.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins2.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
+        star = large.select("u", "v", F.min("v").over(by_u).alias("m"))
+        # the new edges (t = 1) grouped with the previous ones (t = 0): one
+        # shuffle deduplicates them and finds the symmetric difference
+        diff = Observation()
+        e = (
+            star.select(F.col("v").alias("u"), "m")
+            .union(star.select("u", "m"))
+            .where(F.col("u") != F.col("m"))
+            .select("u", F.col("m").alias("v"), F.lit(1).alias("t"))
+            .union(e.select("u", "v", F.lit(0)))
+            .groupBy("u", "v")
+            .agg(F.min("t").alias("t0"), F.max("t").alias("t1"))
+            .observe(diff, F.count_if(F.col("t0") == F.col("t1")).alias("n"))
+            .where(F.col("t1") == 1)
+            .select("u", "v")
             .localCheckpoint()
         )
-        # fixed-point test in ONE driver action (r3 verdict nit #5 closed):
-        # a left probe against the previous edge set yields the new size
-        # and the not-previously-present count together. Both sides are
-        # distinct sets, so n_new == 0 means small ⊆ e, and equal counts
-        # then mean equal sets — same semantics as count + exceptAll, but
-        # one blocking action per round and no exceptAll shuffle.
-        probe = (
-            small.join(e.withColumn("__in", F.lit(1)), ["u", "v"], "left")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_if(F.col("__in").isNull()).alias("n_new"),
-            )
-            .first()
-        )
-        n_small, n_new = probe["n"], probe["n_new"]
-        changed = n_new > 0 or n_small != n_e
-        e, n_e = small, n_small
-        if not changed:
+        if diff.get["n"] == 0:
             break
     else:
         raise RuntimeError(
             f"dup_clusters_star: not a fixed point after {max_iters} rounds "
             "(should be ~log2(max component size) — raise max_iters)"
         )
-    # fixed point: every non-root points straight at its component min;
-    # roots (and nodes whose whole component collapsed onto them) label
-    # themselves
-    attach = e.select(F.greatest("u", "v").alias("id"), F.least("u", "v").alias("cluster"))
-    return (
-        members.join(attach, "id", "left")
-        .select("id", F.coalesce(F.col("cluster"), F.col("id")).alias("cluster"))
-    )
+    # fixed point: every non-root has exactly one edge, straight to its
+    # component min; each root labels itself
+    roots = e.select(F.col("v").alias("id"), F.col("v").alias("cluster")).distinct()
+    return e.select(F.col("u").alias("id"), F.col("v").alias("cluster")).union(roots)
 
 
 def _simhash_fingerprints(rows: list):
@@ -920,8 +850,9 @@ def simhash_pairs(
     at least one exact chunk — recall is exactly 1.0 for every
     ``max_hamming`` in [0, 63]. (An earlier fixed 4x16 layout guaranteed
     this only up to 3 and silently missed qualifying pairs beyond it.)
-    Candidates join on (chunk_idx, chunk_value), then exact popcount
-    verification keeps precision at 1.0. Wider bounds mean more, shorter
+    Candidates come from :func:`banded_pairs` with band = chunk index and
+    bucket = chunk value, then exact popcount verification keeps precision
+    at 1.0. Wider bounds mean more, shorter
     chunks: candidate volume rises as selectivity per chunk drops — the
     inherent banding tradeoff, now spelled by the parameter instead of
     silently breaking the contract.
@@ -937,31 +868,16 @@ def simhash_pairs(
         piece = F.shiftrightunsigned(F.col("simhash"), lo)
         if width < 64:  # (1<<64)-1 does not fit a long literal
             piece = piece.bitwiseAND(F.lit((1 << width) - 1))
-        return F.struct(F.lit(c).alias("chunk_idx"), piece.alias("chunk"))
+        return F.struct(F.lit(c).alias("band"), piece.alias("bucket"))
 
+    # the 8-byte fingerprint rides the join inside the id struct, so the
+    # bit-voting kernel runs once and no rejoin is needed
     chunks = fp.select(
-        "id",
-        "simhash",
+        F.struct("id", "simhash").alias("id"),
         F.explode(F.array(*[chunk_expr(c) for c in range(n_chunks)])).alias("cc"),
-    ).select("id", "simhash", "cc.chunk_idx", "cc.chunk")
-    a = chunks.alias("a")
-    b = chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("i"),
-            F.col("b.id").alias("j"),
-            F.col("a.simhash").alias("h_i"),
-            F.col("b.simhash").alias("h_j"),
-        )
-        .dropDuplicates(["i", "j"])
-    )
-    hamming = F.bit_count(F.col("h_i").bitwiseXOR(F.col("h_j")))
-    return cand.select("i", "j", hamming.alias("hamming")).filter(
-        F.col("hamming") <= max_hamming
-    )
+    ).select("id", "cc.band", "cc.bucket")
+    cand = banded_pairs(chunks)
+    hamming = F.bit_count(F.col("i.simhash").bitwiseXOR(F.col("j.simhash")))
+    return cand.select(
+        F.col("i.id").alias("i"), F.col("j.id").alias("j"), hamming.alias("hamming")
+    ).filter(F.col("hamming") <= max_hamming)

@@ -43,6 +43,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yaschva_spark.ops.dedup import banded_pairs
+
 
 def _mat(series: pd.Series):
     """Arrow list column -> [n, d] float64 matrix."""
@@ -575,21 +577,11 @@ def embedding_near_dup_lsh(
     # ids only through the banded join (CLAUDE.md LSH rule): vectors rejoin
     # per deduplicated candidate instead of riding n_tables copies through
     # the explode + pair-dedup shuffles
-    bucketed = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(bucketer(F.col(vec_col))).alias("table_id", "bucket"),
-    )
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.table_id") == F.col("b.table_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
+    cand = banded_pairs(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.posexplode(bucketer(F.col(vec_col))).alias("band", "bucket"),
         )
-        .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
-        .dropDuplicates(["i", "j"])
     )
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     cand = cand.join(

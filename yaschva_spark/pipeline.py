@@ -10,7 +10,8 @@ Partitioning model: rows are bucketed by ``xxhash64(repo, path) % n_buckets``
 — the stand-in for Iceberg partition ids in this sandbox. Bucketing by a
 hash of (repo, path) rather than repo alone keeps the hot repo spread across
 buckets (skew containment at the *unit-of-work* level), while the uniqueness
-aggregation handles within-key skew via salting (checks.duplicate_keys).
+aggregation absorbs within-key skew by map-side partial counts
+(checks.duplicate_keys).
 
 One Spark job processes all pending buckets together (full parallelism);
 "per-partition" applies to restartability and metrics granularity, not to
