@@ -372,13 +372,6 @@ def _ivf_centroids(sf_dir: str, n_lists: int = 16, iters: int = 3):
     return similarity.kmeans_centroids_local(M, n_lists, iters)
 
 
-def _q_embedding_near_dup_tiled(spark, sf_dir):
-    from yaschva_spark.ops import similarity
-
-    emb = _t(spark, sf_dir, "embeddings")
-    return similarity.embedding_near_dup_tiled(emb, threshold=0.4, n_blocks=8)
-
-
 def _q_ann_ivf_topk(spark, sf_dir):
     from yaschva_spark.ops import similarity
 
@@ -728,7 +721,7 @@ def _q_stateful_totals(spark, sf_dir):
     sink = os.path.join(work, "sink")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     stream = streaming.read_stream(spark, src, docs.schema, max_files_per_trigger=2)
-    validated = streaming.validate_stream(stream, DOC_SCHEMA)
+    validated = validate_table(stream, DOC_SCHEMA)
     totals = streaming.stateful_violation_totals(validated, key_col="lang")
     q = (
         totals.writeStream.foreachBatch(
@@ -901,7 +894,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver-certified registry — EXACTLY 50 entries, because the
     driver's correctness artifact records the first 50 (r4 had 54 and the
     last four were never re-certified). The r4 tail entries now lead, and
-    five near-duplicate variants moved to :func:`extra_queries` (still
+    three near-duplicate variants live in :func:`extra_queries` (still
     oracle-checked every pytest run via tests/test_entry_oracle.py)."""
     return {
         "flagship_violation_summary": _q_flagship_violation_summary,
@@ -939,7 +932,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_lsh_topk": _q_ann_lsh_topk,
         "ann_ivf_topk": _q_ann_ivf_topk,
         "embedding_near_dup": _q_embedding_near_dup,
-        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,  # planner delegates to GEMM
+        "embedding_near_dup_lsh": _q_embedding_near_dup_lsh,  # planner picks the exact tiles
         "embedding_near_dup_lsh_banded": _q_embedding_near_dup_lsh_banded,
         "semdedup_pairs": _q_semdedup_pairs,
         "split_counts": _q_split_counts,
@@ -969,16 +962,12 @@ def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       doc_column_stats
     * lineitem_dup_keys — plain hash-agg duplicates; the scale path is
       certified by lineitem_dup_keys_fp (identical output, fingerprint keys)
-    * embedding_near_dup_tiled — one of the five near-dup plan regimes;
-      exact GEMM, the LSH planner (both its GEMM delegation and its banded
-      plan), and SemDeDup stay driver-certified
     * lang_id_heuristic — pure-Catalyst projection; text_profile and
       gopher_rules certify the same expression family
     """
     return {
         "doc_col_stats": _q_doc_col_stats,
         "lineitem_dup_keys": _q_lineitem_dup_keys,
-        "embedding_near_dup_tiled": _q_embedding_near_dup_tiled,
         "lang_id_heuristic": _q_lang_id,
     }
 
@@ -1032,8 +1021,8 @@ _DOC_VIOLATION_SQL = f"""
 
 
 # exact embedding-cosine near-dup pairs in DuckDB SQL (oracle for the
-# exact GEMM kernel, the tiled variant, and the LSH path at threshold 0.4
-# where the planner delegates to exact)
+# exact tiles and for the LSH path at threshold 0.4, where the planner
+# runs the exact tiles)
 _NEAR_DUP_SQL = """
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
     SELECT a.vec_id AS i, b.vec_id AS j,
@@ -1875,12 +1864,10 @@ def oracle_sql() -> dict[str, str]:
         """,
         "embedding_near_dup": _NEAR_DUP_SQL,
         # the LSH operator's planner (ops.similarity.lsh_near_dup_params)
-        # selects the exhaustive GEMM plan at threshold 0.4 — LSH cannot
-        # beat it there — so its output is exact and shares the oracle
+        # selects the exact tiles at threshold 0.4 — LSH cannot beat them
+        # there — so its output is exact and shares the oracle
         "embedding_near_dup_lsh": _NEAR_DUP_SQL,
         "embedding_near_dup_lsh_banded": _lsh_near_dup_sql(),
-        # tiled exact (triangle block partitioning) computes the same set
-        "embedding_near_dup_tiled": _NEAR_DUP_SQL,
         "token_counts": r"""
             SELECT doc_id AS id,
                    len(string_split(text, ' ')) AS n_tokens,

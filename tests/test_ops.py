@@ -302,34 +302,37 @@ def test_decode_features_stub_path_is_pure_catalyst(spark):
         )
 
 
-def test_embedding_near_dup_exact(emb):
+def _all_pairs_reference(df, threshold: float) -> dict:
+    """INDEPENDENT brute force for the near-dup operators: every pairwise
+    cosine in one numpy matrix, {(i, j): sim rounded to 6} for i < j and
+    cosine >= threshold."""
     import numpy as np
 
+    rows = sorted(df.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
+    ids = [int(r["vec_id"]) for r in rows]
+    M = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    norms = np.linalg.norm(M, axis=1)
+    G = (M @ M.T) / (norms[:, None] * norms[None, :])
+    x, y = np.nonzero(np.triu(G >= threshold, k=1))
+    return {(ids[a], ids[b]): round(float(G[a, b]), 6) for a, b in zip(x, y)}
+
+
+def _pairs(df) -> dict:
+    return {(r["i"], r["j"]): r["sim"] for r in df.collect()}
+
+
+def test_embedding_near_dup_exact(emb):
     pairs = similarity.embedding_near_dup_pairs(emb, threshold=0.4).collect()
     assert all(p["i"] < p["j"] and p["sim"] >= 0.4 for p in pairs)
-    # INDEPENDENT brute force: recompute every pairwise cosine in numpy and
-    # require identical pair set AND sims (guards the kernel every other
-    # similarity test compares against)
-    rows = sorted(emb.select("vec_id", "embedding").collect(), key=lambda r: r["vec_id"])
-    ids = np.array([r["vec_id"] for r in rows])
-    M = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
-    G = (M @ M.T) / (np.linalg.norm(M, axis=1)[:, None] * np.linalg.norm(M, axis=1)[None, :])
-    want = {}
-    for x in range(len(ids)):
-        for y in range(x + 1, len(ids)):
-            if G[x, y] >= 0.4:
-                want[(int(ids[x]), int(ids[y]))] = round(float(G[x, y]), 6)
-    assert {(p["i"], p["j"]): p["sim"] for p in pairs} == want
+    # identical pair set AND sims to the numpy all-pairs reference
+    assert {(p["i"], p["j"]): p["sim"] for p in pairs} == _all_pairs_reference(emb, 0.4)
     got = {(p["i"], p["j"]) for p in pairs}
     low = similarity.embedding_near_dup_pairs(emb, threshold=0.3).collect()
     assert {(p["i"], p["j"]) for p in low} >= got  # monotone in threshold
 
 
 def test_embedding_near_dup_lsh_precision_and_recall(emb):
-    exact = {
-        (p["i"], p["j"])
-        for p in similarity.embedding_near_dup_pairs(emb, threshold=0.35).collect()
-    }
+    exact = set(_all_pairs_reference(emb, 0.35))
     approx = {
         (p["i"], p["j"])
         for p in similarity.embedding_near_dup_lsh(emb, threshold=0.35).collect()
@@ -392,28 +395,6 @@ def test_exact_duplicates_bounded_sample(spark):
     assert r["ids"] == list(range(10))  # first sample_ids ascending
 
 
-def test_jaccard_max_df_hot_shingle(spark):
-    # 'the common filler phrase' appears in every doc; with max_df it cannot
-    # generate candidates, but the true near-dup pair (share most grams) is
-    # still found with its EXACT jaccard (verification on full sets)
-    hot = "zz yy xx"
-    rows = [(i, f"{hot} unique{i} a{i} b{i} c{i}") for i in range(20)]
-    rows += [(100, f"{hot} alpha beta gamma delta"), (101, f"{hot} alpha beta gamma epsilon")]
-    df = spark.createDataFrame(rows, "id long, t string")
-    exact = {
-        (r["i"], r["j"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(df, "id", "t", n=2, threshold=0.4).collect()
-    }
-    capped = {
-        (r["i"], r["j"]): r["jaccard"]
-        for r in dedup.ngram_jaccard_pairs(df, "id", "t", n=2, threshold=0.4, max_df=5).collect()
-    }
-    assert (100, 101) in capped
-    assert capped[(100, 101)] == pytest.approx(exact[(100, 101)])  # exact value kept
-    # pairs that only shared the hot shingles are below threshold anyway
-    assert set(capped) == set(exact)
-
-
 def test_ann_ivf_small_corpus_clamps_k(emb):
     # corpus smaller than n_lists must degrade (fewer lists), not IndexError
     small = emb.filter(F.col("vec_id") < 5)
@@ -438,16 +419,10 @@ def test_lsh_planner_regimes():
 
 
 def test_lsh_near_dup_auto_delegates_exact(emb):
-    # at threshold 0.4 the planner delegates -> output EQUALS the exact op
-    exact = {
-        (r["i"], r["j"], r["sim"])
-        for r in similarity.embedding_near_dup_pairs(emb, threshold=0.4).collect()
-    }
-    auto = {
-        (r["i"], r["j"], r["sim"])
-        for r in similarity.embedding_near_dup_lsh(emb, threshold=0.4).collect()
-    }
-    assert auto == exact
+    # at threshold 0.4 the planner runs the exact tiles -> output EQUALS
+    # the all-pairs reference
+    auto = _pairs(similarity.embedding_near_dup_lsh(emb, threshold=0.4))
+    assert auto == _all_pairs_reference(emb, 0.4)
 
 
 def test_lsh_near_dup_forced_banding_recall(spark):
@@ -467,10 +442,7 @@ def test_lsh_near_dup_forced_banding_recall(spark):
     threshold = 0.85
     # params as the planner would pick for a beyond-GEMM corpus
     _, p, t = similarity.lsh_near_dup_params(threshold, 10_000_000)
-    exact = {
-        (r["i"], r["j"])
-        for r in similarity.embedding_near_dup_pairs(df, threshold=threshold).collect()
-    }
+    exact = set(_all_pairs_reference(df, threshold))
     got = {
         (r["i"], r["j"])
         for r in similarity.embedding_near_dup_lsh(
@@ -499,10 +471,7 @@ def test_lsh_near_dup_auto_planner_picks_banding(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     plan, _, _ = similarity.lsh_near_dup_params(0.85, 10_000_000)
     assert plan == "lsh"
-    exact = {
-        (r["i"], r["j"])
-        for r in similarity.embedding_near_dup_pairs(df, threshold=0.85).collect()
-    }
+    exact = set(_all_pairs_reference(df, 0.85))
     got = {
         (r["i"], r["j"])
         for r in similarity.embedding_near_dup_lsh(
@@ -515,27 +484,21 @@ def test_lsh_near_dup_auto_planner_picks_banding(spark):
 
 
 def test_lsh_near_dup_exhaustive_beyond_gemm_uses_tiled(emb, monkeypatch):
-    # ADVICE r2: plan 'exhaustive' + n > GEMM_LIMIT must route to the tiled
-    # exact kernel, never the broadcast-collect one (invalid at that n)
+    # plan 'exhaustive' at n = 2M runs the exact tiles sized from the n the
+    # planner already has: 250k vectors per block -> B = 8 (no count())
     plan, _, _ = similarity.lsh_near_dup_params(0.2, 2_000_000)
     assert plan == "exhaustive"
+    blocks = []
+    tile_pairs = similarity._tile_pairs
 
-    def boom(*a, **k):
-        raise AssertionError("broadcast GEMM kernel used beyond its bound")
+    def spy(rows, n_blocks, *a, **k):
+        blocks.append(n_blocks)
+        return tile_pairs(rows, n_blocks, *a, **k)
 
-    monkeypatch.setattr(similarity, "embedding_near_dup_pairs", boom)
-    got = {
-        (r["i"], r["j"], r["sim"])
-        for r in similarity.embedding_near_dup_lsh(
-            emb, threshold=0.2, expected_n=2_000_000
-        ).collect()
-    }
-    monkeypatch.undo()
-    want = {
-        (r["i"], r["j"], r["sim"])
-        for r in similarity.embedding_near_dup_tiled(emb, threshold=0.2).collect()
-    }
-    assert got == want
+    monkeypatch.setattr(similarity, "_tile_pairs", spy)
+    got = _pairs(similarity.embedding_near_dup_lsh(emb, threshold=0.2, expected_n=2_000_000))
+    assert blocks == [8]
+    assert got == _all_pairs_reference(emb, 0.2)
 
 
 def test_lsh_near_dup_expected_n_scan_warns(emb):
@@ -578,13 +541,13 @@ def test_prefix_filter_is_lossless(spark, docs):
         fast = {
             (r["i"], r["j"]): round(r["jaccard"], 9)
             for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=th, prefix_filter=True
+                docs, "doc_id", "text", n=3, threshold=th, candidate_plan="prefix"
             ).collect()
         }
         naive = {
             (r["i"], r["j"]): round(r["jaccard"], 9)
             for r in dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text", n=3, threshold=th, prefix_filter=False
+                docs, "doc_id", "text", n=3, threshold=th, candidate_plan="naive"
             ).collect()
         }
         assert fast == naive, th
@@ -601,10 +564,10 @@ def test_prefix_filter_random_corpus(spark):
     for th in (0.2, 0.5):
         fast = {(r["i"], r["j"]) for r in
                 dedup.ngram_jaccard_pairs(df, "id", "t", n=2, threshold=th,
-                                          prefix_filter=True).collect()}
+                                          candidate_plan="prefix").collect()}
         naive = {(r["i"], r["j"]) for r in
                  dedup.ngram_jaccard_pairs(df, "id", "t", n=2, threshold=th,
-                                           prefix_filter=False).collect()}
+                                           candidate_plan="naive").collect()}
         assert fast == naive, th
 
 
@@ -719,28 +682,74 @@ def test_strip_spans(spark):
     }
 
 
-def test_tiled_near_dup_equals_broadcast_gemm(emb):
-    exact = {
-        (r["i"], r["j"], r["sim"])
-        for r in similarity.embedding_near_dup_pairs(emb, threshold=0.35).collect()
-    }
+def test_tiled_near_dup_equals_numpy_all_pairs(emb):
+    want = _all_pairs_reference(emb, 0.35)
+    rows = emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v"))
     for n_blocks in (1, 3, 8):
-        tiled = {
-            (r["i"], r["j"], r["sim"])
-            for r in similarity.embedding_near_dup_tiled(
-                emb, threshold=0.35, n_blocks=n_blocks
-            ).collect()
-        }
-        assert tiled == exact, n_blocks
+        assert _pairs(similarity._tile_pairs(rows, n_blocks, 0.35)) == want, n_blocks
+
+
+@pytest.mark.parametrize("n_blocks", [1, 2, 5])
+def test_tile_replication_is_exact_triangle(spark, n_blocks):
+    # each row lands in exactly B tiles, one per block pair (p <= q) that
+    # contains its block, and each tile holds exactly blocks p and q
+    from collections import defaultdict
+
+    rows = spark.range(40)
+    got = similarity._replicate_tiles(rows, n_blocks).collect()
+    block = {r["id"]: r["blk"] for r in got}
+    assert set(block) == set(range(40))
+    copies = defaultdict(list)
+    tiles = defaultdict(set)
+    for r in got:
+        assert r["blk"] == block[r["id"]] and r["p"] <= r["q"]
+        copies[r["id"]].append((r["p"], r["q"]))
+        tiles[(r["p"], r["q"])].add(r["id"])
+    for i, ts in copies.items():
+        want = sorted((min(block[i], y), max(block[i], y)) for y in range(n_blocks))
+        assert sorted(ts) == want and len(set(ts)) == n_blocks
+    for (p, q), ids in tiles.items():
+        assert ids == {i for i, b in block.items() if b in (p, q)}
+
+
+def test_tile_kernel_chunking_is_exact(monkeypatch):
+    # a chunk budget far below the tile gives the unchunked output exactly,
+    # for an intra tile (one block) and a cross tile (two blocks)
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    V = rng.normal(size=(60, 8))
+    V[30:] = V[:30] + rng.normal(scale=0.3, size=(30, 8))  # near-dups
+    frame = pd.DataFrame({"id": rng.permutation(1000)[:60], "v": list(V)})
+    left, right = frame[:25], frame[25:]
+    cases = [(frame, frame, True), (left, right, False)]
+    whole = [similarity._tile_pair_frame(0.5, a, b, intra, {"c": 7}) for a, b, intra in cases]
+    assert all(len(w) > 0 for w in whole)
+    for budget in (1, 7, 50):
+        monkeypatch.setattr(similarity, "TILE_CHUNK_ENTRIES", budget)
+        for (a, b, intra), want in zip(cases, whole):
+            got = similarity._tile_pair_frame(0.5, a, b, intra, {"c": 7})
+            key = ["i", "j"]
+            pd.testing.assert_frame_equal(
+                got.sort_values(key).reset_index(drop=True),
+                want.sort_values(key).reset_index(drop=True),
+            )
+
+
+def test_near_dup_rejects_partial_parameters(emb):
+    with pytest.raises(ValueError, match="both n_planes and n_tables"):
+        similarity.embedding_near_dup_lsh(emb, n_planes=6)
+    with pytest.raises(ValueError, match="both n_planes and n_tables"):
+        similarity.embedding_near_dup_lsh(emb, n_tables=6)
+    with pytest.raises(ValueError, match="cell_blocks"):
+        similarity.semdedup_pairs(emb, cell_blocks=0)
 
 
 # --- SemDeDup (cluster-scoped near-dup) --------------------------------------
 def test_semdedup_single_cluster_equals_exact(emb):
-    # one cluster = exhaustive: output must equal the exact operator
-    exact = {
-        (r["i"], r["j"]): r["sim"]
-        for r in similarity.embedding_near_dup_pairs(emb, threshold=0.4).collect()
-    }
+    # one cluster = exhaustive: output must equal the all-pairs reference
+    exact = _all_pairs_reference(emb, 0.4)
     got = {
         (r["i"], r["j"]): r["sim"]
         for r in similarity.semdedup_pairs(emb, threshold=0.4, n_clusters=1).collect()
@@ -749,10 +758,7 @@ def test_semdedup_single_cluster_equals_exact(emb):
 
 
 def test_semdedup_clustered_subset_of_exact(emb):
-    exact = {
-        (r["i"], r["j"]): r["sim"]
-        for r in similarity.embedding_near_dup_pairs(emb, threshold=0.4).collect()
-    }
+    exact = _all_pairs_reference(emb, 0.4)
     rows = similarity.semdedup_pairs(emb, threshold=0.4, n_clusters=4).collect()
     assert len(rows) > 0
     for r in rows:
@@ -778,7 +784,7 @@ def test_semdedup_high_threshold_recall_on_planted_corpus(spark):
             rows.append((vid, jit))
             vid += 1
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    exact = similarity.embedding_near_dup_pairs(df, threshold=0.9).count()
+    exact = len(_all_pairs_reference(df, 0.9))
     got = similarity.semdedup_pairs(
         df, threshold=0.9, n_clusters=6, kmeans_iters=3, dim=16, seed=7
     ).count()

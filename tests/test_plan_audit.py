@@ -22,11 +22,10 @@ PANDAS_STAGES_OK = {
     "cosine_topk",             # batched GEMM scoring
     "ann_lsh_topk",            # hyperplane sign-bit GEMM
     "ann_ivf_topk",            # centroid assign/probe GEMM
-    "embedding_near_dup",      # broadcast blocked-GEMM kernel
-    "embedding_near_dup_lsh",  # delegates to the GEMM kernel at th 0.4
+    "embedding_near_dup",      # per-tile GEMM (applyInPandas)
+    "embedding_near_dup_lsh",  # runs the exact tiles at th 0.4
     "embedding_near_dup_lsh_banded",  # genuine banded plan: bucket GEMM + verify
-    "embedding_near_dup_tiled",  # per-tile GEMM (applyInPandas)
-    "semdedup_pairs",          # per-cell GEMM (applyInPandas)
+    "semdedup_pairs",          # per-tile GEMM inside each cell (applyInPandas)
     "minhash_near_dup",        # affine-mix signature kernel
     "simhash_pairs",           # bit-voting kernel
     "simhash_fingerprints",    # bit-voting kernel

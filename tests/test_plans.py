@@ -114,6 +114,18 @@ def test_semdedup_single_shuffle(spark):
     assert "SortMergeJoin" not in p and "BroadcastNestedLoopJoin" not in p
 
 
+def test_exact_near_dup_plan_has_no_nested_loop_join(spark):
+    from yaschva_spark.ops.similarity import embedding_near_dup_pairs
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    p = _physical(embedding_near_dup_pairs(emb))
+    # rows reach their tiles by a per-row explode: one exchange feeds the
+    # per-tile GEMM, and no join (least of all a nested-loop one) exists
+    assert "Generate explode" in p and "FlatMapGroupsInPandas" in p, p
+    assert "BroadcastNestedLoopJoin" not in p and "Join" not in p, p
+    assert p.count("Exchange") == 1, p
+
+
 def test_contamination_hash_mode_exchanges_long_keys(spark):
     """by_hash=True must carry 8-byte xxhash64 keys through the
     distinct-agg and membership join — never the n-token shingle strings

@@ -36,7 +36,7 @@ def test_stream_validation_matches_batch(spark, events_dir):
     stream = streaming.read_stream(spark, events_dir, batch.schema)
     assert stream.isStreaming
 
-    validated = streaming.validate_stream(stream, EVENT_SCHEMA)
+    validated = validate_table(stream, EVENT_SCHEMA)
     q = streaming.run_to_memory_sink(
         validated.select("event_id", PASS_COL, F.size(VIOLATIONS_COL).alias("nv")),
         "stream_validated",
@@ -56,7 +56,7 @@ def test_stream_validation_matches_batch(spark, events_dir):
 def test_windowed_violation_counts(spark, events_dir):
     batch = spark.read.parquet(f"{SF}/events.parquet")
     stream = streaming.read_stream(spark, events_dir, batch.schema)
-    validated = streaming.validate_stream(stream, EVENT_SCHEMA)
+    validated = validate_table(stream, EVENT_SCHEMA)
     counts = streaming.windowed_violation_counts(validated, "ts", "1 hour", "2 hours")
     q = streaming.run_to_memory_sink(counts, "stream_counts", output_mode="complete")
     assert q.awaitTermination(120)  # False = timed-out drain, sink incomplete
@@ -88,7 +88,7 @@ def test_stateful_violation_totals_accumulates(spark, tmp_path):
 
     def drain(name):
         stream = streaming.read_stream(spark, str(src) + "/*", schema)
-        validated = streaming.validate_stream(stream, EVENT_SCHEMA)
+        validated = validate_table(stream, EVENT_SCHEMA)
         totals = streaming.stateful_violation_totals(validated, key_col="event_type")
         q = (
             totals.writeStream.foreachBatch(
@@ -136,7 +136,7 @@ def test_stateful_state_store_is_rocksdb(spark, tmp_path):
     batch.write.mode("overwrite").parquet(str(src / "b1"))
     schema = spark.read.parquet(str(src / "b1")).schema
     stream = streaming.read_stream(spark, str(src) + "/*", schema)
-    validated = streaming.validate_stream(stream, EVENT_SCHEMA)
+    validated = validate_table(stream, EVENT_SCHEMA)
     totals = streaming.stateful_violation_totals(validated, key_col="event_type")
     q = (
         totals.writeStream.format("noop")

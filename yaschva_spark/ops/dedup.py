@@ -112,7 +112,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame
 def _verify_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
     """Exact Jaccard for candidate (i, j) pairs by rejoining the full
     shingle sets — the shared verification tail of every candidate
-    generator (capped, prefix-filtered, LSH)."""
+    generator (prefix-filtered, LSH)."""
     sets = sh.select("id", "shingle_set")
     cand = cand.join(
         sets.withColumnRenamed("id", "i").withColumnRenamed("shingle_set", "set_i"), "i"
@@ -181,44 +181,14 @@ def _prefix_jaccard(sh: DataFrame, threshold: float, inv: DataFrame) -> DataFram
     return _verify_pairs(cand, sh)
 
 
-def _pair_jaccard(sh: DataFrame, max_df: int | None = None) -> DataFrame:
-    """Inverted-index Jaccard: pairs sharing >= 1 (eligible) shingle, with
-    their EXACT Jaccard similarity. Input: (id, shingle_set).
-
-    ``max_df`` is the scale guard: the self-join on ``shingle`` produces
-    ~df^2/2 candidate rows per shingle, so ONE ubiquitous shingle (df = n)
-    quadratically inflates the join. With ``max_df`` set, shingles whose
-    document frequency exceeds it are excluded from *candidate generation*
-    (hot-shingle set is tiny -> broadcast anti-join), and every surviving
-    pair is verified on the FULL shingle sets, so emitted Jaccard values
-    stay exact. The only approximation: a pair sharing *nothing but*
-    hot shingles is missed — for near-dup thresholds that pair is far
-    below threshold anyway (its common shingles are in >max_df docs).
-    ``max_df=None`` (default) is the fully exact oracle path. For
-    threshold queries prefer :func:`_prefix_jaccard`, which prunes
+def _pair_jaccard(sh: DataFrame) -> DataFrame:
+    """Inverted-index Jaccard: pairs sharing >= 1 shingle, with their EXACT
+    Jaccard similarity. Input: (id, shingle_set). For threshold queries on
+    skewed corpora prefer :func:`_prefix_jaccard`, which prunes
     losslessly.
     """
     sizes = sh.select("id", F.size("shingle_set").alias("sz"))
     inv = sh.select("id", F.explode("shingle_set").alias("shingle"))
-    if max_df is not None:
-        hot = (
-            inv.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("shingle")
-        )
-        inv = inv.join(F.broadcast(hot), "shingle", "left_anti")
-        a = inv.alias("a")
-        b = inv.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .select(F.col("a.id").alias("i"), F.col("b.id").alias("j"))
-            .dropDuplicates(["i", "j"])
-        )
-        return _verify_pairs(cand, sh)
     a = inv.alias("a")
     b = inv.alias("b")
     common = (
@@ -314,24 +284,21 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    max_df: int | None = None,
-    prefix_filter: bool = False,
-    candidate_plan: str | None = None,
+    candidate_plan: str = "naive",
 ) -> DataFrame:
     """EXACT near-duplicate pairs: word n-gram Jaccard >= threshold.
     Output (i, j, jaccard) with i < j.
 
     ``candidate_plan`` selects the (lossless) candidate generator:
 
-    * ``'naive'`` — inverted-index count-join (:func:`_pair_jaccard`);
+    * ``'naive'`` (default) — inverted-index count-join
+      (:func:`_pair_jaccard`);
     * ``'prefix'`` — positional prefix filtering (:func:`_prefix_jaccard`),
       output equal for every threshold (asserted in tests);
     * ``'auto'`` — run :func:`candidate_sketch` (one extra aggregation
       over the persisted shingle table) and decide via
       :func:`choose_candidate_plan`; callers who know their corpus pass
-      the plan explicitly and skip the sketch job;
-    * ``None`` (default) — legacy flags: ``prefix_filter=True`` means
-      ``'prefix'``, else ``'naive'``.
+      the plan explicitly and skip the sketch job.
 
     Measured regimes (local[32], Zipf+boilerplate fixtures,
     tests/ziptext.py): flat df (sf0.1 documents, Σdf²/2 = 1.3M) naive
@@ -339,21 +306,18 @@ def ngram_jaccard_pairs(
     3.0 s; heavy boilerplate (524M candidates, hottest shingle df=7531 →
     28M rows on one key) prefix 8.9 s while naive DID NOT FINISH in
     14 min — the naive groupBy aggregate spills and the hot key
-    serializes. The auto rule budgets exactly those two failure modes.
-    ``max_df`` (implies the naive candidate shape) is the blunt
-    *approximate* cap for corpora beyond even prefix's reach, and
-    :func:`minhash_lsh_pairs` the sub-quadratic escape."""
+    serializes. The auto rule budgets exactly those two failure modes;
+    :func:`minhash_lsh_pairs` is the sub-quadratic escape."""
+    if candidate_plan not in ("auto", "naive", "prefix"):
+        raise ValueError(f"candidate_plan: {candidate_plan!r}")
     # feeds index + size branches; registered so callers can release it via
     # cache.unpersist_intermediates() after their action (the returned df is
     # lazy, so the operator itself can never unpersist)
-    if candidate_plan not in (None, "auto", "naive", "prefix"):
-        raise ValueError(f"candidate_plan: {candidate_plan!r}")
     sh = persist_tracked(shingles(df, id_col, text_col, n))
-    if candidate_plan is None:
-        plan = "prefix" if (prefix_filter and max_df is None and threshold > 0) else "naive"
-    elif candidate_plan == "auto":
-        if max_df is not None or threshold <= 0:
-            plan = "naive"  # prefix needs a positive threshold; max_df caps imply naive
+    plan = candidate_plan
+    if plan == "auto":
+        if threshold <= 0:
+            plan = "naive"  # prefix needs a positive threshold
         else:
             spark = df.sparkSession
             try:
@@ -362,13 +326,11 @@ def ngram_jaccard_pairs(
             except (TypeError, ValueError):
                 parts = spark.sparkContext.defaultParallelism
             plan = choose_candidate_plan(candidate_sketch(sh), parts)
-    else:
-        plan = candidate_plan
     if plan == "prefix":
         inv = sh.select("id", F.explode("shingle_set").alias("shingle"))
         pairs = _prefix_jaccard(sh, threshold, inv)
     else:
-        pairs = _pair_jaccard(sh, max_df=max_df)
+        pairs = _pair_jaccard(sh)
     return pairs.filter(F.col("jaccard") >= threshold)
 
 

@@ -10,13 +10,23 @@
 * :func:`ann_ivf_topk` — IVF alternative: seeded k-means coarse quantizer
   (Lloyd iterations as hash aggregations, centroids broadcast each round),
   probe the ``nprobe`` nearest centroid lists, exact re-rank within them.
+
+Embedding near-dup has three regimes and ONE exact plan:
+
 * :func:`embedding_near_dup_pairs` — exact embedding-cosine near-duplicate
-  pairs (i < j, cosine >= threshold); the correctness baseline for dedup.
+  pairs (i < j, cosine >= threshold), the correctness baseline for dedup.
+  The exact plan is triangle tiles (:func:`_tile_pairs`): rows hash into
+  B blocks, a per-row explode copies each row into the B block pairs
+  p <= q containing its block (no join), and each tile runs one GEMM
+  kernel (:func:`_tile_pair_frame`) whose similarity matrix is computed
+  in chunks of at most ``TILE_CHUNK_ENTRIES`` entries, whatever n is.
 * :func:`embedding_near_dup_lsh` — the near-dup scale path: a cost-model
   planner (:func:`lsh_near_dup_params`) picks (n_planes, n_tables) from
-  (threshold, n, recall target) or delegates to the exhaustive GEMM kernel
-  when LSH can't win; the LSH plan is bucket self-join candidates + exact
-  cosine verification (precision 1, recall ≈ 1-(1-p^P)^T).
+  (threshold, n, recall target) or runs the exact tiles when LSH can't
+  win; the LSH plan is bucket self-join candidates + exact cosine
+  verification (precision 1, recall ≈ 1-(1-p^P)^T).
+* :func:`semdedup_pairs` — k-means cells, every cell run through the
+  same tiles (``cell_blocks`` blocks per cell).
 
 Vector math strategy (measured on this corpus): the batched kernels — pair
 cosine, multi-table bucket signatures, centroid argmin/probe — run as
@@ -133,6 +143,18 @@ def _probe_udf(centroids: list[list[float]], nprobe: int):
     return f
 
 
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The shared top-k tail: (query_id, neighbor_id, sim) rows -> each
+    query's k best as (query_id, neighbor_id, rank, sim), ranked by sim
+    desc with neighbor_id asc breaking ties, sim rounded to 6 places."""
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
+    )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -213,13 +235,7 @@ def cosine_topk(
             )
 
     c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-    local = c.mapInPandas(part_topk, schema=out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        local.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _rank_topk(c.mapInPandas(part_topk, schema=out_schema), k)
 
 
 def ann_lsh_topk(
@@ -265,12 +281,108 @@ def ann_lsh_topk(
     scored = cand.join(cvecs, "neighbor_id").select(
         "query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
+    return _rank_topk(scored, k)
+
+
+#: the most vectors one tile block may hold (a tile holds two blocks:
+#: ~2 x 250k x 64 x 8 bytes = 256 MB of vectors at d = 64)
+BLOCK_ROWS = 250_000
+#: the most similarity-matrix entries the tile kernel materializes at once
+#: (32 MB of float64): a tile's matrix is computed in chunks of at most
+#: this many entries, so kernel memory does not grow with n
+TILE_CHUNK_ENTRIES = 1 << 22
+# block hash seed; the pairs a tile plan emits do not depend on it
+_BLOCK_SEED = 42
+
+
+def _tile_pair_frame(threshold: float, left, right, intra: bool, key: dict):
+    """One triangle tile: exact cosine of ``left x right`` pandas slices
+    (columns id, v), emitting canonical (i < j, sim >= threshold) pairs
+    after the ``key`` columns. ``intra`` (``left`` and ``right`` are the
+    same block's rows) keeps only left id < right id, so each unordered
+    pair counts once; a cross tile canonicalizes via min/max, since id
+    order is independent of block order. The similarity matrix is
+    computed in chunks of at most ``TILE_CHUNK_ENTRIES`` entries (whole
+    rows of ``right`` when they fit), so the kernel's memory is bounded
+    whatever the tile's size."""
+    import numpy as np
+
+    lid = left["id"].to_numpy().astype(np.int64)
+    rid = right["id"].to_numpy().astype(np.int64)
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    if len(lid) and len(rid):
+        L = _mat(left["v"])
+        R = L if intra else _mat(right["v"])
+        ln, rn = np.linalg.norm(L, axis=1), np.linalg.norm(R, axis=1)
+        cols = min(len(rid), TILE_CHUNK_ENTRIES)
+        rows = TILE_CHUNK_ENTRIES // cols
+        for a in range(0, len(lid), rows):
+            la = lid[a : a + rows]
+            for b in range(0, len(rid), cols):
+                rb = rid[b : b + cols]
+                G = (L[a : a + rows] @ R[b : b + cols].T) / (
+                    ln[a : a + rows, None] * rn[None, b : b + cols]
+                )
+                keep = G >= threshold
+                if intra:
+                    keep &= la[:, None] < rb[None, :]
+                x, y = np.nonzero(keep)
+                parts.append((np.minimum(la[x], rb[y]), np.maximum(la[x], rb[y]), G[x, y]))
+    i, j, sim = (np.concatenate(c) for c in zip(*parts))
+    return pd.DataFrame({**key, "i": i, "j": j, "sim": sim})
+
+
+def _replicate_tiles(rows: DataFrame, n_blocks: int) -> DataFrame:
+    """Triangle replication: hash each row (columns incl. ``id``) into a
+    block ``blk`` < B = ``n_blocks`` and copy it into the B tiles
+    (p, q) = (least(blk, y), greatest(blk, y)) for y < B, i.e. every
+    unordered block pair p <= q that contains its block, once each. A
+    per-row explode: no join replicates the rows, and the tile (p, q)
+    holds exactly the rows of blocks p and q."""
+    blk = F.pmod(F.xxhash64("id", F.lit(_BLOCK_SEED)), F.lit(n_blocks)).cast("int")
+    y = F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+    rep = rows.withColumn("blk", blk).withColumn("y", y)
+    p, q = F.least("blk", "y").alias("p"), F.greatest("blk", "y").alias("q")
+    return rep.select(*rows.columns, "blk", p, q)
+
+
+def _tile_pairs(
+    rows: DataFrame, n_blocks: int, threshold: float, keys: tuple[str, ...] = ()
+) -> DataFrame:
+    """The ONE exact cosine-pair plan. ``rows`` (columns ``keys``, id, v)
+    -> (``keys``, i, j, sim): every pair i < j of rows with equal ``keys``
+    and cosine >= threshold, sim rounded to 6 places. Each tile of
+    :func:`_replicate_tiles` (per ``keys`` value) is one applyInPandas
+    group running :func:`_tile_pair_frame`; a pair {x, y} is scored in
+    exactly one tile, (min(bx, by), max(bx, by)). Per-task memory is ~2n/B
+    vectors plus the kernel's bounded chunk; the shuffle carries n*B
+    rows."""
+    fields = [T.StructField(n, T.LongType()) for n in ("i", "j")]
+    out_schema = T.StructType(
+        [rows.schema[k] for k in keys] + fields + [T.StructField("sim", T.DoubleType())]
     )
+
+    def gemm(key, pdf):
+        *kv, p, q = key
+        # an intra tile (p == q) holds only block p's rows
+        left, right = (pdf, pdf) if p == q else (pdf[pdf["blk"] == p], pdf[pdf["blk"] == q])
+        return _tile_pair_frame(threshold, left, right, p == q, dict(zip(keys, kv)))
+
+    tiles = _replicate_tiles(rows, n_blocks).groupBy(*keys, "p", "q")
+    pairs = tiles.applyInPandas(gemm, out_schema)
+    return pairs.select(*keys, "i", "j", F.round("sim", 6).alias("sim"))
+
+
+def _exact_pairs(df: DataFrame, id_col: str, vec_col: str, threshold: float, n: int) -> DataFrame:
+    """Exact pairs of an ``n``-row corpus as triangle tiles, with the
+    smallest B whose B(B+1)/2 tiles cover the default parallelism and
+    whose blocks hold at most ``BLOCK_ROWS`` vectors."""
+    n_blocks = max(1, -(-n // BLOCK_ROWS))
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    while n_blocks * (n_blocks + 1) // 2 < parallelism:
+        n_blocks += 1
+    rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    return _tile_pairs(rows, n_blocks, threshold)
 
 
 def embedding_near_dup_pairs(
@@ -282,154 +394,28 @@ def embedding_near_dup_pairs(
     """Exact embedding-cosine near-duplicate pairs: (i, j, sim) with i < j
     and cosine >= threshold.
 
-    Blocked-GEMM execution: the corpus matrix (n x d float64) is collected
-    once and broadcast; each partition then computes ONE ``local_block @
-    corpus.T`` matmul and emits only the above-threshold (i < j) pairs. One
-    corpus scan, ZERO shuffle — the previous pair-join plan materialized
-    all n^2/2 vector pairs through Arrow (~2 GB at n=2000, d=64), which was
-    the entire 6 s cost at sf0.1; the GEMM form moves n*d bytes once and
-    n^2*d flops stay inside numpy.
-
-    Validity bound: the broadcast right side is n*d*8 bytes — fine to ~10^6
-    vectors (~0.5 GB). Beyond that, exhaustive compare is a tiled block
-    join whatever you do; this operator stays the *oracle baseline* and
-    :func:`embedding_near_dup_lsh` (whose auto-tuner knows this bound) is
-    the scale path."""
-    import numpy as np
-
-    rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
-    if not rows:  # np.linalg.norm(axis=1) on a 0-d matrix would raise
-        return df.sparkSession.createDataFrame([], "i long, j long, sim double")
-    ids = np.array([r["id"] for r in rows], dtype=np.int64)
-    M = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    bc = df.sparkSession.sparkContext.broadcast((ids, M, norms))
-    out_schema = T.StructType(
-        [
-            T.StructField("i", T.LongType()),
-            T.StructField("j", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def gen(batches):
-        ids_r, M_r, n_r = bc.value
-        for pdf in batches:
-            L = np.vstack(pdf["v"].to_numpy()).astype(np.float64)
-            lid = pdf["id"].to_numpy().astype(np.int64)
-            G = (L @ M_r.T) / (np.linalg.norm(L, axis=1)[:, None] * n_r[None, :])
-            mask = (G >= threshold) & (lid[:, None] < ids_r[None, :])
-            li, ri = np.nonzero(mask)
-            yield pd.DataFrame({"i": lid[li], "j": ids_r[ri], "sim": G[li, ri]})
-
-    pairs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).mapInPandas(
-        gen, out_schema
-    )
-    return pairs.select("i", "j", F.round("sim", 6).alias("sim"))
+    One ``count()`` sizes the triangle tiles (:func:`_exact_pairs`); no
+    vector reaches the driver, and no kernel's memory grows with n. The
+    n^2/2 flops are irreducible (this is the exact operator and the
+    oracle baseline); :func:`embedding_near_dup_lsh` is the sub-quadratic
+    escape when its planner says LSH wins."""
+    return _exact_pairs(df, id_col, vec_col, threshold, df.count())
 
 
-def _tile_pair_frame(threshold: float, left, right, intra: bool, cluster=None):
-    """One triangle tile: exact cosine GEMM of ``left x right`` pandas
-    slices (columns id, v), emitting canonical (i < j, sim >= threshold)
-    pairs. ``intra`` applies the strict-order mask (same block: count each
-    unordered pair once); cross tiles canonicalize via min/max since id
-    order is independent of block order. Shared by
-    :func:`embedding_near_dup_tiled` and :func:`semdedup_pairs`'s
-    cell tiling so the mask/canonicalization logic exists exactly once."""
-    import numpy as np
-
-    def frame(a, b, s):
-        out = {"i": a, "j": b, "sim": s}
-        if cluster is not None:
-            out = {"cluster": cluster, **out}
-        return pd.DataFrame(out)
-
-    if len(left) == 0 or len(right) == 0:
-        return frame([], [], [])
-    L = np.vstack(left["v"].to_numpy()).astype(np.float64)
-    R = np.vstack(right["v"].to_numpy()).astype(np.float64)
-    lid = left["id"].to_numpy().astype(np.int64)
-    rid = right["id"].to_numpy().astype(np.int64)
-    G = (L @ R.T) / (
-        np.linalg.norm(L, axis=1)[:, None] * np.linalg.norm(R, axis=1)[None, :]
-    )
-    if intra:
-        li, ri = np.nonzero((G >= threshold) & (lid[:, None] < rid[None, :]))
-        a, b = lid[li], rid[ri]
-    else:
-        li, ri = np.nonzero(G >= threshold)
-        a, b = np.minimum(lid[li], rid[ri]), np.maximum(lid[li], rid[ri])
-    return frame(a, b, G[li, ri])
-
-
-def _replicate_block_pairs(rows: DataFrame, n_blocks: int, seed: int) -> DataFrame:
-    """Triangle replication: hash each row (columns incl. ``id``) into one
-    of ``n_blocks`` blocks, then broadcast-join it to every unordered block
-    pair (p <= q) containing its block — exactly B copies per row (block x
-    joins the B-x pairs with p=x plus the x+1 pairs with q=x, minus the
-    double-counted (x,x) tile), n*B replicated rows total; downstream
-    groups on (p, q) see exactly the two blocks of their tile."""
-    spark = rows.sparkSession
-    blk = F.pmod(F.xxhash64(F.col("id"), F.lit(seed)), F.lit(n_blocks)).cast("int")
-    bpairs = spark.createDataFrame(
-        [(p, q) for p in range(n_blocks) for q in range(p, n_blocks)], "p int, q int"
-    )
-    return rows.withColumn("blk", blk).join(
-        F.broadcast(bpairs), (F.col("blk") == F.col("p")) | (F.col("blk") == F.col("q"))
-    )
-
-
-def embedding_near_dup_tiled(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.4,
-    n_blocks: int = 8,
-    seed: int = 42,
-) -> DataFrame:
-    """Exact all-pairs cosine BEYOND the broadcast bound: triangle block
-    partitioning. Rows hash into ``n_blocks`` blocks; every unordered
-    block pair (p <= q) is one ``applyInPandas`` group that GEMMs its two
-    sub-matrices locally — an unordered doc pair {x, y} lands in exactly
-    group (min(bx,by), max(bx,by)), so output equals
-    :func:`embedding_near_dup_pairs` (asserted in tests) with NO corpus
-    broadcast: peak memory per task is ~2(n/B) vectors, total shuffle is
-    n*B replicated rows. Pick B so n*d*16/B fits an executor —
-    at n=10^9, d=64, B=4096 a group holds ~250 MB. The n^2/2 flops are
-    irreducible (this is the exact operator); the LSH path is the
-    sub-quadratic escape."""
-    rows = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    rep = _replicate_block_pairs(rows, n_blocks, seed)
-    out_schema = T.StructType(
-        [
-            T.StructField("i", T.LongType()),
-            T.StructField("j", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def gemm_group(key, pdf):
-        p, q = key
-        return _tile_pair_frame(
-            threshold, pdf[pdf["blk"] == p], pdf[pdf["blk"] == q], intra=(p == q)
-        )
-
-    pairs = rep.groupBy("p", "q").applyInPandas(gemm_group, out_schema)
-    return pairs.select("i", "j", F.round("sim", 6).alias("sim"))
-
-
-# broadcast validity bound of embedding_near_dup_pairs (n*d*8 bytes on the
-# driver + every executor); beyond it the exact path must tile
+# cost-model knee of lsh_near_dup_params: up to this n an exact pair costs
+# one GEMM flop; beyond it the exact tiles need more than 4 blocks of
+# BLOCK_ROWS and shuffle every row B times, so the model charges exact
+# pairs at the candidate-pair rate, like the LSH plan's
 GEMM_LIMIT = 1_000_000
+# most hyperplane tables the planner considers
+MAX_TABLES = 64
+# measured cost of touching a candidate pair via a shuffle join (+ Arrow
+# gather) relative to scoring a pair inside a blocked GEMM
+CAND_COST_RATIO = 200.0
 
 
 def lsh_near_dup_params(
-    threshold: float,
-    n: int,
-    target_recall: float = 0.95,
-    max_tables: int = 64,
-    gemm_limit: int = GEMM_LIMIT,
-    cand_cost_ratio: float = 200.0,
+    threshold: float, n: int, target_recall: float = 0.95
 ) -> tuple[str, int, int]:
     """Closed-form LSH parameter selection — the candidate-budget planner.
 
@@ -439,28 +425,24 @@ def lsh_near_dup_params(
     threshold (pairs above it do strictly better), then score
 
         cost_lsh(P,T) = T*n            (bucketing rows)
-                      + T*(1/2)^P * n^2/2 * cand_cost_ratio
-        cost_exact    = n^2/2 * (1 if n <= gemm_limit else cand_cost_ratio)
+                      + T*(1/2)^P * n^2/2 * CAND_COST_RATIO
+        cost_exact    = n^2/2 * (1 if n <= GEMM_LIMIT else CAND_COST_RATIO)
 
     (1/2)^P is the collision rate of *uncorrelated* pairs (cosine ~ 0 —
     measured on the synthetic corpus, and the generic assumption for
-    embeddings without cluster structure). ``cand_cost_ratio`` is the
-    measured ~2-order gap between touching a candidate pair via a shuffle
-    join (+Arrow gather) and scoring a pair inside a blocked GEMM; once n
-    exceeds ``gemm_limit`` the broadcast kernel is off the table and exact
-    pays shuffle costs too, which is where LSH's regime starts.
+    embeddings without cluster structure).
 
     Returns ('lsh', P, T) or ('exhaustive', 0, 0) when no (P, T) within
-    ``max_tables`` beats the exhaustive kernel — exactly like a planner
+    ``MAX_TABLES`` beats the exact tiles — exactly like a planner
     choosing index scan vs full scan from selectivity. At threshold 0.4
     the gap between p1 = 0.63 and the background 0.5 is so small that LSH
-    NEVER wins while the GEMM kernel is available; at threshold 0.8+ and
-    n > gemm_limit it wins by ~10x.
+    NEVER wins up to ``GEMM_LIMIT``; at threshold 0.8+ and n > GEMM_LIMIT
+    it wins by ~10x.
     """
     import math
 
     p1 = 1.0 - math.acos(max(min(threshold, 1.0), -1.0)) / math.pi
-    pair_unit = 1.0 if n <= gemm_limit else cand_cost_ratio
+    pair_unit = 1.0 if n <= GEMM_LIMIT else CAND_COST_RATIO
     cost_exact = (n * n / 2.0) * pair_unit
     best: tuple[float, int, int] | None = None
     for P in range(2, 25):
@@ -468,9 +450,9 @@ def lsh_near_dup_params(
         if pp >= 1.0 or pp <= 0.0:
             continue
         T = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pp))
-        if T < 1 or T > max_tables:
+        if T < 1 or T > MAX_TABLES:
             continue
-        cost = T * n + T * (0.5**P) * (n * n / 2.0) * cand_cost_ratio
+        cost = T * n + T * (0.5**P) * (n * n / 2.0) * CAND_COST_RATIO
         if best is None or cost < best[0]:
             best = (cost, P, T)
     if best is None or best[0] >= cost_exact:
@@ -497,81 +479,43 @@ def embedding_near_dup_lsh(
     an approximate row count; ``expected_n='count'`` opts into an exact
     ``df.count()`` scan, and leaving it None runs that scan with a
     warning (a hidden full scan is a surprise at scale). When the model
-    concludes LSH cannot beat the exhaustive kernel — true for low
-    thresholds like 0.4, where the per-plane probability gap (0.63 vs the
-    0.50 background) is too thin — the operator DELEGATES to the exact
-    path: :func:`embedding_near_dup_pairs` (broadcast GEMM; recall 1.0,
-    and faster than any banded plan at that setting — measured: the
-    previous fixed 4x12 banding was slower than its own exact baseline)
-    while n fits the broadcast bound, else
-    :func:`embedding_near_dup_tiled` (the broadcast kernel's collect is
-    invalid past ~10^6 vectors). Passing explicit n_planes/n_tables
-    forces the LSH plan (used by tests and by callers who know their
-    corpus).
+    concludes LSH cannot beat the exact tiles — true for low thresholds
+    like 0.4, where the per-plane probability gap (0.63 vs the 0.50
+    background) is too thin — the operator runs the exact plan of
+    :func:`embedding_near_dup_pairs`, sized from that n (recall 1.0, and
+    faster than any banded plan at that setting — measured: a fixed 4x12
+    banding was slower than its own exact baseline). Passing both
+    n_planes and n_tables forces the LSH plan (used by tests and by
+    callers who know their corpus); passing only one raises
+    ``ValueError``.
 
     The LSH plan itself: multi-table hyperplane bucketing (one GEMM per
     Arrow batch for all sign bits), candidate self-join on (table, bucket)
     carrying ids only, exact cosine verification — precision 1.0, recall
-    ≈ 1-(1-p^P)^T at the threshold. Passing ONE of the pair forces LSH
-    too: the other is derived from ``target_recall`` via the same closed
-    form rather than silently overriding the caller's choice."""
-    import math
+    ≈ 1-(1-p^P)^T at the threshold."""
+    if (n_planes is None) != (n_tables is None):
+        raise ValueError("embedding_near_dup_lsh: pass both n_planes and n_tables, or neither")
+    if n_planes is None:
+        if expected_n is None or expected_n == "count":
+            if expected_n is None:
+                # a full scan just to feed the planner is a surprise at
+                # scale — callers should pass expected_n (or the explicit
+                # "count" opt-in to silence this)
+                import warnings
 
-    if n_planes is None or n_tables is None:
-        if n_planes is not None or n_tables is not None:
-            # one side explicit: honor it, close the recall equation for
-            # the other (recall = 1-(1-p1^P)^T at the threshold)
-            p1 = 1.0 - math.acos(max(min(threshold, 1.0), -1.0)) / math.pi
-            if n_planes is not None:
-                pp = p1**n_planes
-                n_tables = (
-                    1
-                    if pp >= 1.0
-                    else max(1, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pp)))
+                warnings.warn(
+                    "embedding_near_dup_lsh: expected_n not set — running a "
+                    "df.count() scan to feed the cost-model planner; pass "
+                    "expected_n=<approx rows> (or expected_n='count' to "
+                    "opt into the scan) at scale",
+                    stacklevel=2,
                 )
-            else:
-                # deepest banding whose required table count still fits
-                n_planes = 2
-                for P in range(3, 25):
-                    pp = p1**P
-                    if not 0.0 < pp < 1.0:
-                        break
-                    t_req = math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - pp))
-                    if t_req > n_tables:
-                        break
-                    n_planes = P
+            n = df.count()
         else:
-            if expected_n is None or expected_n == "count":
-                if expected_n is None:
-                    # a full scan just to feed the planner is a surprise at
-                    # scale — callers should pass expected_n (or the explicit
-                    # "count" opt-in to silence this)
-                    import warnings
-
-                    warnings.warn(
-                        "embedding_near_dup_lsh: expected_n not set — running a "
-                        "df.count() scan to feed the cost-model planner; pass "
-                        "expected_n=<approx rows> (or expected_n='count' to "
-                        "opt into the scan) at scale",
-                        stacklevel=2,
-                    )
-                n = df.count()
-            else:
-                n = int(expected_n)
-            plan, p_auto, t_auto = lsh_near_dup_params(threshold, n, target_recall)
-            if plan == "exhaustive":
-                if n > GEMM_LIMIT:
-                    # the broadcast GEMM kernel is invalid here (it collects
-                    # the corpus); the exact path that survives is the tiled
-                    # triangle join — size blocks to ~GEMM_LIMIT/4 vectors
-                    import math as _math
-
-                    n_blocks = max(2, _math.ceil(n / (GEMM_LIMIT // 4)))
-                    return embedding_near_dup_tiled(
-                        df, id_col, vec_col, threshold, n_blocks=n_blocks, seed=seed
-                    )
-                return embedding_near_dup_pairs(df, id_col, vec_col, threshold)
-            n_planes, n_tables = p_auto, t_auto
+            n = int(expected_n)
+        plan, n_planes, n_tables = lsh_near_dup_params(threshold, n, target_recall)
+        if plan == "exhaustive":
+            return _exact_pairs(df, id_col, vec_col, threshold, n)
     tables = [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
     bucketer = _bucket_udf(tables)
     # ids only through the banded join (CLAUDE.md LSH rule): vectors rejoin
@@ -620,28 +564,30 @@ def semdedup_pairs(
     cells adapt to the corpus's actual density instead of cutting it with
     random planes.
 
-    Plan shape: one cluster assignment (batched GEMM projection), ONE hash
-    partition by cluster id, one local GEMM per cell — no candidate-pair
-    shuffle at all (the LSH/banded plans shuffle ids per (table, bucket)).
-    At 10^12 rows pick k ~ n/50k so a cell's matrix stays executor-sized.
+    Plan shape: one cluster assignment (batched GEMM projection), then
+    the exact tiles of :func:`embedding_near_dup_pairs` run per cell
+    (:func:`_tile_pairs` keyed on the cluster id): ONE hash partition by
+    (cluster, tile), one local GEMM per tile — no candidate-pair shuffle
+    at all (the LSH/banded plans shuffle ids per (table, bucket)). At
+    10^12 rows pick k ~ n/50k so a cell's vectors stay executor-sized.
     Recall is bounded by clustering quality (pairs straddling a cell
     boundary are missed — the documented SemDeDup approximation);
     precision is 1.0 since scoring is exact.
 
-    **Mega-cell guard** (``cell_blocks > 1``): a duplicate-dense corpus —
+    **Mega-cell guard** (``cell_blocks``): a duplicate-dense corpus —
     exactly what this operator hunts — can collapse into one giant cell,
     the hot-key failure mode of a single-task GEMM. ``cell_blocks = B``
-    composes the triangle block scheme of
-    :func:`embedding_near_dup_tiled` *inside every cell*: rows hash into B
-    sub-blocks, each unordered sub-block pair (p <= q) of the SAME cell is
-    its own task, so per-task memory drops ~B-fold and the widest cell
-    fans out to B(B+1)/2 parallel tasks, at the cost of each row entering
-    the shuffle B times. Output is identical for any B (asserted in
-    tests) — pick B so (cell_rows/B) vectors fit an executor.
+    hashes every cell's rows into B blocks, so the cell becomes B(B+1)/2
+    tiles, each its own task: per-task memory drops ~B-fold, at the cost
+    of each row entering the shuffle B times. B = 1 is one tile per cell.
+    Output is identical for any B (asserted in tests) — pick B so
+    (cell_rows/B) vectors fit an executor.
 
     ``centroids`` injects a pretrained quantizer (the oracle shares these
     exact floats); None trains the seeded in-Spark k-means.
     """
+    if cell_blocks < 1:
+        raise ValueError(f"semdedup_pairs: cell_blocks must be >= 1, got {cell_blocks}")
     if centroids is None:
         centroids = _kmeans_centroids(df, vec_col, n_clusters, kmeans_iters, seed, dim)
     assigned = df.select(
@@ -649,36 +595,7 @@ def semdedup_pairs(
         F.col(vec_col).alias("v"),
         _assign_udf(centroids)(F.col(vec_col)).alias("cluster"),
     )
-    out_schema = T.StructType(
-        [
-            T.StructField("cluster", T.IntegerType()),
-            T.StructField("i", T.LongType()),
-            T.StructField("j", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    if cell_blocks <= 1:
-
-        def cell_gemm(key, pdf):
-            return _tile_pair_frame(threshold, pdf, pdf, intra=True, cluster=key[0])
-
-        pairs = assigned.groupBy("cluster").applyInPandas(cell_gemm, out_schema)
-    else:
-        rep = _replicate_block_pairs(assigned, cell_blocks, seed)
-
-        def tile_gemm(key, pdf):
-            cluster, p, q = key
-            return _tile_pair_frame(
-                threshold,
-                pdf[pdf["blk"] == p],
-                pdf[pdf["blk"] == q],
-                intra=(p == q),
-                cluster=cluster,
-            )
-
-        pairs = rep.groupBy("cluster", "p", "q").applyInPandas(tile_gemm, out_schema)
-    return pairs.select("cluster", "i", "j", F.round("sim", 6).alias("sim"))
+    return _tile_pairs(assigned, cell_blocks, threshold, keys=("cluster",))
 
 
 def _kmeans_centroids(
@@ -794,9 +711,4 @@ def ann_ivf_topk(
         .select("query_id", "neighbor_id", cosine(F.col("qv"), F.col("cv")).alias("sim"))
         .dropDuplicates(["query_id", "neighbor_id"])
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", F.round("sim", 6).alias("sim"))
-    )
+    return _rank_topk(scored, k)

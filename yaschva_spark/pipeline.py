@@ -104,7 +104,6 @@ def run_validation_job(
     *,
     schema: dict | None = None,
     n_buckets: int = 64,
-    write_violations: bool = True,
 ) -> JobResult:
     """Validate + check + sink + manifest, resumable per bucket.
 
@@ -219,22 +218,19 @@ def run_validation_job(
     # clause removes the staged files, so no half-run ever becomes visible.
     stage_dir = os.path.join(out_dir, f"_manifest_stage_{os.getpid()}_{int(time.monotonic() * 1e6)}")
     with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = {}
-        if write_violations:
-            futs["viol"] = pool.submit(
+        futs = {
+            "viol": pool.submit(
                 lambda: viol.repartition("bucket")
                 .write.mode("append")
                 .partitionBy("bucket")
                 .parquet(violations_path)
-            )
-        futs["dup"] = pool.submit(lambda: dup_summary_df.collect()[0])
-        futs["manifest"] = pool.submit(
-            lambda: manifest.write.mode("overwrite").parquet(stage_dir)
-        )
+            ),
+            "dup": pool.submit(lambda: dup_summary_df.collect()[0]),
+            "manifest": pool.submit(lambda: manifest.write.mode("overwrite").parquet(stage_dir)),
+        }
         try:
             futs["manifest"].result()
-            if "viol" in futs:
-                futs["viol"].result()  # durability barrier: violations first
+            futs["viol"].result()  # durability barrier: violations first
             _hadoop_publish(spark, stage_dir, manifest_path)
             dup_summary = futs["dup"].result()
         finally:

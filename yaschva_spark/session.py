@@ -19,7 +19,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # defaults fit the host: the CPUs this process may use and a quarter of
+    # physical memory for the driver; both env vars override (deployment)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    driver_memory = os.environ.get("SPARK_DRIVER_MEMORY") or f"{ram // 4 // 2**20}m"
     master = master or f"local[{cpus}]"
     # one shuffle partition per core locally; on a real cluster this is set
     # per-job to ~2-3x total cores (or left to AQE coalescing)
@@ -43,7 +47,7 @@ def get_spark(
         # 4x the tasks and a ~2% tail). On a cluster this also smooths
         # executor-count scaling for the same reason.
         .config("spark.sql.files.maxPartitionBytes", "33554432")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # RocksDB-backed streaming state: the default HDFS-backed provider

@@ -37,12 +37,6 @@ def read_stream(
     return reader.load(path)
 
 
-def validate_stream(stream_df: DataFrame, schema: dict, **kwargs) -> DataFrame:
-    """Identical semantics to the batch ``validate_table`` — stateless, so
-    it composes with any downstream streaming sink/agg."""
-    return validate_table(stream_df, schema, **kwargs)
-
-
 def windowed_violation_counts(
     validated: DataFrame,
     ts_col: str,
