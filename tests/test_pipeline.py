@@ -143,3 +143,60 @@ def test_corrupt_manifest_raises(spark, code, tmp_path):
     with pytest.raises(Exception):
         run_validation_job(spark, code, repos_dim(spark), str(tmp_path / "out"), n_buckets=4)
     assert not (tmp_path / "out" / "violations").exists()
+
+
+def _violation_multiset(spark, out):
+    viol = spark.read.parquet(f"{out}/violations")
+    return {tuple(r[:-1]): r[-1] for r in viol.groupBy(*viol.columns).count().collect()}
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, code, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("clean_run"))
+    res = run_validation_job(spark, code, repos_dim(spark), out, n_buckets=8)
+    return res, _violation_multiset(spark, out)
+
+
+@pytest.mark.parametrize(
+    "step, lands",
+    # (commit step that fails, whether its effect is durable first): each
+    # write dies right after its data landed; the publish dies before its
+    # rename (after it the run is complete)
+    [("_write_violations", True), ("_stage_manifest", True), ("_publish", False)],
+)
+def test_resume_after_fault_matches_clean_run(spark, code, clean_run, tmp_path, monkeypatch, step, lands):
+    from yaschva_spark import commit
+
+    real = getattr(commit, step)
+
+    def fault(*args):
+        if lands:
+            real(*args)
+        raise RuntimeError("injected fault")
+
+    repos = repos_dim(spark)
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(commit, step, fault)
+    with pytest.raises(RuntimeError, match="injected fault"):
+        run_validation_job(spark, code, repos, out, n_buckets=8)
+    monkeypatch.undo()
+    assert not list((tmp_path / "out").glob("_manifest_stage_*"))
+
+    res = run_validation_job(spark, code, repos, out, n_buckets=8)
+    clean, clean_rows = clean_run
+    assert _violation_multiset(spark, out) == clean_rows
+    for f in ("n_buckets_processed", "n_rows", "n_invalid_rows", "n_violations", "n_dup_keys", "n_orphans"):
+        assert getattr(res, f) == getattr(clean, f), f
+    assert res.n_violations == spark.read.parquet(f"{out}/violations").count()
+
+
+def test_all_clean_run_leaves_readable_violations(spark, code, tmp_path):
+    """A run without a single violation still leaves a violations table
+    that reads back empty, with its schema."""
+    out = str(tmp_path / "clean")
+    accept_all = {c: "any" for c in ("repo", "path", "commit", "lang", "content")}
+    res = run_validation_job(spark, code, repos_dim(spark), out, schema=accept_all, n_buckets=4)
+    assert res.n_violations == 0 and res.n_rows == code.count()
+    viol = spark.read.parquet(f"{out}/violations")
+    assert viol.count() == 0
+    assert {"field_path", "rule"} <= set(viol.columns)

@@ -9,42 +9,17 @@ engine reads Iceberg — the difference is session config, not engine code:
         "spark.sql.catalog.lake.uri": "<catalog-uri>",
         # plus iceberg-spark-runtime on the cluster classpath
     })
-    read_table(spark, "lake.db.code_files")
+    spark.read.table("lake.db.code_files")
 
-Keeping every read/write behind these helpers means partition pruning,
-snapshot isolation, and manifest-based resume keep working when the storage
-layer changes underneath.
+Plain reads and writes use Spark's own reader and writer, so partition
+pruning, snapshot isolation, and manifest-based resume keep working when the
+storage layer changes underneath; this module holds the helpers that add a
+contract on top (bucketed layout, quarantined ingestion).
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-
-def read_table(spark: SparkSession, ref: str) -> DataFrame:
-    """``ref`` is a parquet path (contains '/' or exists on disk) or a
-    catalog table name (``catalog.db.table``)."""
-    if "/" in ref or os.path.exists(ref):
-        return spark.read.parquet(ref)
-    return spark.read.table(ref)
-
-
-def read_sf_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-testdata convention: ``{sf_dir}/{name}.parquet``."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def write_table(df: DataFrame, ref: str, mode: str = "append",
-                partition_by: tuple[str, ...] = ()) -> None:
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if "/" in ref:
-        writer.parquet(ref)
-    else:
-        writer.saveAsTable(ref)
 
 
 def write_bucketed(

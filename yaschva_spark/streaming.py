@@ -7,7 +7,7 @@ layer: windowed violation-rate monitoring uses event-time windows + a
 watermark so late events are bounded and state is evictable.
 
 At scale this is the continuous-ingest shape of the north rule: a code-file
-firehose validated in-flight, violation rows appended to the sink, windowed
+firehose validated in-flight, violation rows committed per micro-batch, windowed
 violation rates feeding alerting. ``trigger(availableNow=True)`` turns the
 same query into a catch-up batch over a backlog — the streaming analog of
 the pipeline's checkpoint resume (plus Spark's own checkpointLocation for
@@ -16,10 +16,13 @@ exactly-once sinks).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yaschva_spark import commit
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
 
 
@@ -56,25 +59,6 @@ def windowed_violation_counts(
     return exploded.groupBy(
         F.window(F.col(ts_col), window_duration).alias("window"), "rule"
     ).agg(F.count(F.lit(1)).alias("n"))
-
-
-def windowed_pass_rate(
-    validated: DataFrame,
-    ts_col: str,
-    window_duration: str = "1 minute",
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """(window, n_rows, n_invalid, pass_rate) per event-time window."""
-    validated = validated.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return (
-        validated.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("window"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid"),
-        )
-        .withColumn("pass_rate", 1 - F.col("n_invalid") / F.col("n_rows"))
-    )
 
 
 def run_to_memory_sink(
@@ -114,41 +98,6 @@ def dedup_stream(
     )
 
 
-def _write_empty_parquet(spark: SparkSession, df_schema, dest_file: str) -> None:
-    """Write a schema-bearing 0-row parquet file at ``dest_file`` through
-    the Hadoop FileSystem API (any scheme). Spark itself skips file
-    creation for empty tasks, so an all-clean stream would otherwise leave
-    a violations path that ``spark.read.parquet`` can't infer a schema
-    from."""
-    import io
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    from yaschva_spark.pipeline import _hadoop_fs
-
-    buf = io.BytesIO()
-    arrow = to_arrow_schema(df_schema)
-    pq.write_table(arrow.empty_table(), buf)
-    fs, jpath, _ = _hadoop_fs(spark, dest_file)
-    out = fs.create(jpath, True)
-    out.write(bytearray(buf.getvalue()))
-    out.close()
-
-
-def _dir_has_parquet(fs, jpath) -> bool:
-    if not fs.exists(jpath):
-        return False
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if status.isDirectory() and name.startswith("batch_id="):
-            for leaf in fs.listStatus(status.getPath()):
-                if leaf.getPath().getName().endswith(".parquet"):
-                    return True
-    return False
-
-
 def make_batch_validator(
     schema: dict,
     out_dir: str,
@@ -160,20 +109,15 @@ def make_batch_validator(
     """The ``foreachBatch`` function behind
     :func:`incremental_validation_sink`, exposed so the replay guard is
     directly testable. See that function for the durability contract."""
-    import os
-
-    viol_path = os.path.join(out_dir, "violations")
     man_path = os.path.join(out_dir, "manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from yaschva_spark.pipeline import _hadoop_fs
-
         spark = batch_df.sparkSession
         # O(1) replay guard: the manifest is partitioned by batch_id, so
         # the probe touches ONE partition directory — never the k-batch
         # manifest scan that would creep quadratically on a long stream.
         part_dir = os.path.join(man_path, f"batch_id={batch_id}")
-        fs, part_jpath, _ = _hadoop_fs(spark, part_dir)
+        fs, part_jpath, _ = commit.hadoop_fs(spark, part_dir)
         if fs.exists(part_jpath):
             try:
                 committed = spark.read.parquet(part_dir).collect()
@@ -195,52 +139,13 @@ def make_batch_validator(
                     "use a fresh out_dir."
                 )
         validated = validate_table(batch_df, schema)
-        viol = validated.select(
-            F.lit(batch_id).alias("batch_id"),
-            *[F.col(c) for c in id_cols],
-            F.explode(VIOLATIONS_COL).alias("v"),
-        ).select(
-            "batch_id", *id_cols, "v.path", "v.rule", "v.error", "v.value"
-        ).toDF("batch_id", *id_cols, "field_path", "rule", "error", "value")
-        # partitioned by batch_id: a torn first attempt is REPLACED by the
-        # replay (dynamic partition overwrite), never duplicated
-        (
-            viol.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(viol_path)
-        )
-        # an all-clean stream writes no violation files at all; seed one
-        # schema-bearing empty partition so the documented contract —
-        # "a manifest row certifies readable violations" — holds for
-        # consumers doing spark.read.parquet(viol_path)
-        vfs, vroot, _ = _hadoop_fs(spark, viol_path)
-        if not _dir_has_parquet(vfs, vroot):
-            _write_empty_parquet(
-                spark,
-                viol.drop("batch_id").schema,
-                os.path.join(viol_path, "batch_id=-1", "part-00000-init.parquet"),
-            )
-        manifest = (
-            validated.agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum((~F.col(PASS_COL)).cast("long")).alias("n_invalid_rows"),
-                F.sum(F.size(VIOLATIONS_COL)).alias("n_violations"),
-                F.bit_xor(
-                    F.conv(
-                        F.substring(F.sha2(F.col(content_col), 256), 1, 15), 16, 10
-                    ).cast("long")
-                ).alias("content_digest"),
-            )
-            .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("stream_id", F.lit(stream_id))
-            .withColumn("processed_at", F.current_timestamp())
-        )
-        (
-            manifest.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(man_path)
+        commit.commit(
+            spark,
+            out_dir,
+            "batch_id",
+            commit.violation_rows(validated, F.lit(batch_id).alias("batch_id"), *id_cols),
+            commit.manifest_rows(validated, content_col, F.lit(stream_id).alias("stream_id")),
+            f"batch_id={batch_id}",
         )
 
     return process_batch
@@ -258,23 +163,24 @@ def incremental_validation_sink(
 ) -> "StreamingQuery":  # noqa: F821
     """Continuous-ingest version of ``pipeline.run_validation_job``: each
     micro-batch is validated with the same compiled schema and lands as
-    appended violation rows plus ONE manifest row per batch carrying the
-    same lineage metrics (row/violation counts, order-insensitive sha256
-    content digest, timestamp) keyed by ``batch_id``.
+    its violation rows (partition ``batch_id=N`` of ``violations/``) plus
+    ONE manifest row (directory ``manifest/batch_id=N/``) carrying the same
+    lineage metrics (row/violation counts, order-insensitive sha256 content
+    digest, timestamp) and the stream identity.
 
-    Durability contract matches the batch pipeline: within a batch the
-    violations write completes BEFORE the manifest row appears, so a
-    manifest entry always certifies durable, readable violations (an
-    all-clean stream still leaves a schema-bearing empty file). Restart
-    safety is two-layered: Spark's ``checkpointLocation`` replays the
-    failed batch with the same batch_id, and the batch function is
-    IDEMPOTENT — a batch_id already committed BY THIS STREAM (manifest
-    rows carry a stream identity derived from the checkpoint location) is
-    skipped, a torn first attempt is overwritten partition-wise, and a
-    batch_id collision from a different checkpoint raises instead of
-    silently dropping data. Both manifest and violations are partitioned
-    by batch_id, so the replay probe reads one partition — O(1) per
-    batch, not a scan of the ever-growing manifest.
+    Commit rule, shared with the batch pipeline
+    (:mod:`yaschva_spark.commit`): violations are durable per batch_id, by
+    overwrite; the manifest is published after them; readers trust only
+    the batches the manifest names (an all-clean stream still leaves a
+    schema-bearing empty ``batch_id=-1`` partition). Restart safety is
+    two-layered: Spark's ``checkpointLocation`` replays the failed batch
+    with the same batch_id, and the batch function is IDEMPOTENT — a
+    batch_id already committed BY THIS STREAM (manifest rows carry a
+    stream identity derived from the checkpoint location) is skipped, a
+    torn first attempt is overwritten partition-wise, and a batch_id
+    collision from a different checkpoint raises instead of silently
+    dropping data. The replay probe reads one manifest partition — O(1)
+    per batch, not a scan of the ever-growing manifest.
 
     ``available_now=True`` drains the backlog and stops — the streaming
     analog of the batch pipeline's resume; False runs continuously.

@@ -346,8 +346,7 @@ def _root_object(schema: Any) -> Object:
         if isinstance(root, Leaf) and root.checks[:1] == (("and", None, E.AND_SCHEMA_ERR),):
             raise SchemaError(E.AND_SCHEMA_ERR)
         raise TypedCompileError(
-            "root schema must resolve to a plain object for table validation; "
-            "use compile_column for column-level schemas"
+            "root schema must resolve to a plain object for table validation"
         )
     return root
 
@@ -371,13 +370,6 @@ def compile_schema(
         _root_object(schema), None, df_schema, F.lit("$"), 0, ignore=tuple(ignore_columns)
     )
     return _concat(children) if children else _empty()
-
-
-def compile_column(
-    schema: Any, column: Column, dtype: T.DataType, *, path: str = "$", max_unroll: int = 32
-) -> Column:
-    """Compile any schema node against a single typed column."""
-    return _Compiler(max_unroll).compile(lower(schema), column, dtype, F.lit(path))
 
 
 # --- schema -> Spark type (validationToType analog, type.ts:33-92) -----------
