@@ -114,48 +114,6 @@ def test_screen_coverage_telemetry(spark):
     assert screen_coverage("no_such_observation") is None
 
 
-def test_compiled_screen_memoization(spark):
-    """The staged screen's Column tree costs ~0.9 s of py4j round trips to
-    build — engine._compiled_screens must reuse it per (app, schema, col)
-    and key on the application id so a session restart can't serve stale
-    JVM references."""
-    import json as _json
-
-    from yaschva_spark.engine import _SCREEN_CACHE, _compiled_screens
-
-    blob = _json.dumps({"k": "integer"})
-    a = _compiled_screens("app-1", blob, "js")
-    b = _compiled_screens("app-1", blob, "js")
-    assert a is b  # cache hit: identical tuple object
-    c = _compiled_screens("app-2", blob, "js")
-    assert c is not a  # new application id -> fresh compilation
-    # negative results (unscreenable shapes) cache as the exception
-    import pytest as _pytest
-
-    from yaschva_spark.jsonscreen import ScreenNotApplicable
-
-    bad = _json.dumps({"k": "noSuchType"})
-    with _pytest.raises(ScreenNotApplicable):
-        _compiled_screens("app-1", bad, "js")
-    assert isinstance(_SCREEN_CACHE[("app-1", bad, "js")], ScreenNotApplicable)
-    with _pytest.raises(ScreenNotApplicable):
-        _compiled_screens("app-1", bad, "js")
-
-
-def test_screen_cache_keeps_only_current_application(spark):
-    """A compile under a new application id drops the earlier
-    application's entries: they only hold dead JVM references."""
-    import json as _json
-
-    from yaschva_spark.engine import _SCREEN_CACHE, _compiled_screens
-
-    for app in ("app-old", "app-new"):
-        for schema in ({"k": "integer"}, {"k": "string"}):
-            _compiled_screens(app, _json.dumps(schema), "js")
-    assert _SCREEN_CACHE
-    assert {k[0] for k in _SCREEN_CACHE} == {"app-new"}
-
-
 def test_reserved_column_prefix_rejected(spark):
     """Input columns named __yv_* would collide with the plan's staged
     screen columns; they are rejected up front, by name."""

@@ -72,3 +72,14 @@ def test_violation_paths_survive_array_flattening():
     assert {r["path"] for r in rows2} == {"$[0][1]"}, rows2
     # reference-exact output is unchanged (still flattened)
     assert isinstance(res2["output"], list) and len(res2["output"]) == 2
+
+
+def test_enum_members_that_are_not_strings():
+    # a string equals only string members (JS indexOf), and the message
+    # renders members as JS Array.prototype.join does (null -> empty)
+    schema = {"k": {"$enum": ["a", 1, True, None]}}
+    assert validate(schema, {"k": "a"})["result"] == "pass"
+    for value in ("1", "true", ""):
+        res = validate(schema, {"k": value})
+        assert res["result"] == "fail"
+        assert res["output"]["k"]["error"] == "Value needs to be one of the following: [a, 1, true, ] "

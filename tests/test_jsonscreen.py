@@ -29,8 +29,8 @@ TRICKY = [
 def _screened(df, schema, col="js"):
     """The screen columns as production evaluates them: the staged levels
     selected in order (engine.validate_json_table), then the outputs."""
-    levels, screens = compile_screens(schema, F.col(col))
-    return select_levels(df, levels), screens
+    levels, screens = compile_screens(schema, col)
+    return select_levels(df, levels), {k: F.expr(v) for k, v in screens.items()}
 
 
 #: nodes carrying several type tags: the reference dispatch order picks
@@ -153,7 +153,7 @@ def test_not_applicable_shapes():
         {"abc\r": ["?", "string"]},
     ]:
         with pytest.raises(ScreenNotApplicable):
-            compile_screens(schema, F.lit('{"k": 1}'))
+            compile_screens(schema, "js")
 
 
 def test_kitchen_sink_schema_screens(spark):
@@ -559,3 +559,24 @@ def test_fail_screen_composite_emission_boundary(spark, schema, rows):
     b = {r["id"]: repr(r) for r in
          validate_json_table(df, schema, "js", screen=False).select(cols).collect()}
     assert a == b
+
+
+def test_enum_members_that_are_not_strings(spark):
+    """A string matches only string members; the rows are decided by the
+    screen, with the interpreter's message and output."""
+    schema = {"k": {"$enum": ["a", 1, True, None]}}
+    df = spark.createDataFrame(
+        [(0, '{"k": "a"}'), (1, '{"k": "1"}'), (2, '{"k": "true"}')], "id long, js string"
+    )
+    staged, scr = _screened(df, schema)
+    assert all(r["e"] for r in staged.select(scr["emit"].alias("e")).collect())
+    cols = ["id", "yv_valid", "yv_violations", "yv_output"]
+    got = {r["id"]: r for r in validate_json_table(df, schema, "js", screen=True).select(cols).collect()}
+    b = {r["id"]: r for r in validate_json_table(df, schema, "js", screen=False).select(cols).collect()}
+    assert {i: repr(r) for i, r in got.items()} == {i: repr(r) for i, r in b.items()}
+    assert got[0]["yv_valid"] is True
+    for i in (1, 2):
+        assert got[i]["yv_valid"] is False
+        assert [(v["rule"], v["error"]) for v in got[i]["yv_violations"]] == [
+            ("enum_mismatch", "Value needs to be one of the following: [a, 1, true, ] ")
+        ]

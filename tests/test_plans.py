@@ -226,12 +226,12 @@ def test_staged_screen_keeps_projection_boundaries(spark):
         F.lit('}, "ids": ['), F.col("doc_id").cast("string"), F.lit("]}"),
     )
     src = docs.select("doc_id", js.alias("js"))
-    levels, sc = compile_screens(e.NESTED_JSON_SCHEMA, F.col("js"))
+    levels, sc = compile_screens(e.NESTED_JSON_SCHEMA, "js")
     assert sum(1 for lvl in levels if lvl) >= 3  # parse, extractions, leaf derivations
     out = select_levels(src, levels).select(
-        "doc_id", sc["pass"].alias("p"), sc["emit"].alias("m"),
-        sc["out"].alias("o"),
-        sc["viols"].alias("v"),
+        "doc_id", F.expr(sc["pass"]).alias("p"), F.expr(sc["emit"]).alias("m"),
+        F.expr(sc["out"]).alias("o"),
+        F.expr(sc["viols"]).alias("v"),
     ).filter("p or m")
     plan = _physical(out)
     # every non-empty level must survive as its own Project boundary: the

@@ -165,8 +165,6 @@ def test_alias_chain_beyond_budget_falls_back(spark):
     df = spark.createDataFrame([("x",)], "root string")
     with pytest.raises(TypedCompileError):
         validate_table(df, schema)
-    # raising the budget compiles fine
-    assert validate_table(df, schema, max_unroll=64).collect()[0][PASS_COL] is True
 
 
 def test_schema_to_spark_type_erasures():
@@ -231,3 +229,26 @@ def test_astral_string_length_is_utf16(spark):
     a = validate_json_table(df2, schema2, "js", screen=True).collect()[0]["yv_valid"]
     b = validate_json_table(df2, schema2, "js", screen=False).collect()[0]["yv_valid"]
     assert a is True and b is True
+
+
+def test_enum_members_that_are_not_strings(spark):
+    schema = {"k": {"$enum": ["a", 1, True, None]}}
+    df = spark.createDataFrame([(1, "a"), (2, "1"), (3, "true")], "id long, k string")
+    got = {r["id"]: r for r in validate_table(df, schema, ignore_columns=("id",)).collect()}
+    assert got[1][PASS_COL] is True
+    for i in (2, 3):
+        assert got[i][PASS_COL] is False
+        assert [(v["rule"], v["error"]) for v in got[i][VIOLATIONS_COL]] == [
+            ("enum_mismatch", "Value needs to be one of the following: [a, 1, true, ] ")
+        ]
+
+
+def test_nested_lambda_paths_keep_the_outer_index(spark):
+    """An inner transform must not shadow the outer index that its
+    violation paths still use."""
+    schema = {"a": {"$array": {"$array": "integer"}}, "m": {"$array": {"$map": "integer"}}}
+    value = {"a": [[1], [2, 3, None]], "m": [{"k": 1}, {"j": None}]}
+    df = spark.createDataFrame([(value["a"], value["m"])], "a array<array<long>>, m array<map<string,long>>")
+    got = [v["path"] for v in validate_table(df, schema).collect()[0][VIOLATIONS_COL]]
+    res = iv(schema, value)
+    assert got == [r["path"] for r in violations_from_output(res["vtree"])] == ["$.a[1][2]", "$.m[1].j"]

@@ -22,7 +22,7 @@ from __future__ import annotations
 import json
 from typing import Any, Iterator
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yaschva_spark.cache import persist_tracked
@@ -35,9 +35,11 @@ from yaschva_spark.interp import (
 from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens, select_levels
 from yaschva_spark.schema import check_schema
 from yaschva_spark.typed import (
+    EMPTY_VIOLS,
     VIOLATION_DDL,
     TypedCompileError,
     compile_schema,
+    sql_case,
 )
 
 PASS_COL = "yv_valid"
@@ -80,18 +82,16 @@ def validate_table(
     schema: Any,
     *,
     ignore_columns: tuple[str, ...] = (),
-    max_unroll: int = 32,
 ) -> DataFrame:
     """Typed fast path: append ``yv_valid`` (boolean) and ``yv_violations``
-    (array of violation structs) computed entirely by Catalyst expressions.
+    (array of violation structs) computed entirely by Catalyst expressions,
+    compiled to SQL text and parsed by one ``F.expr``.
 
     Raises :class:`SchemaError` for malformed schemas (the reference throws)
     and :class:`TypedCompileError` when the schema needs the dynamic path.
     """
-    violations = compile_schema(
-        schema, df.schema, ignore_columns=tuple(ignore_columns), max_unroll=max_unroll
-    )
-    return df.withColumn(VIOLATIONS_COL, violations).withColumn(
+    violations = compile_schema(schema, df.schema, ignore_columns=tuple(ignore_columns))
+    return df.withColumn(VIOLATIONS_COL, F.expr(violations)).withColumn(
         PASS_COL, F.size(F.col(VIOLATIONS_COL)) == 0
     )
 
@@ -127,32 +127,6 @@ def explode_violations(validated: DataFrame, id_cols: list[str]) -> DataFrame:
             F.col("v.value").alias("value"),
         )
     )
-
-
-#: memoized staged screen compilations, keyed by (applicationId,
-#: schema-json, column). Building the Column tree costs hundreds of py4j
-#: round trips (~0.9 s measured for the nested schema) and is a pure
-#: function of the key; the applicationId guards against stale JVM refs
-#: after a session restart, and an insert drops every other application's
-#: entries. Negative results (unscreenable) cache too.
-_SCREEN_CACHE: dict = {}
-
-
-def _compiled_screens(app_id: str, schema_blob: str, json_col: str):
-    key = (app_id, schema_blob, json_col)
-    hit = _SCREEN_CACHE.get(key)
-    if hit is None:
-        try:
-            hit = compile_screens(json.loads(schema_blob), F.col(json_col))
-        except ScreenNotApplicable as ex:
-            hit = ex
-        # an earlier application's entries only hold dead JVM references
-        for stale in [k for k in _SCREEN_CACHE if k[0] != app_id]:
-            del _SCREEN_CACHE[stale]
-        _SCREEN_CACHE[key] = hit
-    if isinstance(hit, Exception):
-        raise hit
-    return hit
 
 
 def validate_json_table(
@@ -191,9 +165,8 @@ def validate_json_table(
     are sound by construction (differential-tested against the pure
     interpreter), so output is bit-identical with ``screen=False``. Schemas
     outside the screenable fragment silently run fully interpreted. The
-    screens compile staged (shared subexpressions as chained projection
-    columns, see jsonscreen._Stager) and are memoized per schema in
-    ``_SCREEN_CACHE``.
+    screens compile on every call to SQL text, staged (shared
+    subexpressions as chained projection columns, see jsonscreen._Stager).
 
     **Choose the plan by measurement** (sf0.1 events, 100k rows, 1 core):
     the VARIANT screen evaluates ~2 interpreted JVM ops per schema check
@@ -241,9 +214,7 @@ def validate_json_table(
     screen_levels: list = []
     if screen:
         try:
-            screen_levels, screens = _compiled_screens(
-                df.sparkSession.sparkContext.applicationId, schema_blob, json_col
-            )
+            screen_levels, screens = compile_screens(schema, json_col)
         except ScreenNotApplicable:
             screens = None
 
@@ -297,16 +268,15 @@ def validate_json_table(
     if screens is None:
         return src.mapInPandas(run_batches, schema=out_ddl)
 
+    passed, emit = screens["pass"], screens["emit"]
     scr = select_levels(src, screen_levels).select(
-        *need,
-        screens["pass"].alias("__yv_screen"),
-        screens["emit"].alias("__yv_emit"),
+        *need,  # by name: in SQL text a name would undergo ${...} substitution
+        F.expr(f"{passed} AS __yv_screen"),
+        F.expr(f"{emit} AS __yv_emit"),
         # NULL on the rows the interpreter takes, and the fail-side
         # violation rows are built only for emitted FAILING rows
-        F.when(screens["emit"], screens["out"]).alias("__yv_out"),
-        F.when(screens["pass"], F.array().cast(VIOLATION_DDL))
-        .when(screens["emit"], screens["viols"])
-        .alias("__yv_viols"),
+        F.expr(f"{sql_case((emit, screens['out']))} AS __yv_out"),
+        F.expr(f"{sql_case((passed, EMPTY_VIOLS), (emit, screens['viols']))} AS __yv_viols"),
     )
     if observe is not None:
         # free telemetry: a CollectMetrics node on the screened projection

@@ -34,9 +34,24 @@ AND_SCHEMA_ERR = "SCHEMA error: $and must only contain objects"
 MAX_SAFE_INTEGER = 9007199254740991
 
 
-def enum_mismatch(enums: list[str]) -> str:
-    """validate.ts:72 — note the trailing space after the bracket."""
-    return f"Value needs to be one of the following: [{', '.join(enums)}] "
+def _js_join_item(v) -> str:
+    """One member as JS ``Array.prototype.join`` renders it: null as the
+    empty string, a nested array joined with commas."""
+    if v is None:
+        return ""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, list):
+        return ",".join(map(_js_join_item, v))
+    if isinstance(v, dict):
+        return "[object Object]"
+    return v if isinstance(v, str) else _js_num(v)
+
+
+def enum_mismatch(enums: list) -> str:
+    """validate.ts:72 — note the trailing space after the bracket. Members
+    that are not strings render as JS ``join`` renders them."""
+    return f"Value needs to be one of the following: [{', '.join(map(_js_join_item, enums))}] "
 
 
 def _js_num(n: float) -> str:

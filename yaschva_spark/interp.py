@@ -150,7 +150,7 @@ def _v_integer(value: Any) -> str | None:
     return None
 
 
-def _v_string(value: Any, enums: list[str] | None = None) -> str | None:
+def _v_string(value: Any, enums: list | None = None) -> str | None:
     if not isinstance(value, str):
         return E.NOT_STRING
     if enums and value not in enums:

@@ -2,8 +2,9 @@
 
 The dynamic path's exactness requirements (undefined vs null, unions,
 closed-world objects) force interpreter evaluation — but not for every
-ROW. This module compiles a yaschva schema fragment into Catalyst
-expressions over Spark's VARIANT type that decide a row's outcome — pass
+ROW. This module compiles a yaschva schema fragment into SQL text over
+Spark's VARIANT type — pure Python, no JVM access, so it compiles on
+every call — whose expressions decide a row's outcome — pass
 or fail, with the interpreter's exact violations and ``yv_output`` text —
 whenever that is possible JVM-side, so decided rows never cross the Arrow
 boundary (engine.validate_json_table splits the plan on them).
@@ -12,8 +13,9 @@ The screen does no schema dispatch of its own: it emits from
 :func:`yaschva_spark.schema.lower`'s plan, which already applied the
 reference's dispatch order, ``$types`` scoping, ``$type``/``$and``
 resolution and the ``|| 0`` / ``|| MAX`` defaults. This module only maps
-each of the plan's five node kinds to VARIANT Columns, and each leaf check
-to a VARIANT predicate plus its representability guard (``_CHECKS``).
+each of the plan's five node kinds to VARIANT SQL, and each leaf check
+to a VARIANT SQL template plus its representability guard (``_CHECKS``);
+literals go through typed.py's quoting helpers.
 
 Why VARIANT: ``try_parse_json`` + ``try_variant_get``/``is_variant_null``
 distinguish a *missing* key (SQL NULL variant) from a JSON ``null`` (a
@@ -70,7 +72,7 @@ in:
   :class:`ScreenNotApplicable` — the caller falls back to full
   interpretation, never to wrong answers.
 
-The fail side. Violation paths are Columns, as in typed.py (``$``, then
+The fail side. Violation paths are SQL text, as in typed.py (``$``, then
 ``.key``, ``[i]`` and ``.k`` segments), so every node can build it
 wherever it sits:
 
@@ -111,13 +113,21 @@ import re as _re
 from dataclasses import dataclass
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from yaschva_spark import errors as E
 from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
 from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
-from yaschva_spark.typed import VIOLATION_DDL, js_strlen  # js_strlen: UTF-16 units
+from yaschva_spark.typed import (  # js_strlen: UTF-16 units
+    EMPTY_VIOLS,
+    TypedCompileError,
+    js_strlen,
+    sql_case,
+    sql_ident,
+    sql_in,
+    sql_lit,
+    sql_str,
+)
 
 #: Keys the screen will address via JSONPath and emit into output text
 #: verbatim. Conservative on purpose (see module docstring).
@@ -130,7 +140,7 @@ _SAFE_KEY = _re.compile(r"\A[A-Za-z0-9_-]+\Z")
 #: trailing line terminator (\n, \r, U+0085, U+2028, U+2029), so a '$'-anchored
 #: pattern would let a key like "a\n" through and break the screen's
 #: byte-exact soundness contract (the interpreter emits "a\\n").
-_MAP_KEY_SAFE_RLIKE = "\\A[ !#-\\[\\]-~]*\\z"
+_MAP_KEY_SAFE_RLIKE = sql_str("\\A[ !#-\\[\\]-~]*\\z")
 
 _MAX_DEPTH = 64
 
@@ -141,23 +151,25 @@ class ScreenNotApplicable(Exception):
 
 @dataclass
 class _Screen:
+    """One node's compiled outcome; every field is SQL text."""
+
     #: sound provable-pass condition (NULL counts as false downstream)
-    cond: Column
+    cond: str
     #: the interpreter's ``yv_output`` JSON text, valid whenever ``femit``
-    out: Column
+    out: str
     #: cond ⇔ interpreter-pass over the parseable-JSON domain (not merely ⇒)
     exact: bool
     #: ``out`` is the literal text ``null`` for every passing value
     null_out: bool
     #: the outcome, pass or fail, is exactly JVM-representable; None until
     #: :func:`_screen` defaults it to ``cond`` (only the pass outcome is)
-    femit: Column | None = None
+    femit: str | None = None
     #: the interpreter's violation rows (empty on pass), valid whenever
     #: ``femit``; None until :func:`_screen` defaults it to empty
-    viols: Column | None = None
+    viols: str | None = None
     #: fail-compiled leaves only: the offending value's JSON text. Unions,
     #: arrays and maps compose a fail side only over such leaves
-    val: Column | None = None
+    val: str | None = None
 
 
 #: error strings that may be concat-spliced into JSON output text verbatim:
@@ -166,18 +178,26 @@ class _Screen:
 _ERR_SAFE = _re.compile(r"\A[ !#-\[\]-~]+\Z")
 
 
-def _empty_viols() -> Column:
-    return F.array().cast(VIOLATION_DDL)
+def _and(*conds: str) -> str:
+    return f"({' AND '.join(conds)})"
 
 
-def _row(path: Column, rule: Column, err: Column, val: Column) -> Column:
+def _or(*conds: str) -> str:
+    return f"({' OR '.join(conds)})"
+
+
+def _false_if_null(cond: str) -> str:
+    return f"coalesce({cond}, false)"
+
+
+def _row(path: str, rule: str, err: str, val: str) -> str:
     """One violation row."""
-    return F.struct(path.alias("path"), rule.alias("rule"), err.alias("error"), val.alias("value"))
+    return f"named_struct('path', {path}, 'rule', {rule}, 'error', {err}, 'value', {val})"
 
 
-def _err_text(err: Column, val: Column) -> Column:
+def _err_text(err: str, val: str) -> str:
     """The interpreter's ``{"error": ..., "value": ...}`` output text."""
-    return F.concat(F.lit('{"error":"'), err, F.lit('","value":'), val, F.lit("}"))
+    return f"""concat('{{"error":"', {err}, '","value":', {val}, '}}')"""
 
 
 class _Stager:
@@ -203,49 +223,51 @@ class _Stager:
     NOT be staged — they reference the lambda variable."""
 
     def __init__(self) -> None:
-        self.levels: list[dict[str, Column]] = []
+        self.levels: list[dict[str, str]] = []
         self._n = 0
 
-    def add(self, level: int, col: Column) -> Column:
+    def add(self, level: int, sql: str) -> str:
+        """Stage ``sql`` at ``level``; returns the column reference."""
         while len(self.levels) <= level:
             self.levels.append({})
         name = f"__yv_s{level}_{self._n}"
         self._n += 1
-        self.levels[level][name] = col
-        return F.col(name)
+        self.levels[level][name] = sql
+        return sql_ident(name)
 
 
-def _vtype(tv: Column) -> Column:
-    return F.schema_of_variant(tv)
+def _vtype(tv: str) -> str:
+    return f"schema_of_variant({tv})"
 
 
-def _present(tv: Column) -> Column:
-    return tv.isNotNull() & ~F.is_variant_null(tv)
+def _present(tv: str) -> str:
+    return f"({tv} IS NOT NULL AND NOT is_variant_null({tv}))"
 
 
-def _dval(tv: Column) -> Column:
-    return F.try_variant_get(tv, "$", "double")
+def _get(tv: str, type_: str) -> str:
+    return f"try_variant_get({tv}, '$', '{type_}')"
 
 
-def _is_number_type(tv: Column) -> Column:
+def _is_number_type(tv: str) -> str:
     t = _vtype(tv)
-    return (t == "BIGINT") | (t == "DOUBLE") | t.startswith("DECIMAL")
+    return _or(f"{t} = 'BIGINT'", f"{t} = 'DOUBLE'", f"startswith({t}, 'DECIMAL')")
 
 
-def _finite(v: Column) -> Column:
-    inf = F.lit(float("inf"))
-    return v.isNotNull() & ~F.isnan(v) & (v != inf) & (v != -inf)
+def _finite(v: str) -> str:
+    inf, ninf = sql_lit(float("inf")), sql_lit(float("-inf"))
+    return _and(f"{v} IS NOT NULL", f"NOT isnan({v})", f"{v} != {inf}", f"{v} != {ninf}")
 
 
-def _exact_as_double(tv: Column) -> Column:
+def _exact_as_double(tv: str) -> str:
     """True when the value as a double compares identically to the
     interpreter's exact value: always for DOUBLE (both sides are the same
     double), else only within the 2^53 integer-exact window."""
-    return (_vtype(tv) == "DOUBLE") | (F.abs(_dval(tv)) <= F.lit(float(E.MAX_SAFE_INTEGER)))
+    return _or(f"{_vtype(tv)} = 'DOUBLE'",
+               f"abs({_get(tv, 'double')}) <= {sql_lit(float(E.MAX_SAFE_INTEGER))}")
 
 
-def _render_value(tv: Column) -> tuple[Column, Column]:
-    """(txt, unrenderable): JSON text of the variant value rendered EXACTLY
+def _render_value(tv: str) -> tuple[str, str]:
+    """(txt, renderable): JSON text of the variant value rendered EXACTLY
     as the interpreter's ``json.dumps(value)`` — in BOTH ensure_ascii modes
     (violation rows use False, yv_output uses True), which is why strings
     are gated to printable ASCII without ``"``/``\\`` (their dumps rendering
@@ -255,37 +277,24 @@ def _render_value(tv: Column) -> tuple[Column, Column]:
     json.loads of an integer literal yields a Python int whose dumps is the
     same decimal text). DOUBLE/DECIMAL numbers (Python repr rendering),
     wilder strings, and composite values fall to the interpreter."""
-    t = _vtype(tv)
-    s = F.try_variant_get(tv, "$", "string")
-    missing = tv.isNull()
-    isnull = tv.isNotNull() & F.is_variant_null(tv)
-    txt = (
-        F.when(missing, F.lit('"__undefined__"'))
-        .when(isnull, F.lit("null"))
-        .when(t == "STRING", F.concat(F.lit('"'), s, F.lit('"')))
-        .when(t == "BOOLEAN", F.when(F.try_variant_get(tv, "$", "boolean"), "true").otherwise("false"))
-        .when(t == "BIGINT", F.try_variant_get(tv, "$", "long").cast("string"))
+    t, s = _vtype(tv), _get(tv, "string")
+    missing = f"{tv} IS NULL"
+    isnull = _and(f"{tv} IS NOT NULL", f"is_variant_null({tv})")
+    txt = sql_case(
+        (missing, """'"__undefined__"'"""),
+        (isnull, "'null'"),
+        (f"{t} = 'STRING'", f"""concat('"', {s}, '"')"""),
+        (f"{t} = 'BOOLEAN'", sql_case((_get(tv, "boolean"), "'true'"), otherwise="'false'")),
+        (f"{t} = 'BIGINT'", f"CAST({_get(tv, 'long')} AS STRING)"),
     )
-    renderable = (
-        missing
-        | isnull
-        | ((t == "STRING") & s.rlike(_MAP_KEY_SAFE_RLIKE))
-        | (t == "BOOLEAN")
-        | (t == "BIGINT")
+    renderable = _or(
+        missing,
+        isnull,
+        _and(f"{t} = 'STRING'", f"{s} RLIKE {_MAP_KEY_SAFE_RLIKE}"),
+        f"{t} = 'BOOLEAN'",
+        f"{t} = 'BIGINT'",
     )
-    return txt, ~F.coalesce(renderable, F.lit(False))
-
-
-def _string_cond(tv: Column) -> Column:
-    return _present(tv) & (_vtype(tv) == "STRING")
-
-
-def _str(tv: Column) -> Column:
-    return F.try_variant_get(tv, "$", "string")
-
-
-def _negated(ok: Column) -> tuple[Column, Column]:
-    return ok, ~ok
+    return txt, _false_if_null(renderable)
 
 
 def _java_safe(pattern: str) -> str:
@@ -294,59 +303,51 @@ def _java_safe(pattern: str) -> str:
     return to_java_pattern(pattern)
 
 
-def _len_bounds(n: Column, node: Array | Map) -> Column:
-    return (n >= F.lit(node.min_len)) & (n <= F.lit(node.max_len))
+def _len_bounds(n: str, node: Array | Map) -> str:
+    return _and(f"{n} >= {sql_lit(node.min_len)}", f"{n} <= {sql_lit(node.max_len)}")
 
 
-#: leaf check -> ((tv, arg) -> (ok, fail), representability guard). ``ok``
-#: ANDs into the pass condition; ``fail`` fires the check's error in the
+#: leaf check -> ((tv, arg) -> ok, representability guard). ``ok`` ANDs
+#: into the pass condition; ``NOT ok`` fires the check's error in the
 #: first-error chain. A guard is ANDed into the pass condition once, right
 #: after the type check, and rows it rejects are undecided (interpreter):
 #: a BIGINT/DECIMAL beyond 2^53 rounds when cast to double, while the
 #: interpreter compares exact Python ints.
 _CHECKS = {
-    "undefined": (lambda tv, a: (tv.isNull(), tv.isNotNull()), None),
-    "null": (lambda tv, a: _negated(tv.isNotNull() & F.is_variant_null(tv)), None),
-    "string": (lambda tv, a: _negated(_string_cond(tv)), None),
-    "boolean": (lambda tv, a: _negated(_present(tv) & (_vtype(tv) == "BOOLEAN")), None),
-    "number": (
-        lambda tv, a: _negated(_present(tv) & _is_number_type(tv) & _finite(_dval(tv))), None
-    ),
+    "undefined": (lambda tv, a: f"({tv} IS NULL)", None),
+    "null": (lambda tv, a: _and(f"{tv} IS NOT NULL", f"is_variant_null({tv})"), None),
+    "string": (lambda tv, a: _and(_present(tv), f"{_vtype(tv)} = 'STRING'"), None),
+    "boolean": (lambda tv, a: _and(_present(tv), f"{_vtype(tv)} = 'BOOLEAN'"), None),
+    "number": (lambda tv, a: _and(_present(tv), _is_number_type(tv), _finite(_get(tv, "double"))), None),
     # every failure mode is the same error (interp._v_integer), and the
     # 2^53 window compares exactly through double for any i64
     "integer": (
-        lambda tv, a: _negated(
-            _present(tv) & _is_number_type(tv) & _finite(_dval(tv))
-            & (F.floor(_dval(tv)) == _dval(tv))
-            & (F.abs(_dval(tv)) <= F.lit(float(E.MAX_SAFE_INTEGER)))
+        lambda tv, a: _and(
+            _present(tv), _is_number_type(tv), _finite(_get(tv, "double")),
+            f"floor({_get(tv, 'double')}) = {_get(tv, 'double')}",
+            f"abs({_get(tv, 'double')}) <= {sql_lit(float(E.MAX_SAFE_INTEGER))}",
         ),
         None,
     ),
-    "enum": (lambda tv, a: _negated(_str(tv).isin(list(a))), None),
-    "min_length": (
-        lambda tv, a: (js_strlen(_str(tv)) >= F.lit(a), js_strlen(_str(tv)) < F.lit(a)), None
+    "enum": (lambda tv, a: sql_in(_get(tv, "string"), a), None),
+    "min_length": (lambda tv, a: f"({js_strlen(_get(tv, 'string'))} >= {sql_lit(a)})", None),
+    "max_length": (lambda tv, a: f"({js_strlen(_get(tv, 'string'))} <= {sql_lit(a)})", None),
+    "regex": (
+        lambda tv, a: f"({_get(tv, 'string')} RLIKE {sql_str(_java_safe(a))})", None
     ),
-    "max_length": (
-        lambda tv, a: (js_strlen(_str(tv)) <= F.lit(a), js_strlen(_str(tv)) > F.lit(a)), None
-    ),
-    "regex": (lambda tv, a: _negated(_str(tv).rlike(_java_safe(a))), None),
-    "min": (
-        lambda tv, a: (_dval(tv) >= F.lit(float(a)), _dval(tv) < F.lit(float(a))), _exact_as_double
-    ),
-    "max": (
-        lambda tv, a: (_dval(tv) <= F.lit(float(a)), _dval(tv) > F.lit(float(a))), _exact_as_double
-    ),
+    "min": (lambda tv, a: f"({_get(tv, 'double')} >= {sql_lit(float(a))})", _exact_as_double),
+    "max": (lambda tv, a: f"({_get(tv, 'double')} <= {sql_lit(float(a))})", _exact_as_double),
 }
 
 
-def _screen_leaf(node: Leaf, tv: Column, path: Column,
+def _screen_leaf(node: Leaf, tv: str, path: str,
                  stage: _Stager | None, level: int) -> _Screen:
     """The leaf's first-error chain (validate.ts:50-205) over the variant:
     the pass condition is the AND of every check's ``ok``, exact unless a
     guard leaves rows undecided (``und``: the pass/fail decision or error
     choice is not exactly computable JVM-side).
 
-    Fail side: the chain's ``fail`` conditions, in order, pick the error
+    Fail side: the chain's ``NOT ok`` conditions, in order, pick the error
     (none true ⇔ pass); a row emits when it passes or when an error fires
     on an exactly renderable value, with one violation row at ``path``.
     Error strings outside the concat-safe alphabet (e.g. an $enum whose
@@ -357,61 +358,58 @@ def _screen_leaf(node: Leaf, tv: Column, path: Column,
     map) then reads materialized columns instead of re-walking the
     variant (see :class:`_Stager`)."""
     if not node.checks:  # any
-        return _Screen(F.lit(True), F.lit("null"), True, True)
+        return _Screen("true", "'null'", True, True)
     if node.checks[0][0] == "and":
         # the reference data-FAILS every value here (validate.ts:244-247's
         # combine throw path) — unprovable, not wrong
         raise ScreenNotApplicable("$and members not all objects")
     (check, arg, error), rest = node.checks[0], node.checks[1:]
-    cond, fail = _CHECKS[check][0](tv, arg)
-    chain = [(fail, error)]
+    cond = _CHECKS[check][0](tv, arg)
+    chain = [(f"NOT {cond}", error)]
     und = None
     guard = next((_CHECKS[c][1] for c, _, _ in rest if _CHECKS[c][1]), None)
     if guard is not None:
         # outside the guard neither the comparison nor the error choice is
         # trustworthy, so such rows are undecided
-        und = cond & ~guard(tv)
-        cond = cond & guard(tv)
+        und = _and(cond, f"NOT {guard(tv)}")
+        cond = _and(cond, guard(tv))
     for check, arg, error in rest:
-        ok, fail = _CHECKS[check][0](tv, arg)
-        cond = cond & ok
-        chain.append((fail, error))
+        ok = _CHECKS[check][0](tv, arg)
+        cond = _and(cond, ok)
+        chain.append((f"NOT {ok}", error))
 
-    cond = F.coalesce(cond, F.lit(False))
+    cond = _false_if_null(cond)
     if stage is not None:
         cond = stage.add(level + 1, cond)
     if not all(_ERR_SAFE.match(e) for _, e in chain):
-        return _Screen(cond, F.lit("null"), und is None, True)
-    err = rule = None
-    for c, e in chain:
-        err = F.when(c, F.lit(e)) if err is None else err.when(c, F.lit(e))
-        r = F.lit(E.rule_id_for(e))
-        rule = F.when(c, r) if rule is None else rule.when(c, r)
-    val, val_und = _render_value(tv)
-    bad = err.isNotNull() & ~val_und
+        return _Screen(cond, "'null'", und is None, True)
+    err = sql_case(*[(c, sql_str(e)) for c, e in chain])
+    rule = sql_case(*[(c, sql_str(E.rule_id_for(e))) for c, e in chain])
+    val, renderable = _render_value(tv)
+    bad = _and(f"{err} IS NOT NULL", renderable)
     if und is not None:
-        bad = bad & ~F.coalesce(und, F.lit(False))
-    bad = F.coalesce(bad, F.lit(False))
+        bad = _and(bad, f"NOT {_false_if_null(und)}")
+    bad = _false_if_null(bad)
     if stage is not None:
         err, rule, val, bad = (stage.add(level + 1, c) for c in (err, rule, val, bad))
     return _Screen(
         cond,
-        F.when(cond, F.lit("null")).otherwise(_err_text(err, val)),
+        sql_case((cond, "'null'"), otherwise=_err_text(err, val)),
         und is None,
         True,
-        femit=cond | bad,
-        viols=F.when(bad, F.array(_row(path, rule, err, val))).otherwise(_empty_viols()),
+        femit=_or(cond, bad),
+        viols=sql_case((bad, f"array({_row(path, rule, err, val)})"), otherwise=EMPTY_VIOLS),
         val=val,
     )
 
 
 def _screen(
     node: Any,
-    tv: Column,
-    txt: Column | None,
+    tv: str,
+    txt: str | None,
     stack: frozenset,
     depth: int,
-    path: Column,
+    path: str,
     stage: _Stager | None = None,
     level: int = 0,
 ) -> _Screen:
@@ -421,7 +419,9 @@ def _screen(
     when it sits at a literal path from the root (needed for data-order
     keys), else None. ``path`` is the node's violation path. ``stack``
     holds the composite nodes being compiled: meeting one again is a
-    recursive custom type. ``stage`` is None inside array/map lambdas."""
+    recursive custom type. ``stage`` is None inside array/map lambdas,
+    whose variables are named by ``depth``, so nested lambdas never
+    shadow each other."""
     if depth > _MAX_DEPTH:
         raise ScreenNotApplicable("schema nesting beyond screen depth budget")
     if isinstance(node, Leaf):
@@ -439,15 +439,15 @@ def _screen(
         else:
             s = _screen_object(node, tv, txt, stack, depth, path, stage, level)
     if s.femit is None:
-        s.femit = F.coalesce(s.cond, F.lit(False))
+        s.femit = _false_if_null(s.cond)
     if s.viols is None:
-        s.viols = _empty_viols()
+        s.viols = EMPTY_VIOLS
     return s
 
 
 def _screen_union(
-    node: Union, tv: Column, txt: Column | None, stack: frozenset, depth: int,
-    path: Column, stage: _Stager | None, level: int,
+    node: Union, tv: str, txt: str | None, stack: frozenset, depth: int,
+    path: str, stage: _Stager | None, level: int,
 ) -> _Screen:
     """Ordered union prefix (module docstring): the when-chain replicates
     first-passing-branch output only while every earlier branch is exact.
@@ -473,11 +473,8 @@ def _screen_union(
             break
     if not chain:
         raise ScreenNotApplicable("no screenable union prefix")
-    cond = chain[0].cond
-    out = F.when(chain[0].cond, chain[0].out)
-    for r in chain[1:]:
-        cond = cond | r.cond
-        out = out.when(r.cond, r.out)
+    cond = _or(*[r.cond for r in chain])
+    out = sql_case(*[(r.cond, r.out) for r in chain])
     exact = len(chain) == len(node.branches) and all(r.exact for r in chain)
     null_out = all(r.null_out for r in chain)
     if not exact or any(r.val is None for r in chain):
@@ -485,40 +482,23 @@ def _screen_union(
     # every branch is a leaf whose conds are non-NULL: on ~cond rows each
     # branch's femit is its "fails renderably", its out its error object
     # and its viols its one error row; val renders the same tv for all
-    ufail = ~cond
-    for r in chain:
-        ufail = ufail & r.femit
-    err = F.lit(E.UNION_MISMATCH)
+    ufail = _and(f"NOT {cond}", *[r.femit for r in chain])
+    err = sql_str(E.UNION_MISMATCH)
     val = chain[0].val
-    mismatch = F.array(_row(path, F.lit(E.rule_id_for(E.UNION_MISMATCH)), err, val))
-    fail_out = F.concat(
-        F.lit('{"error":"'), err, F.lit('","value":'), val,
-        F.lit(',"output":['), F.concat_ws(",", *[r.out for r in chain]), F.lit("]}"),
-    )
+    mismatch = f"array({_row(path, sql_str(E.rule_id_for(E.UNION_MISMATCH)), err, val)})"
+    fail_out = (f"""concat('{{"error":"', {err}, '","value":', {val}, ',"output":[', """
+                f"""concat_ws(',', {', '.join(r.out for r in chain)}), ']}}')""")
     return _Screen(
-        cond, F.when(cond, out).otherwise(fail_out), exact, null_out,
-        femit=cond | ufail,
-        viols=F.when(ufail, F.concat(mismatch, *[r.viols for r in chain])).otherwise(_empty_viols()),
+        cond, sql_case((cond, out), otherwise=fail_out), exact, null_out,
+        femit=_or(cond, ufail),
+        viols=sql_case(
+            (ufail, f"concat({mismatch}, {', '.join(r.viols for r in chain)})"),
+            otherwise=EMPTY_VIOLS,
+        ),
     )
 
 
-def _forall(xs: Column, screen_of, what: str) -> tuple[Column, _Screen]:
-    """``forall`` over the elements' pass conditions, and the element
-    screen its lambda built. Elements need literally-``null`` pass output
-    (module docstring)."""
-    got: list[_Screen] = []
-
-    def cond(x: Column) -> Column:
-        got.append(screen_of(x))
-        return got[0].cond
-
-    all_ok = F.forall(xs, cond)
-    if not got[0].null_out:
-        raise ScreenNotApplicable(f"{what} output is not null (needs per-element text)")
-    return all_ok, got[0]
-
-
-def _screen_array(node: Array, tv: Column, stack: frozenset, depth: int, path: Column) -> _Screen:
+def _screen_array(node: Array, tv: str, stack: frozenset, depth: int, path: str) -> _Screen:
     """validateArray (validate.ts:106-126): length bounds, then every
     element. Elements are never JS-undefined; a JSON null element arrives
     as a variant-null (probed), so leaf screens stay sound. Output is the
@@ -533,50 +513,51 @@ def _screen_array(node: Array, tv: Column, stack: frozenset, depth: int, path: C
     emitted — their offending value is unrenderable, so those rows go to
     the interpreter, which also sidesteps flat()'s index-shifting splice.
     NOT_ARRAY failures report the whole payload as the value —
-    interpreter."""
-    arr = F.try_variant_get(tv, "$", "array<variant>")
+    interpreter.
 
-    def elem(e: Column, i: Column | None = None) -> _Screen:
-        # lambda scope: element subtrees reference the lambda variable and
-        # must NOT be staged as projection columns
-        p = path if i is None else F.concat(path, F.lit("["), i.cast("string"), F.lit("]"))
-        return _screen(node.elem, e, None, stack, depth + 1, p)
-
-    all_ok, r = _forall(arr, elem, "array element")
-    struct_base = tv.isNotNull() & _vtype(tv).startswith("ARRAY")
-    len_ok = _len_bounds(F.size(arr), node)
-    cond = struct_base & len_ok & all_ok
-    out = F.concat(
-        F.lit("["),
-        F.array_join(F.transform(arr, lambda e: F.lit("null")), ","),
-        F.lit("]"),
-    )
+    The element screen compiles once over the lambda variables ``x``
+    (element) and ``i`` (index); only its violation paths read ``i``."""
+    arr = _get(tv, "array<variant>")
+    x, i = f"__yv_x{depth}", f"__yv_i{depth}"
+    r = _screen(node.elem, x, None, stack, depth + 1,
+                f"concat({path}, '[', CAST({i} AS STRING), ']')")
+    if not r.null_out:  # elements need literally-null pass output
+        raise ScreenNotApplicable("array element output is not null (needs per-element text)")
+    struct_base = _and(f"{tv} IS NOT NULL", f"startswith({_vtype(tv)}, 'ARRAY')")
+    len_ok = _len_bounds(f"size({arr})", node)
+    cond = _and(struct_base, len_ok, f"forall({arr}, {x} -> {r.cond})")
+    out = f"concat('[', array_join(transform({arr}, {x} -> 'null'), ','), ']')"
     # element screens are elementwise ⇔, and only real JSON arrays have
     # ARRAY type — matching the reference's isArray gate exactly
     len_err = E.arr_length(node.min_len, node.max_len)
     if r.val is None or not r.exact or not _ERR_SAFE.match(len_err):
         return _Screen(cond, out, exact=r.exact, null_out=False)
-    cond_f = F.coalesce(cond, F.lit(False))
-    len_fail = F.coalesce(struct_base & ~len_ok, F.lit(False))
-    size_txt = F.size(arr).cast("string")
-    all_decided = F.forall(arr, lambda e: elem(e).femit)
-    elem_outs = F.transform(arr, lambda e: elem(e).out)
+    cond_f = _false_if_null(cond)
+    len_fail = _false_if_null(_and(struct_base, f"NOT {len_ok}"))
+    size_txt = f"CAST(size({arr}) AS STRING)"
+    all_decided = f"forall({arr}, {x} -> {r.femit})"
+    elem_outs = f"transform({arr}, {x} -> {r.out})"
+    len_row = _row(path, sql_str(E.rule_id_for(len_err)), sql_str(len_err), size_txt)
     return _Screen(
         cond,
-        F.when(cond_f, out)
-        .when(len_fail, _err_text(F.lit(len_err), size_txt))
-        .otherwise(F.concat(F.lit("["), F.array_join(elem_outs, ","), F.lit("]"))),
+        sql_case(
+            (cond_f, out),
+            (len_fail, _err_text(sql_str(len_err), size_txt)),
+            otherwise=f"concat('[', array_join({elem_outs}, ','), ']')",
+        ),
         exact=r.exact,
         null_out=False,
-        femit=cond_f | len_fail | F.coalesce(struct_base & len_ok & all_decided, F.lit(False)),
-        viols=F.when(cond_f, _empty_viols())
-        .when(len_fail, F.array(_row(path, F.lit(E.rule_id_for(len_err)), F.lit(len_err), size_txt)))
-        .otherwise(F.flatten(F.transform(arr, lambda e, i: elem(e, i).viols))),
+        femit=_or(cond_f, len_fail, _false_if_null(_and(struct_base, len_ok, all_decided))),
+        viols=sql_case(
+            (cond_f, EMPTY_VIOLS),
+            (len_fail, f"array({len_row})"),
+            otherwise=f"flatten(transform({arr}, ({x}, {i}) -> {r.viols}))",
+        ),
     )
 
 
 def _screen_map(
-    node: Map, tv: Column, txt: Column | None, stack: frozenset, depth: int, path: Column,
+    node: Map, tv: str, txt: str | None, stack: frozenset, depth: int, path: str,
 ) -> _Screen:
     """validateMap (validate.ts:161-193): member-count bounds, optional key
     regex, every value. NOT exact: the reference also accepts JS arrays
@@ -588,54 +569,59 @@ def _screen_map(
     regex) the map's outcome is its VALUES' — per-key value failures emit
     with ``.<key>`` violation paths in data-key order, exactly like object
     fields. Structural failures report the whole map as the offending
-    value — interpreter."""
+    value — interpreter.
+
+    The value screen compiles over the lambda variable ``v`` for the
+    per-row checks over ``map_values``, and over ``element_at(map, k)``
+    for the data-key-order output and violations."""
     if txt is None:
         raise ScreenNotApplicable("$map not at a literal path (needs text)")
-    mp = F.try_variant_get(tv, "$", "map<string,variant>")
-    keys = F.map_keys(mp)  # sorted by the cast — fine for order-free checks
-
-    def value(v: Column, k: Column | None = None) -> _Screen:
-        p = path if k is None else F.concat(path, F.lit("."), k)
-        return _screen(node.value, v, None, stack, depth + 1, p)
-
-    vals_ok, r = _forall(F.map_values(mp), value, "map value")
-    struct_ok = (
-        tv.isNotNull()
-        & _vtype(tv).startswith("OBJECT")
-        & _len_bounds(F.size(mp), node)
+    mp = _get(tv, "map<string,variant>")
+    keys = f"map_keys({mp})"  # sorted by the cast — fine for order-free checks
+    v, k = f"__yv_v{depth}", f"__yv_k{depth}"
+    r = _screen(node.value, v, None, stack, depth + 1, path)
+    if not r.null_out:
+        raise ScreenNotApplicable("map value output is not null (needs per-element text)")
+    struct_ok = [
+        f"{tv} IS NOT NULL",
+        f"startswith({_vtype(tv)}, 'OBJECT')",
+        _len_bounds(f"size({mp})", node),
         # keys must render into output text verbatim (json.dumps identity)
-        & F.forall(keys, lambda k: k.rlike(_MAP_KEY_SAFE_RLIKE))
-    )
+        f"forall({keys}, {k} -> {k} RLIKE {_MAP_KEY_SAFE_RLIKE})",
+    ]
     if node.regex is not None:
-        jp = _java_safe(node.regex)
-        struct_ok = struct_ok & F.forall(keys, lambda k: k.rlike(jp))
-    cond = struct_ok & vals_ok
-    data_keys = F.array_distinct(F.json_object_keys(txt))
+        struct_ok.append(f"forall({keys}, {k} -> {k} RLIKE {sql_str(_java_safe(node.regex))})")
+    struct_ok = _and(*struct_ok)
+    cond = _and(struct_ok, f"forall(map_values({mp}), {v} -> {r.cond})")
+    data_keys = f"array_distinct(json_object_keys({txt}))"
 
-    def body(value_out) -> Column:
-        pairs = F.transform(data_keys, lambda k: F.concat(F.lit('"'), k, F.lit('":'), value_out(k)))
-        return F.concat(F.lit("{"), F.array_join(pairs, ","), F.lit("}"))
+    def body(value_out: str) -> str:
+        pair = f"""concat('"', {k}, '":', {value_out})"""
+        return f"concat('{{', array_join(transform({data_keys}, {k} -> {pair}), ','), '}}')"
 
-    out = body(lambda k: F.lit("null"))
+    out = body("'null'")
     if r.val is None or not r.exact:
         return _Screen(cond, out, exact=False, null_out=False)
-    cond_f = F.coalesce(cond, F.lit(False))
-    all_decided = F.forall(F.map_values(mp), lambda v: value(v).femit)
+    rk = _screen(node.value, f"element_at({mp}, {k})", None, stack, depth + 1,
+                 f"concat({path}, '.', {k})")
+    cond_f = _false_if_null(cond)
+    all_decided = f"forall(map_values({mp}), {v} -> {r.femit})"
     return _Screen(
         cond,
-        F.when(cond_f, out).otherwise(body(lambda k: value(F.element_at(mp, k)).out)),
+        sql_case((cond_f, out), otherwise=body(rk.out)),
         exact=False,
         null_out=False,
-        femit=cond_f | F.coalesce(struct_ok & all_decided, F.lit(False)),
-        viols=F.when(cond_f, _empty_viols()).otherwise(
-            F.flatten(F.transform(data_keys, lambda k: value(F.element_at(mp, k), k).viols))
+        femit=_or(cond_f, _false_if_null(_and(struct_ok, all_decided))),
+        viols=sql_case(
+            (cond_f, EMPTY_VIOLS),
+            otherwise=f"flatten(transform({data_keys}, {k} -> {rk.viols}))",
         ),
     )
 
 
 def _screen_object(
-    node: Object, tv: Column, txt: Column | None, stack: frozenset, depth: int,
-    path: Column, stage: _Stager, level: int,
+    node: Object, tv: str, txt: str | None, stack: frozenset, depth: int,
+    path: str, stage: _Stager, level: int,
 ) -> _Screen:
     """validateObject (validate.ts:128-159): closed world. NOT exact (the
     reference also accepts JS arrays). Output is data keys in DATA order
@@ -659,8 +645,8 @@ def _screen_object(
         raise ScreenNotApplicable("object not at a literal path (needs text)")
     field_keys: list[str] = []
     subs: list[_Screen] = []
-    out_pairs: list[Column] = []
-    viol_pairs: list[Column] = []
+    out_pairs: list[str] = []
+    viol_pairs: list[str] = []
     for data_key, sub in node.fields:
         if not _SAFE_KEY.match(data_key):
             raise ScreenNotApplicable(f"key {data_key!r} not screen-safe")
@@ -668,58 +654,53 @@ def _screen_object(
         # materialize the sub-variant/sub-text ONCE: every leaf op of every
         # chain below otherwise re-extracts it from the parent (and for the
         # root, re-parses the JSON text)
-        tv_k = stage.add(level + 1, F.try_variant_get(tv, f"$.{data_key}", "variant"))
-        txt_k = stage.add(level + 1, F.get_json_object(txt, f"$.{data_key}"))
-        sub_path = F.concat(path, F.lit(f".{data_key}"))
+        json_path = sql_str(f"$.{data_key}")
+        tv_k = stage.add(level + 1, f"try_variant_get({tv}, {json_path}, 'variant')")
+        txt_k = stage.add(level + 1, f"get_json_object({txt}, {json_path})")
+        sub_path = f"concat({path}, {sql_str('.' + data_key)})"
         r = _screen(sub, tv_k, txt_k, stack, depth + 1, sub_path, stage, level + 1)
         subs.append(r)
-        out_pairs.extend([F.lit(data_key), r.out])
-        viol_pairs.extend([F.lit(data_key), r.viols])
+        out_pairs.extend([sql_str(data_key), r.out])
+        viol_pairs.extend([sql_str(data_key), r.viols])
 
     # references txt (level <= this node's level): stage with the field
     # extractions
-    data_keys = stage.add(level + 1, F.array_distinct(F.json_object_keys(txt)))
+    data_keys = stage.add(level + 1, f"array_distinct(json_object_keys({txt}))")
     if field_keys:
-        declared = F.array(*[F.lit(k) for k in field_keys])
+        declared = f"array({', '.join(sql_str(k) for k in field_keys)})"
     else:
-        declared = F.array().cast("array<string>")
-    keyset_ok = F.size(F.array_except(data_keys, declared)) == 0
+        declared = "CAST(array() AS array<string>)"
+    keyset_ok = f"size(array_except({data_keys}, {declared})) = 0"
     struct_ok = stage.add(
         level + 2,
-        F.coalesce(tv.isNotNull() & _vtype(tv).startswith("OBJECT") & keyset_ok, F.lit(False)),
+        _false_if_null(_and(f"{tv} IS NOT NULL", f"startswith({_vtype(tv)}, 'OBJECT')", keyset_ok)),
     )
-    cond = femit = struct_ok
-    for r in subs:
-        cond = cond & r.cond
-        femit = femit & r.femit
+    cond = _and(struct_ok, *[r.cond for r in subs])
+    femit = _and(struct_ok, *[r.femit for r in subs])
     if not field_keys:
-        return _Screen(cond, F.lit("{}"), exact=False, null_out=False)
-    all_keys = stage.add(level + 2, F.concat(data_keys, F.array_except(declared, data_keys)))
+        return _Screen(cond, "'{}'", exact=False, null_out=False)
+    all_keys = stage.add(level + 2, f"concat({data_keys}, array_except({declared}, {data_keys}))")
     # assembly stays unstaged: it is concat/dispatch over already-staged
     # leaf and key columns, cheap per reference
-    out_map = F.create_map(*out_pairs)
-    body = F.array_join(
-        F.transform(all_keys, lambda k: F.concat(F.lit('"'), k, F.lit('":'), F.element_at(out_map, k))),
-        ",",
-    )
-    vmap = F.create_map(*viol_pairs)
+    k = f"__yv_k{depth}"
+    field_out = f"""concat('"', {k}, '":', element_at(map({', '.join(out_pairs)}), {k}))"""
+    vmap = f"map({', '.join(viol_pairs)})"
     return _Screen(
         cond,
-        F.concat(F.lit("{"), body, F.lit("}")),
+        f"concat('{{', array_join(transform({all_keys}, {k} -> {field_out}), ','), '}}')",
         exact=False,
         null_out=False,
         femit=femit,
-        viols=F.flatten(
-            F.transform(all_keys, lambda k: F.coalesce(F.element_at(vmap, k), _empty_viols()))
-        ),
+        viols=f"flatten(transform({all_keys}, {k} -> coalesce(element_at({vmap}, {k}), {EMPTY_VIOLS})))",
     )
 
 
-def compile_screens(schema: Any, raw: Column):
-    """One compilation, staged. Returns ``(levels, outputs)``: ``levels``
-    is an ordered list of ``{column_name: Column}`` dicts of shared
-    subexpressions (see :class:`_Stager`) that the caller must select in
-    order (:func:`select_levels`) before evaluating ``outputs``, whose
+def compile_screens(schema: Any, json_col: str):
+    """One compilation, staged, to SQL text over the JSON-text column
+    ``json_col``. Returns ``(levels, outputs)``: ``levels`` is an ordered
+    list of ``{column_name: sql}`` dicts of shared subexpressions (see
+    :class:`_Stager`) that the caller must select in order
+    (:func:`select_levels`) before evaluating ``outputs``, whose
     expressions reference those columns by name:
 
     * ``"pass"`` — provably-pass boolean;
@@ -732,26 +713,27 @@ def compile_screens(schema: Any, raw: Column):
     violations/output — they skip Arrow too. Rows with ``~emit`` run
     interpreted. Raises :class:`ScreenNotApplicable` outside the fragment
     (the fail side degrades per node, never widens the fragment), including
-    for schemas that do not lower."""
+    for schemas that do not lower. Pure text: no JVM is touched."""
     try:
         plan = lower(schema)
-    except SchemaError as ex:
+        raw = sql_ident(json_col)
+    except (SchemaError, TypedCompileError) as ex:
         raise ScreenNotApplicable(str(ex)) from ex
     stage = _Stager()
-    pv = stage.add(0, F.try_parse_json(raw))
-    s = _screen(plan, pv, raw, frozenset(), 0, F.lit("$"), stage, 0)
+    pv = stage.add(0, f"try_parse_json({raw})")
+    s = _screen(plan, pv, raw, frozenset(), 0, "'$'", stage, 0)
     return stage.levels, {
-        "pass": F.coalesce(s.cond, F.lit(False)),
-        "emit": F.coalesce(s.femit, F.lit(False)),
+        "pass": _false_if_null(s.cond),
+        "emit": _false_if_null(s.femit),
         "viols": s.viols,
         "out": s.out,
     }
 
 
-def select_levels(df: DataFrame, levels: list[dict[str, Column]]) -> DataFrame:
+def select_levels(df: DataFrame, levels: list[dict[str, str]]) -> DataFrame:
     """Evaluate :func:`compile_screens`' staged levels as chained
-    projections, each level once per row."""
+    projections (one ``selectExpr`` each), each level once per row."""
     for lvl in levels:
         if lvl:
-            df = df.select("*", *[c.alias(n) for n, c in lvl.items()])
+            df = df.selectExpr("*", *[f"{sql} AS {sql_ident(name)}" for name, sql in lvl.items()])
     return df

@@ -275,8 +275,7 @@ def _string_checks(spec: dict) -> tuple:
 def _enum_checks(enums: Any) -> tuple:
     checks = [("string", None, E.NOT_STRING)]
     if enums:  # `enums && enums.length && ...` skips an empty list
-        shown = [e if isinstance(e, str) else js_stringify(e) for e in enums]
-        checks.append(("enum", enums, E.enum_mismatch(shown)))
+        checks.append(("enum", enums, E.enum_mismatch(enums)))
     return tuple(checks)
 
 

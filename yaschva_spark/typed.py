@@ -1,17 +1,20 @@
-"""The typed fast path: yaschva schema -> Catalyst expressions.
+"""The typed fast path: yaschva schema -> one Catalyst SQL expression.
 
-``compile_schema`` turns a schema into a single ``violations`` Column
-(``array<struct<path,rule,error,value>>``) evaluated entirely JVM-side under
-whole-stage codegen — no Python in the hot path. One expression tree is built
-once on the driver; executors evaluate it vectorized (SURVEY.md §3.1 engine
-equivalent). ``schema_to_spark_type`` is the analog of the reference's
+``compile_schema`` turns a schema into the SQL text of a single
+``violations`` expression (``array<struct<path,rule,error,value>>``) that the
+engine wraps in one ``F.expr``; it is evaluated entirely JVM-side under
+whole-stage codegen — no Python in the hot path, and building it makes no
+py4j call. ``schema_to_spark_type`` is the analog of the reference's
 ``validationToType`` emitter (/root/reference/src/type.ts:33-92), emitting a
 Spark ``StructType`` with the same erasures (size/regex constraints live in
 expressions, not types).
 
 Both emit from :func:`yaschva_spark.schema.lower`'s plan, which holds the
 reference's dispatch order and first-error chains; this module maps each
-leaf check to a dtype-directed Column predicate (``_CHECKS``).
+leaf check to a dtype-directed SQL template (``_CHECKS``). The quoting
+helpers (``sql_ident``, ``sql_str``, ``sql_lit``) and the shared templates
+(``EMPTY_VIOLS``, ``sql_case``, ``sql_in``, ``js_strlen``) serve
+:mod:`yaschva_spark.jsonscreen` too.
 Semantics follow the reference validator node-for-node (citations inline).
 One documented deviation (SURVEY.md §7.4): a plain Spark column cannot
 distinguish JS ``undefined`` from ``null`` — the typed path treats SQL NULL
@@ -27,14 +30,16 @@ reader, and the per-row work is branch-predictable CASE WHEN chains. The
 violation array for a passing row is built lazily (CASE branches), so the
 happy path does not pay for error materialization — unlike the reference,
 which always builds the full mirrored output tree (README.md:180-195).
+Text repeats a subtree wherever it is referenced twice: a union's branches
+feed both its pass bits and its concat.
 """
 
 from __future__ import annotations
 
+import math
+import re
 from typing import Any
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from yaschva_spark import errors as E
@@ -42,10 +47,14 @@ from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
 from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
 
 VIOLATION_DDL = "array<struct<path:string,rule:string,error:string,value:string>>"
+EMPTY_VIOLS = f"CAST(array() AS {VIOLATION_DDL})"
 
 #: rendering of a JS-undefined offending value (matches
 #: interp.value_to_json_text(UNDEFINED))
 _UNDEF_JSON = '"__undefined__"'
+
+#: custom-type recursion budget: names followed plus nesting levels
+_MAX_UNROLL = 32
 
 _NUMERIC_TYPES = (
     T.ByteType,
@@ -64,55 +73,96 @@ class TypedCompileError(Exception):
     the dynamic (mapInPandas interpreter) path."""
 
 
-def js_strlen(expr: Column) -> Column:
+# --- SQL text ----------------------------------------------------------------
+def sql_ident(name: str) -> str:
+    """An identifier taken literally: backticked, each backtick doubled (a
+    bare ``a.b`` would parse the dot as struct-field access). No spelling
+    escapes the parser's ``${...}`` substitution, so such names raise."""
+    if "${" in name:
+        raise TypedCompileError(f"identifier {name!r} holds a ${{...}} substitution")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_str(s: str) -> str:
+    """A string literal that parses to ``s`` whatever
+    ``spark.sql.parser.escapedStringLiterals`` says: quote and backslash
+    are spelled ``chr(39)`` / ``chr(92)``, every other character stands
+    verbatim between single quotes. (A raw ``r'…'`` literal is no way out:
+    with that option on, Spark keeps its opening quote in the value.) ``$``
+    before ``{`` is ``chr(36)``: the parser substitutes ``${...}`` first."""
+    parts = [f"chr({ord(p)})" if i % 2 else f"'{p}'"
+             for i, p in enumerate(re.split(r"(['\\]|\$(?=\{))", s)) if p]
+    if len(parts) == 1:
+        return parts[0]
+    return f"concat({', '.join(parts)})" if parts else "''"
+
+
+def sql_lit(v: Any) -> str:
+    """A literal with the type ``F.lit`` gives ``v``: an int is INT within
+    32 bits, else BIGINT; a float is a DOUBLE (bare ``1.5`` would be a
+    DECIMAL in SQL)."""
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, float) and not math.isfinite(v):
+        name = "NaN" if math.isnan(v) else ("-Infinity" if v < 0 else "Infinity")
+        return f"CAST('{name}' AS DOUBLE)"
+    if isinstance(v, float):
+        text = f"{v!r}D"
+    elif isinstance(v, int):
+        text = str(v) if -(2**31) <= v < 2**31 else f"{v}L"
+    else:
+        return sql_str(v)
+    return f"({text})" if text.startswith("-") else text
+
+
+def sql_case(*whens: tuple[str, str], otherwise: str | None = None) -> str:
+    """``CASE WHEN c THEN v ... [ELSE otherwise] END``, spelled as the
+    simple ``CASE true WHEN c ...``: Spark's parser looks ahead to the
+    ``END`` of every searched CASE the first time it meets one, so nested
+    searched CASEs cost text size times depth to parse in a fresh JVM
+    (7.2 s vs 0.29 s for a 134 KB recursive schema, 4-core host). The
+    optimizer folds ``true = c`` back to ``c``."""
+    body = " ".join(f"WHEN {c} THEN {v}" for c, v in whens)
+    return f"CASE true {body} END" if otherwise is None else f"CASE true {body} ELSE {otherwise} END"
+
+
+def sql_in(expr: str, members: list) -> str:
+    """``$enum`` membership: a string equals only string members (the strict
+    equality of JS ``indexOf``), so no string member never matches."""
+    strings = [sql_str(m) for m in members if isinstance(m, str)]
+    return f"({expr} IN ({', '.join(strings)}))" if strings else "false"
+
+
+def js_strlen(expr: str) -> str:
     """JS ``.length`` counts UTF-16 code units; Spark's ``length`` counts
     code points — add one per astral character (reference strings index in
     UTF-16, validate.ts string rules). Guarded by an ASCII fast path:
     ``octet_length == length`` proves the string has no multi-byte (hence
     no astral) characters, so the per-row regex scan runs only on strings
     that actually contain non-ASCII — for code corpora that is ~never."""
-    n = F.length(expr)
-    return F.when(F.octet_length(expr) == n, n).otherwise(
-        n + F.regexp_count(expr, F.lit("[\\x{10000}-\\x{10FFFF}]"))
-    )
+    n = f"length({expr})"
+    astral = sql_str("[\\x{10000}-\\x{10FFFF}]")
+    return sql_case((f"octet_length({expr}) = {n}", n), otherwise=f"{n} + regexp_count({expr}, {astral})")
 
 
-def _root_col(name: str) -> Column:
-    """Top-level column reference by LITERAL name: a bare ``F.col('a.b')``
-    parses the dot as struct-field access — backtick-quote so a column
-    literally named ``a.b`` resolves (nested levels use getField and are
-    unaffected)."""
-    return F.col("`" + name.replace("`", "``") + "`")
-
-
-def _empty() -> Column:
-    return F.expr(f"CAST(array() AS {VIOLATION_DDL})")
-
-
-def _json_value(expr: Column) -> Column:
+def _json_value(expr: str) -> str:
     """Render any column value as its JSON literal (strings quoted+escaped,
     numbers bare, complex types as JSON). NULL renders as ``null``."""
-    wrapped = F.to_json(F.array(expr))
-    return F.substring(wrapped, F.lit(2), F.length(wrapped) - F.lit(2))
+    wrapped = f"to_json(array({expr}))"
+    return f"substring({wrapped}, 2, length({wrapped}) - 2)"
 
 
-def _viol(path: Column, rule: str, error: str, value: Column) -> Column:
-    return F.array(
-        F.struct(
-            path.alias("path"),
-            F.lit(rule).alias("rule"),
-            F.lit(error).alias("error"),
-            value.alias("value"),
-        )
-    )
+def _viol(path: str, rule: str, error: str, value: str) -> str:
+    return (f"array(named_struct('path', {path}, 'rule', {sql_str(rule)}, "
+            f"'error', {sql_str(error)}, 'value', {value}))")
 
 
-def _concat(arrays: list[Column]) -> Column:
+def _concat(arrays: list[str]) -> str:
     if not arrays:
-        return _empty()
+        return EMPTY_VIOLS
     if len(arrays) == 1:
         return arrays[0]
-    return F.concat(*arrays)
+    return f"concat({', '.join(arrays)})"
 
 
 def _require_java_safe(pattern: str) -> str:
@@ -136,64 +186,64 @@ def _require_java_safe(pattern: str) -> str:
     return to_java_pattern(pattern)
 
 
-def _not_number(expr: Column, dtype, _arg) -> Column:
+def _not_number(expr: str, dtype, _arg) -> str:
     if isinstance(dtype, _FRACTIONAL_TYPES):
-        return expr.isNull() | F.isnan(expr)
-    return expr.isNull()
+        return f"({expr} IS NULL OR isnan({expr}))"
+    return f"({expr} IS NULL)"
 
 
-def _not_integer(expr: Column, dtype, _arg) -> Column:
-    cond = expr.isNull()
+def _not_integer(expr: str, dtype, _arg) -> str:
+    conds = [f"{expr} IS NULL"]
     if isinstance(dtype, _FRACTIONAL_TYPES):
-        cond = cond | F.isnan(expr) | (expr != F.floor(expr))
+        conds += [f"isnan({expr})", f"{expr} != floor({expr})"]
     elif isinstance(dtype, T.DecimalType) and dtype.scale > 0:
         # a decimal with nonzero scale can hold 1.50: integrality must
         # be checked (no NaN branch — decimals cannot be NaN)
-        cond = cond | (expr != F.floor(expr))
+        conds.append(f"{expr} != floor({expr})")
     # JS safe-integer bound applies to longs/decimals too (SURVEY §7.4)
     if not isinstance(dtype, (T.ByteType, T.ShortType, T.IntegerType)):
-        cond = cond | (F.abs(expr) > F.lit(E.MAX_SAFE_INTEGER))
-    return cond
+        conds.append(f"abs({expr}) > {sql_lit(E.MAX_SAFE_INTEGER)}")
+    return f"({' OR '.join(conds)})"
 
 
-#: leaf check -> (column types it accepts, failure predicate). A type check
-#: on any other type (or a statically undefined value) fails outright;
-#: constraint checks follow a type check, so accept whatever it accepted.
+#: leaf check -> (column types it accepts, failure predicate template). A
+#: type check on any other type (or a statically undefined value) fails
+#: outright; constraint checks follow a type check, so accept whatever it
+#: accepted.
 _CHECKS = {
-    "string": (T.StringType, lambda e, dt, a: e.isNull()),
-    "boolean": (T.BooleanType, lambda e, dt, a: e.isNull()),
+    "string": (T.StringType, lambda e, dt, a: f"({e} IS NULL)"),
+    "boolean": (T.BooleanType, lambda e, dt, a: f"({e} IS NULL)"),
     "number": (_NUMERIC_TYPES, _not_number),
     "integer": (_NUMERIC_TYPES, _not_integer),
-    "enum": (None, lambda e, dt, a: ~e.isin(*a)),
-    "min_length": (None, lambda e, dt, a: js_strlen(e) < F.lit(a)),
-    "max_length": (None, lambda e, dt, a: js_strlen(e) > F.lit(a)),
-    "regex": (None, lambda e, dt, a: ~e.rlike(_require_java_safe(a))),
-    "min": (None, lambda e, dt, a: e < F.lit(a)),
-    "max": (None, lambda e, dt, a: e > F.lit(a)),
+    "enum": (None, lambda e, dt, a: f"NOT {sql_in(e, a)}"),
+    "min_length": (None, lambda e, dt, a: f"({js_strlen(e)} < {sql_lit(a)})"),
+    "max_length": (None, lambda e, dt, a: f"({js_strlen(e)} > {sql_lit(a)})"),
+    "regex": (None, lambda e, dt, a: f"NOT ({e} RLIKE {sql_str(_require_java_safe(a))})"),
+    "min": (None, lambda e, dt, a: f"({e} < {sql_lit(a)})"),
+    "max": (None, lambda e, dt, a: f"({e} > {sql_lit(a)})"),
 }
 
 
 class _Compiler:
-    """Plan -> Column emitter, dtype-directed.
+    """Plan -> SQL text emitter, dtype-directed.
 
     ``expr is None`` means the value is statically *undefined* (a field the
     data's type does not carry) — composite validators then emit their
     "wrong shape" error without recursing, exactly like the reference
-    validating ``undefined`` (validate.ts:130-132,163-165).
+    validating ``undefined`` (validate.ts:130-132,163-165). Lambda variables
+    are named by ``depth``, which grows strictly into nested lambdas, so an
+    inner ``transform`` never shadows an outer index its paths still use.
     """
 
-    def __init__(self, max_unroll: int = 32):
-        self.max_unroll = max_unroll
-
-    def _const(self, path: Column, error: str, expr: Column | None) -> Column:
-        value = F.lit(_UNDEF_JSON) if expr is None else _json_value(expr)
+    def _const(self, path: str, error: str, expr: str | None) -> str:
+        value = sql_str(_UNDEF_JSON) if expr is None else _json_value(expr)
         return _viol(path, E.rule_id_for(error), error, value)
 
-    def compile(self, node, expr: Column | None, dtype: T.DataType | None,
-                path: Column, depth: int = 0) -> Column:
-        if depth > self.max_unroll:
+    def compile(self, node, expr: str | None, dtype: T.DataType | None,
+                path: str, depth: int = 0) -> str:
+        if depth > _MAX_UNROLL:
             raise TypedCompileError(
-                f"custom-type recursion exceeds unroll budget ({self.max_unroll})"
+                f"custom-type recursion exceeds unroll budget ({_MAX_UNROLL})"
             )
         if isinstance(node, Leaf):
             return self._leaf(node, expr, dtype, path)
@@ -205,10 +255,10 @@ class _Compiler:
             return self._map(node, expr, dtype, path, depth)
         return self._object(node, expr, dtype, path, depth)
 
-    def _leaf(self, node: Leaf, expr, dtype, path: Column) -> Column:
+    def _leaf(self, node: Leaf, expr, dtype, path: str) -> str:
         """First-error chain (validate.ts:50-89,194-205) as one CASE WHEN."""
         if not node.checks:  # any
-            return _empty()
+            return EMPTY_VIOLS
         (check, arg, error), rest = node.checks[0], node.checks[1:]
         if check == "and":  # data-level failure for every row
             return self._const(path, error, None)
@@ -216,126 +266,108 @@ class _Compiler:
         if check in ("undefined", "null"):
             # SQL NULL is both undefined and null (module docstring)
             if expr is None:
-                return _empty() if check == "undefined" else bad
-            return F.when(expr.isNull(), _empty()).otherwise(bad)
+                return EMPTY_VIOLS if check == "undefined" else bad
+            return sql_case((f"{expr} IS NULL", EMPTY_VIOLS), otherwise=bad)
         accepts, fails = _CHECKS[check]
         if expr is None or not isinstance(dtype, accepts):
             return bad
-        chain = F.when(fails(expr, dtype, arg), bad)
+        chain = [(fails(expr, dtype, arg), bad)]
         for check, arg, error in rest:
-            chain = chain.when(_CHECKS[check][1](expr, dtype, arg), self._const(path, error, expr))
-        return chain.otherwise(_empty())
+            chain.append((_CHECKS[check][1](expr, dtype, arg), self._const(path, error, expr)))
+        return sql_case(*chain, otherwise=EMPTY_VIOLS)
 
     # -- composite types --------------------------------------------------------
-    def _union(self, node: Union, expr, dtype, path, depth) -> Column:
+    def _union(self, node: Union, expr, dtype, path, depth) -> str:
         """validateOneOf (validate.ts:91-104): first-pass-wins is an OR of
         branch pass-bits; on total failure the union error plus every
         branch's violations, in branch order."""
         compiled = [self.compile(b, expr, dtype, path, depth + b.hops) for b in node.branches]
-        any_pass = None
-        for arr in compiled:
-            bit = F.size(arr) == 0
-            any_pass = bit if any_pass is None else (any_pass | bit)
+        any_pass = " OR ".join(f"size({arr}) = 0" for arr in compiled)
         union_err = self._const(path, E.UNION_MISMATCH, expr)
-        return F.when(any_pass, _empty()).otherwise(_concat([union_err] + compiled))
+        return sql_case((any_pass, EMPTY_VIOLS), otherwise=_concat([union_err] + compiled))
 
-    def _sized(self, node: Array | Map, expr, path, error: str) -> Column:
+    def _sized(self, node: Array | Map, expr, path, error: str, rest: str) -> str:
         """NULL fails with ``error``; a size outside the bounds fails with the
-        size itself as the offending value (validate.ts:111-115,173-177)."""
-        chain = F.when(expr.isNull(), self._const(path, error, expr))
+        size itself as the offending value (validate.ts:111-115,173-177);
+        else ``rest``."""
+        chain = [(f"{expr} IS NULL", self._const(path, error, expr))]
         lo, hi = node.min_len, node.max_len
         if lo > 0 or hi < E.MAX_SAFE_INTEGER:
             size_err = E.arr_length(lo, hi) if isinstance(node, Array) else E.map_size(lo, hi)
-            chain = chain.when(
-                ~F.size(expr).between(lo, hi),
-                _viol(path, E.rule_id_for(size_err), size_err, F.size(expr).cast("string")),
-            )
-        return chain
+            size = f"size({expr})"
+            chain.append((
+                f"NOT ({size} >= {sql_lit(lo)} AND {size} <= {sql_lit(hi)})",
+                _viol(path, E.rule_id_for(size_err), size_err, f"CAST({size} AS STRING)"),
+            ))
+        return sql_case(*chain, otherwise=rest)
 
-    def _array(self, node: Array, expr, dtype, path, depth) -> Column:
+    def _array(self, node: Array, expr, dtype, path, depth) -> str:
         if expr is None or not isinstance(dtype, T.ArrayType):
             return self._const(path, E.NOT_ARRAY, expr)
-        elem_viols = F.flatten(
-            F.transform(
-                expr,
-                lambda x, i: self.compile(
-                    node.elem,
-                    x,
-                    dtype.elementType,
-                    F.concat(path, F.lit("["), i.cast("string"), F.lit("]")),
-                    depth + 1 + node.elem.hops,
-                ),
-            )
+        x, i = f"__yv_x{depth}", f"__yv_i{depth}"
+        elem = self.compile(
+            node.elem, x, dtype.elementType,
+            f"concat({path}, '[', CAST({i} AS STRING), ']')",
+            depth + 1 + node.elem.hops,
         )
         # the length check precedes element recursion
-        return self._sized(node, expr, path, E.NOT_ARRAY).otherwise(elem_viols)
+        return self._sized(node, expr, path, E.NOT_ARRAY,
+                           f"flatten(transform({expr}, ({x}, {i}) -> {elem}))")
 
-    def _map(self, node: Map, expr, dtype, path, depth) -> Column:
+    def _map(self, node: Map, expr, dtype, path, depth) -> str:
         if expr is None or not isinstance(dtype, T.MapType):
             return self._const(path, E.NOT_OBJECT, expr)
         if not isinstance(dtype.keyType, T.StringType):
             raise TypedCompileError("$map requires map<string, _> column")
-        pattern = None if node.regex is None else _require_java_safe(node.regex)
-
-        def entry_viols(e: Column) -> Column:
-            key, val = e["key"], e["value"]
-            val_viols = self.compile(
-                node.value, val, dtype.valueType, F.concat(path, F.lit("."), key),
-                depth + 1 + node.value.hops,
-            )
-            if pattern is None:
-                return val_viols
+        e = f"__yv_e{depth}"
+        key = f"{e}.key"
+        key_path = f"concat({path}, '.', {key})"
+        entry = self.compile(node.value, f"{e}.value", dtype.valueType, key_path,
+                             depth + 1 + node.value.hops)
+        if node.regex is not None:
             # failing keys report the whole map and skip value validation
             # (validate.ts:179-185)
-            key_viol = _viol(
-                F.concat(path, F.lit("."), key),
-                "regex_mismatch",
-                E.REGEX_MISMATCH,
-                F.to_json(expr),
-            )
-            return F.when(~key.rlike(pattern), key_viol).otherwise(val_viols)
+            pattern = sql_str(_require_java_safe(node.regex))
+            key_viol = _viol(key_path, "regex_mismatch", E.REGEX_MISMATCH, f"to_json({expr})")
+            entry = sql_case((f"NOT ({key} RLIKE {pattern})", key_viol), otherwise=entry)
+        entries = f"flatten(transform(map_entries({expr}), {e} -> {entry}))"
+        return self._sized(node, expr, path, E.NOT_OBJECT, entries)
 
-        entries = F.flatten(F.transform(F.map_entries(expr), entry_viols))
-        return self._sized(node, expr, path, E.NOT_OBJECT).otherwise(entries)
-
-    def _object(self, node: Object, expr, dtype, path, depth) -> Column:
+    def _object(self, node: Object, expr, dtype, path, depth) -> str:
         if expr is None or not isinstance(dtype, T.StructType):
             return self._const(path, E.NOT_OBJECT, expr)
         children = self._object_children(node, expr, dtype, path, depth)
-        return F.when(
-            expr.isNull(), self._const(path, E.NOT_OBJECT, expr)
-        ).otherwise(_concat(children) if children else _empty())
+        return sql_case((f"{expr} IS NULL", self._const(path, E.NOT_OBJECT, expr)),
+                        otherwise=_concat(children))
 
     def _object_children(self, node: Object, expr, dtype: T.StructType, path, depth,
-                         ignore: tuple[str, ...] = ()) -> list[Column]:
+                         ignore: tuple[str, ...] = ()) -> list[str]:
         """Closed-world record checks (validateObject, validate.ts:128-159):
         declared fields validate (missing ones against undefined); struct
         fields not declared are extra-key violations (known at compile
-        time)."""
-        children: list[Column] = []
+        time). ``expr is None`` is the row itself: fields are top-level
+        columns."""
+        def field(name: str) -> str:
+            return sql_ident(name) if expr is None else f"{expr}.{sql_ident(name)}"
+
+        children: list[str] = []
         field_types = {f.name: f.dataType for f in dtype.fields}
         declared = set()
         for data_key, sub in node.fields:
             declared.add(data_key)
-            sub_path = F.concat(path, F.lit("." + data_key))
+            sub_path = f"concat({path}, {sql_str('.' + data_key)})"
             sub_depth = depth + 1 + sub.hops
             if data_key in field_types:
-                child_expr = expr[data_key] if expr is not None else _root_col(data_key)
                 children.append(
-                    self.compile(sub, child_expr, field_types[data_key], sub_path, sub_depth)
+                    self.compile(sub, field(data_key), field_types[data_key], sub_path, sub_depth)
                 )
             else:
                 children.append(self.compile(sub, None, None, sub_path, sub_depth))
         for name in field_types:
             if name not in declared and name not in ignore:
-                child_expr = expr[name] if expr is not None else _root_col(name)
                 children.append(
-                    _viol(
-                        F.concat(path, F.lit("." + name)),
-                        "extra_key",
-                        E.EXTRA_KEY,
-                        _json_value(child_expr),
-                    )
+                    _viol(f"concat({path}, {sql_str('.' + name)})", "extra_key", E.EXTRA_KEY,
+                          _json_value(field(name)))
                 )
         return children
 
@@ -356,20 +388,19 @@ def compile_schema(
     df_schema: T.StructType,
     *,
     ignore_columns: tuple[str, ...] = (),
-    max_unroll: int = 32,
-) -> Column:
-    """Compile a root object schema against a DataFrame schema into one
-    ``violations`` Column. The row itself is the object under validation
-    (always present, so the root never raises "not an Object").
+) -> str:
+    """Compile a root object schema against a DataFrame schema into the SQL
+    text of one ``violations`` expression. The row itself is the object
+    under validation (always present, so the root never raises "not an
+    Object").
 
     ``ignore_columns`` exempts engine/bookkeeping columns from the
     closed-world extra-key rule. Raises :class:`SchemaError` for malformed
     schemas (the reference throws).
     """
-    children = _Compiler(max_unroll)._object_children(
-        _root_object(schema), None, df_schema, F.lit("$"), 0, ignore=tuple(ignore_columns)
-    )
-    return _concat(children) if children else _empty()
+    return _concat(_Compiler()._object_children(
+        _root_object(schema), None, df_schema, sql_str("$"), 0, ignore=tuple(ignore_columns)
+    ))
 
 
 # --- schema -> Spark type (validationToType analog, type.ts:33-92) -----------
