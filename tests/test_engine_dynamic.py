@@ -1,6 +1,12 @@
-"""Dynamic (mapInPandas interpreter) path: the full ported reference corpus
-runs through Spark as a table of (case_id, data_json) rows and must reproduce
-every pass/fail verdict and golden output tree."""
+"""Dynamic path: the full ported reference corpus runs through Spark as a
+table of (case_id, data_json) rows and must reproduce every pass/fail
+verdict and golden output tree.
+
+The path is one projection: the VARIANT screen decides what it can, and one
+interpreter UDF (a scalar pandas UDF) decides the rest. ``jvm_fraction`` in
+:func:`yaschva_spark.engine.screen_coverage` is the share of rows the
+interpreter never ran on: their payload does not cross Arrow, only a NULL
+cell does."""
 
 from __future__ import annotations
 
@@ -8,8 +14,14 @@ import json
 
 import pytest
 
-from yaschva_spark.engine import PASS_COL, validate_json_table
-from yaschva_spark.interp import UNDEFINED, UNDEFINED_TOKEN, output_to_jsonable
+from yaschva_spark.engine import PASS_COL, screen_coverage, validate_json_table
+from yaschva_spark.interp import (
+    UNDEFINED,
+    UNDEFINED_TOKEN,
+    output_to_jsonable,
+    validate as interp_validate,
+    violations_from_output,
+)
 from yaschva_spark.schema import SchemaError
 
 from tests.cases_validate import CASES
@@ -86,19 +98,15 @@ def test_dynamic_violation_rows(spark):
 
 
 def test_screen_coverage_telemetry(spark):
-    """The split plan's observe() metrics report the proven fraction for
-    free (no extra pass), and the nested driver query's fraction is pinned
+    """The screen projection's observe() metrics report the proven fraction
+    for free (no extra pass), and the nested entry query's fraction is pinned
     so a screen-fragment regression (rows silently falling back to the
     interpreter) shows up here, not as a bench mystery."""
-    from yaschva_spark.cache import unpersist_intermediates
-    from yaschva_spark.engine import screen_coverage
-
     import __spark_entry__ as entrymod
 
     df = entrymod.queries()["nested_json_validation"](spark, "/root/testdata/sf0.001")
     n_viol = df.count()
     cov = screen_coverage("nested_json_validation")
-    unpersist_intermediates()
     assert n_viol == 285
     assert cov == {
         "n_rows": 500,
@@ -120,3 +128,77 @@ def test_reserved_column_prefix_rejected(spark):
     df = spark.createDataFrame([(1, '{"k": 1}')], "__yv_s0_0 long, js string")
     with pytest.raises(ValueError, match="__yv_s0_0"):
         validate_json_table(df, {"k": "integer"}, "js")
+
+
+#: one of each row class the one-pass plan must tell apart: screen-emitted
+#: pass and fail rows, interpreter residue, and both spellings of an
+#: undefined root
+EDGE_SCHEMA = {"cnt": "integer", "note": ["?", "string"]}
+EDGE_ROWS = [
+    '{"cnt": 1}',                       # emitted pass
+    '{"cnt": 2, "note": "n"}',          # emitted pass through a union branch
+    '{"cnt": "x"}',                     # emitted fail: not_integer
+    '{"cnt": 1, "note": 4}',            # emitted fail: union mismatch
+    '{"cnt": 1.5}',                     # residue: a double offending value
+    '{"cnt": 1, "extra": true}',        # residue: closed-world extra key
+    '[1, 2]',                           # residue: non-object root
+    None,                               # SQL NULL: undefined root
+    UNDEFINED_TOKEN,                    # the literal undefined root
+]
+
+
+def _interpreted(raw):
+    """The spec, in this process: (yv_valid, violations, yv_output)."""
+    value = UNDEFINED if raw is None or raw == UNDEFINED_TOKEN else json.loads(raw)
+    res = interp_validate(EDGE_SCHEMA, value)
+    viols = [
+        (r["path"], r["rule"], r["error"], r["value"])
+        for r in violations_from_output(res.get("vtree", res["output"]))
+    ]
+    return (
+        res["result"] == "pass",
+        viols,
+        json.dumps(output_to_jsonable(res["output"]), separators=(",", ":")),
+    )
+
+
+def _got(row):
+    return (row[PASS_COL], [tuple(v) for v in row["yv_violations"]], row["yv_output"])
+
+
+_VALIDATED_DDL = (
+    "yv_valid:boolean,yv_violations:array<struct<path:string,rule:string,"
+    "error:string,value:string>>,yv_output:string"
+)
+
+
+@pytest.mark.parametrize("screen", [True, False])
+def test_one_pass_edge_rows_match_interpreter(spark, screen):
+    """Every row class, all of them in each partition (so one Arrow batch
+    carries NULL cells for emitted rows next to interpreted ones), is
+    byte-identical to the interpreter run here, under both plans; so are
+    the empty input and ``keep_cols=[]``, and the output schema is the
+    documented one."""
+    par = spark.sparkContext.defaultParallelism  # no repartition: one copy per partition
+    rows = [(i, EDGE_ROWS[i % len(EDGE_ROWS)]) for i in range(par * len(EDGE_ROWS))]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, par), "id long, js string")
+    name = f"edge_rows_{screen}"
+    out = validate_json_table(df, EDGE_SCHEMA, "js", keep_cols=["id"], screen=screen,
+                              observe=name)
+    assert out.schema.simpleString() == f"struct<id:bigint,{_VALIDATED_DDL}>"
+    got = {r["id"]: _got(r) for r in out.collect()}
+    assert got == {i: _interpreted(raw) for i, raw in rows}
+    if screen:
+        cov = screen_coverage(name)
+        residue = cov["n_rows"] - cov["n_proven"] - cov["n_proven_fail"]
+        assert cov["n_proven"] > 0 and cov["n_proven_fail"] > 0 and residue > 0, cov
+    else:
+        assert screen_coverage(name) is None
+
+    bare = validate_json_table(df, EDGE_SCHEMA, "js", keep_cols=[], screen=screen)
+    assert bare.schema.simpleString() == f"struct<{_VALIDATED_DDL}>"
+    assert sorted(map(_got, bare.collect())) == sorted(_interpreted(raw) for _, raw in rows)
+
+    empty = validate_json_table(df.limit(0), EDGE_SCHEMA, "js", screen=screen)
+    assert empty.schema.simpleString() == f"struct<id:bigint,js:string,{_VALIDATED_DDL}>"
+    assert empty.collect() == []

@@ -1,7 +1,7 @@
 """Sweeping physical-plan audit over EVERY driver query: row-at-a-time
 Python is banned outright, and Arrow/pandas stages may appear only in the
 operators whose kernels are deliberately numpy-batched (vector math,
-SimHash bit-voting, the dynamic-path interpreter tail). Everything else
+SimHash bit-voting, the dynamic-path interpreter UDF). Everything else
 must plan as pure Catalyst — this pins the engine's core scale contract
 ("no per-row Python", input_hint) against every future operator edit.
 """
@@ -16,8 +16,8 @@ SF = "/root/testdata/sf0.001"
 
 # operators whose design includes an Arrow-batched kernel (and why):
 PANDAS_STAGES_OK = {
-    "props_json_validation",   # interpreter tail over the VARIANT screen
-    "nested_json_validation",  # split plan: interpreter tail only (proven rows pure JVM)
+    "props_json_validation",   # interpreter UDF over the VARIANT screen
+    "nested_json_validation",  # one projection: screen-decided rows reach the UDF as NULL
     "ks_drift_by_lang",        # per-group ECDF kernel (applyInPandas)
     "cosine_topk",             # batched GEMM scoring
     "ann_lsh_topk",            # hyperplane sign-bit GEMM

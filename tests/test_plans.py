@@ -3,6 +3,8 @@ depends on, asserted so a refactor can't silently regress them."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from yaschva_spark import checks
@@ -135,8 +137,6 @@ def test_contamination_hash_mode_exchanges_long_keys(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     train = docs.filter(F.col("doc_id") >= 25)
     ev = docs.filter(F.col("doc_id") < 25)
-    import re
-
     out = ngram_contamination(train, ev, "doc_id", "text", n=3, by_hash=True)
     assert dict(out.select("*").drop("id").dtypes).get("sh") is None  # sh not in output
     assert "xxhash64" in out._jdf.queryExecution().analyzed().toString()
@@ -208,6 +208,54 @@ def test_bucketed_write_validates(spark, tmp_path):
         write_bucketed(docs, "t", (), 4)
 
 
+def _nested_json_source(spark):
+    """The nested_json_validation query's input, (doc_id, js), over one
+    uncached parquet scan."""
+    spark.catalog.clearCache()  # plan-shape tests: no InMemoryTableScan swap
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    js = F.concat(
+        F.lit('{"meta": {"lang": "'), F.col("lang"),
+        F.lit('", "n": '), F.col("n_chars").cast("string"),
+        F.lit('}, "ids": ['), F.col("doc_id").cast("string"), F.lit("]}"),
+    )
+    return docs.select("doc_id", js.alias("js"))
+
+
+def _plan_nodes(plan: str) -> list[str]:
+    """The operator name on each line of a physical plan string, top down
+    (tree glyphs and whole-stage-codegen ids stripped)."""
+    return [m.group(1) for ln in plan.splitlines()
+            if (m := re.match(r"[\s+:|-]*(?:\*\(\d+\) )?(\w+)", ln))]
+
+
+def test_dynamic_path_is_one_projection(spark):
+    """validate_json_table plans as ONE projection over ONE scan: the
+    screen levels, then one Arrow-evaluated interpreter UDF; no persist,
+    no union of branches, no map-in-pandas tail. The UDF is
+    nondeterministic, which makes its projection a filter barrier: without
+    it the explode's inferred ``size(v) > 0`` and the caller's filter are
+    inlined through the screen levels and the Exchange down to the scan,
+    and the filters' Python UDF calls are evaluated a second time (a count
+    of the 100k-row props query took 15 s without it against 2.2 s with
+    it, 4-core host)."""
+    import __spark_entry__ as e
+    from yaschva_spark.engine import PASS_COL, explode_violations, validate_json_table
+
+    validated = validate_json_table(
+        _nested_json_source(spark), e.NESTED_JSON_SCHEMA, "js", keep_cols=["doc_id"],
+        screen=True,
+    )
+    plan = _physical(explode_violations(validated.filter(~F.col(PASS_COL)), ["doc_id"]))
+    nodes = _plan_nodes(plan)
+    assert nodes.count("ArrowEvalPython") == 1, plan
+    for banned in ("MapInPandas", "InMemoryTableScan", "Union", "BatchEvalPython"):
+        assert banned not in nodes, plan
+    assert nodes.count("FileScan") == 1, plan
+    below = nodes[nodes.index("ArrowEvalPython") + 1:]
+    assert "Filter" not in below, plan
+    assert plan.count("parseJson(") == 1, plan  # the root try_parse_json
+
+
 def test_staged_screen_keeps_projection_boundaries(spark):
     """The staged screen's win depends on Catalyst NOT collapsing the
     chained level-projections back into one tree (CollapseProject keeps a
@@ -218,14 +266,7 @@ def test_staged_screen_keeps_projection_boundaries(spark):
     import __spark_entry__ as e
     from yaschva_spark.jsonscreen import compile_screens, select_levels
 
-    spark.catalog.clearCache()  # plan-shape test: no InMemoryTableScan swap
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    js = F.concat(
-        F.lit('{"meta": {"lang": "'), F.col("lang"),
-        F.lit('", "n": '), F.col("n_chars").cast("string"),
-        F.lit('}, "ids": ['), F.col("doc_id").cast("string"), F.lit("]}"),
-    )
-    src = docs.select("doc_id", js.alias("js"))
+    src = _nested_json_source(spark)
     levels, sc = compile_screens(e.NESTED_JSON_SCHEMA, "js")
     assert sum(1 for lvl in levels if lvl) >= 3  # parse, extractions, leaf derivations
     out = select_levels(src, levels).select(

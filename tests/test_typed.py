@@ -18,7 +18,7 @@ from yaschva_spark.engine import (
 )
 from yaschva_spark.generate import generate
 from yaschva_spark.interp import UNDEFINED, validate as iv, violations_from_output
-from yaschva_spark.typed import TypedCompileError, schema_to_spark_type
+from yaschva_spark.typed import TypedCompileError, compile_schema, schema_to_spark_type
 
 DIFF_SCHEMA = {
     "name": {"$string": {"minLength": 2, "maxLength": 30}},
@@ -156,6 +156,44 @@ def test_recursion_unrolls_to_struct_depth(spark):
     )
     got = [r[PASS_COL] for r in validate_table(df, schema).collect()]
     assert got == [True, False]  # second row: inner value undefined -> not a string
+
+
+def _tree_type(depth):
+    """``root``: a struct ``{value, left}`` nested ``depth`` levels."""
+    from pyspark.sql import types as T
+
+    t = T.StructType([T.StructField("value", T.StringType())])
+    for _ in range(depth - 1):
+        t = T.StructType([T.StructField("value", T.StringType()), T.StructField("left", t)])
+    return T.StructType([T.StructField("root", t)])
+
+
+def test_recursive_union_text_is_linear_in_depth(spark):
+    """A union binds its branch arrays once, so a recursive ``$types``
+    union compiles to text linear in the struct depth it unrolls to (with
+    each branch spelled twice it doubled per level: 28k chars at depth 4,
+    625k at depth 8), and the nested unions still accumulate the
+    interpreter's violations at every level."""
+    schema = {
+        "$types": {"$tree": {"value": "string", "left": ["?", "$tree"]}},
+        "root": "$tree",
+    }
+    n4, n8 = (len(compile_schema(schema, _tree_type(d))) for d in (4, 8))
+    assert n8 < 4 * n4, (n4, n8)
+
+    def chain(depth, leaf):  # leaf None: the deepest value is undefined
+        node = {} if leaf is None else {"value": leaf}
+        for i in range(depth - 1):
+            node = {"value": f"v{i}", "left": node}
+        return node
+
+    values = [chain(8, "z"), chain(8, None), chain(5, None), chain(1, None)]
+    df = spark.createDataFrame([(v,) for v in values], _tree_type(8))
+    for value, row in zip(values, validate_table(df, schema).collect()):
+        res = iv(schema, {"root": value})
+        want = sorted((r["path"], r["rule"], r["error"]) for r in violations_from_output(res["output"]))
+        got = sorted((v["path"], v["rule"], v["error"]) for v in row[VIOLATIONS_COL])
+        assert row[PASS_COL] == (res["result"] == "pass") and got == want, value
 
 
 def test_alias_chain_beyond_budget_falls_back(spark):

@@ -11,7 +11,7 @@ Layout
 - ``errors``    exact reference error strings + rule ids
 - ``schema``    schema language: parse / guards / $and merge / $types env
 - ``interp``    reference-faithful pure-Python interpreter (executable spec;
-                also the vectorized mapInPandas fallback for dynamic schemas)
+                also the Arrow-batched pandas UDF fallback for dynamic schemas)
 - ``generate``  seeded fixture generator (reference generate() semantics)
 - ``typed``     schema -> Spark StructType + the typed Catalyst fast path
 - ``engine``    DataFrame-level validate() entry points

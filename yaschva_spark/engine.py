@@ -9,10 +9,10 @@ Two execution paths, chosen per schema:
 
 * **Dynamic path** (:func:`validate_json_table`) — full reference semantics
   (undefined vs null, multi-type unions, ``any``, unbounded recursion) over
-  a JSON-text column, evaluated by the reference-faithful interpreter inside
-  an Arrow-batched ``mapInPandas`` stage. Batch-level Python (one call per
-  Arrow batch), used only for schemas the static compiler can't express —
-  mirroring SURVEY.md §2.2's UDF policy.
+  a JSON-text column: one projection in which the VARIANT screen decides
+  the rows it can JVM-side and the reference-faithful interpreter, one
+  Arrow-batched scalar pandas UDF, decides the rest — mirroring SURVEY.md
+  §2.2's UDF policy.
 
 :func:`validate_auto` picks the typed path when possible and falls back.
 """
@@ -20,13 +20,13 @@ Two execution paths, chosen per schema:
 from __future__ import annotations
 
 import json
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from yaschva_spark.cache import persist_tracked
 from yaschva_spark.interp import (
+    UNDEFINED,
     UNDEFINED_TOKEN,
     validate as interp_validate,
     output_to_jsonable,
@@ -56,8 +56,9 @@ def screen_coverage(name: str) -> dict[str, Any] | None:
     "proven_fraction"}``, or None if the named observation doesn't exist
     (screen off / schema unscreenable / not yet requested). Blocks until
     the observed DataFrame's first action if one is in flight — call after
-    the action. The split plan's win is exactly this fraction (proven rows
-    never cross Arrow), so jobs should log it; ``bench.py`` does."""
+    the action. ``jvm_fraction`` counts the rows the interpreter never ran
+    on: their payload does not cross Arrow, only a NULL cell does (and a
+    NULL result comes back). Jobs should log it; ``bench.py`` does."""
     obs = _SCREEN_OBS.get(name)
     if obs is None:
         return None
@@ -68,11 +69,10 @@ def screen_coverage(name: str) -> dict[str, Any] | None:
         "n_rows": n,
         "n_proven": proven,
         # rows the fail screen emitted JVM-side (provably failing,
-        # byte-exact violations) — these skip Arrow too
+        # byte-exact violations) — the interpreter skips these too
         "n_proven_fail": proven_fail,
         "proven_fraction": round(proven / n, 6) if n else None,
-        # the split plan's true win: the fraction of the table that never
-        # crosses the Arrow boundary in either direction
+        # the fraction of the table the interpreter never ran on
         "jvm_fraction": round((proven + proven_fail) / n, 6) if n else None,
     }
 
@@ -129,6 +129,45 @@ def explode_violations(validated: DataFrame, id_cols: list[str]) -> DataFrame:
     )
 
 
+def _interpreter(schema: Any):
+    """The interpreter as one scalar pandas UDF over JSON text:
+    ``struct<valid, viols, out>`` per row, all NULL for a NULL cell (a row
+    the screen already decided). Nondeterministic on purpose: that makes
+    its projection a barrier Catalyst does not push filters through — the
+    inferred ``size(yv_violations) > 0`` of an explode and any caller
+    filter would otherwise be inlined through the staged screen levels and
+    the Exchange down to the scan, re-running the screen per consumer."""
+    schema_blob = json.dumps(schema)  # ship the schema to executors as text
+
+    def run(texts):
+        import pandas as pd  # executor side: engine's import stays pandas-free
+
+        node = json.loads(schema_blob)
+        valid, viols, outputs = [], [], []
+        for raw in texts:
+            if raw is None:
+                valid.append(None)
+                viols.append(None)
+                outputs.append(None)
+                continue
+            value = UNDEFINED if raw == UNDEFINED_TOKEN else json.loads(raw)
+            result = interp_validate(node, value)
+            valid.append(result["result"] == "pass")
+            # derive paths from the UNflattened tree: the reference's output
+            # flat()tens nested array outputs, which would shift every [i]
+            # segment after a nested-array element
+            rows = violations_from_output(result.get("vtree", result["output"]))
+            viols.append([
+                {"path": r["path"], "rule": r["rule"], "error": r["error"], "value": r["value"]}
+                for r in rows
+            ])
+            outputs.append(json.dumps(output_to_jsonable(result["output"]), separators=(",", ":")))
+        return pd.DataFrame({"valid": valid, "viols": viols, "out": outputs})
+
+    ddl = f"struct<valid: boolean, viols: {VIOLATION_DDL}, out: string>"
+    return F.pandas_udf(run, ddl).asNondeterministic()
+
+
 def validate_json_table(
     df: DataFrame,
     schema: Any,
@@ -139,7 +178,7 @@ def validate_json_table(
     observe: str | None = None,
 ) -> DataFrame:
     """Dynamic path: validate a JSON-text column with exact reference
-    semantics via the interpreter, Arrow batch at a time.
+    semantics, in one projection.
 
     The literal ``"__undefined__"`` as the whole cell (or SQL NULL) encodes
     a JS-undefined root (FIXTURES.md §1). Appends ``yv_valid``,
@@ -151,40 +190,30 @@ def validate_json_table(
     of :func:`yaschva_spark.jsonscreen.compile_screens` decide, per row,
     ``pass`` (provably passes) and ``emit`` (the outcome, pass or fail, is
     exactly JVM-representable, with the interpreter's ``viols`` and
-    ``out`` byte for byte), and the plan SPLITS on ``emit`` into two
-    branches:
+    ``out`` byte for byte). On top of the staged screen levels sits ONE
+    interpreter UDF whose input is NULL on emitted rows, so an emitted
+    row's payload never crosses Arrow (a NULL cell and a NULL result do),
+    and each output column picks the screen's value on emitted rows and
+    the interpreter's on the rest. Passing rows never evaluate the
+    fail-side violation expression. Python cost is therefore linear in
+    the residue, not the table; on both bench corpora the residue is
+    empty. The screens are sound by construction (differential-tested
+    against the pure interpreter), so output is bit-identical with
+    ``screen=False``, which runs the same UDF on every row. Schemas outside
+    the screenable fragment silently run fully interpreted. The screens
+    compile on every call to SQL text, staged (shared subexpressions as
+    chained projection columns, see jsonscreen._Stager). No pass is
+    persisted, filtered twice or unioned: one scan feeds one projection.
 
-    * emitted rows take a pure-JVM projection — ``yv_valid`` is ``pass``,
-      ``yv_output`` is ``out``, and ``yv_violations`` is empty on pass rows
-      and ``viols`` otherwise, so passing rows never evaluate the fail-side
-      violation expression — and never cross the Arrow boundary;
-    * the residue (``~emit``) runs the interpreter inside ``mapInPandas``.
-
-    Python and serialization cost are therefore linear in the residue, not
-    the table; on the nested bench corpus the residue is empty. The screens
-    are sound by construction (differential-tested against the pure
-    interpreter), so output is bit-identical with ``screen=False``. Schemas
-    outside the screenable fragment silently run fully interpreted. The
-    screens compile on every call to SQL text, staged (shared
-    subexpressions as chained projection columns, see jsonscreen._Stager).
-
-    **Choose the plan by measurement** (sf0.1 events, 100k rows, 1 core):
-    the VARIANT screen evaluates ~2 interpreted JVM ops per schema check
-    (~32 us/row for the flat one-field number schema) while the full
-    interpreter including Arrow transfer is ~30 us/row — the screen is
-    NOT cheaper per row for narrow rows and small schemas, so there
-    ``screen=False`` (pure interpreter, linear scale-out) is the fastest
-    plan. The split pays off when the *saved transfer* dominates: wide
-    ``keep_cols`` (emitted rows never serialize their payload) and/or a
-    large schema. Both plans are exact; pick per corpus.
-
-    The split's one hazard is double evaluation: both branches read the
-    screened projection, and recomputing it means a second scan plus a
-    second ``try_parse_json`` (measured ~2x at sf0.1 — worse than the tax
-    it removes). The screened projection is therefore pinned through
-    :func:`yaschva_spark.cache.persist_tracked` — both branches read it
-    once; callers release it via ``cache.unpersist_intermediates()`` (the
-    bench/test convention).
+    **Choose the plan by measurement** (4-core host, warm; one call, its
+    violations explode and ``count()``; median and quartiles of 8 calls):
+    on the 100k-row events corpus (narrow ``{"k": number}`` blobs, about
+    half violating) the screened plan took 1.10 s (1.05–1.22) against
+    1.30 s (1.29–1.39) unscreened; on the 5k-row nested documents corpus
+    the unscreened plan was faster, 0.65 s (0.64–0.76) against 1.21 s
+    (1.15–1.41): at that size the screen's fixed cost (compiling,
+    analysing and code-generating its staged levels) outweighs the
+    interpreter work it saves. Both plans are exact; pick per corpus.
 
     Parallelism guard: validation is CPU-bound (variant screen and/or
     interpreter), so the stage needs at least one task per core. At
@@ -208,105 +237,58 @@ def validate_json_table(
         raise ValueError(f"input column {reserved[0]!r} uses the reserved __yv_ prefix")
     if observe is not None:
         _SCREEN_OBS.pop(observe, None)  # a stale observation must not answer
-    schema_blob = json.dumps(schema)  # ship the schema to executors as text
 
     screens = None
-    screen_levels: list = []
     if screen:
         try:
             screen_levels, screens = compile_screens(schema, json_col)
         except ScreenNotApplicable:
-            screens = None
-
-    out_ddl = ", ".join(f"`{c}` {df.schema[c].dataType.simpleString()}" for c in keep)
-    out_ddl = (out_ddl + ", " if out_ddl else "") + (
-        f"{PASS_COL} boolean, {VIOLATIONS_COL} {VIOLATION_DDL}, yv_output string"
-    )
-
-    def run_batches(batches: Iterator) -> Iterator:
-        import pandas as pd
-
-        from yaschva_spark.interp import UNDEFINED
-
-        node = json.loads(schema_blob)
-        for pdf in batches:
-            texts = pdf[json_col]
-            n = len(pdf)
-            valid = [True] * n
-            viols: list = [[] for _ in range(n)]
-            outputs: list = [None] * n
-            for idx, raw in enumerate(texts):
-                if raw is None or raw == UNDEFINED_TOKEN:
-                    value = UNDEFINED
-                else:
-                    value = json.loads(raw)
-                result = interp_validate(node, value)
-                ok = result["result"] == "pass"
-                valid[idx] = ok
-                # derive paths from the UNflattened tree: the reference's
-                # output flat()tens nested array outputs, which would shift
-                # every [i] segment after a nested-array element
-                rows = violations_from_output(result.get("vtree", result["output"]))
-                viols[idx] = [
-                    {"path": r["path"], "rule": r["rule"], "error": r["error"], "value": r["value"]}
-                    for r in rows
-                ]
-                outputs[idx] = json.dumps(
-                    output_to_jsonable(result["output"]), separators=(",", ":")
-                )
-            out = pdf[keep].copy() if keep else pd.DataFrame(index=pdf.index)
-            out[PASS_COL] = valid
-            out[VIOLATIONS_COL] = viols
-            out["yv_output"] = outputs
-            yield out
+            pass
 
     src = df.select(*need)
     par = df.sparkSession.sparkContext.defaultParallelism
     if src.rdd.getNumPartitions() < par:
         src = src.repartition(par)
 
+    interp = _interpreter(schema)
+    # Columns, not SQL text: a user column name in text would undergo
+    # ${...} substitution; the plan's own __yv_ names go in text
+    raw = F.coalesce(F.col(json_col), F.lit(UNDEFINED_TOKEN))
+    # output column -> (interpreter UDF field, screen column)
+    picks = {
+        PASS_COL: ("valid", "__yv_screen"),
+        VIOLATIONS_COL: ("viols", f"CAST(__yv_viols AS {VIOLATION_DDL})"),
+        "yv_output": ("out", "__yv_out"),
+    }
     if screens is None:
-        return src.mapInPandas(run_batches, schema=out_ddl)
-
-    passed, emit = screens["pass"], screens["emit"]
-    scr = select_levels(src, screen_levels).select(
-        *need,  # by name: in SQL text a name would undergo ${...} substitution
-        F.expr(f"{passed} AS __yv_screen"),
-        F.expr(f"{emit} AS __yv_emit"),
-        # NULL on the rows the interpreter takes, and the fail-side
-        # violation rows are built only for emitted FAILING rows
-        F.expr(f"{sql_case((emit, screens['out']))} AS __yv_out"),
-        F.expr(f"{sql_case((passed, EMPTY_VIOLS), (emit, screens['viols']))} AS __yv_viols"),
-    )
-    if observe is not None:
-        # free telemetry: a CollectMetrics node on the screened projection
-        # (the split plan's win IS this fraction; see screen_coverage())
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        scr = scr.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("__yv_screen").cast("long")).alias("n_proven"),
-            F.sum((F.col("__yv_emit") & ~F.col("__yv_screen")).cast("long")).alias(
-                "n_proven_fail"
-            ),
+        res = src.select(*keep, interp(raw).alias("__yv_r"))
+        outs = [f"__yv_r.{field} AS {col}" for col, (field, _) in picks.items()]
+    else:
+        passed, emit = screens["pass"], screens["emit"]
+        scr = select_levels(src, screen_levels).select(
+            *need,
+            F.expr(f"{passed} AS __yv_screen"),
+            F.expr(f"{emit} AS __yv_emit"),
+            # NULL on the rows the interpreter takes, and the fail-side
+            # violation rows are built only for emitted FAILING rows
+            F.expr(f"{sql_case((emit, screens['out']))} AS __yv_out"),
+            F.expr(f"{sql_case((passed, EMPTY_VIOLS), (emit, screens['viols']))} AS __yv_viols"),
         )
-        _SCREEN_OBS[observe] = obs
-    scr = persist_tracked(scr)
-    # ONE emitted branch covers proven-pass AND proven-fail rows: pure
-    # projection, no Arrow crossing; only the residue runs the interpreter.
-    # Two branches, not three: each branch is another scan of the persisted
-    # projection and another subtree for the planner.
-    emitted = scr.filter(F.col("__yv_emit")).select(
-        *keep,
-        F.col("__yv_screen").alias(PASS_COL),
-        F.col("__yv_viols").cast(VIOLATION_DDL).alias(VIOLATIONS_COL),
-        F.col("__yv_out").alias("yv_output"),
-    )
-    tail = (
-        scr.filter(~F.col("__yv_emit"))
-        .select(*need)
-        .mapInPandas(run_batches, schema=out_ddl)
-    )
-    return emitted.unionByName(tail)
+        if observe is not None:
+            # free telemetry: a CollectMetrics node on the screened projection
+            from pyspark.sql import Observation
+
+            obs = Observation()
+            scr = scr.observe(
+                obs,
+                F.expr("count(1) AS n_rows"),
+                F.expr("sum(CAST(__yv_screen AS BIGINT)) AS n_proven"),
+                F.expr("sum(CAST(__yv_emit AND NOT __yv_screen AS BIGINT)) AS n_proven_fail"),
+            )
+            _SCREEN_OBS[observe] = obs
+        res = scr.select("*", interp(F.when(~F.col("__yv_emit"), raw)).alias("__yv_r"))
+        outs = [
+            f"{sql_case(('__yv_emit', screened), otherwise=f'__yv_r.{field}')} AS {col}"
+            for col, (field, screened) in picks.items()
+        ]
+    return res.select(*keep, *map(F.expr, outs))

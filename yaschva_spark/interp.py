@@ -7,8 +7,8 @@ semantics (/root/reference/src/validate.ts). It serves three roles:
    reproduces every golden error tree from the reference's own test suite.
 2. **Dynamic fallback** for the Spark engine — schemas that the static
    Catalyst compiler can't express (unbounded recursion, heavy ``any``
-   unions) run through this interpreter inside an Arrow-batched
-   ``mapInPandas`` stage (see :mod:`yaschva_spark.engine`). Batch-level, not
+   unions) run through this interpreter inside one Arrow-batched scalar
+   pandas UDF (see :mod:`yaschva_spark.engine`). Batch-level, not
    driver-level: each executor validates its own Arrow batches.
 3. **Violation-row explosion** — :func:`violations_from_output` flattens the
    mirrored output tree into ``(path, rule, error, value_json)`` rows, the

@@ -7,7 +7,7 @@ Spark's VARIANT type — pure Python, no JVM access, so it compiles on
 every call — whose expressions decide a row's outcome — pass
 or fail, with the interpreter's exact violations and ``yv_output`` text —
 whenever that is possible JVM-side, so decided rows never cross the Arrow
-boundary (engine.validate_json_table splits the plan on them).
+boundary (engine.validate_json_table sends them to the interpreter as NULL).
 
 The screen does no schema dispatch of its own: it emits from
 :func:`yaschva_spark.schema.lower`'s plan, which already applied the

@@ -30,8 +30,8 @@ reader, and the per-row work is branch-predictable CASE WHEN chains. The
 violation array for a passing row is built lazily (CASE branches), so the
 happy path does not pay for error materialization — unlike the reference,
 which always builds the full mirrored output tree (README.md:180-195).
-Text repeats a subtree wherever it is referenced twice: a union's branches
-feed both its pass bits and its concat.
+Text spells each subtree once: a union binds its branch arrays to one
+lambda variable, so the text stays linear in the unrolled schema.
 """
 
 from __future__ import annotations
@@ -70,7 +70,7 @@ _FRACTIONAL_TYPES = (T.FloatType, T.DoubleType)
 
 class TypedCompileError(Exception):
     """Schema not expressible on the typed path — caller should fall back to
-    the dynamic (mapInPandas interpreter) path."""
+    the dynamic (interpreter) path."""
 
 
 # --- SQL text ----------------------------------------------------------------
@@ -278,13 +278,18 @@ class _Compiler:
 
     # -- composite types --------------------------------------------------------
     def _union(self, node: Union, expr, dtype, path, depth) -> str:
-        """validateOneOf (validate.ts:91-104): first-pass-wins is an OR of
-        branch pass-bits; on total failure the union error plus every
-        branch's violations, in branch order."""
+        """validateOneOf (validate.ts:91-104): the union passes if any
+        branch has no violations; on total failure the union error plus
+        every branch's violations, in branch order. The branch arrays are
+        bound once, as a lambda variable over a one-element array, so each
+        branch's text appears once: a recursive ``$types`` stays linear in
+        its unroll depth."""
         compiled = [self.compile(b, expr, dtype, path, depth + b.hops) for b in node.branches]
-        any_pass = " OR ".join(f"size({arr}) = 0" for arr in compiled)
+        u, b = f"__yv_u{depth}", f"__yv_b{depth}"
         union_err = self._const(path, E.UNION_MISMATCH, expr)
-        return sql_case((any_pass, EMPTY_VIOLS), otherwise=_concat([union_err] + compiled))
+        pick = sql_case((f"exists({u}, {b} -> size({b}) = 0)", EMPTY_VIOLS),
+                        otherwise=f"concat({union_err}, flatten({u}))")
+        return f"flatten(transform(array(array({', '.join(compiled)})), {u} -> {pick}))"
 
     def _sized(self, node: Array | Map, expr, path, error: str, rest: str) -> str:
         """NULL fails with ``error``; a size outside the bounds fails with the
