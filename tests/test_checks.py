@@ -264,3 +264,13 @@ def test_completeness_daily_zero_fills_gaps(spark):
     # all-null / empty input yields an empty calendar, not a crash
     empty = spark.createDataFrame([(None,)], "ts timestamp")
     assert completeness_daily(empty, "ts").count() == 0
+
+
+def test_regex_check_uses_ecma_semantics(spark):
+    # ECMA `$` is end of input: "src5\n" misses, where Java's own `$`
+    # would match before the trailing newline
+    df = spark.createDataFrame([("src5",), ("src5\n",), (None,), ("x",)], "source string")
+    got = checks.regex_check(df, "source", "^src[0-9]+$").collect()[0]
+    assert (got["n_match"], got["n_miss"]) == (1, 3)
+    with pytest.raises(ValueError):
+        checks.regex_check(df, "source", r"\p{Letter}")

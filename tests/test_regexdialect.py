@@ -1,8 +1,9 @@
 """Regex dialect guard: ECMA-u semantics must hold on BOTH paths — by
 translation (to_java_pattern / to_python_pattern) for the translatable
 divergences ($ anchor, dot-vs-NEL, Java class operators, \\u{...}, \\s,
-[] / [^]), and by compile-time routing (typed_unsafe) for the residue
-(long Unicode properties, in-class \\S). SURVEY §7.4."""
+[] / [^]), and by compile-time routing on the translator's ValueError for
+the residue (long Unicode properties, in-class \\S, invalid escapes).
+SURVEY §7.4."""
 
 from __future__ import annotations
 
@@ -14,7 +15,8 @@ from pyspark.sql import functions as F
 
 from yaschva_spark.engine import PASS_COL, validate_auto, validate_json_table, validate_table
 from yaschva_spark.interp import validate as interp_validate
-from yaschva_spark.regexdialect import to_java_pattern, to_python_pattern, typed_unsafe
+from yaschva_spark.jsonscreen import ScreenNotApplicable, compile_screens
+from yaschva_spark.regexdialect import to_java_pattern, to_python_pattern
 from yaschva_spark.typed import TypedCompileError
 
 
@@ -22,7 +24,7 @@ def test_shared_subset_is_typed_safe():
     for p in [r"^src[0-9]+", r"a|b", r"\d{2,}", r"(?i)x", r"(?<name>ab)\k<name>",
               r"\p{L}+", r"[a-z\]]+", r"(?<=x)y", r"x[[]y", r"\u{48}ello",
               r"x[]y", r"x[^]y", r"^\S+$", r"a\sb"]:
-        assert typed_unsafe(p) == [], p
+        to_java_pattern(p)  # translatable: no ValueError
     # the genuinely shared subset translates to itself
     for p in [r"^src[0-9]+", r"a|b", r"\d{2,}", r"(?i)x", r"\p{L}+",
               r"[a-z\]]+", r"(?<=x)y", r"(?<name>ab)\k<name>"]:
@@ -30,21 +32,40 @@ def test_shared_subset_is_typed_safe():
 
 
 def test_untranslatable_residue_detected():
-    assert typed_unsafe(r"\p{Letter}+")
-    assert typed_unsafe(r"\p{Script=Greek}")
-    assert typed_unsafe(r"[\S]")
-    assert typed_unsafe(r"[\W]")
-    assert not typed_unsafe(r"\S+")  # out-of-class: expandable
+    for p in [r"\p{Letter}+", r"\p{Script=Greek}", r"[\S]", r"[\W]"]:
+        with pytest.raises(ValueError):
+            to_java_pattern(p)
+    assert to_java_pattern(r"\S+").startswith("[^")  # out-of-class: expandable
+
+
+@pytest.mark.parametrize("pattern", [r"\u{}", r"^\u{zz}$", r"\u{110000}", r"\u{0x41}"])
+def test_invalid_codepoint_escape_raises_in_both_dialects(pattern):
+    # ECMA-u: an empty, non-hex or above-10FFFF \u{...} is a SyntaxError
     with pytest.raises(ValueError):
-        to_java_pattern(r"\p{Letter}+")
+        to_java_pattern(pattern)
     with pytest.raises(ValueError):
-        to_java_pattern(r"[\S]")
+        to_python_pattern(pattern)
+
+
+@pytest.mark.parametrize(
+    "pattern",
+    [r"\p{Letter}", r"\p{Script=Greek}", r"\p{L", r"[\S]", r"[\W]", r"^\u{zz}$", r"\u{110000}"],
+)
+def test_untranslatable_regex_routes_at_build(spark, pattern):
+    """A pattern the translator refuses never reaches ``rlike``: the typed
+    path refuses at build and the screen leaves it to the interpreter."""
+    schema = {"x": {"$string": {"regex": pattern}}}
+    with pytest.raises(TypedCompileError):
+        validate_table(spark.createDataFrame([("a",)], "x string"), schema)
+    with pytest.raises(ScreenNotApplicable):
+        compile_screens(schema, "js")
 
 
 def test_java_translation_spellings():
     assert to_java_pattern(r"x[[]y") == r"x[\[]y"
     assert to_java_pattern(r"[a&&b]") == r"[a\&\&b]"
     assert to_java_pattern(r"\u{1F600}") == r"\x{1F600}"
+    assert to_java_pattern(r"\u{10FFFF}") == r"\x{10FFFF}"  # the top code point
     assert to_java_pattern(r"x[]y") == r"x(?!)y"
     assert to_java_pattern(r"x[^]y") == r"x(?s:.)y"
     assert to_java_pattern(r"a$") == "a\\z"
@@ -61,6 +82,7 @@ def test_python_translation_semantics():
     # '\u{2E}' is the '.' codepoint: must become a LITERAL dot, not any-char
     assert re.search(to_python_pattern(r"\u{2E}"), ".")
     assert not re.search(to_python_pattern(r"\u{2E}"), "a")
+    assert to_python_pattern(r"\u{10FFFF}") == "\U0010ffff"
 
 
 def test_dollar_anchor_is_absolute_end():

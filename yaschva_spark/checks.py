@@ -26,6 +26,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from yaschva_spark.regexdialect import to_java_pattern
+
 
 # --- per-column statistics ----------------------------------------------------
 def column_stats(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
@@ -113,9 +115,12 @@ def enum_check(df: DataFrame, column: str, allowed: Sequence[str]) -> DataFrame:
 
 
 def regex_check(df: DataFrame, column: str, pattern: str) -> DataFrame:
-    """Regex conformance counts (V7). ``rlike`` = unanchored search, same as
-    the reference's ECMAScript ``.test``."""
-    ok = F.col(column).rlike(pattern)
+    """Regex conformance counts (V7): ``pattern`` is ECMA-u, evaluated as
+    the validators do — the exact-ECMA Java spelling from
+    :func:`~yaschva_spark.regexdialect.to_java_pattern` under ``rlike``
+    (unanchored search, same as ECMAScript ``.test``). An untranslatable
+    pattern raises :class:`ValueError`."""
+    ok = F.col(column).rlike(to_java_pattern(pattern))
     return df.agg(
         F.sum(F.when(ok, 1).otherwise(0)).alias("n_match"),
         F.sum(F.when(F.col(column).isNull() | ~ok, 1).otherwise(0)).alias("n_miss"),

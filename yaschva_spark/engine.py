@@ -111,22 +111,12 @@ def explode_violations(validated: DataFrame, id_cols: list[str]) -> DataFrame:
     """Violation sink shape: one row per violation
     ``(id..., path, rule, error, value)`` — the reference's error tree in
     table form (SURVEY.md §1.2)."""
-    # no explicit pass-filter: a non-outer explode already drops rows whose
-    # violations array is empty (Catalyst infers `size(v) > 0`), and an
+    # no explicit pass-filter: inline, like a non-outer explode, drops rows
+    # whose violations array is empty (Catalyst infers `size(v) > 0`); an
     # explicit `filter(~pass)` would make the optimizer re-evaluate the whole
-    # violations expression a second time inside the Filter node
-    v = F.explode(F.col(VIOLATIONS_COL)).alias("v")
-    return (
-        validated
-        .select(*id_cols, v)
-        .select(
-            *id_cols,
-            F.col("v.path").alias("path"),
-            F.col("v.rule").alias("rule"),
-            F.col("v.error").alias("error"),
-            F.col("v.value").alias("value"),
-        )
-    )
+    # violations expression a second time inside the Filter node. inline
+    # names its columns after the struct fields, so no per-field alias.
+    return validated.select(*id_cols, F.inline(VIOLATIONS_COL))
 
 
 def _interpreter(schema: Any):

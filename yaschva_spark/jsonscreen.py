@@ -39,8 +39,8 @@ in:
 * numeric bound checks add a representability guard — a BIGINT/DECIMAL
   beyond 2^53 rounds when cast to double, and the interpreter compares
   exact Python ints, so such rows are never screened;
-* regex checks screen only dialect-safe patterns (regexdialect),
-  translated to Java semantics (to_java_pattern);
+* regex checks screen only patterns that regexdialect.to_java_pattern
+  translates to an exact-ECMA Java spelling;
 * object/map screens require a true JSON OBJECT — the reference also
   accepts JS *arrays* against object schemas (indices become keys,
   validate.ts:128-193); such rows screen false and run interpreted;
@@ -98,9 +98,9 @@ nested-array elements (flat() splicing), bound comparisons outside the
 2^53 window.
 
 Supported fragment: every leaf check except the ``$and`` error leaf
-(``$string`` regexes only when dialect-safe), nested objects at literal
-paths, ``$array``/``$map`` with leaf-output element/value schemas, and
-ordered union prefixes thereof — with ``$type``, non-recursive ``$types``
+(``$string`` regexes only when translatable to Java), nested objects at
+literal paths, ``$array``/``$map`` with leaf-output element/value schemas,
+and ordered union prefixes thereof — with ``$type``, non-recursive ``$types``
 and ``$and`` already resolved by the lowering. Reference semantics:
 validate.ts:50-205 (leaves), validate.ts:106-193 (arrays/maps/objects),
 validate.ts:91-104 (unions). Differential and emission-boundary tests:
@@ -116,7 +116,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 
 from yaschva_spark import errors as E
-from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
+from yaschva_spark.regexdialect import to_java_pattern
 from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
 from yaschva_spark.typed import (  # js_strlen: UTF-16 units
     EMPTY_VIOLS,
@@ -215,8 +215,8 @@ class _Stager:
     expression alone vs ~2 us per variant op — the whole validate step ran
     2.2 s vs 0.5 s. Catalyst's CollapseProject keeps the stage boundaries
     because the staged aliases are non-cheap and multiply referenced
-    (SPARK-36718); the engine's persist materializes the final projection,
-    paying each staged expression once.
+    (SPARK-36718), so each staged expression is paid once per row, in
+    the one projection that computes it.
 
     Levels are ordered: a column at level i may reference only columns at
     levels < i. Lambda-scoped subtrees (array/map element screens) must
@@ -298,9 +298,10 @@ def _render_value(tv: str) -> tuple[str, str]:
 
 
 def _java_safe(pattern: str) -> str:
-    if typed_unsafe(pattern):
-        raise ScreenNotApplicable("ECMA-only regex")
-    return to_java_pattern(pattern)
+    try:
+        return to_java_pattern(pattern)
+    except ValueError as e:
+        raise ScreenNotApplicable(f"regex {pattern!r}: {e}") from None
 
 
 def _len_bounds(n: str, node: Array | Map) -> str:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from yaschva_spark.cache import persist_tracked
+from yaschva_spark.ops.text import word_ngrams
 
 
 def exact_duplicates(
@@ -91,21 +92,25 @@ def exact_duplicates(
 _FLAT_CHUNK = 1 << 11
 
 
+def _row_chunks(lens):
+    """``(start, end)`` row ranges whose lengths sum to at most
+    :data:`_FLAT_CHUNK` elements (a longer row is a chunk of its own)."""
+    start = 0
+    while start < len(lens):
+        end, n_flat = start, 0
+        while end < len(lens) and (n_flat + lens[end] <= _FLAT_CHUNK or end == start):
+            n_flat += lens[end]
+            end += 1
+        yield start, end
+        start = end
+
+
 def shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle_set).
     Tokenization = split on single spaces (reproducible in SQL)."""
-    words = F.split(F.col(text_col), " ")
-    # guard: sequence(0, x) with x < 0 would generate a DESCENDING sequence
-    # in Spark, so short texts must short-circuit to an empty set
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return df.select(
-        F.col(id_col).alias("id"), F.array_distinct(grams).alias("shingle_set")
+        F.col(id_col).alias("id"),
+        F.array_distinct(word_ngrams(text_col, n)).alias("shingle_set"),
     ).filter(F.size("shingle_set") > 0)
 
 
@@ -349,12 +354,7 @@ def _minhash_mix(rows: list, a, b) -> list:
     rows = [np.asarray(r, dtype=np.int64) for r in rows]
     out: list = [None] * len(rows)
     lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=len(rows))
-    start = 0
-    while start < len(rows):
-        end, n_flat = start, 0
-        while end < len(rows) and (n_flat + lens[end] <= _FLAT_CHUNK or end == start):
-            n_flat += lens[end]
-            end += 1
+    for start, end in _row_chunks(lens):
         seg_lens = lens[start:end]
         nonempty = seg_lens > 0
         flat = np.concatenate(
@@ -371,7 +371,6 @@ def _minhash_mix(rows: list, a, b) -> list:
                 col += 1
             else:
                 out[i] = np.full(k, np.iinfo(np.int64).max)
-        start = end
     return out
 
 
@@ -762,12 +761,7 @@ def _simhash_fingerprints(rows: list):
     ]
     lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=len(rows))
     out = np.zeros(len(rows), dtype=np.int64)
-    start = 0
-    while start < len(rows):
-        end, n_flat = start, 0
-        while end < len(rows) and (n_flat + lens[end] <= _FLAT_CHUNK or end == start):
-            n_flat += lens[end]
-            end += 1
+    for start, end in _row_chunks(lens):
         flat = np.concatenate(rows[start:end]).astype(np.uint64)
         bits = ((flat[:, None] >> shifts[None, :]) & np.uint64(1)).astype(np.int64)
         offs = np.zeros(end - start, dtype=np.int64)
@@ -777,7 +771,6 @@ def _simhash_fingerprints(rows: list):
             axis=1, dtype=np.uint64
         )
         out[start:end] = fp.view(np.int64)  # reinterpret as signed
-        start = end
     return out
 
 

@@ -28,6 +28,20 @@ def _words(text_col):
     return F.split(text_col, " ")
 
 
+def word_ngrams(text_col: str, n: int):
+    """Column: the ``n``-word windows of ``text_col`` (split on single
+    spaces, joined by one space), in order. Short texts short-circuit to
+    an empty array: ``sequence(0, x)`` DESCENDS for x < 0."""
+    words = _words(text_col)
+    return F.when(
+        F.size(words) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(words) - n),
+            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, n_tokens, n_words_regex): whitespace tokens plus a BPE-ish regex
     token count (letter runs / digit runs / single other chars)."""
@@ -253,18 +267,8 @@ def top_ngrams(df: DataFrame, text_col: str, n: int = 2, k: int = 20) -> DataFra
         raise ValueError("n must be >= 1")
     if k < 1:
         raise ValueError("k must be >= 1")
-    words = F.split(F.col(text_col), " ")
-    # same short-text guard as dedup.shingles: sequence(0, x) DESCENDS for
-    # x < 0, so short docs must short-circuit to an empty gram array
-    grams = F.when(
-        F.size(words) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(words) - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
     return (
-        df.select(F.explode(grams).alias("ngram"))
+        df.select(F.explode(word_ngrams(text_col, n)).alias("ngram"))
         .groupBy("ngram")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.col("cnt").desc(), F.col("ngram").asc())

@@ -1,63 +1,55 @@
-"""ECMAScript-vs-Java/Python regex dialect guard for both execution paths.
+"""One ECMA-u regex translator for both execution paths.
 
 The reference validates patterns with ``new RegExp(p, 'u').test(v)``
-(/root/reference/src/validate.ts:81). Neither evaluation engine available
+(the reference's validate.ts:81). Neither evaluation engine available
 here speaks that dialect natively:
 
-* the **typed path** hands patterns to Java's regex via ``rlike``;
-* the **dynamic path** evaluates them with Python ``re``.
+* the **typed path** (and the JSON screen) hands patterns to Java's regex
+  via ``rlike``: :func:`to_java_pattern`;
+* the **dynamic path** evaluates them with Python ``re``:
+  :func:`to_python_pattern`.
 
-For the overwhelmingly common subset (literals, classes, quantifiers,
-``^`` anchors, alternation, groups, ``\\d\\w\\b``, lookarounds, named
-groups, ``\\k<name>`` backrefs) all three dialects coincide — an
-unanchored ``rlike`` / ``re.search`` matches ``.test`` semantics. The
-rest is handled by TRANSLATION, one function per target dialect, so that
-almost every pattern stays on the fast typed path:
-
-:func:`to_java_pattern` (typed path, verified against live ``rlike``):
+Both are one token walk, :func:`_translate`, over ECMA tokens; a
+:class:`_Dialect` table holds only what the two targets spell
+differently. For the common subset (literals, classes, quantifiers, ``^``,
+alternation, groups, lookarounds) the spelling is the input's — an
+unanchored ``rlike`` / ``re.search`` matches ``.test`` semantics. What the
+walk re-spells, in both dialects unless noted:
 
 * ``$`` (out of class) — ECMA ``$`` without ``m`` asserts END OF INPUT;
-  Java's also matches before a trailing line terminator (``'abc\\n'``
-  matches ``^abc$``). Translated to ``\\z`` (absolute end).
-* ``.`` — Java's dot also excludes \\u0085 (NEL) which ECMA's matches.
-  Translated to the explicit ECMA complement ``[^\\n\\r\\u2028\\u2029]``.
-* in-class ``&`` / ``[`` — Java operators (``[a&&b]`` is intersection and
-  matches nothing; ``x[[]y`` is a PatternSyntaxException), ECMA literals.
-  Escaped to ``\\&`` / ``\\[``.
-* ``\\u{...}`` — ECMA-u codepoint escape; Java spells it ``\\x{...}``.
-* ``\\s`` / ``\\S`` — ECMA whitespace is a fixed Unicode set (NBSP,
-  ogham, en-quads, BOM, ...); Java's is ASCII-only. Expanded to the
-  literal ECMA set. (``\\w``/``\\W``/``\\b`` do NOT need translation:
-  ECMA defines them as exactly ``[A-Za-z0-9_]`` and Java agrees.)
-* ``[]`` / ``[^]`` — valid in ECMA (never-match / any-char); Java syntax
-  errors. Translated to ``(?!)`` / ``(?s:.)``.
+  Java's and Python's also match before a trailing line terminator.
+  Spelled ``\\z`` (Java) / ``\\Z`` (Python).
+* ``.`` — the explicit ECMA complement ``[^\\n\\r\\u2028\\u2029]`` (Java's
+  dot also excludes \\u0085 NEL, Python's only excludes ``\\n``).
+* in-class ``&`` / ``[`` — Java class operators (``[a&&b]`` is an
+  intersection, ``x[[]y`` a PatternSyntaxException) and Python
+  FutureWarnings; ECMA literals. Escaped to ``\\&`` / ``\\[``.
+* ``[]`` / ``[^]`` — ECMA never-match / any-char: ``(?!)``, and
+  ``(?s:.)`` (Java) / ``[\\s\\S]`` (Python).
+* ``\\u{...}`` — the ECMA-u codepoint escape: ``\\x{...}`` (Java), the
+  literal character (Python, escaped if a metacharacter). An empty,
+  non-hex or above-10FFFF body is an ECMA SyntaxError and raises.
+* shorthands — ``\\s``/``\\S`` expand to the literal ECMA whitespace set
+  (Java's is ASCII-only, Python's adds \\x1c-\\x1f/\\x85 and misses
+  \\ufeff). Python only: ``\\w``/``\\W`` become the ASCII class and
+  ``\\b``/``\\B`` ASCII-word-boundary lookarounds (Python's are Unicode).
+* named groups (Python only) — ``(?<name>`` to ``(?P<name>`` and
+  ``\\k<name>`` to ``(?P=name)``.
 
-:func:`to_python_pattern` (dynamic path) performs the analogous
-translation for Python ``re`` (``\\u{...}`` to the literal character,
-``(?<name>`` to ``(?P<name>``, ``\\k<name>`` to ``(?P=name)``, ``[]`` to
-``(?!)``, ``[^]`` to ``[\\s\\S]``, out-of-class ``$`` to ``\\Z`` —
-Python's ``$`` also matches before a trailing ``\\n``) AND pins Python's
-Unicode-flavored shorthands to their exact ECMA definitions:
-``\\w``/``\\W`` become the ASCII class (Python's match Unicode letters),
-``\\b``/``\\B`` become ASCII-word-boundary lookarounds, ``\\s``/``\\S``
-become the literal ECMA whitespace set (Python's includes
-\\x1c-\\x1f/\\x85 and misses \\ufeff), and ``.`` becomes
-``[^\\n\\r\\u2028\\u2029]`` (Python's dot only excludes \\n).
-
-The residue that no translation covers routes to whichever path can
-still evaluate it exactly, via :func:`typed_unsafe`:
-
-* ``\\p{Letter}`` / ``\\p{Script=Greek}`` — ECMA long property / script
-  names; Java only shares the short general-category names (``\\p{L}``,
-  ``\\p{Lu}``, ...), which therefore stay on the typed path. Python
-  ``re`` has no property classes at all, so long names raise a clear
-  error rather than silently diverging.
-* in-class ``\\S`` / ``\\W`` — a complemented shorthand cannot be
-  expanded inside a class; untranslatable for Java (flagged) and Python
-  (raises).
+The untranslatable residue raises :class:`ValueError`, the one "not
+translatable" decision: callers turn it into a route to the path that can
+still evaluate the pattern (``typed._require_java_safe``,
+``jsonscreen._java_safe``). It is ``\\p{...}`` names outside the general
+categories Java shares with ECMA (``\\p{Letter}``, ``\\p{Script=Greek}``;
+Python ``re`` has no property classes at all), an unclosed ``\\p{``, and a
+complemented shorthand inside a class (``[\\S]``, ``[\\W]``), which no set
+expansion can express.
 """
 
 from __future__ import annotations
+
+import re
+from typing import Callable, NamedTuple
 
 # the exact ECMAScript \s set (ES2024 WhiteSpace + LineTerminator);
 # every escape here (\t \n \x0b \f \r \uXXXX) is valid in BOTH Python-re
@@ -67,8 +59,7 @@ _ECMA_WS = (
     "\\u2028\\u2029\\u202f\\u205f\\u3000\\ufeff"
 )
 _ASCII_WORD = "A-Za-z0-9_"
-# ECMA dot complement: LineTerminator only (\n \r    ) — same
-# spelling is valid in Java and Python classes
+# ECMA dot complement: LineTerminator only — same spelling in Java and Python
 _ECMA_DOT = "[^\\n\\r\\u2028\\u2029]"
 _B_BOUND = (
     f"(?:(?<=[{_ASCII_WORD}])(?![{_ASCII_WORD}])"
@@ -80,7 +71,7 @@ _B_NONBOUND = (
 )
 
 # general-category names with identical meaning in ECMA-u and Java
-_SHARED_PROPS = {
+_SHARED_PROPS = frozenset({
     "L", "Lu", "Ll", "Lt", "Lm", "Lo",
     "M", "Mn", "Mc", "Me",
     "N", "Nd", "Nl", "No",
@@ -88,234 +79,109 @@ _SHARED_PROPS = {
     "S", "Sm", "Sc", "Sk", "So",
     "Z", "Zs", "Zl", "Zp",
     "C", "Cc", "Cf", "Co", "Cn", "Cs",
-}
+})
+
+# the ECMA tokens longer than two characters: \u{hex}, \p{name} / \P{name}
+# (an unclosed one runs to the end so it can be refused)
+_ESCAPE = re.compile(r"\\(?:u\{(?P<u>[^}]*)\}|[pP]\{(?P<p>[^}]*)(?P<close>\}?))")
+_NAMED = re.compile(r"\\k<(?P<ref>[^>]*)>|\(\?<(?![=!])")
+_HEX = re.compile(r"[0-9A-Fa-f]+")
 
 
-def typed_unsafe(pattern: str) -> list[str]:
-    """Reasons this pattern must NOT go through Java ``rlike`` even after
-    :func:`to_java_pattern` translation; empty list means the translated
-    pattern evaluates with exact ECMA semantics under Java."""
-    reasons: list[str] = []
-    i, n = 0, len(pattern)
-    in_class = False
+class _Dialect(NamedTuple):
+    codepoint: Callable[[str], str]  # hex digits of a valid \u{...} -> spelling
+    end: str  # out-of-class `$`
+    any_char: str  # `[^]`
+    props: frozenset  # \p{...} names with the ECMA meaning
+    # shorthand letter -> (spelling outside, inside a class); None: untranslatable
+    shorthands: dict[str, tuple[str, str | None]]
+    named: bool  # rewrite (?<name> / \k<name> to (?P<name> / (?P=name)
+
+
+def _py_literal(hex_digits: str) -> str:
+    ch = chr(int(hex_digits, 16))
+    return "\\" + ch if ch in r".^$*+?()[]{}|\/" else ch
+
+
+_WS = {"s": (f"[{_ECMA_WS}]", _ECMA_WS), "S": (f"[^{_ECMA_WS}]", None)}
+
+_JAVA = _Dialect(
+    codepoint=lambda h: f"\\x{{{h}}}",
+    end="\\z",
+    any_char="(?s:.)",
+    props=_SHARED_PROPS,
+    shorthands={**_WS, "W": ("\\W", None)},
+    named=False,
+)
+
+_PYTHON = _Dialect(
+    codepoint=_py_literal,
+    end="\\Z",
+    any_char="[\\s\\S]",
+    props=frozenset(),
+    shorthands={
+        **_WS,
+        "w": (f"[{_ASCII_WORD}]", _ASCII_WORD),
+        "W": (f"[^{_ASCII_WORD}]", None),
+        "b": (_B_BOUND, "\\b"),  # in-class \b is backspace in both
+        "B": (_B_NONBOUND, "\\B"),
+    },
+    named=True,
+)
+
+
+# the one walk over ECMA tokens; `d` supplies every dialect-specific spelling
+def _translate(pattern: str, d: _Dialect) -> str:
+    out: list[str] = []
+    i, n, in_class = 0, len(pattern), False
     while i < n:
         c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            nxt = pattern[i + 1]
-            if nxt in "pP" and i + 2 < n and pattern[i + 2] == "{":
-                end = pattern.find("}", i + 3)
-                body = pattern[i + 3 : end] if end != -1 else pattern[i + 3 :]
-                if body not in _SHARED_PROPS:
-                    reasons.append(
-                        rf"\{nxt}{{{body}}} long/script Unicode property (dialects differ)"
-                    )
-            elif in_class and nxt in "SW":
-                reasons.append(
-                    rf"\{nxt} inside a class (complemented shorthand is not "
-                    "expandable to the ECMA set)"
-                )
+        named = d.named and _NAMED.match(pattern, i)
+        if named and (named["ref"] is not None or not in_class):
+            out.append("(?P<" if named["ref"] is None else f"(?P={named['ref']})")
+            i = named.end()
+        elif c == "\\" and (m := _ESCAPE.match(pattern, i)):
+            if m["u"] is not None:
+                if not _HEX.fullmatch(m["u"]) or int(m["u"], 16) > 0x10FFFF:
+                    raise ValueError(f"{m[0]}: not a code point escape (ECMA SyntaxError)")
+                out.append(d.codepoint(m["u"]))
+            elif not m["close"] or m["p"] not in d.props:
+                raise ValueError(f"{m[0]}: no equivalent of the ECMA property class")
+            else:
+                out.append(m[0])
+            i = m.end()
+        elif c == "\\" and i + 1 < n:
+            tok = pattern[i : i + 2]
+            spelled = d.shorthands.get(tok[1], (tok, tok))[in_class]
+            if spelled is None:
+                raise ValueError(f"{tok} inside a class is not translatable")
+            out.append(spelled)
             i += 2
-            continue
-        if not in_class and c == "[":
-            if pattern[i + 1 : i + 2] == "]":
-                i += 2  # ECMA empty class — translated to (?!)
-                continue
-            if pattern[i + 1 : i + 3] == "^]":
-                i += 3  # ECMA any-char class — translated to (?s:.)
-                continue
-            in_class = True
-        elif in_class and c == "]":
-            in_class = False
-        i += 1
-    return reasons
+        elif in_class:
+            in_class = c != "]"
+            # Java class operators / Python FutureWarnings; ECMA literals
+            out.append("\\" + c if c in "&[" else c)
+            i += 1
+        elif pattern.startswith("[]", i):
+            out.append("(?!)")  # ECMA empty class: matches nothing
+            i += 2
+        elif pattern.startswith("[^]", i):
+            out.append(d.any_char)
+            i += 3
+        else:
+            in_class = c == "["
+            out.append({".": _ECMA_DOT, "$": d.end}.get(c, c))
+            i += 1
+    return "".join(out)
 
 
 def to_java_pattern(pattern: str) -> str:
-    """Translate an ECMA-u pattern to Java regex spelling with identical
-    semantics (see module docstring for the construct-by-construct map).
-    Identity for patterns using only the shared subset. Raises
-    :class:`ValueError` for the untranslatable residue — callers gate on
-    :func:`typed_unsafe` first, so this is a belt-and-braces check."""
-    out: list[str] = []
-    i, n = 0, len(pattern)
-    in_class = False
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            nxt = pattern[i + 1]
-            if nxt == "u" and i + 2 < n and pattern[i + 2] == "{":
-                end = pattern.find("}", i + 3)
-                if end != -1:
-                    out.append(f"\\x{{{pattern[i + 3:end]}}}")
-                    i = end + 1
-                    continue
-            if nxt in "pP" and i + 2 < n and pattern[i + 2] == "{":
-                end = pattern.find("}", i + 3)
-                body = pattern[i + 3 : end] if end != -1 else pattern[i + 3 :]
-                if body not in _SHARED_PROPS:
-                    raise ValueError(
-                        f"\\{nxt}{{{body}}}: long/script Unicode property has no "
-                        "Java equivalent with ECMA semantics"
-                    )
-                out.append(pattern[i : (end + 1) if end != -1 else n])
-                i = (end + 1) if end != -1 else n
-                continue
-            if nxt == "s":
-                out.append(f"[{_ECMA_WS}]" if not in_class else _ECMA_WS)
-                i += 2
-                continue
-            if nxt == "S":
-                if in_class:
-                    raise ValueError(r"\S inside a class is not translatable")
-                out.append(f"[^{_ECMA_WS}]")
-                i += 2
-                continue
-            if nxt == "W" and in_class:
-                raise ValueError(r"\W inside a class is not translatable")
-            out.append(pattern[i : i + 2])
-            i += 2
-            continue
-        if not in_class:
-            if c == ".":
-                out.append(_ECMA_DOT)
-                i += 1
-                continue
-            if c == "$":
-                out.append("\\z")  # ECMA $ (no m flag) = absolute end of input
-                i += 1
-                continue
-            if c == "[":
-                if pattern[i + 1 : i + 2] == "]":
-                    out.append("(?!)")  # ECMA empty class: matches nothing
-                    i += 2
-                    continue
-                if pattern[i + 1 : i + 3] == "^]":
-                    out.append("(?s:.)")  # ECMA [^]: any character
-                    i += 3
-                    continue
-                in_class = True
-        else:
-            if c == "]":
-                in_class = False
-            elif c in "&[":
-                # Java class operators (intersection / nested class);
-                # ECMA literals — escape to restore literal meaning
-                out.append("\\" + c)
-                i += 1
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    """ECMA-u ``pattern`` in Java regex spelling with identical semantics;
+    :class:`ValueError` when no Java spelling exists."""
+    return _translate(pattern, _JAVA)
 
 
 def to_python_pattern(pattern: str) -> str:
-    """Translate an ECMA-u pattern to Python ``re`` spelling. Identity for
-    patterns using only the shared subset."""
-    out: list[str] = []
-    i, n = 0, len(pattern)
-    in_class = False
-    while i < n:
-        c = pattern[i]
-        if c == "\\" and i + 1 < n:
-            nxt = pattern[i + 1]
-            if nxt == "u" and i + 2 < n and pattern[i + 2] == "{":
-                end = pattern.find("}", i + 3)
-                if end != -1:
-                    cp = int(pattern[i + 3 : end], 16)
-                    ch = chr(cp)
-                    # escape if it's a regex metacharacter
-                    out.append("\\" + ch if ch in r".^$*+?()[]{}|\/" else ch)
-                    i = end + 1
-                    continue
-            if nxt in "pP" and i + 2 < n and pattern[i + 2] == "{":
-                end = pattern.find("}", i + 3)
-                body = pattern[i + 3 : end] if end != -1 else pattern[i + 3 :]
-                if body not in _SHARED_PROPS:
-                    raise ValueError(
-                        f"Unicode property \\{nxt}{{{body}}} is not supported by the "
-                        "dynamic path (Python re has no property classes)"
-                    )
-                # shared short names are equally unsupported by Python re
-                raise ValueError(
-                    f"\\{nxt}{{{body}}}: property classes need the typed (Java) path"
-                )
-            if nxt == "k" and pattern[i + 2 : i + 3] == "<":
-                end = pattern.find(">", i + 3)
-                if end != -1:
-                    out.append(f"(?P={pattern[i + 3:end]})")
-                    i = end + 1
-                    continue
-            # pin Python's Unicode-flavored shorthands to ECMA semantics
-            if nxt == "w":
-                out.append(f"[{_ASCII_WORD}]" if not in_class else _ASCII_WORD)
-                i += 2
-                continue
-            if nxt == "W":
-                if in_class:
-                    raise ValueError(r"\W inside a class is not translatable")
-                out.append(f"[^{_ASCII_WORD}]")
-                i += 2
-                continue
-            if nxt == "s":
-                out.append(f"[{_ECMA_WS}]" if not in_class else _ECMA_WS)
-                i += 2
-                continue
-            if nxt == "S":
-                if in_class:
-                    raise ValueError(r"\S inside a class is not translatable")
-                out.append(f"[^{_ECMA_WS}]")
-                i += 2
-                continue
-            if nxt == "b" and not in_class:  # in-class \b is backspace in both
-                out.append(_B_BOUND)
-                i += 2
-                continue
-            if nxt == "B" and not in_class:
-                out.append(_B_NONBOUND)
-                i += 2
-                continue
-            out.append(pattern[i : i + 2])
-            i += 2
-            continue
-        if not in_class and c == ".":
-            out.append(_ECMA_DOT)
-            i += 1
-            continue
-        if not in_class and c == "$":
-            # ECMA $ (no m flag) = absolute end; Python's $ also matches
-            # before a trailing \n
-            out.append("\\Z")
-            i += 1
-            continue
-        if not in_class and pattern[i : i + 3] == "(?<" and pattern[i + 3 : i + 4] not in ("=", "!"):
-            out.append("(?P<")
-            i += 3
-            continue
-        if not in_class and c == "[":
-            if pattern[i + 1 : i + 2] == "]":
-                out.append("(?!)")  # ECMA empty class: matches nothing
-                i += 2
-                continue
-            if pattern[i + 1 : i + 3] == "^]":
-                out.append(r"[\s\S]")  # ECMA [^]: any character
-                i += 3
-                continue
-            in_class = True
-        elif in_class and c == "]":
-            in_class = False
-        elif in_class and c == "[":
-            # literal in ECMA; escape to silence Python's nested-set
-            # FutureWarning (same literal meaning)
-            out.append("\\[")
-            i += 1
-            continue
-        elif in_class and c == "&":
-            # literal in ECMA; unescaped `&&` in a Python class is a
-            # FutureWarning (set intersection is planned) — escape now so
-            # the future semantics change can't silently break parity
-            out.append("\\&")
-            i += 1
-            continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    """ECMA-u ``pattern`` in Python ``re`` spelling with identical
+    semantics; :class:`ValueError` when no Python spelling exists."""
+    return _translate(pattern, _PYTHON)

@@ -43,7 +43,7 @@ from typing import Any
 from pyspark.sql import types as T
 
 from yaschva_spark import errors as E
-from yaschva_spark.regexdialect import to_java_pattern, typed_unsafe
+from yaschva_spark.regexdialect import to_java_pattern
 from yaschva_spark.schema import Array, Leaf, Map, Object, SchemaError, Union, lower
 
 VIOLATION_DDL = "array<struct<path:string,rule:string,error:string,value:string>>"
@@ -168,22 +168,15 @@ def _concat(arrays: list[str]) -> str:
 def _require_java_safe(pattern: str) -> str:
     """Dialect guard (SURVEY §7.4): ``rlike`` evaluates patterns under
     Java regex semantics, but the reference compiles them as ECMAScript
-    ``new RegExp(p, 'u')`` (the reference's validate.ts:81).
-    Most divergent constructs are TRANSLATED to exact-ECMA Java
-    spellings by regexdialect.to_java_pattern ($-anchor, dot/NEL,
-    class operators, ``\\u{...}``, ``\\s``, ``[]``/``[^]``); the
-    untranslatable residue (long/script Unicode properties, in-class
-    ``\\S``/``\\W``) must not silently compile — raising
-    TypedCompileError makes validate_auto route the schema to the
-    reference-faithful interpreter path instead. Returns the Java
-    spelling (rlike is an unanchored search, same as ECMAScript .test)."""
-    reasons = typed_unsafe(pattern)
-    if reasons:
-        raise TypedCompileError(
-            f"regex {pattern!r} uses ECMA-only constructs "
-            f"({'; '.join(reasons)}); dynamic path required"
-        )
-    return to_java_pattern(pattern)
+    ``new RegExp(p, 'u')`` (the reference's validate.ts:81). Returns
+    regexdialect.to_java_pattern's exact-ECMA Java spelling (``rlike`` is
+    an unanchored search, same as ECMAScript ``.test``); a pattern it
+    cannot translate raises TypedCompileError, which makes validate_auto
+    route the schema to the reference-faithful interpreter path."""
+    try:
+        return to_java_pattern(pattern)
+    except ValueError as e:
+        raise TypedCompileError(f"regex {pattern!r}: {e}; dynamic path required") from None
 
 
 def _not_number(expr: str, dtype, _arg) -> str:
