@@ -523,6 +523,7 @@ def _q_streaming_replay(spark, sf_dir):
     import os
     import tempfile
 
+    from yaschva_spark import commit
     from yaschva_spark.streaming import incremental_validation_sink, read_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -536,9 +537,7 @@ def _q_streaming_replay(spark, sf_dir):
     )
     q.awaitTermination()
 
-    viol = spark.read.parquet(os.path.join(out, "violations")).filter(
-        F.col("batch_id") >= 0  # drop the schema-seed partition if present
-    )
+    viol = commit.read_violations(spark, out)
     man = spark.read.parquet(os.path.join(out, "manifest"))
     per_rule = (
         viol.groupBy("field_path", "rule")

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from yaschva_spark import checks
+from yaschva_spark import checks, commit
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
 from yaschva_spark.fixtures import CODE_SCHEMA, HOT_REPO, code_files, repos_dim, with_content_sha
 from yaschva_spark.pipeline import add_bucket, run_validation_job
@@ -100,8 +100,8 @@ def test_pipeline_run_and_resume(spark, code, tmp_path):
     assert r2.n_rows == full.n_rows
     assert r2.n_violations == full.n_violations
 
-    # violations sink is partitioned by bucket and readable
-    viol = spark.read.parquet(f"{out1}/violations")
+    # the committed violations are readable through the manifest
+    viol = commit.read_violations(spark, out1)
     assert viol.filter(F.col("rule") == "regex_mismatch").count() > 0
     manifest = spark.read.parquet(f"{out1}/manifest")
     assert manifest.count() == 8
@@ -109,17 +109,21 @@ def test_pipeline_run_and_resume(spark, code, tmp_path):
 
 
 def test_violations_sink_partition_pruning(spark, code, tmp_path):
-    """The bucket-partitioned violations sink must prune at the reader —
-    a bucket filter becomes a PartitionFilter, not a post-scan Filter."""
+    """A bucket filter prunes at the manifest: the reader lists only the
+    run directories whose manifest rows name the bucket, and keeps only
+    that bucket's rows."""
     repos = repos_dim(spark)
     out = str(tmp_path / "prune")
-    run_validation_job(spark, code, repos, out, n_buckets=8)
-    viol = spark.read.parquet(f"{out}/violations").filter(F.col("bucket") == 3)
-    plan = viol._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(bucket" in plan, plan[:800]
+    part1 = add_bucket(code, 8).filter(F.col("yv_bucket") != 3).drop("yv_bucket")
+    run_validation_job(spark, part1, repos, out, n_buckets=8)  # 7 buckets
+    run_validation_job(spark, code, repos, out, n_buckets=8)  # bucket 3
+    named = {r["bucket"]: r["unit"] for r in commit.read_manifest(spark, out)}
+    assert len(set(named.values())) == 2
+    viol = commit.read_violations(spark, out, buckets=[3])
+    roots = viol._jdf.inputFiles()
+    assert roots and all(f"/violations/{named[3]}/" in f for f in roots), roots
     assert viol.count() > 0
-    # pruned read sees exactly the one bucket
-    assert viol.select("bucket").distinct().collect()[0][0] == 3
+    assert [r[0] for r in viol.select("bucket").distinct().collect()] == [3]
 
 
 def test_pending_buckets_missing_or_empty_manifest(spark, tmp_path):
@@ -127,11 +131,11 @@ def test_pending_buckets_missing_or_empty_manifest(spark, tmp_path):
     is pending."""
     from yaschva_spark.pipeline import pending_buckets
 
-    assert pending_buckets(spark, str(tmp_path / "none"), 4) == [0, 1, 2, 3]
-    empty = tmp_path / "empty"
-    empty.mkdir()
+    assert pending_buckets(spark, str(tmp_path / "none"), 4) == ([0, 1, 2, 3], [])
+    empty = tmp_path / "empty" / "manifest"
+    empty.mkdir(parents=True)
     (empty / "_SUCCESS").write_bytes(b"")
-    assert pending_buckets(spark, str(empty), 4) == [0, 1, 2, 3]
+    assert pending_buckets(spark, str(tmp_path / "empty"), 4) == ([0, 1, 2, 3], [])
 
 
 def test_corrupt_manifest_raises(spark, code, tmp_path):
@@ -146,7 +150,7 @@ def test_corrupt_manifest_raises(spark, code, tmp_path):
 
 
 def _violation_multiset(spark, out):
-    viol = spark.read.parquet(f"{out}/violations")
+    viol = commit.read_violations(spark, out)
     return {tuple(r[:-1]): r[-1] for r in viol.groupBy(*viol.columns).count().collect()}
 
 
@@ -162,11 +166,9 @@ def clean_run(spark, code, tmp_path_factory):
     # (commit step that fails, whether its effect is durable first): each
     # write dies right after its data landed; the publish dies before its
     # rename (after it the run is complete)
-    [("_write_violations", True), ("_stage_manifest", True), ("_publish", False)],
+    [("_write_violations", True), ("_write_parquet", True), ("_publish", False)],
 )
 def test_resume_after_fault_matches_clean_run(spark, code, clean_run, tmp_path, monkeypatch, step, lands):
-    from yaschva_spark import commit
-
     real = getattr(commit, step)
 
     def fault(*args):
@@ -187,7 +189,10 @@ def test_resume_after_fault_matches_clean_run(spark, code, clean_run, tmp_path, 
     assert _violation_multiset(spark, out) == clean_rows
     for f in ("n_buckets_processed", "n_rows", "n_invalid_rows", "n_violations", "n_dup_keys", "n_orphans"):
         assert getattr(res, f) == getattr(clean, f), f
-    assert res.n_violations == spark.read.parquet(f"{out}/violations").count()
+    assert res.n_violations == commit.read_violations(spark, out).count()
+    # the faulted run's violations are gone: only the named units remain
+    named = {r["unit"] for r in commit.read_manifest(spark, out)}
+    assert {p.name for p in (tmp_path / "out" / "violations").iterdir()} == named
 
 
 def test_all_clean_run_leaves_readable_violations(spark, code, tmp_path):
@@ -197,6 +202,20 @@ def test_all_clean_run_leaves_readable_violations(spark, code, tmp_path):
     accept_all = {c: "any" for c in ("repo", "path", "commit", "lang", "content")}
     res = run_validation_job(spark, code, repos_dim(spark), out, schema=accept_all, n_buckets=4)
     assert res.n_violations == 0 and res.n_rows == code.count()
-    viol = spark.read.parquet(f"{out}/violations")
+    viol = commit.read_violations(spark, out)
     assert viol.count() == 0
-    assert {"field_path", "rule"} <= set(viol.columns)
+    assert {"bucket", "field_path", "rule"} <= set(viol.columns)
+
+
+def test_fresh_run_job_count(spark, code, tmp_path):
+    """A fresh run's Spark jobs: the uniqueness collect, the violations
+    write and the manifest collect, and no manifest re-read; no
+    ``bucket=`` directory is written."""
+    # measured 8 (each shuffle stage and the broadcast are jobs of their
+    # own under AQE); the staged manifest write and its re-read made 12
+    next_job_id = spark.sparkContext._jsc.sc().dagScheduler().nextJobId
+    before = next_job_id()
+    run_validation_job(spark, code, repos_dim(spark), str(tmp_path / "jobs"), n_buckets=8)
+    n_jobs = next_job_id() - before
+    assert 0 < n_jobs <= 8, n_jobs
+    assert not list((tmp_path / "jobs").rglob("bucket=*"))

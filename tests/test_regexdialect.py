@@ -127,6 +127,9 @@ def test_dot_matches_nel_like_ecma():
         (r"^\s$", "\x1c", False),  # Python-only whitespace stays out
         (r"x[]y", "xay", False),  # ECMA empty class never matches
         (r"x[^]y", "x\ny", True),  # ECMA [^] matches anything
+        (r"^[a\u{2D}z]$", "b", False),  # an escaped '-' is no range
+        (r"^[a\u{2D}z]$", "-", True),
+        (r"a\b", "a\u00e9", True),  # ECMA \b is the ASCII word boundary
     ],
 )
 def test_typed_dynamic_interp_agree(spark, pattern, value, expected):

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from yaschva_spark import streaming
+from yaschva_spark import commit, streaming
 from yaschva_spark.engine import PASS_COL, VIOLATIONS_COL, validate_table
 
 SF = "/root/testdata/sf0.001"
@@ -314,6 +314,6 @@ def test_incremental_sink_clean_stream_leaves_readable_violations(spark, tmp_pat
     )
     q.awaitTermination()
     assert spark.read.parquet(str(out / "manifest")).count() >= 1
-    viol = spark.read.parquet(str(out / "violations"))  # must not throw
+    viol = commit.read_violations(spark, str(out))  # must not throw
     assert viol.count() == 0
     assert "rule" in viol.columns and "field_path" in viol.columns

@@ -1,23 +1,21 @@
 """The one commit rule shared by the batch and streaming validation sinks.
 
-A commit unit is a bucket set (``pipeline.run_validation_job``, one unit
-per run) or a micro-batch (``streaming.incremental_validation_sink``):
+The manifest is the table's log. A commit unit (``run=<id>`` of
+``pipeline.run_validation_job``, ``batch_id=N`` of the streaming sink):
 
-* violations are durable per key, by overwrite: rows land with a dynamic
-  partition overwrite keyed by the unit column (``bucket`` / ``batch_id``),
-  so a resumed or replayed unit REPLACES its partitions instead of adding
-  a second copy;
-* the manifest is published after them: its aggregation is written to a
-  stage directory concurrently with the violations, and moved to
-  ``manifest/<unit>/`` by ONE directory rename only once the violations
-  write has returned;
-* readers trust only the units the manifest names.
+* writes its violations once, by plain overwrite, to ``violations/<unit>/``
+  (a replayed unit REPLACES its rows);
+* collects its manifest rows (at most one per bucket or batch) to the
+  driver during that write, stages them as one parquet file, and moves
+  them to ``manifest/<unit>/`` by ONE directory rename once the
+  violations write has returned;
+* then deletes every violations unit the manifest does not name (a
+  crashed run's). Readers trust only the named ones (:func:`read_violations`).
 
 Crash windows: before the rename the unit is absent from the manifest and
-is redone (its violation partitions are overwritten); after it the unit is
-complete. The filesystem work goes through the Hadoop FileSystem API, so
-one code path covers file:, hdfs: and object stores (where rename is a
-copy: still correct, not free).
+is redone; after it the unit is complete. One writer per ``out_dir``. All
+filesystem work goes through the Hadoop FileSystem API (file:, hdfs:,
+object stores, where rename is a copy: still correct, not free).
 """
 
 from __future__ import annotations
@@ -39,14 +37,14 @@ def hadoop_fs(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath, jvm
 
 
-def has_data(spark: SparkSession, path: str) -> bool:
-    """Whether ``path`` holds any entry a parquet reader would read — one
-    directory listing; ``_``/``.``-prefixed names (``_SUCCESS``, staging
-    dirs) are ignored, as Spark ignores them."""
+def data_entries(spark: SparkSession, path: str) -> set[str]:
+    """The names in directory ``path`` a parquet reader would read — one
+    listing, without the ``_``/``.``-prefixed names Spark ignores."""
     fs, jpath, _ = hadoop_fs(spark, path)
-    return fs.exists(jpath) and any(
-        not st.getPath().getName().startswith(("_", ".")) for st in fs.listStatus(jpath)
-    )
+    if not fs.exists(jpath):
+        return set()
+    names = (st.getPath().getName() for st in fs.listStatus(jpath))
+    return {n for n in names if not n.startswith(("_", "."))}
 
 
 def violation_rows(validated: DataFrame, *cols) -> DataFrame:
@@ -84,46 +82,60 @@ def manifest_rows(validated: DataFrame, content_col: str, *extra: Column, by=())
     )
 
 
+def read_manifest(spark: SparkSession, out_dir: str) -> list[dict]:
+    """The committed manifest rows under ``out_dir``, each with the
+    ``unit`` directory it was published as; ``[]`` when no unit is
+    committed yet. Any other read error propagates."""
+    path = os.path.join(out_dir, "manifest")
+    if not data_entries(spark, path):
+        return []
+    unit = F.element_at(F.split("_metadata.file_path", "/"), -2).alias("unit")
+    return spark.read.parquet(path).select("*", unit).toArrow().to_pylist()
+
+
+def read_violations(spark: SparkSession, out_dir: str, buckets=None) -> DataFrame:
+    """The committed violation rows under ``out_dir``: only the
+    ``violations/<unit>/`` directories the manifest names. With ``buckets``,
+    only the units whose manifest rows name one of them are read, and only
+    those buckets' rows are kept."""
+    rows = read_manifest(spark, out_dir)
+    if not rows:
+        raise FileNotFoundError(f"no committed unit under {out_dir}")
+    units = sorted({r["unit"] for r in rows if buckets is None or r["bucket"] in buckets})
+    # an empty selection still reads one unit, for the schema
+    paths = [os.path.join(out_dir, "violations", u) for u in units or [rows[0]["unit"]]]
+    viol = spark.read.parquet(*paths)
+    return viol if buckets is None else viol.filter(F.col("bucket").isin(list(buckets)))
+
+
 def commit(
-    spark: SparkSession, out_dir: str, key: str, viol: DataFrame, manifest: DataFrame, unit: str
-) -> None:
-    """Commit one unit under ``out_dir`` by the module's rule: ``viol``
-    (partitioned by ``key``) to ``violations/``, then ``manifest`` to
-    ``manifest/<unit>/`` (``unit`` is a ``name=value`` directory name).
-    Raises if any step fails; nothing of the unit is then in the
-    manifest."""
+    spark: SparkSession, out_dir: str, viol: DataFrame, manifest: DataFrame, unit: str
+) -> list[dict]:
+    """Commit ``viol`` and ``manifest`` as ``unit`` (a ``name=value``
+    directory name) under ``out_dir`` by the module's rule and return the
+    unit's manifest rows. If any step raises, the manifest lacks the unit."""
     stage = os.path.join(out_dir, f"_manifest_stage_{os.getpid()}_{time.monotonic_ns()}")
+    viol_dir = os.path.join(out_dir, "violations")
     try:
-        # the two writes overlap; leaving the block joins both, so the
-        # stage is never deleted under a running write
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            written = pool.submit(_write_violations, spark, viol, key, os.path.join(out_dir, "violations"))
-            staged = pool.submit(_stage_manifest, manifest, stage)
+        # the manifest collect overlaps the violations write; leaving the
+        # block joins the write
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            written = pool.submit(_write_violations, viol, os.path.join(viol_dir, unit))
+            rows = manifest.toArrow()
         written.result()  # durability barrier: violations before the manifest
-        staged.result()
+        _write_parquet(spark, rows, os.path.join(stage, "part-00000.parquet"))
         _publish(spark, stage, os.path.join(out_dir, "manifest", unit))
     finally:
         _delete(spark, stage)  # no-op after a clean publish
+    named = data_entries(spark, os.path.join(out_dir, "manifest"))
+    for name in data_entries(spark, viol_dir) - named:
+        _delete(spark, os.path.join(viol_dir, name))
+    return rows.to_pylist()
 
 
-def _write_violations(spark: SparkSession, viol: DataFrame, key: str, path: str) -> None:
-    (
-        viol.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(key)
-        .parquet(path)
-    )
-    # Spark writes no file for an empty write, which would leave a table
-    # ``spark.read.parquet`` cannot infer a schema from: seed one
-    # schema-bearing empty partition, key -1, while the table has none
-    if not has_data(spark, path):
-        _write_empty_parquet(
-            spark, viol.drop(key).schema, os.path.join(path, f"{key}=-1", "part-00000-seed.parquet")
-        )
-
-
-def _stage_manifest(manifest: DataFrame, stage: str) -> None:
-    manifest.write.mode("overwrite").parquet(stage)
+def _write_violations(viol: DataFrame, path: str) -> None:
+    # an empty write still leaves one schema-bearing part file
+    viol.write.mode("overwrite").parquet(path)
 
 
 def _publish(spark: SparkSession, stage: str, dest: str) -> None:
@@ -144,14 +156,13 @@ def _delete(spark: SparkSession, path: str) -> None:
         pass
 
 
-def _write_empty_parquet(spark: SparkSession, df_schema, dest_file: str) -> None:
-    """Write a schema-bearing 0-row parquet file at ``dest_file`` without
-    a Spark job."""
+def _write_parquet(spark: SparkSession, table, dest_file: str) -> None:
+    """Write the Arrow ``table`` as one parquet file at ``dest_file``
+    without a Spark job."""
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     buf = io.BytesIO()
-    pq.write_table(to_arrow_schema(df_schema).empty_table(), buf)
+    pq.write_table(table, buf)
     fs, jpath, _ = hadoop_fs(spark, dest_file)
     out = fs.create(jpath, True)
     try:

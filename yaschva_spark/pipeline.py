@@ -18,8 +18,8 @@ One Spark job processes all pending buckets together (full parallelism);
 scheduling.
 
 Commit rule, shared with the streaming sink (:mod:`yaschva_spark.commit`):
-violations are durable per bucket, by overwrite; the manifest is published
-after them; readers trust only the buckets the manifest names.
+each run writes its violations once, by overwrite; its manifest is
+published after them; readers trust only the runs the manifest names.
 """
 
 from __future__ import annotations
@@ -56,16 +56,12 @@ def add_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     )
 
 
-def pending_buckets(spark: SparkSession, manifest_path: str, n_buckets: int) -> list[int]:
-    """Buckets not yet recorded in the manifest (checkpoint resume). A
-    missing manifest, or a directory without data entries (the publish
-    rename's mkdirs can leave one behind), means no bucket is done; any
-    other read error propagates — treating an unreadable manifest as
-    empty would reprocess every bucket."""
-    if not commit.has_data(spark, manifest_path):
-        return list(range(n_buckets))
-    done = {r[0] for r in spark.read.parquet(manifest_path).select("bucket").distinct().collect()}
-    return sorted(set(range(n_buckets)) - done)
+def pending_buckets(spark: SparkSession, out_dir: str, n_buckets: int):
+    """Buckets not yet recorded in the manifest (checkpoint resume), and
+    the committed manifest rows, from one read. An unreadable manifest
+    raises: treating it as empty would reprocess every bucket."""
+    prior = commit.read_manifest(spark, out_dir)
+    return sorted(set(range(n_buckets)) - {r["bucket"] for r in prior}), prior
 
 
 def run_validation_job(
@@ -79,21 +75,21 @@ def run_validation_job(
 ) -> JobResult:
     """Validate + check + sink + manifest, resumable per bucket.
 
-    Outputs under ``out_dir``:
-      * ``violations/`` — exploded violation rows, partitioned by bucket
-      * ``manifest/``   — one ``run=<id>/`` directory per run, one row per
-        bucket it processed: lineage + metrics
+    Outputs under ``out_dir``, one ``run=<id>/`` directory per run in each:
+      * ``violations/`` — exploded violation rows (with their ``bucket``),
+        read by :func:`yaschva_spark.commit.read_violations`
+      * ``manifest/``   — one row per bucket: lineage + metrics
 
-    Commit rule (:mod:`yaschva_spark.commit`): violations are durable per
-    bucket, by overwrite; the run's manifest is published after them;
-    readers trust only the buckets the manifest names. An interrupted run
-    therefore resumes without duplicate or lost violation rows.
+    Commit rule (:mod:`yaschva_spark.commit`): the run's violations are
+    written once, then its manifest is published; readers trust only the
+    runs the manifest names, so an interrupted run resumes without
+    duplicate or lost violation rows. The totals are summed on the driver
+    over the prior manifest rows and this run's.
     """
     t0 = time.monotonic()
     schema = schema or CODE_SCHEMA
-    manifest_path = os.path.join(out_dir, "manifest")
 
-    pend = pending_buckets(spark, manifest_path, n_buckets)
+    pend, prior = pending_buckets(spark, out_dir, n_buckets)
     if not pend:
         return JobResult(0, 0, 0, 0, 0, 0, 0.0)
 
@@ -107,11 +103,10 @@ def run_validation_job(
     # order of magnitude here, and caching is impossible at 100 TB anyway.
     validated = validate_table(df, schema, ignore_columns=(BUCKET_COL,))
 
-    # 1) violation rows, partitioned by bucket for pruning + lineage;
-    # repartitioned on the bucket so each bucket writes one file instead of
-    # one file per task per bucket. content_sha (the per-row invariant,
-    # input_hint) is computed here on FAILING rows only — the full-table sha
-    # pass happens once, in the manifest digest.
+    # 1) violation rows with their bucket for lineage, written as the scan
+    # produces them: no shuffle, no per-bucket directories. content_sha (the
+    # per-row invariant, input_hint) is computed here on FAILING rows only —
+    # the full-table sha pass happens once, in the manifest digest.
     viol = commit.violation_rows(
         validated,
         F.col(BUCKET_COL).alias("bucket"),
@@ -119,7 +114,7 @@ def run_validation_job(
         "path",
         "commit",
         F.sha2(F.col("content"), 256).alias("content_sha"),
-    ).repartition("bucket")
+    )
 
     # 2) uniqueness on (repo, path, commit): fingerprint-shuffle hash agg —
     # the triple is near-unique, so the groupBy shuffle carries ~every row;
@@ -162,27 +157,23 @@ def run_validation_job(
 
     # All three jobs run CONCURRENTLY (one SparkContext schedules their
     # DAGs at once; stage tails overlap instead of idling executors): the
-    # uniqueness collect here, the violations and manifest writes inside
-    # the commit.
+    # uniqueness collect here, the violations write and the manifest
+    # collect inside the commit.
     with ThreadPoolExecutor(max_workers=1) as pool:
         dup = pool.submit(lambda: dup_summary_df.collect()[0])
-        commit.commit(
-            spark, out_dir, "bucket", viol, manifest, f"run={time.time_ns()}_{os.getpid()}"
+        rows = prior + commit.commit(
+            spark, out_dir, viol, manifest, f"run={time.time_ns()}_{os.getpid()}"
         )
         dup_summary = dup.result()
 
-    totals = spark.read.parquet(manifest_path).agg(
-        F.sum("n_rows").alias("r"),
-        F.sum("n_invalid_rows").alias("i"),
-        F.sum("n_violations").alias("v"),
-        F.sum("n_orphans").alias("o"),
-    ).collect()[0]
+    cols = ("n_rows", "n_invalid_rows", "n_violations", "n_orphans")
+    n = {c: sum(r[c] for r in rows) for c in cols}
     return JobResult(
         n_buckets_processed=len(pend),
-        n_rows=totals["r"],
-        n_invalid_rows=totals["i"],
-        n_violations=totals["v"],
+        n_rows=n["n_rows"],
+        n_invalid_rows=n["n_invalid_rows"],
+        n_violations=n["n_violations"],
         n_dup_keys=dup_summary["n_dup_keys"],
-        n_orphans=totals["o"],
+        n_orphans=n["n_orphans"],
         wall_sec=time.monotonic() - t0,
     )

@@ -31,8 +31,8 @@ walk re-spells, in both dialects unless noted:
   non-hex or above-10FFFF body is an ECMA SyntaxError and raises.
 * shorthands — ``\\s``/``\\S`` expand to the literal ECMA whitespace set
   (Java's is ASCII-only, Python's adds \\x1c-\\x1f/\\x85 and misses
-  \\ufeff). Python only: ``\\w``/``\\W`` become the ASCII class and
-  ``\\b``/``\\B`` ASCII-word-boundary lookarounds (Python's are Unicode).
+  \\ufeff). ``\\b``/``\\B`` become ASCII word-boundary lookarounds (Java's
+  and Python's are Unicode); Python only: ``\\w``/``\\W`` the ASCII class.
 * named groups (Python only) — ``(?<name>`` to ``(?P<name>`` and
   ``\\k<name>`` to ``(?P=name)``.
 
@@ -100,17 +100,18 @@ class _Dialect(NamedTuple):
 
 def _py_literal(hex_digits: str) -> str:
     ch = chr(int(hex_digits, 16))
-    return "\\" + ch if ch in r".^$*+?()[]{}|\/" else ch
+    return "\\" + ch if ch in r".^$*+?()[]{}|\/-" else ch
 
 
 _WS = {"s": (f"[{_ECMA_WS}]", _ECMA_WS), "S": (f"[^{_ECMA_WS}]", None)}
+_BOUNDS = {"b": (_B_BOUND, "\\b"), "B": (_B_NONBOUND, "\\B")}
 
 _JAVA = _Dialect(
     codepoint=lambda h: f"\\x{{{h}}}",
     end="\\z",
     any_char="(?s:.)",
     props=_SHARED_PROPS,
-    shorthands={**_WS, "W": ("\\W", None)},
+    shorthands={**_WS, **_BOUNDS, "W": ("\\W", None)},
     named=False,
 )
 
@@ -121,10 +122,9 @@ _PYTHON = _Dialect(
     props=frozenset(),
     shorthands={
         **_WS,
+        **_BOUNDS,
         "w": (f"[{_ASCII_WORD}]", _ASCII_WORD),
         "W": (f"[^{_ASCII_WORD}]", None),
-        "b": (_B_BOUND, "\\b"),  # in-class \b is backspace in both
-        "B": (_B_NONBOUND, "\\B"),
     },
     named=True,
 )

@@ -109,16 +109,14 @@ def make_batch_validator(
     """The ``foreachBatch`` function behind
     :func:`incremental_validation_sink`, exposed so the replay guard is
     directly testable. See that function for the durability contract."""
-    man_path = os.path.join(out_dir, "manifest")
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # O(1) replay guard: the manifest is partitioned by batch_id, so
         # the probe touches ONE partition directory — never the k-batch
         # manifest scan that would creep quadratically on a long stream.
-        part_dir = os.path.join(man_path, f"batch_id={batch_id}")
-        fs, part_jpath, _ = commit.hadoop_fs(spark, part_dir)
-        if fs.exists(part_jpath):
+        part_dir = os.path.join(out_dir, "manifest", f"batch_id={batch_id}")
+        if commit.data_entries(spark, part_dir):
             try:
                 committed = spark.read.parquet(part_dir).collect()
             except Exception:
@@ -142,7 +140,6 @@ def make_batch_validator(
         commit.commit(
             spark,
             out_dir,
-            "batch_id",
             commit.violation_rows(validated, F.lit(batch_id).alias("batch_id"), *id_cols),
             commit.manifest_rows(validated, content_col, F.lit(stream_id).alias("stream_id")),
             f"batch_id={batch_id}",
@@ -163,24 +160,24 @@ def incremental_validation_sink(
 ) -> "StreamingQuery":  # noqa: F821
     """Continuous-ingest version of ``pipeline.run_validation_job``: each
     micro-batch is validated with the same compiled schema and lands as
-    its violation rows (partition ``batch_id=N`` of ``violations/``) plus
-    ONE manifest row (directory ``manifest/batch_id=N/``) carrying the same
-    lineage metrics (row/violation counts, order-insensitive sha256 content
-    digest, timestamp) and the stream identity.
+    its violation rows (``violations/batch_id=N/``, ``batch_id`` also a
+    data column) plus ONE manifest row (``manifest/batch_id=N/``) carrying
+    the same lineage metrics (row/violation counts, order-insensitive
+    sha256 content digest, timestamp) and the stream identity.
 
     Commit rule, shared with the batch pipeline
-    (:mod:`yaschva_spark.commit`): violations are durable per batch_id, by
-    overwrite; the manifest is published after them; readers trust only
-    the batches the manifest names (an all-clean stream still leaves a
-    schema-bearing empty ``batch_id=-1`` partition). Restart safety is
+    (:mod:`yaschva_spark.commit`): a batch's violations are written once,
+    by overwrite; its manifest row, collected on the driver, is published
+    after them; readers trust only the batches the manifest names
+    (:func:`yaschva_spark.commit.read_violations`). Restart safety is
     two-layered: Spark's ``checkpointLocation`` replays the failed batch
     with the same batch_id, and the batch function is IDEMPOTENT — a
     batch_id already committed BY THIS STREAM (manifest rows carry a
     stream identity derived from the checkpoint location) is skipped, a
-    torn first attempt is overwritten partition-wise, and a batch_id
-    collision from a different checkpoint raises instead of silently
-    dropping data. The replay probe reads one manifest partition — O(1)
-    per batch, not a scan of the ever-growing manifest.
+    torn first attempt is overwritten, and a batch_id collision from a
+    different checkpoint raises instead of silently dropping data. The
+    replay probe reads one manifest partition — O(1) per batch, not a
+    scan of the ever-growing manifest.
 
     ``available_now=True`` drains the backlog and stops — the streaming
     analog of the batch pipeline's resume; False runs continuously.
